@@ -6,6 +6,7 @@ imported by the facade in fixed sequence; do not reorder.
 
 from __future__ import annotations
 
+from ..session import scoped_conf
 from ._core import DataFrame, F, SparkSession, W, register, t
 from ._q08_sequences_session2 import _bpe_oracle, bpe_merge_training
 
@@ -217,15 +218,9 @@ def dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _os.path.join(repo, ".tmp_io", "dyn_overwrite")
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        one = spark.createDataFrame(
-            [(-1, "O")], "o_orderkey bigint, o_orderstatus string"
-        )
+    one = spark.createDataFrame([(-1, "O")], "o_orderkey bigint, o_orderstatus string")
+    with scoped_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
         one.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     return (
         spark.read.parquet(path)
         .groupBy("o_orderstatus")

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 
+from ..session import scoped_conf
 from ._core import F, SparkSession, DataFrame, W, register, t
 
 
@@ -807,9 +808,9 @@ _SQLITE_CDC_ORACLE = """
 )
 def sqlite_cdc_streaming_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
-    import uuid
 
     from ..sources.sqlite_py import register_sqlite_source, write_sqlite_shards
+    from ..streaming.windows import replay_to_memory
 
     out_dir = os.path.join(_repo_root(), ".tmp_io", "cdc_sqlite")
     shutil.rmtree(out_dir, ignore_errors=True)
@@ -832,7 +833,6 @@ def sqlite_cdc_streaming_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     register_sqlite_source(spark)
-    name = f"cdc_{uuid.uuid4().hex[:8]}"
     # Rate-limit scaled to the input so the replay is ~4 micro-batches
     # at ANY sf. A fixed 1000/shard was wrong at both ends: 38 batches
     # at sf0.1 (each paying Python DataSource planning overhead) and a
@@ -850,28 +850,17 @@ def sqlite_cdc_streaming_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("rows_per_batch", rate)
         .load()
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        n_batches = sum(
-            1 for p in q.recentProgress if p["numInputRows"] > 0
+    # Aggregate the replay inside the session and pin only the
+    # per-status result. The stream keeps no state, so the session's
+    # shuffle width is left as it is (conf={}).
+    return replay_to_memory(
+        spark,
+        stream,
+        "append",
+        conf={},
+        result=lambda sink, n_batches: sink.groupBy(
+            F.col("status").alias("o_orderstatus")
         )
-    finally:
-        q.stop()
-    # Aggregate the replay inside the session, pin only the per-status
-    # result locally, and DROP the memory-sink table — the previous
-    # .cache()-and-never-unpersist pattern leaked the full replay into
-    # JVM storage memory across the bench session (VERDICT r5 item 2).
-    from ..pinning import pin_local as _pin_local
-
-    agg = (
-        spark.table(name)
-        .groupBy(F.col("status").alias("o_orderstatus"))
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
             F.sum(F.round(F.col("price") * 100).cast("long"))
@@ -881,11 +870,8 @@ def sqlite_cdc_streaming_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("k").alias("max_key"),
         )
         .withColumn("multi_batch_replay", F.lit(n_batches >= 2))
-        .orderBy("o_orderstatus")
-    )
-    out = _pin_local(spark, agg)
-    spark.catalog.dropTempView(name)
-    return out
+        .orderBy("o_orderstatus"),
+    )[0]
 
 
 # =====================================================================
@@ -1165,8 +1151,6 @@ _SCRIPTING_MEDIAN_ORACLE = """
 def sql_scripting_median_bisection(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    prev = spark.conf.get("spark.sql.scripting.enabled", "false")
-    spark.conf.set("spark.sql.scripting.enabled", "true")
     # The loop's ~26 count(*) scans all read the SAME single long
     # column; cache it once so each iteration is a memory scan, not a
     # parquet decode (measured ~4x on the whole script at sf0.1). At
@@ -1222,15 +1206,14 @@ def sql_scripting_median_bisection(
     END
     """
     try:
-        out = spark.sql(script)
         # Pin the (single-row) result as a local relation inside the
         # enabled-config scope, then release the cents cache — nothing
         # stays pinned after the call (same discipline as the
-        # streaming runners' _pin_local).
+        # streaming runners' pinned memory sinks).
         from ..pinning import pin_local
 
-        out = pin_local(spark, out)
+        with scoped_conf(spark, {"spark.sql.scripting.enabled": "true"}):
+            out = pin_local(spark, spark.sql(script))
     finally:
-        spark.conf.set("spark.sql.scripting.enabled", prev)
         cents.unpersist()
     return out

@@ -15,6 +15,8 @@ from __future__ import annotations
 import os
 import shutil
 
+from ..pinning import pin_local
+from ..session import scoped_conf
 from ._core import DataFrame, F, SparkSession, register, t
 
 
@@ -338,7 +340,7 @@ _STATESTORE_ORACLE = """
 def statestore_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
-    from ..streaming.windows import streaming_events
+    from ..streaming.windows import state_stage_conf, streaming_events
 
     events = streaming_events(spark, sf_dir)
     agg = (
@@ -354,27 +356,22 @@ def statestore_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = tempfile.mkdtemp(prefix="spark_graft_statestore_")
     out_dir = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
-    # The window-agg operator keeps one state store per shuffle
-    # partition, and the checkpoint pins that count for the query's
-    # lifetime: 32 partitions = 32 store open/commit cycles per
-    # micro-batch PLUS 32 state files for the reader below to decode,
-    # for a state that fits in one. Narrow the exchange for the replay
-    # (run_stream_stream_join pattern); at real scale size it to
-    # cores x executors.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    # The checkpoint pins the state stage's width for the query's
+    # lifetime, so the narrowed stage (streaming.windows module
+    # docstring) also means fewer state files for the reader below.
     try:
-        q = (
-            agg.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+        with scoped_conf(spark, state_stage_conf(spark)):
+            q = (
+                agg.writeStream.outputMode("append")
+                .format("parquet")
+                .option("path", out_dir)
+                .option("checkpointLocation", ckpt)
+                .start()
+            )
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
         state = (
             spark.read.format("statestore")
             .load(ckpt)
@@ -394,11 +391,8 @@ def statestore_reader_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # action would recompute from the deleted path — and the cache
         # was never unpersisted, leaking across the 376-query bench run
         # (ADVICE r5 item 1).
-        from ..streaming.windows import _pin_local
-
-        return _pin_local(spark, state)
+        return pin_local(spark, state)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(base, ignore_errors=True)
 
 

@@ -9,16 +9,27 @@ config tuned for both the local test harness and a large cluster:
   partition counts are always wrong somewhere.
 - Arrow on for every Python↔JVM crossing (toPandas / pandas_udf /
   applyInPandas).
-- UTC session timezone so timestamp semantics match the DuckDB oracle.
 - shuffle.partitions sized from the env (local runs want ~#cores, a
   real cluster wants AQE's coalescing from a higher initial number).
+- the fixture-read confs (``sources.readers.FIXTURE_READ_CONF``: UTC
+  session timezone so timestamp semantics match the DuckDB oracle,
+  parquet timestamps read as TIMESTAMP), so the first table read never
+  has to change the session conf.
+
+``scoped_conf`` is the one sanctioned way for a query to change a
+session conf: every change is undone on exit, so a query leaves the
+session conf exactly as it found it.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator, Mapping
 
 from pyspark.sql import SparkSession
+
+from .sources.readers import FIXTURE_READ_CONF
 
 
 def cpu_count() -> int:
@@ -46,20 +57,40 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
-        # Fixture parquet stores naive (isAdjustedToUTC=false) timestamps;
-        # read them as session-tz TIMESTAMP (not TIMESTAMP_NTZ) so
-        # event-time streaming (withWatermark) and epoch functions
-        # (unix_micros) work directly on the scanned column.
-        .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # The Python data sources (sources/pydatasource.py, sqlite_py.py)
+        # push filters down; their registration enables this for good,
+        # and building it in keeps that registration from changing conf.
+        .config("spark.sql.python.filterPushdown.enabled", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**FIXTURE_READ_CONF, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextlib.contextmanager
+def scoped_conf(spark: SparkSession, conf: Mapping[str, str]) -> Iterator[None]:
+    """Set ``conf`` on the session for the body only.
+
+    On exit, even when the body raises, each key gets back its prior
+    explicit value, or is unset if it had none. Restoring the value
+    read through ``conf.get(key, default)`` instead would leave the
+    default behind as an explicit setting.
+    """
+    prior = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

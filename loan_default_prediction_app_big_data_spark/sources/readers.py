@@ -64,6 +64,32 @@ def ns_long_to_timestamp(col_name: str) -> F.Column:
     return F.timestamp_micros(F.expr(f"`{col_name}` div 1000"))
 
 
+#: Session confs every fixture read needs. ``session.get_spark`` builds
+#: them in; ``apply_fixture_read_conf`` sets them for sessions built
+#: elsewhere (a default-config session), once and for good.
+FIXTURE_READ_CONF = {
+    # Nanosecond parquet timestamps scan as INT64 (converted below by
+    # ns_long_to_timestamp) instead of failing the read.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # Fixture timestamps are naive-UTC; pin the session so epoch math
+    # (unix_timestamp/unix_micros) is timezone-stable and matches the
+    # DuckDB oracle.
+    "spark.sql.session.timeZone": "UTC",
+    # Naive parquet timestamps must scan as TIMESTAMP (LTZ): NTZ is
+    # rejected by withWatermark/unix_micros, and a cast above the scan
+    # would block predicate pushdown on date filters.
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+}
+
+
+def apply_fixture_read_conf(spark: SparkSession) -> None:
+    """Set ``FIXTURE_READ_CONF`` on the session. Unlike a query's
+    ``session.scoped_conf`` change this is permanent: the read plans
+    it shapes are memoized per session and must keep reading alike."""
+    for k, v in FIXTURE_READ_CONF.items():
+        spark.conf.set(k, v)
+
+
 def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """One fixture table from a scale-factor directory.
 
@@ -74,15 +100,7 @@ def read_parquet_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame
     truncation (ns → µs), matching whole-second ``unix_timestamp``
     semantics used by the oracle comparisons.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Fixture timestamps are naive-UTC; pin the session so epoch math
-    # (unix_timestamp/unix_micros) is timezone-stable even when the
-    # caller's session was built without an explicit timezone.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Naive parquet timestamps must scan as TIMESTAMP (LTZ) — NTZ is
-    # rejected by withWatermark/unix_micros, and a cast above the scan
-    # would block predicate pushdown on date filters.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    apply_fixture_read_conf(spark)
     # Metastore-style plan cache: spark.read.parquet re-lists the path
     # and re-reads footers for schema on EVERY call, all driver-side.
     # Fixture tables are immutable within a session, and a bench pass
@@ -124,8 +142,7 @@ def fixture_static_schema(
     key = (spark.sparkContext.applicationId, sf_dir, f"{name}#static")
     cached = _STATIC_SCHEMA_CACHE.get(key)
     if cached is None:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+        apply_fixture_read_conf(spark)
         cached = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")).schema
         if len(_STATIC_SCHEMA_CACHE) > 256:
             _STATIC_SCHEMA_CACHE.clear()

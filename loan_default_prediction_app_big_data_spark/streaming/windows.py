@@ -18,97 +18,118 @@ needs the ``protobuf`` Python package for its driver<->worker channel,
 which this image does not bundle — its per-key semantics are covered
 here by the applyInPandasWithState runner, and migration is mechanical
 (same grouping, state pulled from a handle instead of GroupState).
+
+State-stage width: every runner replays with ``spark.sql.shuffle.
+partitions`` narrowed by ``state_stage_conf`` for the stream's
+lifetime (``session.scoped_conf``, so the session gets its own value
+back). Structured streaming opens one state-store instance per shuffle
+partition (two per partition for a stream-stream join) and pays its
+open/commit cycle EVERY micro-batch, so for the fixtures' 10²–10⁴-key
+state a narrow stage is strictly faster: r9 measured backfill
+4.33→2.88 s, append 2.21→1.51 s, session 2.83→2.09 s at 32→8
+partitions, and an 8→4 A/B read as noise; a bare session's 200
+partitions cost 400 store cycles per micro-batch in a stream-stream
+join whose batch form runs in 0.6 s. A file sink also writes that
+many files, not one near-empty file per session partition. At real
+scale the state stage is sized like any exchange (~cores × executors,
+far above 8) through ``SPARK_GRAFT_STATE_PARTITIONS``.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import tempfile
 import uuid
+from collections.abc import Callable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..pinning import pin_local
+from ..session import scoped_conf
+from ..sources.readers import (
+    apply_fixture_read_conf,
+    fixture_static_schema,
+    ns_long_to_timestamp,
+    read_parquet_table,
+)
 
 
 def streaming_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as a bounded stream (schema pinned from the static
     file; ns timestamps converted exactly like the batch reader)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Event-time operators (withWatermark) require TIMESTAMP, not NTZ —
-    # scan naive parquet timestamps as session-tz TIMESTAMP.
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    from ..sources.readers import fixture_static_schema
-
+    apply_fixture_read_conf(spark)
     static_schema = fixture_static_schema(spark, sf_dir, "events")
     # FileStreamSource needs a directory or glob, not a bare file path.
     stream = spark.readStream.schema(static_schema).parquet(
         os.path.join(sf_dir, "events*.parquet")
     )
     if isinstance(static_schema["ts"].dataType, T.LongType):
-        from ..sources.readers import ns_long_to_timestamp
-
         stream = stream.withColumn("ts", ns_long_to_timestamp("ts"))
     elif isinstance(static_schema["ts"].dataType, T.TimestampNTZType):
         stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     return stream
 
 
-def _drain_memory_sink(spark: SparkSession, name: str) -> DataFrame:
-    """Materialize a memory-sink table as a driver-local DataFrame and
-    DROP the sink table.
-
-    The memory sink already holds every result row on the driver —
-    that is its contract, and these replay harnesses are fixture-scale
-    by design (production sinks are parquet/Kafka, see module
-    docstring), so the collect adds no new scale exposure. The
-    previous ``.cache()`` pattern kept a SECOND copy of the rows
-    pinned in JVM storage memory forever (never unpersisted) AND left
-    the sink table registered; across a 376-query bench session those
-    leaks compounded into GC pressure that surfaced as 7-10x driver
-    inflation on late-running streaming queries (BENCH_r05
-    ``regressions_vs_committed``; VERDICT r5 items 2/6).
-    ``createDataFrame`` rows live only as long as the returned
-    DataFrame — nothing stays pinned after the caller drops it.
-    """
-    # Explicit wider bound: the sink's rows are ALREADY driver-resident
-    # (memory-sink contract), so pinning adds no new scale exposure —
-    # append-mode event-level sinks (e.g. the full-outer stream-stream
-    # join) legitimately exceed pin_local's strict plan-side default.
-    out = _pin_local(spark, spark.table(name), max_rows=1_000_000)
-    spark.catalog.dropTempView(name)
-    return out
-
-
-# Canonical implementation (with max-rows guard) lives in
-# ..pinning — hoisted in round 8 after the pattern's third call site.
-_pin_local = pin_local
-
-
-def state_partitions(spark: SparkSession) -> str:
-    """Shuffle-partition count for the keyed-state stage of the bounded
-    replay runners — the ONE knob behind what were eight per-runner
-    ``"8"`` literals (VERDICT r9 item 6).
-
-    Rationale: structured streaming opens one state-store instance per
-    shuffle partition and pays its open/commit cycle EVERY micro-batch,
-    so for the fixtures' 10²–10⁴-key state a narrow stage is strictly
-    faster (r9 measured: backfill 4.33→2.88 s, append 2.21→1.51 s,
-    session 2.83→2.09 s at 32→8 partitions; an 8→4 A/B read as noise).
-    ``min(defaultParallelism, 8)`` scales DOWN with the driver's
-    reduced-core bench run instead of pinning a local[32] constant; at
-    real scale the state stage should be sized like any exchange
-    (~cores × executors, far above 8), so production overrides via
-    ``SPARK_GRAFT_STATE_PARTITIONS`` — the default is a fixture-scale
-    key-count decision, not a cluster constant.
-    """
+def state_stage_conf(spark: SparkSession) -> dict[str, str]:
+    """The scoped conf that narrows a replay's keyed-state stage (see
+    the module docstring) to ``min(defaultParallelism, 8)`` partitions,
+    so it scales DOWN with a reduced-core run instead of pinning a
+    local[32] constant; ``SPARK_GRAFT_STATE_PARTITIONS`` overrides it."""
     env = os.environ.get("SPARK_GRAFT_STATE_PARTITIONS")
-    if env:
-        return str(int(env))
-    return str(min(spark.sparkContext.defaultParallelism, 8))
+    n = int(env) if env else min(spark.sparkContext.defaultParallelism, 8)
+    return {"spark.sql.shuffle.partitions": str(n)}
+
+
+def replay_to_memory(
+    spark: SparkSession,
+    stream: DataFrame,
+    output_mode: str,
+    *,
+    result: Callable[[DataFrame, int], DataFrame] | None = None,
+    conf: Mapping[str, str] | None = None,
+    available_now: bool = False,
+) -> tuple[DataFrame, int]:
+    """Drive a bounded stream to completion through a memory sink.
+
+    ``start()`` through ``stop()`` runs under ``scoped_conf(conf)``
+    (default: the narrowed state stage), to ``processAllAvailable`` or,
+    with ``available_now``, to the end of a ``Trigger.AvailableNow``
+    run. Returns the pinned result and the number of micro-batches that
+    read input.
+
+    The result is ``result(sink, n_batches)`` under ``pin_local``'s
+    default guard, or else the whole sink under a 1M-row guard: the
+    memory sink already holds every row on the driver, so pinning adds
+    no scale exposure, and event-level append sinks (the full-outer
+    join) exceed the default. The sink table is then dropped, so
+    nothing stays registered or pinned once the caller drops the
+    result; a ``.cache()`` of the sink would stay in JVM storage for
+    the whole session.
+    """
+    name = f"replay_{uuid.uuid4().hex[:8]}"
+    writer = stream.writeStream.outputMode(output_mode).format("memory").queryName(name)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    with scoped_conf(spark, state_stage_conf(spark) if conf is None else conf):
+        q = writer.start()
+        try:
+            if available_now:
+                q.awaitTermination()
+            else:
+                q.processAllAvailable()
+        finally:
+            q.stop()
+    n_batches = sum(1 for p in q.recentProgress if p["numInputRows"] > 0)
+    try:
+        sink = spark.table(name)
+        if result is None:
+            return pin_local(spark, sink, max_rows=1_000_000), n_batches
+        return pin_local(spark, result(sink, n_batches)), n_batches
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 def tumbling_window_agg_stream(events: DataFrame) -> DataFrame:
@@ -152,27 +173,8 @@ def run_tumbling_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a finite replay yields exactly the batch answer (append mode
     would hold back windows newer than the watermark).
     """
-    name = f"tumbling_{uuid.uuid4().hex[:8]}"
-    # Narrow the keyed-state stage: state-store instances scale with
-    # shuffle partitions and per-partition open/commit dominates at
-    # fixture key counts (r9: same 8-partition narrowing as the
-    # stateful/dedup/join runners, VERDICT r8 item 2 direction).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", state_partitions(spark))
-    q = (
-        tumbling_window_agg_stream(streaming_events(spark, sf_dir))
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    # Materialize before dropping the in-memory sink table.
-    return _drain_memory_sink(spark, name)
+    stream = tumbling_window_agg_stream(streaming_events(spark, sf_dir))
+    return replay_to_memory(spark, stream, "complete")[0]
 
 
 def run_stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -194,16 +196,9 @@ def run_stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         state.update((total,))
         yield pd.DataFrame({"user_id": [key[0]], "n_events": [total]})
 
-    name = f"stateful_{uuid.uuid4().hex[:8]}"
-    events = streaming_events(spark, sf_dir)
-    # State-store instances scale with shuffle partitions; for a keyed
-    # state of ~10²-10⁴ users a narrow shuffle is strictly faster
-    # (per-partition store open/commit dominates). At real scale size
-    # this like any exchange: ~#cores × executors.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", state_partitions(spark))
-    q = (
-        events.groupBy("user_id")
+    stream = (
+        streaming_events(spark, sf_dir)
+        .groupBy("user_id")
         .applyInPandasWithState(
             update_counts,
             outputStructType="user_id long, n_events long",
@@ -211,48 +206,24 @@ def run_stateful_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             outputMode="update",
             timeoutConf="NoTimeout",
         )
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     # The memory sink accumulates one row per (user, micro-batch);
     # the max per user is the final running count.
-    out = _pin_local(
+    return replay_to_memory(
         spark,
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(F.max("n_events").alias("n_events")),
-    )
-    spark.catalog.dropTempView(name)
-    return out
+        stream,
+        "update",
+        result=lambda sink, _: sink.groupBy("user_id").agg(
+            F.max("n_events").alias("n_events")
+        ),
+    )[0]
 
 
 def run_sliding_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Drive the sliding-window stream (1h windows, 30-min slide) to
     completion and return the materialized per-window counts."""
-    name = f"sliding_{uuid.uuid4().hex[:8]}"
-    # 8-partition state stage — same rationale as run_tumbling_stream.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", state_partitions(spark))
-    q = (
-        sliding_window_agg(streaming_events(spark, sf_dir))
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return _drain_memory_sink(spark, name)
+    stream = sliding_window_agg(streaming_events(spark, sf_dir))
+    return replay_to_memory(spark, stream, "complete")[0]
 
 
 def run_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -263,7 +234,6 @@ def run_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTINCT — the oracle check. At scale the watermark is what keeps
     state bounded: keys older than the horizon are evicted.
     """
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
     events = streaming_events(spark, sf_dir)
     # dropDuplicatesWithinWatermark: dedup state is evicted once the
     # watermark passes a key's event time — plain dropDuplicates
@@ -274,27 +244,34 @@ def run_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    # One keyed state store per shuffle partition: at the session's 32
-    # partitions a bounded replay pays 32 store open/commit cycles per
-    # micro-batch for a key set that fits in one. Size the exchange
-    # narrow like run_stream_stream_join; at real scale size it to
-    # cores x executors as for any shuffle.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", state_partitions(spark))
-    try:
-        q = (
-            deduped.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return _drain_memory_sink(spark, name)
+    return replay_to_memory(spark, deduped, "append")[0]
+
+
+def _purchase_view_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """The stream-stream runners' interval join: purchases joined
+    (``how``) to the same user's views from the preceding 24 hours,
+    each side under a 1-hour watermark."""
+    ev = streaming_events(spark, sf_dir)
+    views = (
+        ev.filter(F.col("event_type") == "view")
+        .select(F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
+        .withWatermark("view_ts", "1 hour")
+    )
+    purchases = (
+        ev.filter(F.col("event_type") == "purchase")
+        .select("user_id", F.col("ts").alias("purchase_ts"))
+        .withWatermark("purchase_ts", "1 hour")
+    )
+    return purchases.join(
+        views,
+        F.expr(
+            """
+            user_id = v_user AND
+            view_ts BETWEEN purchase_ts - INTERVAL 24 HOURS AND purchase_ts
+            """
+        ),
+        how,
+    )
 
 
 def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -312,51 +289,12 @@ def run_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned by user_id across executors; the watermark is what
     evicts it.
     """
-    name = f"ssjoin_{uuid.uuid4().hex[:8]}"
-    ev = streaming_events(spark, sf_dir)
-    # A stream-stream join keeps TWO keyed state stores per shuffle
-    # partition; with a bare session's 200 partitions that is 400
-    # store open/commit cycles per micro-batch — the dominant cost on
-    # a bounded replay (the join itself is 0.6 s in batch form). Size
-    # the exchange narrow here, like run_stateful_user_counts; at real
-    # scale size it to cores × executors as for any shuffle.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", state_partitions(spark))
-    views = (
-        ev.filter(F.col("event_type") == "view")
-        .select(F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
-        .withWatermark("view_ts", "1 hour")
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(F.col("user_id").alias("user_id"), F.col("ts").alias("purchase_ts"))
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = purchases.join(
-        views,
-        F.expr(
-            """
-            user_id = v_user AND
-            view_ts BETWEEN purchase_ts - INTERVAL 24 HOURS AND purchase_ts
-            """
-        ),
-    ).select(
+    joined = _purchase_view_join(spark, sf_dir, "inner").select(
         "user_id",
         F.unix_micros("view_ts").alias("view_ts_us"),
         F.unix_micros("purchase_ts").alias("purchase_ts_us"),
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return _drain_memory_sink(spark, name)
+    return replay_to_memory(spark, joined, "append")[0]
 
 
 def run_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -371,11 +309,6 @@ def run_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     for dimension joins on a 100 TB/day stream — re-keying the stream
     to co-partition with a dimension would be a per-batch shuffle.
     """
-    from ..sources.readers import read_parquet_table
-
-    name = f"ssenrich_{uuid.uuid4().hex[:8]}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", state_partitions(spark))
     ev = streaming_events(spark, sf_dir)
     cust = read_parquet_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
@@ -394,18 +327,7 @@ def run_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return _drain_memory_sink(spark, name)
+    return replay_to_memory(spark, agg, "complete")[0]
 
 
 def run_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -422,11 +344,6 @@ def run_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     The returned aggregate must equal the plain batch GROUP BY — which
     is what the oracle checks.
     """
-    import shutil
-    import tempfile
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", state_partitions(spark))
     tgt = tempfile.mkdtemp(prefix="fbu_") + "/target"
     ev = streaming_events(spark, sf_dir)
     doubled = ev.union(ev)
@@ -441,12 +358,12 @@ def run_foreach_batch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             pass  # first batch: no target yet
         fresh.write.mode("append").parquet(tgt)
 
-    q = doubled.writeStream.foreachBatch(merge).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+    with scoped_conf(spark, state_stage_conf(spark)):
+        q = doubled.writeStream.foreachBatch(merge).start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
     agg = (
         spark.read.parquet(tgt)
         .groupBy("event_type")
@@ -477,9 +394,6 @@ def run_checkpointed_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame
     checkpoint re-emits NOTHING (exactly-once), which the runner
     asserts by re-opening the stream.
     """
-    import shutil
-    import tempfile
-
     events = streaming_events(spark, sf_dir)
     agg = (
         events.withWatermark("ts", "1 hour")
@@ -494,28 +408,24 @@ def run_checkpointed_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame
     base = tempfile.mkdtemp(prefix="spark_graft_sink_")
     out_dir = os.path.join(base, "out")
     ckpt = os.path.join(base, "ckpt")
-    # 8-partition state stage — same rationale as run_tumbling_stream;
-    # also 8 output files instead of 32 near-empty ones (guide §6).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", state_partitions(spark))
     try:
-        for _ in range(2):  # second run: restart from checkpoint, no dupes
-            q = (
-                agg.writeStream.outputMode("append")
-                .format("parquet")
-                .option("path", out_dir)
-                .option("checkpointLocation", ckpt)
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+        with scoped_conf(spark, state_stage_conf(spark)):
+            for _ in range(2):  # second run: restart from checkpoint, no dupes
+                q = (
+                    agg.writeStream.outputMode("append")
+                    .format("parquet")
+                    .option("path", out_dir)
+                    .option("checkpointLocation", ckpt)
+                    .start()
+                )
+                try:
+                    q.processAllAvailable()
+                finally:
+                    q.stop()
         # Pin before the finally-rmtree: a cache could be invalidated
         # later and recompute from the deleted path.
-        return _pin_local(spark, spark.read.parquet(out_dir))
+        return pin_local(spark, spark.read.parquet(out_dir))
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(base, ignore_errors=True)
 
 
@@ -532,8 +442,6 @@ def run_incremental_backfill(
 
     Returns (result DataFrame, micro-batch count).
     """
-    from ..sources.readers import read_parquet_table
-
     # Temp IO lives under <repo>/.tmp_io (gitignored) like every other
     # IO query, and is removed in finally once the memory-sink result
     # is materialized.
@@ -551,26 +459,9 @@ def run_incremental_backfill(
             .option("maxFilesPerTrigger", per_trigger)
             .parquet(src_dir)
         )
-        name = f"backfill_{uuid.uuid4().hex[:8]}"
-        # 8-partition state stage — same rationale as
-        # run_tumbling_stream; here the cost multiplies by the
-        # n_files/per_trigger micro-batches of the backfill replay.
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", state_partitions(spark))
-        try:
-            q = (
-                tumbling_window_agg_stream(stream)
-                .writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
-        return _drain_memory_sink(spark, name), n_batches
+        return replay_to_memory(
+            spark, tumbling_window_agg_stream(stream), "complete", available_now=True
+        )
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -585,23 +476,8 @@ def run_append_mode_windows(spark: SparkSession, sf_dir: str):
     are withheld as still-open — the batch-oracle twin applies the
     same cutoff.
     """
-    name = f"append_{uuid.uuid4().hex[:8]}"
-    # 8-partition state stage — same rationale as run_tumbling_stream.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", state_partitions(spark))
-    q = (
-        tumbling_window_agg_stream(streaming_events(spark, sf_dir))
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return _drain_memory_sink(spark, name)
+    stream = tumbling_window_agg_stream(streaming_events(spark, sf_dir))
+    return replay_to_memory(spark, stream, "append")[0]
 
 
 def run_stream_stream_left_outer_join(
@@ -629,46 +505,12 @@ def run_stream_stream_left_outer_join(
     (horizon x per-key rate per side, keyed by user_id) plus the
     unmatched-left buffer the watermark evicts.
     """
-    name = f"ssloj_{uuid.uuid4().hex[:8]}"
-    ev = streaming_events(spark, sf_dir)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", state_partitions(spark))
-    views = (
-        ev.filter(F.col("event_type") == "view")
-        .select(F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
-        .withWatermark("view_ts", "1 hour")
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select("user_id", F.col("ts").alias("purchase_ts"))
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = purchases.join(
-        views,
-        F.expr(
-            """
-            user_id = v_user AND
-            view_ts BETWEEN purchase_ts - INTERVAL 24 HOURS AND purchase_ts
-            """
-        ),
-        "leftOuter",
-    ).select(
+    joined = _purchase_view_join(spark, sf_dir, "leftOuter").select(
         "user_id",
         F.unix_micros("purchase_ts").alias("purchase_ts_us"),
         F.unix_micros("view_ts").alias("view_ts_us"),
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return _drain_memory_sink(spark, name)
+    return replay_to_memory(spark, joined, "append")[0]
 
 
 def run_stream_stream_full_outer_join(
@@ -697,46 +539,12 @@ def run_stream_stream_full_outer_join(
     asymmetric eviction horizons (0 vs 24 h past event time) mean the
     view-side buffer dominates by the interval width.
     """
-    name = f"ssfoj_{uuid.uuid4().hex[:8]}"
-    ev = streaming_events(spark, sf_dir)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", state_partitions(spark))
-    views = (
-        ev.filter(F.col("event_type") == "view")
-        .select(F.col("user_id").alias("v_user"), F.col("ts").alias("view_ts"))
-        .withWatermark("view_ts", "1 hour")
-    )
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select("user_id", F.col("ts").alias("purchase_ts"))
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    joined = purchases.join(
-        views,
-        F.expr(
-            """
-            user_id = v_user AND
-            view_ts BETWEEN purchase_ts - INTERVAL 24 HOURS AND purchase_ts
-            """
-        ),
-        "fullOuter",
-    ).select(
+    joined = _purchase_view_join(spark, sf_dir, "fullOuter").select(
         F.coalesce(F.col("user_id"), F.col("v_user")).alias("user_id"),
         F.unix_micros("purchase_ts").alias("purchase_ts_us"),
         F.unix_micros("view_ts").alias("view_ts_us"),
     )
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return _drain_memory_sink(spark, name)
+    return replay_to_memory(spark, joined, "append")[0]
 
 
 def run_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -790,64 +598,41 @@ def run_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         def close(self):
             pass
 
-    name = f"tws_{uuid.uuid4().hex[:8]}"
-    events = streaming_events(spark, sf_dir).select(
-        "user_id",
-        F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
-    )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_provider = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", state_partitions(spark))
-    # transformWithState requires the RocksDB provider (bundled).
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            events.groupBy("user_id")
-            .transformWithStateInPandas(
-                statefulProcessor=RunningTotals(),
-                outputStructType=(
-                    "user_id long, n_events long, total_cents long"
-                ),
-                outputMode="Update",
-                timeMode="None",
-            )
-            .writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
+    stream = (
+        streaming_events(spark, sf_dir)
+        .select(
+            "user_id",
+            F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        # one row per (user, micro-batch); the final running totals are
-        # the per-user maxima (counts and sums only grow).
-        out = _pin_local(
-            spark,
-            spark.table(name)
-            .groupBy("user_id")
-            .agg(
-                F.max("n_events").cast("bigint").alias("n_events"),
-                F.max("total_cents").cast("bigint").alias("total_cents"),
-            )
-            .orderBy("user_id"),
+        .groupBy("user_id")
+        .transformWithStateInPandas(
+            statefulProcessor=RunningTotals(),
+            outputStructType="user_id long, n_events long, total_cents long",
+            outputMode="Update",
+            timeMode="None",
         )
-        spark.catalog.dropTempView(name)
-        return out
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prev_provider is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev_provider
-            )
-        else:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    )
+    # one row per (user, micro-batch); the final running totals are
+    # the per-user maxima (counts and sums only grow).
+    return replay_to_memory(
+        spark,
+        stream,
+        "update",
+        result=lambda sink, _: sink.groupBy("user_id")
+        .agg(
+            F.max("n_events").cast("bigint").alias("n_events"),
+            F.max("total_cents").cast("bigint").alias("total_cents"),
+        )
+        .orderBy("user_id"),
+        conf={
+            **state_stage_conf(spark),
+            # transformWithState requires the RocksDB provider (bundled).
+            "spark.sql.streaming.stateStore.providerClass": (
+                "org.apache.spark.sql.execution.streaming.state."
+                "RocksDBStateStoreProvider"
+            ),
+        },
+    )[0]
 
 
 def run_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -868,7 +653,6 @@ def run_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     case; session state is keyed by (user, window) so it shards across
     executors with the shuffle.
     """
-    name = f"sesswin_{uuid.uuid4().hex[:8]}"
     events = streaming_events(spark, sf_dir)
     agg = (
         events.withWatermark("ts", "1 hour")
@@ -895,19 +679,4 @@ def run_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("span_s"),
         )
     )
-    # 8-partition state stage — same rationale as run_tumbling_stream
-    # (merging-session state shards with the shuffle partitions too).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", state_partitions(spark))
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    return _drain_memory_sink(spark, name)
+    return replay_to_memory(spark, agg, "complete")[0]

@@ -129,9 +129,9 @@ def _subtree_unbounded(node: dict, details: dict[int, str]) -> bool:
     if name == "Scan":
         # File-format scans are data-scale. Treating "Scan ExistingRDD"
         # as bounded is a HEURISTIC, not a proof: the registry's local
-        # relations come from pinning.pin_local (10k-row guard) or
-        # _drain_memory_sink (1M-row explicit bound), but a raw
-        # spark.createDataFrame call site is not forced through either,
+        # relations come from pinning.pin_local (10k-row guard; 1M rows
+        # for streaming.windows.replay_to_memory's sinks), but a raw
+        # spark.createDataFrame call site is not forced through it,
         # so an audit pass is only as strong as that convention.
         # "Scan OneRowRelation" is a literal.
         return node["name"].split()[1] not in ("ExistingRDD", "OneRowRelation")

@@ -312,6 +312,7 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark, sf_dir):
     is that the OPTIMIZER wires the filter, which is size-independent."""
     from pyspark.sql import functions as F
 
+    from loan_default_prediction_app_big_data_spark.session import scoped_conf
     from loan_default_prediction_app_big_data_spark.sources.readers import read_parquet_table
 
     tuned = {
@@ -320,10 +321,7 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark, sf_dir):
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
     }
-    saved = {k: spark.conf.get(k, None) for k in tuned}
-    try:
-        for k, v in tuned.items():
-            spark.conf.set(k, v)
+    with scoped_conf(spark, tuned):
         li = read_parquet_table(spark, sf_dir, "lineitem")
         o = read_parquet_table(spark, sf_dir, "orders").filter(
             F.col("o_totalprice") > 450000
@@ -340,12 +338,6 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark, sf_dir):
         )
         assert "might_contain" in plan
         assert "bloom_filter_agg" in plan
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def test_driver_window_has_no_already_certified_names():

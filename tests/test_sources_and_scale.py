@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from loan_default_prediction_app_big_data_spark.operators import skew as K
 from loan_default_prediction_app_big_data_spark.schema import LOAN_SCHEMA
+from loan_default_prediction_app_big_data_spark.session import scoped_conf
 from loan_default_prediction_app_big_data_spark.sources.readers import (
     read_binary_files,
     read_csv,
@@ -136,8 +137,7 @@ def test_bucketed_join_avoids_shuffle(spark, sf_dir, tmp_path):
     assert j.exceptAll(expected).count() == 0
     # With disabled broadcast the join must be SMJ without a shuffle of
     # either side (bucket layout provides the partitioning).
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         j2 = spark.table("b_lineitem").join(
             spark.table("b_orders"), F.col("lo_key") == F.col("o_orderkey")
         )
@@ -145,8 +145,6 @@ def test_bucketed_join_avoids_shuffle(spark, sf_dir, tmp_path):
         assert "SortMergeJoin" in plan2
         assert "Exchange hashpartitioning(lo_key" not in plan2
         assert "Exchange hashpartitioning(o_orderkey" not in plan2
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
 
 
 def test_date_partitioned_layout_prunes(spark, sf_dir, tmp_path):

@@ -8,8 +8,9 @@ mechanism behind the round-5 driver-bench inflations (PERF.md round-6).
 These tests run the batch queries that historically leaked and assert
 the storage registry is empty afterwards.
 
-Streaming runners are covered by their own _drain_memory_sink /
-_pin_local discipline (streaming/windows.py, fixed earlier in round 6).
+Streaming runners are covered by their own pinned-memory-sink
+discipline (streaming.windows.replay_to_memory). Session-conf
+discipline is tests/test_session_conf.py.
 """
 
 from __future__ import annotations
