@@ -3,10 +3,9 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric", "value", "unit", "queries": {name: sec}, "sf"}.
 
-Each query executes with a `noop` sink so the full plan runs distributed
-with zero driver-side materialization — the honest cost of the operator,
-not of collect(). A warmup query runs first so JVM/codegen startup isn't
-billed to the first query.
+Each query run is `harness.run_query` (`fn` plus a `noop` save, pins
+released off the clock) after one `harness.warm_session`; this file
+owns only the sampling policy and the report.
 """
 
 from __future__ import annotations
@@ -18,68 +17,23 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from loan_default_prediction_app_big_data_spark.harness import (  # noqa: E402
+    run_query,
+    warm_session,
+)
 from loan_default_prediction_app_big_data_spark.plans.registry import REGISTRY  # noqa: E402
 from loan_default_prediction_app_big_data_spark.session import get_spark  # noqa: E402
-from loan_default_prediction_app_big_data_spark.pinning import (  # noqa: E402
-    RELEASE_STATS,
-    release_local_checkpoints,
-)
+from loan_default_prediction_app_big_data_spark.pinning import RELEASE_STATS  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # Streaming query included: it runs the same windowed agg via the
 # streaming engine (memory sink) — its time IS comparable work.
 
-def _warm_python_datasource(spark) -> None:
-    """One tiny read through the Python DataSource API so its
-    per-session worker/registration spin-up lands in warmup."""
-    import sqlite3
-    import tempfile
-
-    from loan_default_prediction_app_big_data_spark.sources.sqlite_py import (
-        HAVE_DATASOURCE_API,
-        register_sqlite_source,
-    )
-
-    if not HAVE_DATASOURCE_API:
-        return
-    with tempfile.TemporaryDirectory(prefix="bench_dswarm_") as d:
-        db = os.path.join(d, "shard-00000.db")
-        conn = sqlite3.connect(db)
-        conn.execute("CREATE TABLE warm (k INTEGER)")
-        conn.execute("INSERT INTO warm VALUES (1)")
-        conn.commit()
-        conn.close()
-        register_sqlite_source(spark)
-        (
-            spark.read.format("sqlite_py")
-            .option("path", d)
-            .option("table", "warm")
-            .load()
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-
 
 def run() -> None:
     spark = get_spark(app_name="bench")
     sf = os.path.basename(SF_DIR.rstrip("/")).replace("sf", "")
-
-    # Warmup: JVM + codegen + parquet footer caches, plus one tiny
-    # Arrow/Python-worker round trip so the first pandas-UDF query is
-    # not billed for worker spin-up.
-    REGISTRY["count_rows"].fn(spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    spark.range(8).mapInPandas(
-        lambda it: it, schema="id long"
-    ).write.format("noop").mode("overwrite").save()
-    # Python DataSource workers spin up on their own path (~12 s
-    # one-time per session, measured in the r7 retimes) — absorb it
-    # here with a 1-row sqlite read instead of billing whichever
-    # sqlite/CDC query runs first (VERDICT r7 item 4:
-    # sqlite_cdc_streaming_tail carried it at 9.2 s steady).
-    _warm_python_datasource(spark)
+    warm_session(spark, SF_DIR)
 
     # Load the previously COMMITTED snapshot before overwriting it, so
     # the emitted artifact itself shows per-query deltas (BENCH_r03
@@ -107,28 +61,10 @@ def run() -> None:
     streaming_steady: dict[str, float] = {}
     unstable = 0
     for qi, (name, spec) in enumerate(REGISTRY.items()):
-        runs = []
-        for _ in range(2):
-            start = time.perf_counter()
-            df = spec.fn(spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - start)
-            # Release the returned plan's localCheckpoint pins NOW,
-            # off the clock — .rdd.unpersist() is a no-op for
-            # checkpoints and the GC->ContextCleaner path lags whole
-            # query-batches behind (r9: measured 16 accumulated pins
-            # degrading fpgrowth 2-4x in-session), so the bench frees
-            # each query's pins deterministically before the next run.
-            release_local_checkpoints(df)
-            del df
+        runs = [run_query(spark, name, SF_DIR) for _ in range(2)]
         if max(runs) > 1.5 * min(runs) and max(runs) - min(runs) > 0.5:
             unstable += 1
-            start = time.perf_counter()
-            df = spec.fn(spark, SF_DIR)
-            df.write.format("noop").mode("overwrite").save()
-            runs.append(time.perf_counter() - start)
-            release_local_checkpoints(df)
-            del df
+            runs.append(run_query(spark, name, SF_DIR))
         timings[name] = round(min(runs), 3)
         # Streaming replays pay checkpoint/state-store setup EVERY run,
         # so their wall-time is noise-prone; record the second-replay

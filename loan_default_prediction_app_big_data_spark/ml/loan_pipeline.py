@@ -120,7 +120,6 @@ def fit_loan_model(
     label_col: str = LOAN_LABEL,
     seed: int = 42,
     max_iter: int = 100,
-    pin_inputs: bool = True,
 ) -> LoanModel:
     """End-to-end A8-A16/A19-A20: preprocess, split, train, evaluate.
 
@@ -133,35 +132,27 @@ def fit_loan_model(
     # materialization: Imputer fit, StandardScaler fit, the transform
     # feeding the split, and each of the two evaluators replays the
     # whole upstream plan (CSV parse, any replication crossJoin,
-    # casts). ``pin_inputs`` pins the casted input once and the
-    # preprocessed frame once (guide §5 caching: reused AND expensive
-    # to recompute); localCheckpoint preserves partition count and
+    # casts). So the casted input is pinned once and the preprocessed
+    # frame once (guide §5 caching: reused AND expensive to
+    # recompute); localCheckpoint preserves partition count and
     # contents, so the seeded randomSplit, L-BFGS aggregation order,
     # metrics and objectiveHistory are bit-identical (r9 A/B
-    # verified) whether or not the pins are taken. Both pins are
-    # released before returning — nothing stays pinned in the
-    # session. ``pin_inputs=False`` skips the two eager
-    # materialization jobs and lets every consumer replay the lazy
-    # plan — cheaper when the input is a trivially recomputable scan
-    # (r10 A/B evidence in OPTIMIZATION_r10.md).
+    # verified) to the unpinned chain. Both pins are released before
+    # returning — nothing stays pinned in the session.
     from ..pinning import release_local_checkpoints
 
-    df = cast_features_double(df)
-    if pin_inputs:
-        df = df.localCheckpoint(eager=True)
+    df = cast_features_double(df).localCheckpoint(eager=True)
     pre = build_preprocessing_pipeline(with_mean=with_mean)
     if fit_scope_train_only:
         train_raw, test_raw = seeded_split(df, seed=seed)
         pre_model = pre.fit(train_raw)
         train, test = pre_model.transform(train_raw), pre_model.transform(test_raw)
-        pinned = (df,) if pin_inputs else ()
+        pinned = (df,)
     else:
         pre_model = pre.fit(df)
-        full = pre_model.transform(df)
-        if pin_inputs:
-            full = full.localCheckpoint(eager=True)
+        full = pre_model.transform(df).localCheckpoint(eager=True)
         train, test = seeded_split(full, seed=seed)
-        pinned = (df, full) if pin_inputs else ()
+        pinned = (df, full)
 
     lr = LogisticRegression(
         featuresCol="scaled_features", labelCol=label_col, maxIter=max_iter

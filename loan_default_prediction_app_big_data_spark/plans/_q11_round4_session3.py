@@ -1216,4 +1216,5 @@ def sql_scripting_median_bisection(
             out = pin_local(spark, spark.sql(script))
     finally:
         cents.unpersist()
+        spark.catalog.dropTempView("_script_cents")
     return out

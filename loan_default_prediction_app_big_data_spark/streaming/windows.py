@@ -32,7 +32,7 @@ partitions cost 400 store cycles per micro-batch in a stream-stream
 join whose batch form runs in 0.6 s. A file sink also writes that
 many files, not one near-empty file per session partition. At real
 scale the state stage is sized like any exchange (~cores × executors,
-far above 8) through ``SPARK_GRAFT_STATE_PARTITIONS``.
+far above 8).
 """
 
 from __future__ import annotations
@@ -77,9 +77,8 @@ def state_stage_conf(spark: SparkSession) -> dict[str, str]:
     """The scoped conf that narrows a replay's keyed-state stage (see
     the module docstring) to ``min(defaultParallelism, 8)`` partitions,
     so it scales DOWN with a reduced-core run instead of pinning a
-    local[32] constant; ``SPARK_GRAFT_STATE_PARTITIONS`` overrides it."""
-    env = os.environ.get("SPARK_GRAFT_STATE_PARTITIONS")
-    n = int(env) if env else min(spark.sparkContext.defaultParallelism, 8)
+    local[32] constant."""
+    n = min(spark.sparkContext.defaultParallelism, 8)
     return {"spark.sql.shuffle.partitions": str(n)}
 
 

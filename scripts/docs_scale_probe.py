@@ -25,13 +25,12 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from loan_default_prediction_app_big_data_spark.harness import run_query, warm_session  # noqa: E402
 from loan_default_prediction_app_big_data_spark.session import get_spark  # noqa: E402
-from loan_default_prediction_app_big_data_spark.plans.registry import REGISTRY  # noqa: E402
 
 SF_BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 ALL_TABLES = [
@@ -99,19 +98,14 @@ def main() -> int:
     probe_dir = build_fixture(replicas)
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
+    warm_session(spark, SF_BASE)
 
     print(f"# {replicas}x documents probe ({probe_dir})")
     for name in queries:
-        spec = REGISTRY[name]
         for sf_dir, label in ((SF_BASE, "sf0.1"), (probe_dir, f"{replicas}x")):
-            runs = []
-            for _ in range(2 if sf_dir == SF_BASE else 1):
-                start = time.perf_counter()
-                spec.fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                runs.append(time.perf_counter() - start)
-            print(f"{name} @ {label}: {min(runs):.1f} s")
+            n_runs = 2 if sf_dir == SF_BASE else 1
+            best = min(run_query(spark, name, sf_dir) for _ in range(n_runs))
+            print(f"{name} @ {label}: {best:.1f} s")
     return 0
 
 

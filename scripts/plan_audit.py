@@ -246,6 +246,7 @@ def audit(name: str, plan: str) -> dict:
 
 
 def main() -> int:
+    from loan_default_prediction_app_big_data_spark.pinning import release_local_checkpoints
     from loan_default_prediction_app_big_data_spark.plans.registry import REGISTRY
     from loan_default_prediction_app_big_data_spark.session import get_spark
 
@@ -255,7 +256,12 @@ def main() -> int:
         if MATERIALIZED.search(name):
             continue
         try:
-            rows.append(audit(name, plan_of(spec.fn(spark, SF_DIR))))
+            df = spec.fn(spark, SF_DIR)
+            plan = plan_of(df)
+            # Free the frame's eager localCheckpoint pins before the
+            # next build; one session builds the whole census.
+            release_local_checkpoints(df)
+            rows.append(audit(name, plan))
         except Exception as e:  # noqa: BLE001
             errors.append((name, str(e).splitlines()[0][:100]))
 

@@ -6,8 +6,8 @@ skew/broadcast-sensitive shapes). It materializes a ~sf1 fixture by
 replicating the sf0.1 FACT tables (orders, lineitem) 10x with disjoint
 orderkey ranges — dimension tables are symlinked unchanged, which is
 exactly the growth pattern the engine's broadcast-dim claims assume —
-then times each query at sf0.1 and at the 10x fixture (best-of-2, noop
-sink) and prints the scaling ratio.
+then times each query at sf0.1 and at the 10x fixture (best-of-2
+``harness.run_query``) and prints the scaling ratio.
 
 A join tier that holds its claimed shape (broadcast dims, partial aggs,
 AQE-planned shuffles) should scale ~linearly in fact rows: ratio ~<=
@@ -25,13 +25,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+from loan_default_prediction_app_big_data_spark.harness import run_query, warm_session  # noqa: E402
 from loan_default_prediction_app_big_data_spark.session import get_spark  # noqa: E402
-from loan_default_prediction_app_big_data_spark.plans.registry import REGISTRY  # noqa: E402
 
 SF_BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 PROBE_DIR = os.path.join(REPO, ".tmp_io", "sf1_probe")
@@ -97,15 +96,6 @@ def build_fixture(spark) -> None:
             os.symlink(os.path.join(SF_BASE, f"{name}.parquet"), dst)
 
 
-def time_query(spark, name: str, sf_dir: str, runs: int = 2) -> float:
-    samples = []
-    for _ in range(runs):
-        start = time.perf_counter()
-        REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        samples.append(time.perf_counter() - start)
-    return round(min(samples), 2)
-
-
 def main() -> None:
     names = sys.argv[1:] or DEFAULT_QUERIES
     spark = get_spark(app_name="scale-probe")
@@ -113,12 +103,13 @@ def main() -> None:
     if not os.path.exists(os.path.join(PROBE_DIR, "lineitem.parquet")):
         print(f"building 10x fact fixture under {PROBE_DIR} ...", file=sys.stderr)
         build_fixture(spark)
-    # warm the JVM/codegen before the measured runs
-    REGISTRY[names[0]].fn(spark, SF_BASE).write.format("noop").mode("overwrite").save()
+    warm_session(spark, SF_BASE)
     rows = []
     for name in names:
-        base = time_query(spark, name, SF_BASE)
-        big = time_query(spark, name, PROBE_DIR)
+        base, big = (
+            round(min(run_query(spark, name, sf_dir) for _ in range(2)), 2)
+            for sf_dir in (SF_BASE, PROBE_DIR)
+        )
         ratio = round(big / base, 2) if base > 0 else None
         rows.append({"query": name, "sf0.1_s": base, "10x_s": big, "ratio": ratio})
         print(f"{name:32s} sf0.1 {base:7.2f}s  10x {big:7.2f}s  ratio {ratio}",

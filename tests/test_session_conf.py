@@ -4,9 +4,9 @@ Every query must leave the session conf exactly as it found it. A
 query that needs a conf for part of its work sets it through
 ``session.scoped_conf``, which restores each key's prior explicit value
 or unsets it. These tests pin the helper's contract, check ``getAll``
-around the queries whose hand-rolled restore blocks used to leave a
-default behind as an explicit setting, and guard the package against
-new unscoped ``conf.set``/``unset`` calls.
+and the temp-view names around the queries whose hand-rolled restore
+blocks used to leave a default behind as an explicit setting, and
+guard the package against new unscoped ``conf.set``/``unset`` calls.
 """
 
 from __future__ import annotations
@@ -25,6 +25,10 @@ _KEY = "spark.sql.sources.partitionOverwriteMode"
 
 def _conf(spark) -> dict[str, str]:
     return dict(spark.conf.getAll)
+
+
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
 
 
 def test_scoped_conf_restores_a_set_key(spark):
@@ -60,7 +64,7 @@ def test_scoped_conf_restores_when_the_body_raises(spark):
     ],
 )
 def test_query_leaves_session_conf_unchanged(spark, sf_smoke, name):
-    before = _conf(spark)
+    before, views_before = _conf(spark), _temp_views(spark)
     REGISTRY[name].fn(spark, sf_smoke).collect()
     after = _conf(spark)
     changed = {
@@ -69,6 +73,7 @@ def test_query_leaves_session_conf_unchanged(spark, sf_smoke, name):
         if before.get(k) != after.get(k)
     }
     assert changed == {}, (name, changed)
+    assert _temp_views(spark) == views_before, name
 
 
 # (path relative to the package, enclosing function) -> why the call
