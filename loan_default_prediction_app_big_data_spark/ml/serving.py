@@ -3,32 +3,37 @@
 Reference flow (app.py:152-205): widget dict → 1-row DataFrame →
 fitted scaler → tensor → forward → argmax → rule override → verdict.
 
-Engine flow: 1-row Spark DataFrame → fitted PipelineModel.transform →
-LogisticRegressionModel.transform (MLlib's ``prediction`` column IS the
-argmax over class scores) → override → verdict. One narrow
-single-partition job; for latency-critical serving the same arithmetic
-can run driver-local over the (tiny) broadcast model coefficients.
+Engine flow: 1-row Arrow-built DataFrame → fitted PipelineModel.transform
+→ LogisticRegressionModel.transform (MLlib's ``prediction`` column IS the
+argmax over class scores) → override → verdict. The row enters Spark as
+a ``LocalRelation``, so Catalyst's ``ConvertToLocalRelation`` folds every
+projection of the fitted stages on the driver: the executed plan is one
+``LocalTableScan`` and a serve runs 0 Spark jobs (a list of Rows would
+become a ``Scan ExistingRDD`` over a parallelized RDD: 2 jobs a serve).
+What remains is driver-side analysis, ~130-155 ms a serve on 4 cores;
+the same arithmetic runs in microseconds driver-local over the (tiny)
+model coefficients (``predict_local``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Row, SparkSession
+import pyarrow as pa
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..schema import LOAN_FEATURES
+from ..schema import LOAN_FEATURES, LOAN_IMPUTED
 from .override import OverrideThresholds, apply_override, verdict_text
 
+#: The imputed features are nullable: a missing one is filled from the
+#: fitted Imputer's surrogate, as ``predict_local`` does.
 INPUT_SCHEMA = T.StructType(
-    [
-        T.StructField("loan_amount", T.DoubleType(), False),
-        T.StructField("rate_of_interest", T.DoubleType(), False),
-        T.StructField("property_value", T.DoubleType(), False),
-        T.StructField("income", T.DoubleType(), False),
-        T.StructField("Credit_Score", T.DoubleType(), False),
-        T.StructField("LTV", T.DoubleType(), False),
-    ]
+    [T.StructField(c, T.DoubleType(), c in LOAN_IMPUTED) for c in LOAN_FEATURES]
 )
+
+
+def _as_double(v) -> float | None:
+    return None if v is None else float(v)
 
 
 def predict_single_row(
@@ -40,11 +45,14 @@ def predict_single_row(
 ) -> dict:
     """Score one input row and apply the A18 override.
 
-    ``features`` keys follow the reference widget dict (app.py:160-167).
+    ``features`` keys follow the reference widget dict (app.py:160-167);
+    a missing or ``None`` imputed feature is imputed.
     Returns {prediction, final_prediction, verdict, probability}.
     """
-    row = Row(**{c: float(features[c]) for c in LOAN_FEATURES})
-    df = spark.createDataFrame([row], schema=INPUT_SCHEMA)
+    row = pa.table(
+        {c: pa.array([_as_double(features.get(c))], pa.float64()) for c in LOAN_FEATURES}
+    )
+    df = spark.createDataFrame(row, schema=INPUT_SCHEMA)
     scored = lr_model.transform(pipeline_model.transform(df))
     out = (
         apply_override(scored, th=th)
@@ -70,9 +78,9 @@ def extract_serving_params(pipeline_model, lr_model) -> dict:
     coefficients) out of the models for driver-local scoring.
 
     Everything is tiny — 4 surrogates, 6 stds/means, 6+1 coefficients —
-    the whole model is < 1 KB, which is why single-row serving should
-    never pay a Spark job (PERF.md: the ~1 s p50 of the distributed
-    path is job-scheduling floor, not math).
+    the whole model is < 1 KB. ``predict_single_row`` runs the same
+    arithmetic in 0 Spark jobs but pays ~130-155 ms of Catalyst analysis
+    a serve on 4 cores; these parameters score a row in microseconds.
     """
     from pyspark.ml.feature import ImputerModel, StandardScalerModel
 

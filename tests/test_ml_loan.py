@@ -214,6 +214,9 @@ def test_local_serving_matches_distributed(spark, loan, model):
              income=10_000.0, Credit_Score=520.0, LTV=95.0),  # override fires
         dict(loan_amount=350_000.0, rate_of_interest=3.0, property_value=900_000.0,
              income=80_000.0, Credit_Score=700.0, LTV=40.0),
+        # a missing imputed feature is filled from the Imputer's surrogate
+        dict(loan_amount=100_000.0, rate_of_interest=4.0, property_value=500_000.0,
+             income=None, Credit_Score=800.0, LTV=20.0),
     ]
     for feats in cases:
         dist = predict_single_row(spark, model.pipeline_model, model.lr_model, feats)
@@ -222,6 +225,23 @@ def test_local_serving_matches_distributed(spark, loan, model):
         assert loc["final_prediction"] == dist["final_prediction"]
         p1_dist = float(dist["probability"].strip("[]").split(",")[1])
         assert loc["probability_1"] == pytest.approx(p1_dist, abs=1e-9)
+
+
+def test_single_row_serving_runs_no_spark_job(spark, loan, model):
+    """The 1-row input is a LocalRelation, so Catalyst folds the whole
+    fitted pipeline on the driver and a warm serve schedules no job."""
+    feats = dict(loan_amount=100_000.0, rate_of_interest=4.0, property_value=500_000.0,
+                 income=120_000.0, Credit_Score=800.0, LTV=20.0)
+    # The first transform may run one job for the Imputer's lazy surrogates.
+    predict_single_row(spark, model.pipeline_model, model.lr_model, feats)
+    sc = spark.sparkContext
+    group = "test_single_row_serving_runs_no_spark_job"
+    sc.setJobGroup(group, group)
+    try:
+        predict_single_row(spark, model.pipeline_model, model.lr_model, feats)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_viz_feed_bounded_and_deterministic(spark, loan):

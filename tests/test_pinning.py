@@ -1,4 +1,4 @@
-"""pin_local: local-relation pinning with the max-rows guard."""
+"""pin_local: driver-held pinning with the max-rows guard."""
 
 from __future__ import annotations
 
