@@ -10,13 +10,16 @@ weights) — metrics and formulas are.
 
 from __future__ import annotations
 
+import math
 import os
 
 import pandas as pd
 import pytest
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import functions as F
 
 from loan_default_prediction_app_big_data_spark.ml import (
+    OverrideThresholds,
     apply_override,
     fit_loan_model,
     predict_single_row,
@@ -161,12 +164,26 @@ def test_override_truth_table(spark):
         (20_000.0, 300_000.0, 50_000.0, 0.0, 0.0),  # already rejected
         (30_000.0, 200_000.0, 100_000.0, 1.0, 1.0),  # boundary: strict <,>,<
     ]
-    df = spark.createDataFrame(
-        rows, "income double, loan_amount double, property_value double, prediction double, expected double"
-    )
-    out = apply_override(df).select("expected", "final_prediction").collect()
+    schema = "income double, loan_amount double, property_value double, prediction double, expected double"
+    out = apply_override(spark.createDataFrame(rows, schema)).select("expected", "final_prediction").collect()
     for r in out:
         assert r["final_prediction"] == r["expected"]
+
+    # Thresholds reach Spark exactly: 0.1 is not a short binary
+    # fraction, so a rendering that rounds it flips the row at or just
+    # below it; +-1e18 exercise exponent notation.
+    th = OverrideThresholds(low_income=0.1, high_loan=-1e18, low_property_value=1e18)
+    below = math.nextafter(0.1, 0.0)
+    rows = [
+        (0.1, 5.0, 5.0, 1.0, 1.0),  # at the threshold: strict < passes
+        (below, 5.0, 5.0, 1.0, 0.0),  # one ulp below: forced 0
+        (0.09999999, 5.0, 5.0, 1.0, 0.0),
+        (0.10000001, 5.0, 5.0, 1.0, 1.0),
+        (below, -1e18, 5.0, 1.0, 1.0),  # loan not > -1e18
+        (below, 5.0, 1e18, 1.0, 1.0),  # property not < 1e18
+    ]
+    out = apply_override(spark.createDataFrame(rows, schema), th=th).select("expected", "final_prediction").collect()
+    assert [r["final_prediction"] for r in out] == [r["expected"] for r in out]
 
 
 def test_single_row_serving_and_persistence(spark, loan, model, tmp_path):
@@ -217,6 +234,9 @@ def test_local_serving_matches_distributed(spark, loan, model):
         # a missing imputed feature is filled from the Imputer's surrogate
         dict(loan_amount=100_000.0, rate_of_interest=4.0, property_value=500_000.0,
              income=None, Credit_Score=800.0, LTV=20.0),
+        # ... and so is a NaN one (the Imputer's missingValue is NaN)
+        dict(loan_amount=100_000.0, rate_of_interest=4.0, property_value=500_000.0,
+             income=math.nan, Credit_Score=800.0, LTV=20.0),
     ]
     for feats in cases:
         dist = predict_single_row(spark, model.pipeline_model, model.lr_model, feats)
@@ -225,6 +245,16 @@ def test_local_serving_matches_distributed(spark, loan, model):
         assert loc["final_prediction"] == dist["final_prediction"]
         p1_dist = float(dist["probability"].strip("[]").split(",")[1])
         assert loc["probability_1"] == pytest.approx(p1_dist, abs=1e-9)
+
+    # A NaN feature that is not imputed: the Assembler rejects it
+    # (handleInvalid='error'), and predict_local must not score it.
+    nan_loan = dict(cases[0], loan_amount=math.nan)
+    with pytest.raises(Py4JJavaError, match="NaN"):
+        predict_single_row(spark, model.pipeline_model, model.lr_model, nan_loan)
+    with pytest.raises(ValueError, match="loan_amount"):
+        predict_local(params, nan_loan)
+    with pytest.raises(ValueError, match="loan_amount"):
+        predict_local(params, {c: v for c, v in cases[0].items() if c != "loan_amount"})
 
 
 def test_single_row_serving_runs_no_spark_job(spark, loan, model):
@@ -242,6 +272,31 @@ def test_single_row_serving_runs_no_spark_job(spark, loan, model):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_single_row_serving_py4j_budget(spark, loan, model):
+    """A warm serve calls the fitted JVM stages directly and applies the
+    override and verdict as SQL text, so it stays within a fixed budget
+    of py4j round trips (the per-param re-send and per-operator column
+    building it avoids made it ~400)."""
+    feats = dict(loan_amount=100_000.0, rate_of_interest=4.0, property_value=500_000.0,
+                 income=120_000.0, Credit_Score=800.0, LTV=20.0)
+    predict_single_row(spark, model.pipeline_model, model.lr_model, feats)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = 0
+
+    def counting(*args, **kwargs):
+        nonlocal calls
+        calls += 1
+        return send(*args, **kwargs)
+
+    client.send_command = counting
+    try:
+        predict_single_row(spark, model.pipeline_model, model.lr_model, feats)
+    finally:
+        del client.send_command
+    assert 0 < calls <= 64
 
 
 def test_viz_feed_bounded_and_deterministic(spark, loan):
