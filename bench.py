@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Benchmark harness: runs every registered query at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric", "value", "unit", "queries": {name: sec}, "sf"}.
+JSON line: {"metric", "value", "unit", "queries": {name: sec}, "sf",
+"cpus", ...}.
 
 Each query run is `harness.run_query` (`fn` plus a `noop` save, pins
 released off the clock) after one `harness.warm_session`; this file
@@ -22,7 +23,7 @@ from loan_default_prediction_app_big_data_spark.harness import (  # noqa: E402
     warm_session,
 )
 from loan_default_prediction_app_big_data_spark.plans.registry import REGISTRY  # noqa: E402
-from loan_default_prediction_app_big_data_spark.session import get_spark  # noqa: E402
+from loan_default_prediction_app_big_data_spark.session import cpu_count, get_spark  # noqa: E402
 from loan_default_prediction_app_big_data_spark.pinning import RELEASE_STATS  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -161,6 +162,7 @@ def run() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "cpus": cpu_count(),
         "load1": load1,
         "gc_ms": gc_ms,
         "n_third_runs": unstable,
@@ -205,10 +207,12 @@ def run() -> None:
 
 def _should_refresh_snapshot(payload: dict, snap_path: str) -> bool:
     """Refresh the committed baseline only from a clean draw AT THE
-    SAME scale factor that is NOT regression-shaped vs the standing
-    baseline — both guards were added after live misses: a clean
-    sf0.001 smoke replaced the sf0.1 baseline, then a 555 s degraded
-    draw slipped the gc gate at gc 11.5 s. A run slower than
+    SAME scale factor and core count that is NOT regression-shaped vs
+    the standing baseline — each guard was added after a live miss: a
+    clean sf0.001 smoke replaced the sf0.1 baseline, a 555 s degraded
+    draw slipped the gc gate at gc 11.5 s, and r10's 8-core draw became
+    the baseline for 32-core runs. A snapshot that records no core
+    count is never replaced by a plain run. A run slower than
     _CLEAN_TOTAL_RATIO x the baseline needs investigating (or
     SPARK_GRAFT_SNAPSHOT=force after a deliberate slowdown) before it
     may become the thing later runs are compared against."""
@@ -228,6 +232,8 @@ def _should_refresh_snapshot(payload: dict, snap_path: str) -> bool:
     except (OSError, ValueError):
         return True
     if payload.get("sf") != prev.get("sf"):
+        return False
+    if prev.get("cpus") is None or payload.get("cpus") != prev.get("cpus"):
         return False
     prev_total = prev.get("value")
     new_total = payload.get("value")

@@ -31,6 +31,14 @@ def _save_noop(df: DataFrame) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compiles this JVM has run so far; a delta around a run
+    is the number of generated classes it compiled. A warm repeat of a
+    query should add 0 (``session.CODEGEN_CACHE_ENTRIES``)."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
 def warm_session(spark: SparkSession, sf_dir: str) -> None:
     """JVM + codegen + parquet footer caches (``count_rows``), one
     Arrow/Python-worker round trip, and one 1-row Python-DataSource

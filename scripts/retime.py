@@ -16,7 +16,9 @@ gives the per-batch table of the sqlite streaming pair.
 Usage:
     python scripts/retime.py [-n ITERS] query [query ...]
 
-Prints one line per iteration and a final JSON summary
+Prints one line per iteration, with the codegen classes that run
+compiled (``harness.codegen_compiles``; a warm iteration should show
+0), and a final JSON summary
 {name: {"runs": [...], "steady": min-of-tail, "cold": first}}.
 """
 
@@ -31,7 +33,11 @@ from pyspark.sql.streaming import StreamingQueryListener
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from loan_default_prediction_app_big_data_spark.harness import run_query, warm_session  # noqa: E402
+from loan_default_prediction_app_big_data_spark.harness import (  # noqa: E402
+    codegen_compiles,
+    run_query,
+    warm_session,
+)
 from loan_default_prediction_app_big_data_spark.plans.registry import REGISTRY  # noqa: E402
 from loan_default_prediction_app_big_data_spark.session import get_spark  # noqa: E402
 
@@ -82,9 +88,11 @@ def main() -> int:
     for name in names:
         runs: list[float] = []
         for i in range(iters):
+            before = codegen_compiles(spark)
             runs.append(round(run_query(spark, name, SF_DIR), 2))
+            compiles = codegen_compiles(spark) - before
             bus.waitUntilEmpty()
-            print(f"{name} iter{i} {runs[-1]}s", flush=True)
+            print(f"{name} iter{i} {runs[-1]}s compiles={compiles}", flush=True)
         out[name] = {
             "runs": runs,
             "cold": runs[0],

@@ -144,17 +144,17 @@ def test_snapshot_refresh_requires_matching_scale_factor(tmp_path):
 
     snap = tmp_path / "bench_full.json"
     snap.write_text(
-        _json.dumps({"sf": 0.1, "value": 386.6, "queries": {}, "gc_ms": 4000})
+        _json.dumps({"sf": 0.1, "cpus": 8, "value": 386.6, "queries": {}, "gc_ms": 4000})
     )
-    clean = {"gc_ms": 4000, "value": 390.0}
+    clean = {"gc_ms": 4000, "value": 390.0, "cpus": 8}
     assert _should_refresh_snapshot({**clean, "sf": 0.1}, str(snap))
     assert not _should_refresh_snapshot({**clean, "sf": 0.001}, str(snap))
     assert not _should_refresh_snapshot(
-        {"gc_ms": 30000, "value": 390.0, "sf": 0.1}, str(snap)
+        {**clean, "gc_ms": 30000, "sf": 0.1}, str(snap)
     )
     # regression-shaped totals can't silently become the baseline ...
     assert not _should_refresh_snapshot(
-        {"gc_ms": 4000, "value": 555.3, "sf": 0.1}, str(snap)
+        {**clean, "value": 555.3, "sf": 0.1}, str(snap)
     )
     # ... unless deliberately forced after investigation
     import os as _os
@@ -162,13 +162,13 @@ def test_snapshot_refresh_requires_matching_scale_factor(tmp_path):
     _os.environ["SPARK_GRAFT_SNAPSHOT"] = "force"
     try:
         assert _should_refresh_snapshot(
-            {"gc_ms": 4000, "value": 555.3, "sf": 0.1}, str(snap)
+            {**clean, "value": 555.3, "sf": 0.1}, str(snap)
         )
     finally:
         del _os.environ["SPARK_GRAFT_SNAPSHOT"]
     # a FASTER clean draw always refreshes
     assert _should_refresh_snapshot(
-        {"gc_ms": 4000, "value": 350.0, "sf": 0.1}, str(snap)
+        {**clean, "value": 350.0, "sf": 0.1}, str(snap)
     )
     # no snapshot yet: only a CLEAN draw may seed it (ADVICE r7 — a
     # degraded first draw would become the baseline and only self-heal
@@ -181,3 +181,26 @@ def test_snapshot_refresh_requires_matching_scale_factor(tmp_path):
     assert _should_refresh_snapshot(
         {"value": 390.0, "sf": 0.1}, str(tmp_path / "x.json")
     )
+
+
+def test_snapshot_refresh_requires_matching_core_count(tmp_path, monkeypatch):
+    """A clean draw on another core count must not become the baseline
+    (r10: an 8-core draw became the 32-core baseline). A snapshot that
+    records no core count cannot be matched, so it is refused too;
+    SPARK_GRAFT_SNAPSHOT=force still overrides both."""
+    import json as _json
+
+    from bench import _should_refresh_snapshot
+
+    snap = tmp_path / "bench_full.json"
+    clean = {"gc_ms": 4000, "value": 380.0, "sf": 0.1}
+    snap.write_text(_json.dumps({"sf": 0.1, "cpus": 32, "value": 386.6, "gc_ms": 4000}))
+    assert _should_refresh_snapshot({**clean, "cpus": 32}, str(snap))
+    assert not _should_refresh_snapshot({**clean, "cpus": 8}, str(snap))
+    assert not _should_refresh_snapshot(clean, str(snap))
+
+    snap.write_text(_json.dumps({"sf": 0.1, "value": 386.6, "gc_ms": 4000}))
+    assert not _should_refresh_snapshot({**clean, "cpus": 32}, str(snap))
+
+    monkeypatch.setenv("SPARK_GRAFT_SNAPSHOT", "force")
+    assert _should_refresh_snapshot({**clean, "cpus": 8}, str(snap))
