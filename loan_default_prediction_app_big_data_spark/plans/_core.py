@@ -1,22 +1,6 @@
-"""Query registry — the engine's public operator surface.
-
-Every operator from SURVEY.md §2 (reference Tier A + charter Tier B) is
-exposed as a named query: a ``(spark, sf_dir) -> DataFrame`` callable
-plus, where SQL-expressible, an equivalent ANSI-SQL oracle string that
-DuckDB runs on the same parquet fixtures. The driver hash-compares the
-two at sf0.01 — this registry IS the correctness surface.
-
-Conventions (required for oracle hash-matching):
-- every computed column is aliased identically on both sides;
-- double aggregates are ``round()``-ed on both sides (float summation
-  order differs between engines);
-- sums of integer columns are cast to BIGINT in the oracle (DuckDB
-  promotes int sums to HUGEINT, Spark to LONG);
-- timestamps that cross the boundary are compared as epoch BIGINT.
-
-Scale notes are attached per query: the fixture runs at sf0.01/0.1 but
-each plan is written for the 100 TB shape (broadcast dims, partial
-aggs, no driver-side collection, pushdown-friendly predicates).
+"""Registry core: ``QuerySpec``, ``register`` and the driver-ordered
+``queries()``/``oracle_sql()`` views. The conventions are in the
+``registry.py`` facade docstring.
 """
 
 from __future__ import annotations

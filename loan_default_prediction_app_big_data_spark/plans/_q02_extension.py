@@ -565,11 +565,6 @@ def streaming_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    for n in names:
-        t(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
 @register(
     "in_subquery",
     """
@@ -583,14 +578,15 @@ def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
     tags=("sql", "join"),
 )
 def in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "customer", "orders")
     return spark.sql(
         """
         SELECT c_custkey, c_name
-        FROM customer
-        WHERE c_custkey IN (SELECT o_custkey FROM orders WHERE o_totalprice > 400000)
+        FROM {customer}
+        WHERE c_custkey IN (SELECT o_custkey FROM {orders} WHERE o_totalprice > 400000)
           AND c_acctbal > 0
-        """
+        """,
+        customer=t(spark, sf_dir, "customer"),
+        orders=t(spark, sf_dir, "orders"),
     )
 
 
@@ -606,13 +602,13 @@ def in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql",),
 )
 def scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "orders")
     return spark.sql(
         """
         SELECT o_orderkey, round(o_totalprice, 2) AS o_totalprice
-        FROM orders
-        WHERE o_totalprice > 1.8 * (SELECT avg(o_totalprice) FROM orders)
-        """
+        FROM {orders}
+        WHERE o_totalprice > 1.8 * (SELECT avg(o_totalprice) FROM {orders})
+        """,
+        orders=t(spark, sf_dir, "orders"),
     )
 
 
@@ -629,14 +625,15 @@ def scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql", "join"),
 )
 def correlated_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "supplier", "lineitem")
     return spark.sql(
         """
         SELECT s_suppkey, s_name
-        FROM supplier
-        WHERE EXISTS (SELECT 1 FROM lineitem
+        FROM {supplier}
+        WHERE EXISTS (SELECT 1 FROM {lineitem}
                       WHERE l_suppkey = s_suppkey AND l_quantity >= 49)
-        """
+        """,
+        supplier=t(spark, sf_dir, "supplier"),
+        lineitem=t(spark, sf_dir, "lineitem"),
     )
 
 

@@ -7,7 +7,7 @@ imported by the facade in fixed sequence; do not reorder.
 from __future__ import annotations
 
 from ._core import DataFrame, F, SparkSession, W, register, t
-from ._q02_extension import D, X, _views
+from ._q02_extension import D, X
 
 
 
@@ -278,17 +278,18 @@ def minhash_native_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "agg"),
 )
 def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "orders", "lineitem")
     return spark.sql(
         """
         SELECT o_orderpriority, count(*) AS order_count
-        FROM orders
+        FROM {orders}
         WHERE o_orderdate >= TIMESTAMP '1996-07-01'
           AND o_orderdate <  TIMESTAMP '1996-10-01'
-          AND EXISTS (SELECT 1 FROM lineitem
+          AND EXISTS (SELECT 1 FROM {lineitem}
                       WHERE l_orderkey = o_orderkey AND l_shipdate > o_orderdate)
         GROUP BY o_orderpriority
-        """
+        """,
+        orders=t(spark, sf_dir, "orders"),
+        lineitem=t(spark, sf_dir, "lineitem"),
     )
 
 
@@ -386,15 +387,16 @@ def q12_priority_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "agg", "sql"),
 )
 def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "lineitem", "part")
     return spark.sql(
         """
         SELECT round(sum(l_extendedprice) / 7.0, 4) AS avg_yearly
-        FROM lineitem JOIN part ON p_partkey = l_partkey
+        FROM {lineitem} lineitem JOIN {part} ON p_partkey = l_partkey
         WHERE p_brand = 'Brand#5'
-          AND l_quantity < (SELECT 0.5 * avg(l_quantity) FROM lineitem l2
+          AND l_quantity < (SELECT 0.5 * avg(l_quantity) FROM {lineitem} l2
                             WHERE l2.l_partkey = lineitem.l_partkey)
-        """
+        """,
+        lineitem=t(spark, sf_dir, "lineitem"),
+        part=t(spark, sf_dir, "part"),
     )
 
 
@@ -416,18 +418,19 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "agg", "sql"),
 )
 def q22_inactive_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "customer", "orders")
     return spark.sql(
         """
         SELECT substr(c_name, 1, 9) AS name_prefix,
                count(*) AS numcust,
                round(sum(c_acctbal), 2) AS totacctbal
-        FROM customer
-        WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer WHERE c_acctbal > 0)
-          AND NOT EXISTS (SELECT 1 FROM orders
+        FROM {customer}
+        WHERE c_acctbal > (SELECT avg(c_acctbal) FROM {customer} WHERE c_acctbal > 0)
+          AND NOT EXISTS (SELECT 1 FROM {orders}
                           WHERE o_custkey = c_custkey AND o_orderstatus = 'O')
         GROUP BY substr(c_name, 1, 9)
-        """
+        """,
+        customer=t(spark, sf_dir, "customer"),
+        orders=t(spark, sf_dir, "orders"),
     )
 
 
@@ -920,15 +923,15 @@ def funnel_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg",),
 )
 def grouping_sets_explicit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "lineitem")
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus,
                round(sum(l_extendedprice), 2) AS sum_price,
                count(*) AS n
-        FROM lineitem
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
+        """,
+        lineitem=t(spark, sf_dir, "lineitem"),
     )
 
 
@@ -944,14 +947,14 @@ def grouping_sets_explicit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("text", "sql"),
 )
 def lateral_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "documents")
     return spark.sql(
         """
         SELECT doc_id, token
-        FROM documents
+        FROM {documents}
         LATERAL VIEW explode(filter(split(text, ' '), x -> x != '')) t AS token
         WHERE doc_id % 50 = 0
-        """
+        """,
+        documents=t(spark, sf_dir, "documents"),
     )
 
 
@@ -1158,21 +1161,22 @@ def q14_promo_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join", "agg", "sql"),
 )
 def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "lineitem", "supplier")
     return spark.sql(
         """
         WITH revenue AS (
             SELECT l_suppkey AS supplier_no,
                    sum(l_extendedprice * (1 - l_discount)) AS total_revenue
-            FROM lineitem
+            FROM {lineitem}
             WHERE l_shipdate >= TIMESTAMP '1997-01-01'
               AND l_shipdate <  TIMESTAMP '1997-04-01'
             GROUP BY l_suppkey
         )
         SELECT s_suppkey, s_name, round(total_revenue, 4) AS total_revenue
-        FROM supplier JOIN revenue ON s_suppkey = supplier_no
+        FROM {supplier} JOIN revenue ON s_suppkey = supplier_no
         WHERE total_revenue = (SELECT max(total_revenue) FROM revenue)
-        """
+        """,
+        lineitem=t(spark, sf_dir, "lineitem"),
+        supplier=t(spark, sf_dir, "supplier"),
     )
 
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from ._core import DataFrame, F, SparkSession, W, register, t
 from ._q02_extension import X
+from ..scratch import tmp_io
 
 
 
@@ -562,19 +563,12 @@ _ROUNDTRIP_ORACLE = """
 
 def _make_roundtrip(fmt: str):
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        import os
-
         from ..sources.readers import file_roundtrip
 
-        repo = os.path.dirname(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        )
         src = t(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate"
         )
-        back = file_roundtrip(
-            spark, src, fmt, os.path.join(repo, ".tmp_io", f"roundtrip_{fmt}")
-        )
+        back = file_roundtrip(spark, src, fmt, tmp_io(f"roundtrip_{fmt}"))
         return back.groupBy("o_orderstatus").agg(
             F.count(F.lit(1)).alias("n_orders"),
             F.round(F.sum("o_totalprice"), 2).alias("total_price"),
@@ -1654,12 +1648,7 @@ def weighted_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("source", "layout", "pruning"),
 )
 def partitioned_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    path = os.path.join(repo, ".tmp_io", "orders_by_year")
+    path = tmp_io("orders_by_year")
     src = t(spark, sf_dir, "orders").withColumn(
         "o_year", F.year(F.col("o_orderdate"))
     )

@@ -7,19 +7,19 @@ imported by the facade in fixed sequence; do not reorder.
 from __future__ import annotations
 
 from ._core import DataFrame, F, SparkSession, W, register, t
-from ._q02_extension import _views
 
 
 
 
 # One SQL text, two engines: both Spark 4 and DuckDB run ANSI
-# WITH RECURSIVE, so the query body IS its own oracle.
+# WITH RECURSIVE, so the query body IS its own oracle (formatted with
+# the plain table name; Spark gets the table as a DataFrame argument).
 _RECURSIVE_TREE_SQL = """
     WITH RECURSIVE tree AS (
-        SELECT s_suppkey AS node, 0 AS depth FROM supplier WHERE s_suppkey = 0
+        SELECT s_suppkey AS node, 0 AS depth FROM {supplier} WHERE s_suppkey = 0
         UNION ALL
         SELECT s.s_suppkey AS node, tree.depth + 1 AS depth
-        FROM supplier s
+        FROM {supplier} s
         JOIN tree ON CAST(FLOOR(s.s_suppkey / 2.0) AS BIGINT) = tree.node
         WHERE s.s_suppkey > 0
     )
@@ -33,7 +33,7 @@ _RECURSIVE_TREE_SQL = """
 
 @register(
     "recursive_cte_hierarchy",
-    _RECURSIVE_TREE_SQL,
+    _RECURSIVE_TREE_SQL.format(supplier="supplier"),
     "Recursive CTE (ANSI WITH RECURSIVE, Spark 4): per-level rollup of "
     "an implicit binary hierarchy parent(k)=floor(k/2) over supplier "
     "keys — the transitive-closure / org-chart walk shape. Spark "
@@ -45,8 +45,7 @@ _RECURSIVE_TREE_SQL = """
     tags=("sql", "iterative"),
 )
 def recursive_cte_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "supplier")
-    return spark.sql(_RECURSIVE_TREE_SQL)
+    return spark.sql(_RECURSIVE_TREE_SQL, supplier=t(spark, sf_dir, "supplier"))
 
 
 @register(
@@ -315,13 +314,13 @@ def udtf_price_tranches(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield n_full, rem
 
     spark.udtf.register("tranche_expand", TrancheExpand)
-    _views(spark, sf_dir, "orders")
     return spark.sql(
         """
         SELECT o_orderkey, t.tranche, t.amount
-        FROM orders, LATERAL tranche_expand(o_totalprice) t
+        FROM {orders}, LATERAL tranche_expand(o_totalprice) t
         WHERE o_orderkey % 199 = 0
-        """
+        """,
+        orders=t(spark, sf_dir, "orders"),
     )
 
 
@@ -1358,9 +1357,9 @@ def ordered_list_agg_structs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LATERAL_TOPK_SQL = """
     SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-    FROM customer c, LATERAL (
+    FROM {customer} c, LATERAL (
         SELECT o_orderkey, o_totalprice
-        FROM orders o
+        FROM {orders} o
         WHERE o.o_custkey = c.c_custkey
         ORDER BY o_totalprice DESC, o_orderkey
         LIMIT 3) t
@@ -1370,7 +1369,7 @@ _LATERAL_TOPK_SQL = """
 
 @register(
     "lateral_topk_join",
-    _LATERAL_TOPK_SQL,
+    _LATERAL_TOPK_SQL.format(customer="customer", orders="orders"),
     "ANSI LATERAL correlated subquery join: each customer's top-3 "
     "orders by price, expressed as a per-row dependent subquery with "
     "ORDER BY/LIMIT — the SQL-standard form of top-N-per-entity "
@@ -1383,8 +1382,11 @@ _LATERAL_TOPK_SQL = """
     tags=("join", "sql", "subquery"),
 )
 def lateral_topk_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _views(spark, sf_dir, "customer", "orders")
-    return spark.sql(_LATERAL_TOPK_SQL)
+    return spark.sql(
+        _LATERAL_TOPK_SQL,
+        customer=t(spark, sf_dir, "customer"),
+        orders=t(spark, sf_dir, "orders"),
+    )
 
 
 @register(

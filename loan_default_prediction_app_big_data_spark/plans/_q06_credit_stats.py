@@ -6,6 +6,7 @@ imported by the facade in fixed sequence; do not reorder.
 
 from __future__ import annotations
 
+from ..functions.risk import _w_all
 from ._core import DataFrame, F, SparkSession, W, register, t
 
 
@@ -84,16 +85,6 @@ def _score_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(1 - F.col("bad")).cast("bigint").alias("n_good"),
         )
     )
-
-
-def _w_all():
-    # Whole-frame window over the ≤10-row band aggregate (NOT the fact
-    # table — metadata scale by construction).
-    return W.partitionBy()
-
-
-def _w_desc():
-    return W.orderBy(F.desc("band")).rowsBetween(W.unboundedPreceding, 0)
 
 
 @register(

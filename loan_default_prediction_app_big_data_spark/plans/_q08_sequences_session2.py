@@ -10,6 +10,7 @@ from ._core import DataFrame, F, SparkSession, W, register, t
 from ..pinning import release_local_checkpoints
 from ._q01_relational import TUMBLING_ORACLE
 from ._q02_extension import S
+from ..scratch import tmp_io
 
 
 
@@ -2212,12 +2213,7 @@ def correlation_matrix_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("source", "quality"),
 )
 def csv_corrupt_record_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
-    repo = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
-    path = _os.path.join(repo, ".tmp_io", "corrupt_feed")
+    path = tmp_io("corrupt_feed")
     o = t(spark, sf_dir, "orders")
     good = o.select(
         F.concat_ws(

@@ -6,6 +6,7 @@ imported by the facade in fixed sequence; do not reorder.
 
 from __future__ import annotations
 
+from ..scratch import tmp_io
 from ..session import scoped_conf
 from ._core import DataFrame, F, SparkSession, W, register, t
 from ._q08_sequences_session2 import _bpe_oracle, bpe_merge_training
@@ -160,10 +161,7 @@ def streaming_append_mode_windows(spark: SparkSession, sf_dir: str) -> DataFrame
 def parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
-    repo = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
-    path = _os.path.join(repo, ".tmp_io", "schema_evolution")
+    path = tmp_io("schema_evolution")
     o = t(spark, sf_dir, "orders")
     v1 = o.filter(F.col("o_orderkey") % 2 == 0).select("o_orderkey", "o_orderstatus")
     v2 = o.filter(F.col("o_orderkey") % 2 == 1).select(
@@ -210,12 +208,7 @@ def parquet_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sink", "layout", "quality"),
 )
 def dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
-    repo = _os.path.dirname(
-        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-    )
-    path = _os.path.join(repo, ".tmp_io", "dyn_overwrite")
+    path = tmp_io("dyn_overwrite")
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     o.write.mode("overwrite").partitionBy("o_orderstatus").parquet(path)
     one = spark.createDataFrame([(-1, "O")], "o_orderkey bigint, o_orderstatus string")
@@ -2210,8 +2203,7 @@ def interval_range_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("rev")
     )
-    daily.createOrReplaceTempView("__daily_iv")
-    return daily.sparkSession.sql(
+    return spark.sql(
         """
         SELECT CAST(unix_micros(d) div 86400000000 AS BIGINT) AS day,
                rev,
@@ -2221,8 +2213,9 @@ def interval_range_window(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(count(*) OVER (ORDER BY d
                     RANGE BETWEEN INTERVAL 6 DAY PRECEDING AND CURRENT ROW)
                     AS BIGINT) AS days_in_window
-        FROM __daily_iv ORDER BY day LIMIT 120
-        """
+        FROM {daily} ORDER BY day LIMIT 120
+        """,
+        daily=daily,
     )
 
 

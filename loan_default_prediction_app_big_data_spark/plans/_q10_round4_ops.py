@@ -7,6 +7,7 @@ imported by the facade in fixed sequence; do not reorder.
 from __future__ import annotations
 
 from ._core import F, SparkSession, DataFrame, W, pin_local, register, t
+from ..scratch import tmp_io
 
 from ..operators.multimodal import decode_image_stats, synth_image_payloads
 
@@ -263,16 +264,9 @@ _AVRO_ROUNDTRIP_ORACLE = """
     tags=("source", "sink", "round4"),
 )
 def avro_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from ..sources.avro_py import register_avro_source, write_avro_partitions
 
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    out_dir = os.path.join(repo, ".tmp_io", "roundtrip_avro")
-    shutil.rmtree(out_dir, ignore_errors=True)
+    out_dir = tmp_io("roundtrip_avro")
 
     src = (
         t(spark, sf_dir, "orders")
@@ -1208,16 +1202,9 @@ _DELTA_ORACLE = """
     tags=("source", "sink", "round4"),
 )
 def delta_time_travel_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from ..sources.delta_py import commit_append, commit_overwrite, read_delta
 
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    path = os.path.join(repo, ".tmp_io", "delta_roundtrip")
-    shutil.rmtree(path, ignore_errors=True)
+    path = tmp_io("delta_roundtrip")
 
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
@@ -1415,17 +1402,10 @@ _DELTA_MERGE_ORACLE = """
     tags=("sink", "upsert", "round4"),
 )
 def delta_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
     from ..operators.upsert import upsert
     from ..sources.delta_py import commit_append, commit_overwrite, read_delta
 
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    path = os.path.join(repo, ".tmp_io", "delta_merge")
-    shutil.rmtree(path, ignore_errors=True)
+    path = tmp_io("delta_merge")
 
     orders = t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),

@@ -6,16 +6,9 @@ imported by the facade in fixed sequence; do not reorder.
 
 from __future__ import annotations
 
-import os
-
+from ..scratch import tmp_io
 from ..session import scoped_conf
 from ._core import F, SparkSession, DataFrame, W, register, t
-
-
-def _repo_root() -> str:
-    return os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
 
 
 # =====================================================================
@@ -67,12 +60,9 @@ _SQLITE_ROUNDTRIP_ORACLE = """
     tags=("source", "sink", "round4"),
 )
 def sqlite_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from ..sources.sqlite_py import register_sqlite_source, write_sqlite_shards
 
-    out_dir = os.path.join(_repo_root(), ".tmp_io", "roundtrip_sqlite")
-    shutil.rmtree(out_dir, ignore_errors=True)
+    out_dir = tmp_io("roundtrip_sqlite")
 
     src = (
         t(spark, sf_dir, "orders")
@@ -807,13 +797,10 @@ _SQLITE_CDC_ORACLE = """
     tags=("streaming", "source", "round4"),
 )
 def sqlite_cdc_streaming_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
     from ..sources.sqlite_py import register_sqlite_source, write_sqlite_shards
     from ..streaming.windows import replay_to_memory
 
-    out_dir = os.path.join(_repo_root(), ".tmp_io", "cdc_sqlite")
-    shutil.rmtree(out_dir, ignore_errors=True)
+    out_dir = tmp_io("cdc_sqlite")
 
     src = (
         t(spark, sf_dir, "orders")
@@ -924,12 +911,9 @@ def sqlite_streaming_sink_roundtrip(
 
     from ..sources.sqlite_py import register_sqlite_source, write_sqlite_shards
 
-    base = os.path.join(_repo_root(), ".tmp_io")
-    src_dir = os.path.join(base, "cdc_sink_src")
-    out_dir = os.path.join(base, "cdc_sink_out")
-    ckpt = os.path.join(base, "cdc_sink_ckpt")
-    for d in (src_dir, out_dir, ckpt):
-        shutil.rmtree(d, ignore_errors=True)
+    src_dir = tmp_io("cdc_sink_src")
+    out_dir = tmp_io("cdc_sink_out")
+    ckpt = tmp_io("cdc_sink_ckpt")
 
     src = (
         t(spark, sf_dir, "orders")
@@ -1180,7 +1164,6 @@ def sql_scripting_median_bisection(
         n_parts = max(1, -(-est_bytes // (128 << 20)))
         cents = cents.coalesce(n_parts)
     cents = cents.cache()
-    cents.createOrReplaceTempView("_script_cents")
     script = """
     BEGIN
       DECLARE lo BIGINT;
@@ -1189,13 +1172,13 @@ def sql_scripting_median_bisection(
       DECLARE n BIGINT;
       DECLARE target BIGINT;
       DECLARE c BIGINT;
-      SET lo = (SELECT min(cents) - 1 FROM _script_cents);
-      SET hi = (SELECT max(cents) FROM _script_cents);
-      SET n = (SELECT count(*) FROM _script_cents);
+      SET lo = (SELECT min(cents) - 1 FROM {cents});
+      SET hi = (SELECT max(cents) FROM {cents});
+      SET n = (SELECT count(*) FROM {cents});
       SET target = (n + 1) DIV 2;
       WHILE hi - lo > 1 DO
         SET mid = (lo + hi) DIV 2;
-        SET c = (SELECT count(*) FROM _script_cents WHERE cents <= mid);
+        SET c = (SELECT count(*) FROM {cents} WHERE cents <= mid);
         IF c >= target THEN
           SET hi = mid;
         ELSE
@@ -1206,15 +1189,14 @@ def sql_scripting_median_bisection(
     END
     """
     try:
-        # Pin the (single-row) result as a local relation inside the
+        # Pin the (single-row) result on the driver inside the
         # enabled-config scope, then release the cents cache — nothing
         # stays pinned after the call (same discipline as the
         # streaming runners' pinned memory sinks).
         from ..pinning import pin_local
 
         with scoped_conf(spark, {"spark.sql.scripting.enabled": "true"}):
-            out = pin_local(spark, spark.sql(script))
+            out = pin_local(spark, spark.sql(script, cents=cents))
     finally:
         cents.unpersist()
-        spark.catalog.dropTempView("_script_cents")
     return out

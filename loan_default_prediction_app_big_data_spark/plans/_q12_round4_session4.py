@@ -7,15 +7,7 @@ imported by the facade in fixed sequence; do not reorder.
 
 from __future__ import annotations
 
-import os
-
-from ._core import F, SparkSession, DataFrame, register, t
-
-
-def _repo_root() -> str:
-    return os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
+from ._core import F, SparkSession, DataFrame, pin_local, register, t
 
 
 # =====================================================================
@@ -233,11 +225,10 @@ def build_bucketed_join(
 )
 def bucketed_join_no_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     result, names = build_bucketed_join(spark, sf_dir)
-    # Materialize to a LocalRelation (5 segment rows - bounded) BEFORE
+    # Pin the 5 segment rows on the driver (a Scan ExistingRDD) BEFORE
     # dropping the managed tables: a .cache() can re-plan the file scan
     # after the drop deletes the bucket files.
-    rows = result.collect()
-    out = result.sparkSession.createDataFrame(rows, result.schema)
+    out = pin_local(spark, result)
     for n in names:
         spark.sql(f"DROP TABLE IF EXISTS {n}")
     return out

@@ -8,6 +8,7 @@ imported by the facade in fixed sequence; do not reorder.
 
 from __future__ import annotations
 
+from ..scratch import tmp_io
 from ._core import F, SparkSession, DataFrame, register, t
 
 
@@ -1248,7 +1249,6 @@ def grouping_sets_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),
         )
     )
-    j.createOrReplaceTempView("q13_gsets_j")
     return spark.sql(
         """
         SELECT CAST(grouping(nation) * 2 + grouping(segment) AS BIGINT) AS gid,
@@ -1256,10 +1256,11 @@ def grouping_sets_report(spark: SparkSession, sf_dir: str) -> DataFrame:
                coalesce(segment, 'ALL') AS segment,
                CAST(count(*) AS BIGINT) AS n_orders,
                CAST(sum(cents) AS BIGINT) AS revenue_cents
-        FROM q13_gsets_j
+        FROM {j}
         GROUP BY GROUPING SETS ((nation, segment), (nation), (segment), ())
         ORDER BY gid, nation, segment
-        """
+        """,
+        j=j,
     )
 
 
@@ -1506,13 +1507,8 @@ _DPP_ORACLE = """
 def dynamic_partition_pruning_join(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    import os
-
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    path = os.path.join(repo, ".tmp_io", "orders_by_year_dpp")
-    dim_path = os.path.join(repo, ".tmp_io", "orders_year_dim_dpp")
+    path = tmp_io("orders_by_year_dpp")
+    dim_path = tmp_io("orders_year_dim_dpp")
     src = t(spark, sf_dir, "orders").withColumn(
         "o_year", F.year(F.col("o_orderdate"))
     )

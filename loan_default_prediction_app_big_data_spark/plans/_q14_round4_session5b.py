@@ -7,6 +7,7 @@ imported by the facade in fixed sequence; do not reorder.
 
 from __future__ import annotations
 
+from ..scratch import tmp_io
 from ._core import F, SparkSession, DataFrame, register, t
 
 
@@ -46,15 +47,15 @@ def sql_udf_price_tiers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "RETURNS STRING RETURN CASE WHEN p > 250000 THEN 'high' "
         "WHEN p > 100000 THEN 'mid' ELSE 'low' END"
     )
-    t(spark, sf_dir, "orders").createOrReplaceTempView("q14_sqludf_orders")
     return spark.sql(
         """
         SELECT q14_price_tier(o_totalprice) AS tier,
                CAST(count(*) AS BIGINT) AS n_orders,
                CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
                    AS revenue_cents
-        FROM q14_sqludf_orders GROUP BY 1 ORDER BY 1
-        """
+        FROM {orders} GROUP BY 1 ORDER BY 1
+        """,
+        orders=t(spark, sf_dir, "orders"),
     )
 
 
@@ -88,19 +89,19 @@ _PARAM_ORACLE = """
     tags=("sql", "functions", "round4"),
 )
 def parameterized_query_markers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir, "orders").createOrReplaceTempView("q14_param_orders")
-    t(spark, sf_dir, "customer").createOrReplaceTempView("q14_param_customer")
     return spark.sql(
         """
         SELECT c_mktsegment AS segment,
                CAST(count(*) AS BIGINT) AS n_orders,
                CAST(max(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT)
                    AS max_cents
-        FROM q14_param_orders JOIN q14_param_customer ON o_custkey = c_custkey
+        FROM {orders} JOIN {customer} ON o_custkey = c_custkey
         WHERE o_totalprice >= :min_price AND o_orderstatus = :status
         GROUP BY 1 ORDER BY 1
         """,
         args={"min_price": 150000, "status": "O"},
+        orders=t(spark, sf_dir, "orders"),
+        customer=t(spark, sf_dir, "customer"),
     )
 
 
@@ -1636,15 +1637,10 @@ _CODEC_ORACLE = """
     tags=("source", "round4"),
 )
 def compression_codec_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
     o = t(spark, sf_dir, "orders")
     frames = []
     for codec in ("snappy", "zstd"):
-        path = os.path.join(repo, ".tmp_io", f"orders_codec_{codec}")
+        path = tmp_io(f"orders_codec_{codec}")
         o.write.mode("overwrite").option("compression", codec).parquet(path)
         back = spark.read.parquet(path)
         frames.append(

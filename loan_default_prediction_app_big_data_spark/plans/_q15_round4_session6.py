@@ -1202,8 +1202,6 @@ _UDTF_TABLE_ORACLE = """
 def udtf_table_argument(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.functions import udtf
 
-    from ._q02_extension import _views
-
     @udtf(returnType=(
         "c_mktsegment string, rnk int, c_custkey bigint, c_acctbal double"
     ))
@@ -1224,15 +1222,15 @@ def udtf_table_argument(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
 
     spark.udtf.register("segment_top3", SegmentTop3)
-    _views(spark, sf_dir, "customer")
     return spark.sql(
         """
         SELECT * FROM segment_top3(
-            TABLE(customer)
+            TABLE({customer})
             PARTITION BY c_mktsegment
             ORDER BY (c_acctbal DESC, c_custkey)
         )
-        """
+        """,
+        customer=t(spark, sf_dir, "customer"),
     )
 
 
@@ -1625,14 +1623,10 @@ _SQLITE_BATCH_SINK_ORACLE = """
     tags=("sink", "source", "round4"),
 )
 def sqlite_batch_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-
-    from ._q11_round4_session3 import _repo_root
+    from ..scratch import tmp_io
     from ..sources.sqlite_py import register_sqlite_source
 
-    out_dir = os.path.join(_repo_root(), ".tmp_io", "batch_sink_sqlite")
-    shutil.rmtree(out_dir, ignore_errors=True)
+    out_dir = tmp_io("batch_sink_sqlite")
 
     o = t(spark, sf_dir, "orders")
     c = t(spark, sf_dir, "customer")

@@ -16,17 +16,9 @@ import os
 import shutil
 
 from ..pinning import pin_local
+from ..scratch import tmp_io
 from ..session import scoped_conf
 from ._core import DataFrame, F, SparkSession, register, t
-
-
-def _tmp_io(sub: str) -> str:
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    out = os.path.join(repo, ".tmp_io", sub)
-    shutil.rmtree(out, ignore_errors=True)
-    return out
 
 
 # =====================================================================
@@ -82,24 +74,24 @@ _RECURSIVE_CTE_ORACLE = """
     tags=("sql", "recursive", "join", "round5"),
 )
 def recursive_cte_supplier_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir, "supplier").createOrReplaceTempView("q16_rec_supplier")
     return spark.sql(
         """
         WITH RECURSIVE walk AS (
             SELECT s_suppkey AS k, s_suppkey AS cur,
                    CAST(round(s_acctbal * 100) AS BIGINT) AS acc, 0 AS depth
-            FROM q16_rec_supplier WHERE s_suppkey >= 1
+            FROM {supplier} WHERE s_suppkey >= 1
             UNION ALL
             SELECT w.k, s.s_suppkey,
                    w.acc + CAST(round(s.s_acctbal * 100) AS BIGINT),
                    w.depth + 1
-            FROM walk w JOIN q16_rec_supplier s ON s.s_suppkey = w.cur div 2
+            FROM walk w JOIN {supplier} s ON s.s_suppkey = w.cur div 2
             WHERE w.cur > 1
         )
         SELECT depth AS root_depth, CAST(count(*) AS BIGINT) AS n_suppliers,
                CAST(sum(acc) AS BIGINT) AS chain_cents
         FROM walk WHERE cur = 1 GROUP BY 1 ORDER BY 1
-        """
+        """,
+        supplier=t(spark, sf_dir, "supplier"),
     )
 
 
@@ -144,7 +136,7 @@ _XML_ROUNDTRIP_ORACLE = """
     tags=("source", "sink", "round5"),
 )
 def xml_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out_dir = _tmp_io("roundtrip_xml")
+    out_dir = tmp_io("roundtrip_xml")
     src = t(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
         F.col("o_orderstatus").alias("status"),
@@ -206,7 +198,7 @@ _TEXT_SOURCE_ORACLE = """
     tags=("source", "sink", "text", "round5"),
 )
 def text_source_line_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out_dir = _tmp_io("roundtrip_text")
+    out_dir = tmp_io("roundtrip_text")
     docs = t(spark, sf_dir, "documents").select(
         F.concat_ws("\t", F.col("doc_id").cast("string"), F.col("text")).alias(
             "value"
@@ -261,7 +253,7 @@ _BINARYFILE_ORACLE = """
     tags=("source", "multimodal", "round5"),
 )
 def binaryfile_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out_dir = _tmp_io("roundtrip_binaryfile")
+    out_dir = tmp_io("roundtrip_binaryfile")
     os.makedirs(out_dir, exist_ok=True)
     sample = (
         t(spark, sf_dir, "documents")
@@ -427,7 +419,6 @@ _DYNAMIC_SQL_ORACLE = """
     tags=("sql", "functions", "round5"),
 )
 def dynamic_sql_identifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir, "customer").createOrReplaceTempView("q16_dyn_customer")
     return spark.sql(
         """
         EXECUTE IMMEDIATE
@@ -436,8 +427,9 @@ def dynamic_sql_identifier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 CAST(sum(CAST(round(IDENTIFIER(:col) * 100) AS BIGINT))
                     AS BIGINT) AS total_cents
          FROM IDENTIFIER(:tbl) GROUP BY 1 ORDER BY 1'
-        USING 'c_acctbal' AS col, 'q16_dyn_customer' AS tbl
-        """
+        USING 'c_acctbal' AS col, '{customer}' AS tbl
+        """,
+        customer=t(spark, sf_dir, "customer"),
     )
 
 
@@ -472,16 +464,16 @@ _APPROX_TOP_K_ORACLE = """
     tags=("agg", "sketch", "approx", "round5"),
 )
 def approx_top_k_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir, "events").createOrReplaceTempView("q16_atk_events")
     return spark.sql(
         """
         SELECT item, n FROM (
             SELECT inline(approx_top_k(event_type, 5))
                 AS (item, n)
-            FROM q16_atk_events
+            FROM {events}
         )
         ORDER BY n DESC, item
-        """
+        """,
+        events=t(spark, sf_dir, "events"),
     ).select("item", F.col("n").cast("bigint").alias("n"))
 
 
@@ -604,7 +596,7 @@ _DELTA_COMPACTION_ORACLE = """
 def delta_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import delta_py as D
 
-    path = _tmp_io("delta_compaction")
+    path = tmp_io("delta_compaction")
     base = t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 3 == 0).select(
         "o_orderkey",
         "o_orderstatus",

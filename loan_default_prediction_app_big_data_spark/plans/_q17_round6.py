@@ -106,7 +106,6 @@ _WITHIN_GROUP_ORACLE = """
     tags=("aggregation", "ordered-set", "round6"),
 )
 def percentile_within_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir, "orders").createOrReplaceTempView("_r6_orders")
     return spark.sql(
         """
         SELECT o_orderpriority,
@@ -118,11 +117,12 @@ def percentile_within_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM (
             SELECT o_orderpriority,
                    CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-            FROM _r6_orders
+            FROM {orders}
         )
         GROUP BY o_orderpriority
         ORDER BY o_orderpriority
-        """
+        """,
+        orders=t(spark, sf_dir, "orders"),
     )
 
 
@@ -157,7 +157,6 @@ _GROUP_BY_ALL_ORACLE = """
     tags=("aggregation", "sql-surface", "round6"),
 )
 def group_by_all_shorthand(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir, "orders").createOrReplaceTempView("_r6_orders_gba")
     return spark.sql(
         """
         SELECT o_orderstatus,
@@ -165,10 +164,11 @@ def group_by_all_shorthand(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(count(*) AS BIGINT) AS n_orders,
                CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
                     AS BIGINT) AS revenue_cents
-        FROM _r6_orders_gba
+        FROM {orders}
         GROUP BY ALL
         ORDER BY ALL
-        """
+        """,
+        orders=t(spark, sf_dir, "orders"),
     )
 
 

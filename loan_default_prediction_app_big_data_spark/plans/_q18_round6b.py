@@ -21,7 +21,7 @@ from __future__ import annotations
 import os
 
 from ._core import DataFrame, F, SparkSession, register, t
-from ._q16_round5 import _tmp_io
+from ..scratch import tmp_io
 from ._q17_round6 import _wordpiece_oracle_parts, wordpiece_merge_training
 
 
@@ -232,7 +232,7 @@ _DELTA_VACUUM_ORACLE = """
 def delta_vacuum_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import delta_py as D
 
-    path = _tmp_io("delta_vacuum")
+    path = tmp_io("delta_vacuum")
     base = t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 3 == 1).select(
         "o_orderkey",
         "o_orderstatus",

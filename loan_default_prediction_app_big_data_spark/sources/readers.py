@@ -160,12 +160,6 @@ def load_tables(
     return {n: read_parquet_table(spark, sf_dir, n) for n in (names or FIXTURE_TABLES)}
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every fixture table as a temp view for the SQL API."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
-
-
 def write_parquet(
     df: DataFrame,
     path: str,

@@ -48,6 +48,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..pinning import pin_local
+from ..scratch import tmp_io
 from ..session import scoped_conf
 from ..sources.readers import (
     apply_fixture_read_conf,
@@ -444,8 +445,7 @@ def run_incremental_backfill(
     # Temp IO lives under <repo>/.tmp_io (gitignored) like every other
     # IO query, and is removed in finally once the memory-sink result
     # is materialized.
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    base = os.path.join(repo, ".tmp_io", f"backfill_{uuid.uuid4().hex[:8]}")
+    base = tmp_io(f"backfill_{uuid.uuid4().hex[:8]}")
     try:
         src_dir = os.path.join(base, "events")
         # Re-shard the replay so the rate limit yields multiple batches.

@@ -84,9 +84,12 @@ def test_semdedup_prune_keeps_min_id_of_planted_pair(spark):
              (12, [0.02, 1.0, 0.0, 0.0])]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
-    import tempfile, os, shutil
-    d = tempfile.mkdtemp(prefix="semdedup_", dir="/root/repo/.tmp_io"
-                         if os.path.isdir("/root/repo/.tmp_io") else None)
+    import os
+    import shutil
+
+    from loan_default_prediction_app_big_data_spark.scratch import tmp_io
+
+    d = tmp_io("semdedup_test")
     try:
         emb.write.mode("overwrite").parquet(os.path.join(d, "embeddings.parquet"))
         out = {r["cid"]: r for r in m.semdedup_cluster_prune(spark, d).collect()}

@@ -901,6 +901,8 @@ def test_codec_roundtrip_files_differ_but_data_equal(spark, sf_dir):
     import glob
     import os
 
+    from loan_default_prediction_app_big_data_spark.scratch import TMP_IO
+
     rows = REGISTRY["compression_codec_roundtrip"].fn(spark, sf_dir).collect()
     assert [r["codec"] for r in rows] == ["snappy", "zstd"]
     a, b = rows
@@ -909,12 +911,9 @@ def test_codec_roundtrip_files_differ_but_data_equal(spark, sf_dir):
         b["revenue_cents"],
         b["key_checksum"],
     )
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sizes = {}
     for codec in ("snappy", "zstd"):
-        files = glob.glob(
-            os.path.join(repo, ".tmp_io", f"orders_codec_{codec}", "*.parquet")
-        )
+        files = glob.glob(os.path.join(TMP_IO, f"orders_codec_{codec}", "*.parquet"))
         assert files
         sizes[codec] = sum(os.path.getsize(f) for f in files)
     # zstd compresses strictly better on this data

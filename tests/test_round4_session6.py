@@ -567,9 +567,7 @@ def test_batch_sink_overwrite_is_idempotent(spark, sf_dir):
     .db.tmp staging litter behind."""
     import os
 
-    from loan_default_prediction_app_big_data_spark.plans._q11_round4_session3 import (
-        _repo_root,
-    )
+    from loan_default_prediction_app_big_data_spark.scratch import TMP_IO
 
     a = sorted(
         map(tuple, REGISTRY["sqlite_batch_sink_roundtrip"].fn(spark, sf_dir).collect())
@@ -578,7 +576,7 @@ def test_batch_sink_overwrite_is_idempotent(spark, sf_dir):
         map(tuple, REGISTRY["sqlite_batch_sink_roundtrip"].fn(spark, sf_dir).collect())
     )
     assert a == b and len(a) == 25
-    out_dir = os.path.join(_repo_root(), ".tmp_io", "batch_sink_sqlite")
+    out_dir = os.path.join(TMP_IO, "batch_sink_sqlite")
     files = os.listdir(out_dir)
     assert not [f for f in files if f.endswith(".tmp")]
     assert all(f.startswith("batch") and f.endswith(".db") for f in files)

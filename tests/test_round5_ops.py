@@ -209,14 +209,12 @@ def test_delta_compaction_preserves_rows_and_history(spark, sf_dir):
     OPTIMIZE, the live file count drops to 1, every version stays
     readable, and the full row multiset is unchanged."""
     import os
-
-    from loan_default_prediction_app_big_data_spark.sources import delta_py as D
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(repo, ".tmp_io", "delta_compaction_test")
     import shutil
 
-    shutil.rmtree(path, ignore_errors=True)
+    from loan_default_prediction_app_big_data_spark.scratch import tmp_io
+    from loan_default_prediction_app_big_data_spark.sources import delta_py as D
+
+    path = tmp_io("delta_compaction_test")
     base = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     for rem in range(4):
         D.commit_append(path, base.filter(F.col("o_orderkey") % 4 == rem))
