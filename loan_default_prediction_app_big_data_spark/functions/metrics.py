@@ -45,7 +45,7 @@ def _global_ranks(
     parts = (
         base.repartitionByRange(n_partitions, "p")
         .withColumn("pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True)  # data-scale: one row per scored row
     )
     counts = sorted(
         (r["pid"], r["cnt"])

@@ -141,7 +141,7 @@ def fit_loan_model(
     # returning — nothing stays pinned in the session.
     from ..pinning import release_local_checkpoints
 
-    df = cast_features_double(df).localCheckpoint(eager=True)
+    df = cast_features_double(df).localCheckpoint(eager=True)  # data-scale input
     pre = build_preprocessing_pipeline(with_mean=with_mean)
     if fit_scope_train_only:
         train_raw, test_raw = seeded_split(df, seed=seed)

@@ -87,7 +87,7 @@ def minhash_lsh_candidates(
     # end-to-end with the checkpoint, alternating same-session A/B).
     # At scale this is the persisted signature-table layout, same as
     # minhash_native_candidates.
-    feats = tf.transform(docs).localCheckpoint(eager=True)
+    feats = tf.transform(docs).localCheckpoint(eager=True)  # data-scale: per doc
     lsh = MinHashLSH(
         inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=42
     )
@@ -201,7 +201,7 @@ def minhash_native_candidates(
         widen_to_parallelism(df.select(F.col(id_col).alias("id"), text_col))
         .select("id", shingles(text_col, k_shingle).alias("sh"))
         .filter(F.size("sh") > 0)
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True)  # data-scale: one row per document
     )
 
     # NOTE: the transform lambda must take ONE argument. A two-arg
@@ -296,7 +296,7 @@ def connected_components(
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True)  # data-scale: one row per matched doc
     )
     for _ in range(max_iterations):
         neighbor_labels = (
@@ -308,7 +308,7 @@ def connected_components(
             .union(neighbor_labels)
             .groupBy("node")
             .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=True)  # truncate the iterative lineage
+            .localCheckpoint(eager=True)  # data-scale; cuts iterative lineage
         )
         changed = (
             new_labels.alias("n")
@@ -379,7 +379,7 @@ def prefix_filtered_jaccard_join(
         widen_to_parallelism(docs.select(F.col(id_col).alias("id"), text_col))
         .select("id", shingles(text_col, k).alias("sh"))
         .filter(F.size("sh") > 0)
-        .localCheckpoint(eager=True)  # signature table: defeat re-inlining
+        .localCheckpoint(eager=True)  # data-scale signatures; no re-inlining
     )
     tok = sh.select("id", F.size("sh").alias("n"), F.explode("sh").alias("s"))
     freq = tok.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
@@ -521,6 +521,7 @@ def prefix_filtered_jaccard_join_asym(
             .withColumn("side", F.lit(side))
         )
 
+    # data-scale: one row per document of both sides
     sh = _sh(left, "a").unionByName(_sh(right, "b")).localCheckpoint(eager=True)
     tok = sh.select(
         "side", "id", F.size("sh").alias("n"), F.explode("sh").alias("s")

@@ -87,7 +87,7 @@ def global_row_number(
     ranged = df.repartitionByRange(n_partitions, order_col).withColumn(
         "__pid", F.spark_partition_id()
     )
-    ranged = ranged.localCheckpoint(eager=True)  # freeze sampled boundaries
+    ranged = ranged.localCheckpoint(eager=True)  # data-scale; freeze sampled bounds
     counts = ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
     w_meta = W.orderBy("__pid").rowsBetween(W.unboundedPreceding, W.currentRow)
     offsets = counts.withColumn(
@@ -128,7 +128,7 @@ def global_prefix_sum(
     ranged = df.repartitionByRange(n_partitions, *order_cols).withColumn(
         "__pid", F.spark_partition_id()
     )
-    ranged = ranged.localCheckpoint(eager=True)  # freeze sampled boundaries
+    ranged = ranged.localCheckpoint(eager=True)  # data-scale; freeze sampled bounds
     totals = ranged.groupBy("__pid").agg(F.sum(value_col).alias("__t"))
     w_meta = W.orderBy("__pid").rowsBetween(W.unboundedPreceding, W.currentRow)
     offsets = totals.withColumn(

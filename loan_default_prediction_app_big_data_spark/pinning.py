@@ -1,11 +1,6 @@
-"""Pin a metadata-scale result on the driver.
-
-The pinned frame is a ``Scan ExistingRDD`` over a parallelized Python
-RDD of the collected rows (``createDataFrame(rows, schema)``), not a
-``LocalRelation``. Shared implementation of the ``collect()`` +
-``createDataFrame`` pattern that previously appeared three times
-(streaming runners, checkpoint-scoped plans, SQL-scripting scope) —
-VERDICT r7 item 5.
+"""Pin a metadata-scale result on the driver as an Arrow-built
+``LocalRelation`` (``pin_local``), and release ``localCheckpoint`` pins
+(``release_local_checkpoints``), which only data-scale frames use.
 Leaf module (imports only pyspark) so both ``plans._core`` and
 ``streaming.windows`` can use it without an import cycle.
 """
@@ -22,28 +17,31 @@ MAX_PIN_ROWS = 10_000
 def pin_local(
     spark: SparkSession, df: DataFrame, max_rows: int = MAX_PIN_ROWS
 ) -> DataFrame:
-    """Collect a metadata-scale result and rebuild it from the driver-
-    held rows (``createDataFrame(rows, schema)``: a ``Scan ExistingRDD``
-    over a parallelized Python RDD), severing any dependency on
-    soon-to-be-dropped inputs (memory-sink tables, temp checkpoint/
-    output dirs). Safer than ``.cache()``: a cache can be invalidated
-    (clearCache, unpersist, session restart) after which any action
-    recomputes from the deleted source and fails — ADVICE r5 item 1's
-    failure mode.
+    """Collect a metadata-scale result as Arrow and rebuild it with
+    ``createDataFrame(table, schema=df.schema)``, severing any
+    dependency on its inputs (memory-sink tables, temp checkpoint/
+    output dirs, the fact join that produced it). Below Spark's
+    ``spark.sql.execution.arrow.localRelationThreshold`` (48 MiB by
+    default) the pin is a ``LocalRelation``, whose rows live in the
+    plan (``LocalTableScan``); above it Spark builds a JVM-side RDD.
+    Neither way builds a Python RDD or leaves a block-manager entry to
+    release. Safer than ``.cache()``, which can be invalidated
+    (clearCache, unpersist) after which any action recomputes from the
+    deleted source.
 
     Refuses frames larger than ``max_rows`` so a future call site
     can't silently pin (= drag through the driver) a data-scale frame.
-    The collected rows live only as long as the returned DataFrame —
-    nothing stays pinned after the caller drops it.
+    Arrow has no conversion for ``VectorUDT`` or year-month / calendar
+    interval columns: pinning such a frame raises.
     """
-    rows = df.limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
+    table = df.limit(max_rows + 1).toArrow()
+    if table.num_rows > max_rows:
         raise ValueError(
             f"pin_local: frame exceeds {max_rows} rows — pinning is for "
             "post-aggregate metadata-scale results only; write a "
             "distributed sink instead"
         )
-    return spark.createDataFrame(rows, df.schema)
+    return spark.createDataFrame(table, schema=df.schema)
 
 
 def release_local_checkpoints(*dfs: DataFrame) -> int:
@@ -55,11 +53,11 @@ def release_local_checkpoints(*dfs: DataFrame) -> int:
     count unchanged). The pin lives in the plan's ``LogicalRDD`` leaf;
     this walks the analyzed plan and unpersists those leaves' RDDs —
     the only reliable in-query release, used by iterative plans
-    (BPE/WordPiece rounds, label propagation, Bellman-Ford frontiers,
-    FP-mining baskets) to drop dead intermediates instead of leaking
-    one pinned RDD per iteration into the session (measured r9: 8
-    un-released fpgrowth runs accumulate 16 pins and degrade to
-    26-29 s/run; released, the session holds steady).
+    (BPE/WordPiece rounds, label propagation, FP-mining baskets) to
+    drop dead intermediates instead of leaking one pinned RDD per
+    iteration into the session (measured r9: 8 un-released fpgrowth
+    runs accumulate 16 pins and degrade to 26-29 s/run; released, the
+    session holds steady).
 
     Blocking=False: release is asynchronous, never on the timed path.
 

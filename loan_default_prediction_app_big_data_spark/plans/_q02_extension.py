@@ -996,7 +996,7 @@ def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = S.exact_topk_multi(corpus, queries, k=10, metric="cosine")
     # ONE index build; per-query probes reuse the tagged corpus
     tagged, model = S.ivf_index(corpus, n_clusters=16)
-    tagged = tagged.localCheckpoint(eager=True)
+    tagged = tagged.localCheckpoint(eager=True)  # data-scale: the whole corpus
     ivf_parts = [
         S.ivf_topk(
             tagged, model, [float(x) for x in row["embedding"]], k=10, n_probe=6
@@ -1070,7 +1070,7 @@ def ivf_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = S.exact_topk_multi(corpus, queries, k=10, metric="cosine")
     # build the index ONCE (codes materialized), probe per query
     encoded, books, model = S.ivf_pq_build(corpus, n_clusters=16)
-    encoded = encoded.localCheckpoint(eager=True)
+    encoded = encoded.localCheckpoint(eager=True)  # data-scale: the coded corpus
     pq_parts = [
         S.ivf_pq_probe(
             encoded,

@@ -6,7 +6,7 @@ imported by the facade in fixed sequence; do not reorder.
 
 from __future__ import annotations
 
-from ._core import DataFrame, F, SparkSession, W, register, t
+from ._core import DataFrame, F, SparkSession, W, pin_local, register, t
 
 
 
@@ -404,7 +404,7 @@ def pagerank_nation_trade(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("src", "dst", "p_edge")
     # The transition table is <= |nations|^2 rows — pin it so the 4-way
     # fact join runs once, not once per iteration.
-    trans = trans.localCheckpoint(eager=True)
+    trans = pin_local(spark, trans)
 
     n_nodes = n.count()  # |nation| — metadata-scale driver scalar
     ranks = n.select(
@@ -967,7 +967,7 @@ def triangle_count_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Edge table is <= |nations|^2 — pin it so the fact join runs once
     # across the three self-join arms (same rationale as pagerank's
     # transition table).
-    e = e.localCheckpoint(eager=True)
+    e = pin_local(spark, e)
 
     e1, e2, e3 = e.alias("e1"), e.alias("e2"), e.alias("e3")
     tri = e1.join(e2, F.col("e2.a") == F.col("e1.b")).join(

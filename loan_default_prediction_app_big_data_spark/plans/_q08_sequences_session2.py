@@ -6,7 +6,7 @@ imported by the facade in fixed sequence; do not reorder.
 
 from __future__ import annotations
 
-from ._core import DataFrame, F, SparkSession, W, register, t
+from ._core import DataFrame, F, SparkSession, W, pin_local, register, t
 from ..pinning import release_local_checkpoints
 from ._q01_relational import TUMBLING_ORACLE
 from ._q02_extension import S
@@ -77,8 +77,8 @@ def shortest_path_trade_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("n_trades"))
         .select("src", "dst", (1 + F.col("n_trades") % 3).alias("w"))
-        .localCheckpoint(eager=True)  # edge extraction runs once, not per iteration
     )
+    edges = pin_local(spark, edges)  # <= |nations|^2 rows, extracted once
 
     dist = edges.sparkSession.createDataFrame(
         [(0, 0)], "node bigint, dist bigint"
@@ -93,8 +93,8 @@ def shortest_path_trade_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionByName(dist)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=True)
         )
+        relaxed = pin_local(spark, relaxed)  # the node-scale frontier
         improved = (
             relaxed.alias("r")
             .join(dist.alias("d"), F.col("r.node") == F.col("d.node"), "left")
@@ -103,14 +103,9 @@ def shortest_path_trade_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .count()
         )
-        # round k's frontier is dead once k+1 is pinned and compared —
-        # release it (no-op for the initial local-relation frontier)
-        release_local_checkpoints(dist)
         dist = relaxed
         if improved == 0:
             break
-    # the returned plan reads only the final `dist` pin + nation
-    release_local_checkpoints(edges)
 
     return (
         dist.filter(F.col("dist") <= 30)
@@ -277,8 +272,6 @@ def als_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Pin the <=10-user verdict rows locally, then release both caches
     # (ratings feeds fit + three downstream frames; recs feeds three)
     # so nothing stays pinned for the rest of the session.
-    from ..pinning import pin_local
-
     pinned = pin_local(spark, out)
     ratings.unpersist()
     recs.unpersist()
@@ -369,7 +362,7 @@ def fpgrowth_frequent_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.collect_set("l_suppkey").alias("items"))
         .select("items")
         .repartition(dp)
-        .localCheckpoint()
+        .localCheckpoint()  # data-scale: one basket per order
     )
     model = FPGrowth(
         itemsCol="items",
@@ -382,19 +375,16 @@ def fpgrowth_frequent_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # that subtree THREE times per action (range-bound sampling job +
     # AQE shuffle materialization + final job — measured via
     # statusTracker: three 32-task mining-stage pairs per noop save).
-    # Checkpointing the ~|frequent itemsets| result rows first makes
-    # the repeated jobs rescan pinned rows instead of re-mining the
+    # Pinning the ~|frequent itemsets| result rows first makes the
+    # repeated jobs scan a local relation instead of re-mining the
     # corpus — 3x fewer mining passes AND 3x less exposure to the
     # host-stall variance this query is flagged for (VERDICT r8 item 3).
-    mined = (
-        model.freqItemsets.filter(F.size("items") <= 2)
-        .select(
-            F.array_join(F.array_sort("items"), ",").alias("itemset"),
-            F.size("items").cast("int").alias("set_size"),
-            F.col("freq").cast("bigint").alias("support"),
-        )
-        .localCheckpoint()
+    mined = model.freqItemsets.filter(F.size("items") <= 2).select(
+        F.array_join(F.array_sort("items"), ",").alias("itemset"),
+        F.size("items").cast("int").alias("set_size"),
+        F.col("freq").cast("bigint").alias("support"),
     )
+    mined = pin_local(spark, mined)
     # `mined` is pinned independently now, so the basket partitions are
     # dead weight — release them HERE rather than waiting for the
     # driver-GC → ContextCleaner round trip. Measured in-session: 8
@@ -537,7 +527,8 @@ def prefixspan_sequential_patterns(spark: SparkSession, sf_dir: str) -> DataFram
             "->",
         ).alias("pattern"),
         F.col("freq").cast("bigint").alias("support"),
-    ).localCheckpoint()
+    )
+    mined = pin_local(spark, mined)
     # The projected-database passes are over; release the cached
     # sequences now instead of leaking them into the session (same
     # fix as fpgrowth's basket release — accumulated pinned RDDs were
@@ -2585,7 +2576,7 @@ def bpe_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "documents")
         .select("doc_id", "text")
         .repartition(8)
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True)  # data-scale: the whole corpus
     )
     merges = []
     # Round k's corpus is a PURE per-row string function of the pinned
@@ -2640,9 +2631,9 @@ def bpe_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = docs.sparkSession.createDataFrame(
         merges, "merge_order int, w1 string, w2 string, pair_count bigint"
     ).orderBy("merge_order")
-    # the merge table is a local relation — the base-corpus pin is
-    # dead (callers that need the encoded corpus re-derive it from
-    # the merge table, see bpe_tokenize_apply)
+    # the merge table is a Scan ExistingRDD over driver-held rows, so
+    # the base-corpus pin is dead (callers that need the encoded corpus
+    # re-derive it from the merge table, see bpe_tokenize_apply)
     release_local_checkpoints(docs)
     return out
 

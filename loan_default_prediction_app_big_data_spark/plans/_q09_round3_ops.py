@@ -8,7 +8,7 @@ from __future__ import annotations
 
 from ..scratch import tmp_io
 from ..session import scoped_conf
-from ._core import DataFrame, F, SparkSession, W, register, t
+from ._core import DataFrame, F, SparkSession, W, pin_local, register, t
 from ._q08_sequences_session2 import _bpe_oracle, bpe_merge_training
 
 
@@ -469,7 +469,7 @@ def theil_sen_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("b.y") - F.col("a.y")).alias("dy"),
         (F.col("b.x") - F.col("a.x")).alias("dx"),
     )
-    pairs = pairs.localCheckpoint(eager=True)  # reused by stats + ranking
+    pairs = pairs.localCheckpoint(eager=True)  # stats + ranking; days^2/2 rows
     stats = pairs.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
         F.sum(
@@ -823,7 +823,8 @@ def hll_sketch_rollup_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketches = base.groupBy("nation", "segment").agg(
         F.expr("hll_sketch_agg(o_custkey, 12)").alias("sk"),
         F.count_distinct("o_custkey").cast("bigint").alias("exact_cell"),
-    ).localCheckpoint(eager=True)  # the materialized sketch table
+    )
+    sketches = pin_local(spark, sketches)  # the materialized sketch table
 
     rsd = 1.04 / (2 ** 6)
 
@@ -1000,15 +1001,14 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
         )
         .agg(F.count(F.lit(1)).alias("n_trades"))
-        # The nation-pair aggregate (<= n_nations^2 rows, ~600 at any
-        # sf) feeds FOUR downstream subtrees (agg, e, deg via two
-        # unions, joined) — without materialization the heavy
-        # lineitem x orders join above it re-executes per consumer
-        # (guide §3.3 "materialise shared subtrees"). Checkpointing
-        # the tiny aggregate caps the fact join at ONE execution;
-        # same-session A/B: 2.0-2.2 s -> 1.1-1.6 s, identical output.
-        .localCheckpoint(eager=True)
     )
+    # The nation-pair aggregate (<= n_nations^2 rows, ~600 at any sf)
+    # feeds FOUR downstream subtrees (agg, e, deg via two unions,
+    # joined) — without materialization the heavy lineitem x orders
+    # join above it re-executes per consumer (guide §3.3 "materialise
+    # shared subtrees"). Pinning the tiny aggregate caps the fact join
+    # at ONE execution; same-session A/B: 2.0-2.2 s -> 1.1-1.6 s.
+    d = pin_local(spark, d)
     agg = d.agg(
         F.count(F.lit(1)).cast("bigint").alias("np"),
         F.sum("n_trades").cast("bigint").alias("tt"),

@@ -1302,7 +1302,7 @@ def bootstrap_ci_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     # day is a calendar domain (metadata-scale at any corpus size:
     # <=~2.5k rows for the fixture's 7-year span, hard-capped by
     # pin_local's guard). Pinning makes the bound structural for the
-    # BNLJ audit (Scan ExistingRDD) AND computes the orders scan +
+    # BNLJ audit (a LocalTableScan leaf) AND computes the orders scan +
     # day aggregate ONCE — the frame feeds four consumers below, and
     # the r8 limit() restatement re-ran the whole aggregate per
     # consumer (judge-measured +0.4 s at sf0.1; VERDICT r8 item 5).

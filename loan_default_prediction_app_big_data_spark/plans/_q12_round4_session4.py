@@ -225,7 +225,7 @@ def build_bucketed_join(
 )
 def bucketed_join_no_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     result, names = build_bucketed_join(spark, sf_dir)
-    # Pin the 5 segment rows on the driver (a Scan ExistingRDD) BEFORE
+    # Pin the 5 segment rows on the driver (a LocalTableScan) BEFORE
     # dropping the managed tables: a .cache() can re-plan the file scan
     # after the drop deletes the bucket files.
     out = pin_local(spark, result)

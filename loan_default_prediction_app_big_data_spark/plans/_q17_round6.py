@@ -352,7 +352,7 @@ def wordpiece_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
         t(spark, sf_dir, "documents")
         .select("doc_id", "text")
         .repartition(8)
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True)  # data-scale: the whole corpus
     )
     merges = []
     # Same restructure as bpe_merge_training (r10): round k's corpus is
@@ -428,5 +428,5 @@ def wordpiece_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
         "merge_order int, w1 string, w2 string, pair_count bigint,"
         " left_count bigint, right_count bigint, score_1e9 bigint",
     ).orderBy("merge_order")
-    release_local_checkpoints(docs)  # merge table is a local relation
+    release_local_checkpoints(docs)  # out scans only the driver-held merges
     return out

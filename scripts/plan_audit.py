@@ -127,13 +127,13 @@ def _subtree_unbounded(node: dict, details: dict[int, str]) -> bool:
         return False
     name = node["name"].split()[0]
     if name == "Scan":
-        # File-format scans are data-scale. Treating "Scan ExistingRDD"
-        # as bounded is a HEURISTIC, not a proof: the registry's local
-        # relations come from pinning.pin_local (10k-row guard; 1M rows
-        # for streaming.windows.replay_to_memory's sinks), but a raw
-        # spark.createDataFrame call site is not forced through it,
-        # so an audit pass is only as strong as that convention.
-        # "Scan OneRowRelation" is a literal.
+        # File-format scans are data-scale. pinning.pin_local's pins
+        # are LocalTableScan leaves (rows held in the plan, 10k-row
+        # guard) and never reach this branch. Treating "Scan
+        # ExistingRDD" as bounded is a HEURISTIC, not a proof: it is
+        # a createDataFrame over a Python list, a localCheckpoint (the
+        # remaining ones are data-scale) or an Arrow pin above Spark's
+        # local-relation threshold. "Scan OneRowRelation" is a literal.
         return node["name"].split()[1] not in ("ExistingRDD", "OneRowRelation")
     if name == "Range":
         m = re.search(r"Arguments: Range \((-?\d+), (-?\d+)", details.get(node["id"], ""))

@@ -26,10 +26,10 @@ def _persistent_rdds(spark) -> int:
 
 
 def test_run_query_releases_the_returned_frames_pins(spark, sf_smoke):
-    # fpgrowth returns a frame over an eager localCheckpoint.
+    # minhash_lsh_dedup returns a frame over eager localCheckpoints.
     baseline = _persistent_rdds(spark)
     released = RELEASE_STATS["released"]
-    sec = run_query(spark, "fpgrowth_frequent_itemsets", sf_smoke)
+    sec = run_query(spark, "minhash_lsh_dedup", sf_smoke)
     assert sec > 0
     assert RELEASE_STATS["released"] > released
     # Release is asynchronous, and MLlib's own training persists are

@@ -5,8 +5,10 @@ it returns: a ``.cache()`` without a matching ``unpersist()`` (or an
 MLlib-internal persist, e.g. ALS factor RDDs) stays pinned for the
 whole session — across a 379-query bench run that is the GC-pressure
 mechanism behind the round-5 driver-bench inflations (PERF.md round-6).
-These tests run the batch queries that historically leaked and assert
-the storage registry is empty afterwards.
+These tests run the batch queries that historically leaked, and the
+queries whose node-scale tables are pinned with ``pinning.pin_local``
+(rows held in the plan, nothing to release), and assert the storage
+registry is empty afterwards while the returned frame is still alive.
 
 Streaming runners are covered by their own pinned-memory-sink
 discipline (streaming.windows.replay_to_memory). Session-conf
@@ -30,6 +32,18 @@ _FORMERLY_LEAKY = [
     "sqlite_streaming_sink_roundtrip",
     "sqlite_batch_sink_roundtrip",
     "sql_scripting_median_bisection",
+]
+
+# Queries whose metadata-scale tables are pinned by pin_local: the
+# returned frame must hold no block-manager pin and needs no release.
+_PINNED_LOCALLY = [
+    "shortest_path_trade_cost",
+    "fpgrowth_frequent_itemsets",
+    "prefixspan_sequential_patterns",
+    "pagerank_nation_trade",
+    "triangle_count_trade_graph",
+    "hll_sketch_rollup_cube",
+    "graph_assortativity",
 ]
 
 
@@ -59,7 +73,7 @@ def _settled_pins(spark, baseline, deadline_s=30.0):
     return list(extra.elements())
 
 
-@pytest.mark.parametrize("name", _FORMERLY_LEAKY)
+@pytest.mark.parametrize("name", _FORMERLY_LEAKY + _PINNED_LOCALLY)
 def test_query_leaves_zero_pinned_storage(spark, sf_smoke, name):
     spark.catalog.clearCache()  # isolate from earlier tests' caches
     # Baseline: earlier tests in a shared session may have left
