@@ -341,85 +341,93 @@ def dedup_keep_canonical(
     return df.join(drop_ids, id_col, "left_anti")
 
 
-def prefix_filtered_jaccard_join(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    threshold: float = 0.6,
-    with_counts: bool = False,
+#: Thresholds are compared as the exact integer ratio num / _DEN.
+_DEN = 10
+
+
+def _threshold_num(threshold: float) -> int:
+    """``num`` with ``threshold == num / _DEN``. Raises before any
+    Spark job runs, so a bad threshold pins nothing."""
+    if abs(threshold * _DEN - round(threshold * _DEN)) > 1e-12:
+        raise ValueError("threshold must be a 1-decimal rational, e.g. 0.6")
+    return int(round(threshold * _DEN))
+
+
+def _shingle_table(
+    df: DataFrame, id_col: str, text_col: str, k: int
 ) -> DataFrame:
-    """Threshold Jaccard self-join with PPJoin-style prefix filtering —
-    the LOSSLESS candidate pruning that makes an all-corpus similarity
-    self-join feasible at 100 TB (no blocking key needed).
-
-    Filters applied, each exact (no recall loss at the threshold):
-    - **prefix filter**: order each doc's k-shingles by ascending
-      global document frequency (rarest first, ties broken by shingle
-      text for a total order); a pair with J >= t MUST share at least
-      one of each doc's first ``n - ceil(t*n) + 1`` shingles, so only
-      prefixes are exploded into the candidate join — frequent
-      shingles never generate candidates.
-    - **length filter** in the join condition: J >= t implies
-      ``t * |A| <= |B| <= |A| / t``.
-    - **verify**: exact Jaccard via array_intersect on the candidate
-      pairs only (candidates are ~linear in the true result size, not
-      quadratic in the corpus).
-
-    Output: (id_a, id_b, jaccard) with jaccard >= threshold, 6dp —
-    or, with ``with_counts=True``, the exact integer pair
-    (id_a, id_b, n_inter, n_union) for callers that derive their own
-    engine-exact similarity representation.
-    """
-    from pyspark.sql import Window as W
-
-    from .text import shingles
-
-    sh = (
-        widen_to_parallelism(docs.select(F.col(id_col).alias("id"), text_col))
+    """(id, sh): each non-empty document's distinct k-shingles."""
+    return (
+        widen_to_parallelism(df.select(F.col(id_col).alias("id"), text_col))
         .select("id", shingles(text_col, k).alias("sh"))
         .filter(F.size("sh") > 0)
-        .localCheckpoint(eager=True)  # data-scale signatures; no re-inlining
     )
-    tok = sh.select("id", F.size("sh").alias("n"), F.explode("sh").alias("s"))
+
+
+def _prefixes(sh: DataFrame, threshold: float) -> DataFrame:
+    """PPJoin prefix rows (key..., n, s, pos): each document's first
+    ``n - ceil(t*n) + 1`` shingles in rarest-first order (ascending
+    document frequency over all of ``sh``, ties broken by shingle text
+    for a total order). The key is every column of ``sh`` except
+    ``sh``. A pair with J >= t shares at least one shingle inside both
+    prefixes, so only prefixes need to join."""
+    from pyspark.sql import Window as W
+
+    key = [c for c in sh.columns if c != "sh"]
+    tok = sh.select(*key, F.size("sh").alias("n"), F.explode("sh").alias("s"))
     freq = tok.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-    w_doc = W.partitionBy("id").orderBy("df", "s")
-    prefix = (
+    return (
         tok.join(freq, "s")
-        .withColumn("pos", F.row_number().over(w_doc))
+        .withColumn("pos", F.row_number().over(W.partitionBy(*key).orderBy("df", "s")))
         .filter(
             F.col("pos")
             <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1
         )
-        .select("id", "n", "s", "pos")
+        .select(*key, "n", "s", "pos")
     )
-    # Threshold compare in INTEGER space (0.6 = 3/5) and grid-stable
-    # output rounding — both engine-exact, immune to float-boundary
-    # disagreements between Spark and an oracle engine.
-    den = 10
-    if abs(threshold * den - round(threshold * den)) > 1e-12:
-        raise ValueError("threshold must be a 1-decimal rational, e.g. 0.6")
-    num = int(round(threshold * den))
-    a, b = prefix.alias("a"), prefix.alias("b")
-    # PPJoin positional filter (Xiao et al., WWW'08), LOSSLESS: for a
-    # pair with J >= t the FIRST common shingle in the shared
-    # (df, s) order provably lies inside BOTH prefixes (elements
-    # strictly after A's prefix number ceil(t*n_a)-1 < the required
-    # overlap ceil(t/(1+t)*(n_a+n_b)), so the first common element
-    # cannot be past either prefix). All common elements sit at or
-    # after it, hence overlap <= 1 + min(n_a - pos_a*, n_b - pos_b*)
-    # where pos* = the pair's minimum colliding prefix position per
-    # side. Grouping collisions per pair replaces the old distinct()
-    # (same shuffle), and the integer-exact bound test
-    # (1 + min(...)) * (den+num) >= num * (n_a + n_b)   [i.e. ub >=
-    # ceil(t/(1+t)*(na+nb)) for t = num/den] prunes candidates that
-    # can never verify — r9 measured 50 414 -> 20 139 candidates and
-    # a bit-identical verified output on the asym twin at t=0.5.
+
+
+def _verified_pairs(
+    pa: DataFrame,
+    pb: DataFrame,
+    sh_a: DataFrame,
+    sh_b: DataFrame,
+    threshold: float,
+    pair_cond: Column | None = None,
+) -> DataFrame:
+    """(id_a, id_b, n_inter, n_union) for every pair with J >= t, from
+    the prefix rows ``pa``/``pb`` and shingle tables ``sh_a``/``sh_b``
+    of the two sides. ``pair_cond`` is an extra join predicate over the
+    aliases ``a`` and ``b``.
+
+    Filters applied, each exact (no recall loss at the threshold):
+    - **length filter** in the join condition: J >= t implies
+      ``t * |A| <= |B| <= |A| / t``.
+    - **PPJoin positional filter** (Xiao et al., WWW'08): for a pair
+      with J >= t the FIRST common shingle in the shared (df, s) order
+      lies inside BOTH prefixes (elements strictly after A's prefix
+      number ceil(t*n_a)-1 < the required overlap
+      ceil(t/(1+t)*(n_a+n_b))). All common elements sit at or after
+      it, hence overlap <= 1 + min(n_a - pos_a*, n_b - pos_b*) where
+      pos* = the pair's minimum colliding prefix position per side.
+      The per-pair groupBy doubles as the candidate distinct (same
+      shuffle), and the integer test
+      (1 + min(...)) * (den+num) >= num * (n_a + n_b) prunes
+      candidates that can never verify — r9 measured 50 414 -> 20 139
+      candidates and a bit-identical verified output at t=0.5.
+    - **verify**: exact |A∩B| and |A∪B| via array_intersect on the
+      surviving candidates, compared in INTEGER space (0.6 = 6/10) so
+      the threshold is engine-exact with no float-boundary drift.
+    """
+    num = _threshold_num(threshold)
+    a, b = pa.alias("a"), pb.alias("b")
+    cond = F.col("a.s") == F.col("b.s")
+    if pair_cond is not None:
+        cond = cond & pair_cond
     cand = (
         a.join(
             b,
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.id") < F.col("b.id"))
+            cond
             & (F.col("b.n") >= F.lit(threshold) * F.col("a.n"))
             & (F.col("b.n") <= F.col("a.n") / F.lit(threshold)),
         )
@@ -437,44 +445,74 @@ def prefix_filtered_jaccard_join(
                     F.col("__na") - F.col("__pa"), F.col("__nb") - F.col("__pb")
                 )
             )
-            * (den + num)
+            * (_DEN + num)
             >= num * (F.col("__na") + F.col("__nb"))
         )
         .select("id_a", "id_b")
     )
-    sa = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    sb = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
+    sa = sh_a.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
+    sb = sh_b.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     union = F.size("sh_a") + F.size("sh_b") - inter
-    verified = (
+    return (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
         .withColumn("__i", inter)
         .withColumn("__u", union)
-        .filter(F.col("__i") * den >= num * F.col("__u"))
-    )
-    if with_counts:
-        return verified.select(
+        .filter(F.col("__i") * _DEN >= num * F.col("__u"))
+        .select(
             "id_a",
             "id_b",
             F.col("__i").cast("bigint").alias("n_inter"),
             F.col("__u").cast("bigint").alias("n_union"),
         )
-    return (
-        verified
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.floor(
-                    F.col("__i") / F.greatest(F.col("__u"), F.lit(1)) * 1000000.0
-                    + 0.5
-                )
-                / 1000000.0
+    )
+
+
+def prefix_filtered_jaccard_join(
+    docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    k: int = 3,
+    threshold: float = 0.6,
+    with_counts: bool = False,
+) -> DataFrame:
+    """Threshold Jaccard self-join with PPJoin-style prefix filtering —
+    the LOSSLESS candidate pruning that makes an all-corpus similarity
+    self-join feasible at 100 TB (no blocking key needed). Only
+    rarest-first prefixes (``_prefixes``) are exploded into the
+    candidate join, so frequent shingles never generate candidates;
+    the length and positional filters and the exact verify are
+    ``_verified_pairs``. Candidates are ~linear in the true result
+    size, not quadratic in the corpus.
+
+    Output: (id_a, id_b, jaccard) with id_a < id_b and jaccard >=
+    threshold, 6dp on a grid-stable floor rounding — or, with
+    ``with_counts=True``, the exact integer pair (id_a, id_b, n_inter,
+    n_union) for callers that derive their own engine-exact
+    similarity representation.
+    """
+    _threshold_num(threshold)
+    # data-scale signatures; no re-inlining
+    sh = _shingle_table(docs, id_col, text_col, k).localCheckpoint(eager=True)
+    prefix = _prefixes(sh, threshold)
+    verified = _verified_pairs(
+        prefix, prefix, sh, sh, threshold, F.col("a.id") < F.col("b.id")
+    )
+    if with_counts:
+        return verified
+    return verified.select(
+        "id_a",
+        "id_b",
+        (
+            F.floor(
+                F.col("n_inter") / F.greatest(F.col("n_union"), F.lit(1)) * 1000000.0
+                + 0.5
             )
-            .cast("double")
-            .alias("jaccard"),
+            / 1000000.0
         )
+        .cast("double")
+        .alias("jaccard"),
     )
 
 
@@ -492,12 +530,9 @@ def prefix_filtered_jaccard_join_asym(
     catches paraphrased/partially-edited leakage that exact n-gram
     containment misses).
 
-    Same LOSSLESS prefix filter as the self-join variant: shingles are
-    ordered by ascending document frequency computed over the UNION of
-    both sides (both sides MUST share one total order for the prefix
-    bound to hold); a pair with J >= t shares at least one shingle in
-    each side's first ``n - ceil(t*n) + 1``, so only prefixes join.
-    The length filter and the exact integer verify are unchanged. At
+    Same kernel as the self-join. The shingle frequencies behind the
+    prefix order are computed over the UNION of both sides: both sides
+    MUST share one total order for the prefix bound to hold. At
     100 TB the benchmark side is tiny and broadcast; candidates scale
     with true matches, never |train| x |bench|.
 
@@ -505,93 +540,21 @@ def prefix_filtered_jaccard_join_asym(
     exact integers, so callers express any threshold as an integer
     predicate (q*n_inter >= p*n_union for t = p/q).
     """
-    from pyspark.sql import Window as W
-
-    from .text import shingles
-
-    den = 10
-    if abs(threshold * den - round(threshold * den)) > 1e-12:
-        raise ValueError("threshold must be a 1-decimal rational, e.g. 0.5")
-
-    def _sh(df: DataFrame, side: str) -> DataFrame:
-        return (
-            widen_to_parallelism(df.select(F.col(id_col).alias("id"), text_col))
-            .select("id", shingles(text_col, k).alias("sh"))
-            .filter(F.size("sh") > 0)
-            .withColumn("side", F.lit(side))
-        )
-
+    _threshold_num(threshold)
     # data-scale: one row per document of both sides
-    sh = _sh(left, "a").unionByName(_sh(right, "b")).localCheckpoint(eager=True)
-    tok = sh.select(
-        "side", "id", F.size("sh").alias("n"), F.explode("sh").alias("s")
-    )
-    freq = tok.groupBy("s").agg(F.count(F.lit(1)).alias("df"))
-    w_doc = W.partitionBy("side", "id").orderBy("df", "s")
-    prefix = (
-        tok.join(freq, "s")
-        .withColumn("pos", F.row_number().over(w_doc))
-        .filter(
-            F.col("pos")
-            <= F.col("n") - F.ceil(F.lit(threshold) * F.col("n")) + 1
+    sh = (
+        _shingle_table(left, id_col, text_col, k).withColumn("side", F.lit("a"))
+        .unionByName(
+            _shingle_table(right, id_col, text_col, k).withColumn("side", F.lit("b"))
         )
-        .select("side", "id", "n", "s", "pos")
+        .localCheckpoint(eager=True)
     )
-    a = prefix.filter(F.col("side") == "a").alias("a")
-    b = prefix.filter(F.col("side") == "b").alias("b")
-    num = int(round(threshold * den))
-    # PPJoin positional filter — same LOSSLESS bound as the sym twin
-    # (see prefix_filtered_jaccard_join): for a J >= t pair the first
-    # common shingle in the shared (df, s) order is inside both
-    # prefixes, so overlap <= 1 + min(n_a - pos_a*, n_b - pos_b*).
-    # The per-pair groupBy replaces the old distinct() (same shuffle)
-    # and the integer bound prunes never-verifiable candidates before
-    # the array_intersect verify join. r9: 50 414 -> 20 139 candidates
-    # at t=0.5, verified output bit-identical, steady 5.9 -> 4.1 s.
-    cand = (
-        a.join(
-            b,
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("b.n") >= F.lit(threshold) * F.col("a.n"))
-            & (F.col("b.n") <= F.col("a.n") / F.lit(threshold)),
-        )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(
-            F.min("a.pos").alias("__pa"),
-            F.min("b.pos").alias("__pb"),
-            F.min("a.n").alias("__na"),
-            F.min("b.n").alias("__nb"),
-        )
-        .filter(
-            (
-                F.lit(1)
-                + F.least(
-                    F.col("__na") - F.col("__pa"), F.col("__nb") - F.col("__pb")
-                )
-            )
-            * (den + num)
-            >= num * (F.col("__na") + F.col("__nb"))
-        )
-        .select("id_a", "id_b")
-    )
-    sa = sh.filter(F.col("side") == "a").select(
-        F.col("id").alias("id_a"), F.col("sh").alias("sh_a")
-    )
-    sb = sh.filter(F.col("side") == "b").select(
-        F.col("id").alias("id_b"), F.col("sh").alias("sh_b")
-    )
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("__i", inter)
-        .withColumn("__u", union)
-        .filter(F.lit(den) * F.col("__i") >= F.lit(num) * F.col("__u"))
-        .select(
-            "id_a",
-            "id_b",
-            F.col("__i").cast("bigint").alias("n_inter"),
-            F.col("__u").cast("bigint").alias("n_union"),
-        )
+    prefix = _prefixes(sh, threshold)
+    is_a, is_b = F.col("side") == "a", F.col("side") == "b"
+    return _verified_pairs(
+        prefix.filter(is_a),
+        prefix.filter(is_b),
+        sh.filter(is_a),
+        sh.filter(is_b),
+        threshold,
     )

@@ -65,6 +65,35 @@ def top_k(df: DataFrame, order_cols: list[Column], k: int) -> DataFrame:
     return df.orderBy(*order_cols).limit(k)
 
 
+def _range_offsets(
+    df: DataFrame,
+    order_cols: list[str | Column],
+    measure: Column,
+    n_partitions: int,
+) -> DataFrame:
+    """The shared first phase of the distributed global scans: ``df``
+    range-partitioned on ``order_cols`` (the same sort-shuffle any
+    global ordering pays), plus ``__pid`` (its range partition) and
+    ``__off``, the exclusive prefix of the per-partition aggregate
+    ``measure`` over the partitions before it. The per-partition totals
+    are one row per partition (metadata scale), prefix-summed by a tiny
+    window over n_partitions rows and broadcast back. Callers add their
+    per-partition window over ``__pid`` and then drop both columns.
+    """
+    from pyspark.sql import Window as W
+
+    ranged = df.repartitionByRange(n_partitions, *order_cols).withColumn(
+        "__pid", F.spark_partition_id()
+    )
+    ranged = ranged.localCheckpoint(eager=True)  # data-scale; freeze sampled bounds
+    totals = ranged.groupBy("__pid").agg(measure.alias("__t"))
+    w_meta = W.orderBy("__pid").rowsBetween(W.unboundedPreceding, W.currentRow)
+    offsets = totals.withColumn(
+        "__off", (F.sum("__t").over(w_meta) - F.col("__t")).cast("long")
+    ).select("__pid", "__off")
+    return ranged.join(F.broadcast(offsets), "__pid")
+
+
 def global_row_number(
     df: DataFrame, order_col: str, n_partitions: int = 32
 ) -> DataFrame:
@@ -72,30 +101,16 @@ def global_row_number(
     (the classic scale mistake: ``row_number().over(orderBy(...))``
     with no partitionBy funnels every row through one task).
 
-    Two-phase, fully distributed:
-    1. ``repartitionByRange`` on the order column — the same
-       sort-shuffle any global ordering pays;
-    2. per-partition counts (one row per partition — metadata scale)
-       get prefix-summed and broadcast back as rank offsets;
-    3. global row number = per-partition ``row_number`` + offset.
-
-    The tiny offsets window runs over n_partitions rows, not data rows.
+    Two-phase, fully distributed (``_range_offsets`` with a count):
+    per-partition row counts become broadcast rank offsets, and the
+    global row number = per-partition ``row_number`` + offset.
     Requires a unique order column for a deterministic numbering.
     """
     from pyspark.sql import Window as W
 
-    ranged = df.repartitionByRange(n_partitions, order_col).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    ranged = ranged.localCheckpoint(eager=True)  # data-scale; freeze sampled bounds
-    counts = ranged.groupBy("__pid").agg(F.count(F.lit(1)).alias("__n"))
-    w_meta = W.orderBy("__pid").rowsBetween(W.unboundedPreceding, W.currentRow)
-    offsets = counts.withColumn(
-        "__off", (F.sum("__n").over(w_meta) - F.col("__n")).cast("long")
-    ).select("__pid", "__off")
     w_local = W.partitionBy("__pid").orderBy(order_col)
     return (
-        ranged.join(F.broadcast(offsets), "__pid")
+        _range_offsets(df, [order_col], F.count(F.lit(1)), n_partitions)
         .withColumn("rn", (F.row_number().over(w_local) + F.col("__off")).cast("long"))
         .drop("__pid", "__off")
     )
@@ -110,14 +125,9 @@ def global_prefix_sum(
 ) -> DataFrame:
     """Global running sum of ``value_col`` in ``order_cols`` order
     WITHOUT a single-partition window — the distributed sweep-line /
-    cumulative primitive (same two-phase shape as
-    ``global_row_number``):
-
-    1. ``repartitionByRange`` on the order columns (the sort-shuffle
-       any global ordering pays anyway);
-    2. per-partition value totals (one row per partition) are
-       prefix-summed on metadata scale and broadcast back as offsets;
-    3. running sum = per-partition cumulative window + offset.
+    cumulative primitive (``_range_offsets`` with a sum): per-partition
+    value totals become broadcast offsets, and the running sum =
+    per-partition cumulative window + offset.
 
     Exact for integer/decimal values (associative partials); for
     floats the summation order is pinned by the range partitioning,
@@ -125,22 +135,13 @@ def global_prefix_sum(
     """
     from pyspark.sql import Window as W
 
-    ranged = df.repartitionByRange(n_partitions, *order_cols).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    ranged = ranged.localCheckpoint(eager=True)  # data-scale; freeze sampled bounds
-    totals = ranged.groupBy("__pid").agg(F.sum(value_col).alias("__t"))
-    w_meta = W.orderBy("__pid").rowsBetween(W.unboundedPreceding, W.currentRow)
-    offsets = totals.withColumn(
-        "__off", (F.sum("__t").over(w_meta) - F.col("__t")).cast("long")
-    ).select("__pid", "__off")
     w_local = (
         W.partitionBy("__pid")
         .orderBy(*order_cols)
         .rowsBetween(W.unboundedPreceding, 0)
     )
     return (
-        ranged.join(F.broadcast(offsets), "__pid")
+        _range_offsets(df, order_cols, F.sum(value_col), n_partitions)
         .withColumn(
             out_col,
             (F.sum(value_col).over(w_local) + F.col("__off")).cast("long"),

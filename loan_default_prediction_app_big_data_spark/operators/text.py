@@ -148,3 +148,39 @@ def min_shingle_fingerprint(col: Column | str, k: int = 5) -> Column:
     return F.array_min(
         F.transform(shingles(col, k), lambda s: F.substring(F.sha2(s, 256), 1, 16))
     )
+
+
+def pair_counts(toks: DataFrame) -> DataFrame:
+    """(w1, w2, cnt): counts of every adjacent token pair over the
+    ``ws`` token-array column of ``toks`` — one slice+zip explode and a
+    partial-combined groupBy. The count phase of merge-rule training."""
+    n = F.size("ws")
+    return (
+        toks.filter(n >= 2)
+        .select(
+            F.explode(
+                F.arrays_zip(
+                    F.slice(F.col("ws"), 1, n - 1),
+                    F.slice(F.col("ws"), 2, n - 1),
+                )
+            ).alias("bg")
+        )
+        .groupBy(F.col("bg.0").alias("w1"), F.col("bg.1").alias("w2"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+    )
+
+
+def merge_pair(enc: Column, w1: str, w2: str) -> Column:
+    """``enc`` (single-space separated tokens) with every adjacent pair
+    (w1, w2) merged into ``w1@@w2``, greedily left to right: a run
+    ``a a a`` with pair (a, a) becomes ``a@@a a``.
+
+    The double-space trick: doubling the separators and padding both
+    ends gives every token its own delimiters, so one non-overlapping
+    left-to-right ``replace`` merges greedily without consuming a
+    neighbour's boundary; single spacing is restored after. ``replace``
+    has the same semantics in DuckDB, so the oracles' SQL chain is the
+    same function."""
+    padded = F.concat(F.lit(" "), F.replace(enc, F.lit(" "), F.lit("  ")), F.lit(" "))
+    merged = F.replace(padded, F.lit(f" {w1}  {w2} "), F.lit(f" {w1}@@{w2} "))
+    return F.trim(F.replace(merged, F.lit("  "), F.lit(" ")))

@@ -52,10 +52,10 @@ def release_local_checkpoints(*dfs: DataFrame) -> int:
     one, so the unpersist lands on the wrapper (verified r9: pinned
     count unchanged). The pin lives in the plan's ``LogicalRDD`` leaf;
     this walks the analyzed plan and unpersists those leaves' RDDs —
-    the only reliable in-query release, used by iterative plans
-    (BPE/WordPiece rounds, label propagation, FP-mining baskets) to
-    drop dead intermediates instead of leaking one pinned RDD per
-    iteration into the session (measured r9: 8 un-released fpgrowth
+    the only reliable in-query release, used to drop dead
+    intermediates (the BPE/WordPiece trainer's one corpus pin per
+    training, label propagation's per-iteration labels, FP-mining
+    baskets) instead of leaking pinned RDDs into the session (measured r9: 8 un-released fpgrowth
     runs accumulate 16 pins and degrade to 26-29 s/run; released, the
     session holds steady).
 

@@ -80,15 +80,21 @@ def oracle_sql() -> dict[str, str]:
 
 
 _DRIVER_PRIORITY: list[str] = [
-    # ============= Round-9 slots (VERDICT r8 item 1) ================
-    # The never-certified remainder after r8: the 5-name spill of the
-    # r7 rotation queue (driver certified 380/385 cumulative, all
-    # green). These head the round-9 window; the other 45 window
-    # slots fill from registration order (already-certified names
-    # re-verify — harmless). Certifying these 5 completes 385/385.
-    "transpose_metrics",
-    "poisson_rate_ratio_test",
-    "cohens_kappa_agreement",
-    "levene_brown_forsythe",
-    "jarque_bera_normality",
+    # All 385 queries are certified, so the window leads with the
+    # queries whose code changed most recently: the ones running the
+    # shared PPJoin kernel, the two-phase range scan and the
+    # merge-rule trainer. All have oracles, so the driver hash-checks
+    # each of them.
+    "simhash_dedup",
+    "prefix_jaccard_threshold_join",
+    "fuzzy_decontamination",
+    "max_concurrent_sessions",
+    "cdf_transform_vs_reference",
+    "distributed_row_number",
+    "balanced_shard_plan",
+    "classification_metrics",
+    "bpe_merge_training",
+    "bpe_tokenize_apply",
+    "wordpiece_merge_training",
+    "wordpiece_maxmatch_tokenize",
 ]

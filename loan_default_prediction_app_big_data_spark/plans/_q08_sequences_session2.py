@@ -10,6 +10,7 @@ from ._core import DataFrame, F, SparkSession, W, pin_local, register, t
 from ..pinning import release_local_checkpoints
 from ._q01_relational import TUMBLING_ORACLE
 from ._q02_extension import S
+from ..operators.text import merge_pair, pair_counts
 from ..scratch import tmp_io
 
 
@@ -2547,6 +2548,39 @@ def _bpe_oracle(n_merges: int = 5) -> str:
     )
 
 
+def _train_merges(spark: SparkSession, sf_dir: str, n_merges: int, pick) -> list:
+    """The merge-rule training loop shared by BPE and WordPiece: each of
+    ``n_merges`` rounds calls ``pick(toks)`` on the current corpus
+    (``toks`` holds one ``ws`` token array per document), which returns
+    the round's winning row (with ``w1``, ``w2``) on the driver; the
+    corpus then merges that pair (``merge_pair``). Returns the picked
+    rows in round order."""
+    # a handful of partitions is plenty: the corpus leg of every round
+    # is two cheap string jobs, and fewer tasks beats scheduler overhead
+    docs = (
+        t(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .repartition(8)
+        .localCheckpoint(eager=True)  # data-scale: the whole corpus
+    )
+    # Round k's corpus is a pure per-row string function of the pinned
+    # base text, so the merge stages chain into ONE growing expression
+    # and round k's pick replays the k-stage chain over the pinned base:
+    # two codegen'd string replaces per stage per row, far cheaper than
+    # an eager checkpoint job (and a release) per round, and half the
+    # blocking driver round trips that amplify host stalls. The chain
+    # depth is ``n_merges``, a literal at both call sites.
+    enc = F.col("text")
+    picks = []
+    for _ in range(n_merges):
+        top = pick(docs.select(F.split(enc, " ").alias("ws")))
+        picks.append(top)
+        enc = merge_pair(enc, top.w1, top.w2)
+    # the picks are driver-held rows, so the corpus pin is dead
+    release_local_checkpoints(docs)
+    return picks
+
+
 @register(
     "bpe_merge_training",
     _bpe_oracle(5),
@@ -2570,70 +2604,19 @@ def _bpe_oracle(n_merges: int = 5) -> str:
     tags=("text", "llm-pipeline", "iterative", "agg"),
 )
 def bpe_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # a handful of partitions is plenty: the corpus leg of every round
-    # is two cheap string jobs, and fewer tasks beats scheduler overhead
-    docs = (
-        t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(8)
-        .localCheckpoint(eager=True)  # data-scale: the whole corpus
+    picks = _train_merges(
+        spark,
+        sf_dir,
+        5,
+        lambda toks: pair_counts(toks)
+        .orderBy(F.desc("cnt"), "w1", "w2")
+        .limit(1)
+        .collect()[0],
     )
-    merges = []
-    # Round k's corpus is a PURE per-row string function of the pinned
-    # base text (the same greedy double-space replace chain the encode
-    # side bpe_tokenize_apply folds into one projection), so instead of
-    # eagerly checkpointing the re-encoded corpus every round (the r9
-    # shape: one materialization job + one release per round — 11
-    # blocking driver jobs per training run), chain the replace stages
-    # into ONE growing expression and let round k's single pair-count
-    # job replay the k-stage chain over the pinned base. The replay is
-    # two codegen'd string replaces per stage per row — far cheaper
-    # than the per-round checkpoint job it replaces — and it nearly
-    # halves the blocking driver round trips that amplify host stalls
-    # (the r9 driver draw billed bpe_tokenize_apply 27.3 s vs ~2 s
-    # committed: every one of the 11 blocking jobs inherits the stall).
-    enc = F.col("text")
-    for i in range(5):
-        toks = docs.select(F.split(enc, " ").alias("ws"))
-        n = F.size("ws")
-        pairs = (
-            toks.filter(n >= 2)
-            .select(
-                F.explode(
-                    F.arrays_zip(
-                        F.slice(F.col("ws"), 1, n - 1),
-                        F.slice(F.col("ws"), 2, n - 1),
-                    )
-                ).alias("bg")
-            )
-            .groupBy(F.col("bg.0").alias("w1"), F.col("bg.1").alias("w2"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        )
-        top = pairs.orderBy(F.desc("cnt"), "w1", "w2").limit(1).collect()[0]
-        merges.append((i + 1, top.w1, top.w2, top.cnt))
-        pat = f" {top.w1}  {top.w2} "
-        rep = f" {top.w1}@@{top.w2} "
-        enc = F.trim(
-            F.replace(
-                F.replace(
-                    F.concat(
-                        F.lit(" "),
-                        F.replace(enc, F.lit(" "), F.lit("  ")),
-                        F.lit(" "),
-                    ),
-                    F.lit(pat),
-                    F.lit(rep),
-                ),
-                F.lit("  "),
-                F.lit(" "),
-            )
-        )
-    out = docs.sparkSession.createDataFrame(
-        merges, "merge_order int, w1 string, w2 string, pair_count bigint"
+    # a createDataFrame over a Python list: a Scan ExistingRDD over the
+    # driver-held rows (callers that need the encoded corpus re-derive
+    # it from the merge table, see bpe_tokenize_apply)
+    return spark.createDataFrame(
+        [(i + 1, m.w1, m.w2, m.cnt) for i, m in enumerate(picks)],
+        "merge_order int, w1 string, w2 string, pair_count bigint",
     ).orderBy("merge_order")
-    # the merge table is a Scan ExistingRDD over driver-held rows, so
-    # the base-corpus pin is dead (callers that need the encoded corpus
-    # re-derive it from the merge table, see bpe_tokenize_apply)
-    release_local_checkpoints(docs)
-    return out
-

@@ -6,6 +6,7 @@ imported by the facade in fixed sequence; do not reorder.
 
 from __future__ import annotations
 
+from ..operators.text import merge_pair
 from ..scratch import tmp_io
 from ..session import scoped_conf
 from ._core import DataFrame, F, SparkSession, W, pin_local, register, t
@@ -63,23 +64,7 @@ def bpe_tokenize_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for tokenization: zero shuffles, zero joins, per-row work only.
     enc = F.col("text")
     for m in sorted(merges, key=lambda r: r.merge_order):
-        pat = f" {m.w1}  {m.w2} "
-        rep = f" {m.w1}@@{m.w2} "
-        enc = F.trim(
-            F.replace(
-                F.replace(
-                    F.concat(
-                        F.lit(" "),
-                        F.replace(enc, F.lit(" "), F.lit("  ")),
-                        F.lit(" "),
-                    ),
-                    F.lit(pat),
-                    F.lit(rep),
-                ),
-                F.lit("  "),
-                F.lit(" "),
-            )
-        )
+        enc = merge_pair(enc, m.w1, m.w2)
     n_raw = F.size(F.split(F.col("text"), " ")).cast("bigint")
     n_bpe = F.size(F.split(enc, " ")).cast("bigint")
     return (

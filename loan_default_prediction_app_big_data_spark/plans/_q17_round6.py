@@ -15,7 +15,8 @@ from __future__ import annotations
 import math
 
 from ._core import DataFrame, F, SparkSession, register, t
-from ..pinning import release_local_checkpoints
+from ..operators.text import pair_counts
+from ._q08_sequences_session2 import _train_merges
 
 
 # =====================================================================
@@ -214,8 +215,9 @@ _FUZZY_DECON_ORACLE = """
     _FUZZY_DECON_ORACLE,
     "Fuzzy benchmark decontamination: every (train doc, benchmark "
     "doc) pair with 3-shingle Jaccard >= 0.5, via the ASYMMETRIC "
-    "PPJoin kernel (operators/dedup.py::prefix_filtered_jaccard_join_"
-    "asym) — benchmark_decontamination's exact-n-gram containment "
+    "PPJoin kernel (operators/dedup.py: the prefix_filtered_jaccard_"
+    "join_asym wrapper over the shared _prefixes/_verified_pairs "
+    "kernel) — benchmark_decontamination's exact-n-gram containment "
     "catches verbatim leakage; THIS catches paraphrased or partially "
     "edited eval items. The prefix filter is LOSSLESS (shared "
     "union-corpus frequency order, so any J>=t pair must collide "
@@ -324,6 +326,32 @@ def _wordpiece_oracle(n_merges: int = 4) -> str:
     return ctes + final
 
 
+def _wordpiece_pick(toks: DataFrame):
+    """The round's likelihood-ratio argmax (score DESC, w1, w2) over
+    pairs with support >= the floor."""
+    uni = (
+        toks.select(F.explode("ws").alias("w"))
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+    )
+    scored = (
+        pair_counts(toks)
+        .filter(F.col("cnt") >= _WP_FLOOR)
+        .join(
+            F.broadcast(uni.select(F.col("w").alias("w1"), F.col("c").alias("c1"))),
+            "w1",
+        )
+        .join(
+            F.broadcast(uni.select(F.col("w").alias("w2"), F.col("c").alias("c2"))),
+            "w2",
+        )
+        .withColumn(
+            "score", F.col("cnt").cast("double") / (F.col("c1") * F.col("c2"))
+        )
+    )
+    return scored.orderBy(F.desc("score"), "w1", "w2").limit(1).collect()[0]
+
+
 @register(
     "wordpiece_merge_training",
     _wordpiece_oracle(4),
@@ -348,85 +376,17 @@ def _wordpiece_oracle(n_merges: int = 4) -> str:
     tags=("text", "llm-pipeline", "iterative", "round6"),
 )
 def wordpiece_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = (
-        t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(8)
-        .localCheckpoint(eager=True)  # data-scale: the whole corpus
-    )
-    merges = []
-    # Same restructure as bpe_merge_training (r10): round k's corpus is
-    # a pure per-row string function of the pinned base, so the replace
-    # stages chain into one growing expression instead of one eager
-    # checkpoint job + release per round — 9 blocking driver jobs per
-    # training run drop to 5, shrinking both the steady time and the
-    # host-stall exposure every blocking round trip inherits.
-    enc = F.col("text")
-    for i in range(4):
-        toks = docs.select(F.split(enc, " ").alias("ws"))
-        n = F.size("ws")
-        uni = (
-            toks.select(F.explode("ws").alias("w"))
-            .groupBy("w")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
-        )
-        pairs = (
-            toks.filter(n >= 2)
-            .select(
-                F.explode(
-                    F.arrays_zip(
-                        F.slice(F.col("ws"), 1, n - 1),
-                        F.slice(F.col("ws"), 2, n - 1),
-                    )
-                ).alias("bg")
-            )
-            .groupBy(F.col("bg.0").alias("w1"), F.col("bg.1").alias("w2"))
-            .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-            .filter(F.col("cnt") >= _WP_FLOOR)
-        )
-        scored = (
-            pairs.join(
-                F.broadcast(uni.select(F.col("w").alias("w1"), F.col("c").alias("c1"))),
-                "w1",
-            )
-            .join(
-                F.broadcast(uni.select(F.col("w").alias("w2"), F.col("c").alias("c2"))),
-                "w2",
-            )
-            .withColumn(
-                "score", F.col("cnt").cast("double") / (F.col("c1") * F.col("c2"))
-            )
-        )
-        top = scored.orderBy(F.desc("score"), "w1", "w2").limit(1).collect()[0]
-        # Mirror the oracle's float op ORDER exactly: divide first
-        # (one correctly-rounded IEEE division), then *1e9, then floor
-        # — a different association could land 1 ulp across the floor
-        # boundary on one engine only.
-        score_1e9 = math.floor(1e9 * (top.cnt / (top.c1 * top.c2)))
-        merges.append(
-            (i + 1, top.w1, top.w2, top.cnt, top.c1, top.c2, score_1e9)
-        )
-        pat = f" {top.w1}  {top.w2} "
-        rep = f" {top.w1}@@{top.w2} "
-        enc = F.trim(
-            F.replace(
-                F.replace(
-                    F.concat(
-                        F.lit(" "),
-                        F.replace(enc, F.lit(" "), F.lit("  ")),
-                        F.lit(" "),
-                    ),
-                    F.lit(pat),
-                    F.lit(rep),
-                ),
-                F.lit("  "),
-                F.lit(" "),
-            )
-        )
-    out = docs.sparkSession.createDataFrame(
-        merges,
+    picks = _train_merges(spark, sf_dir, 4, _wordpiece_pick)
+    # Mirror the oracle's float op ORDER exactly: divide first (one
+    # correctly-rounded IEEE division), then *1e9, then floor — a
+    # different association could land 1 ulp across the floor boundary
+    # on one engine only.
+    return spark.createDataFrame(
+        [
+            (i + 1, m.w1, m.w2, m.cnt, m.c1, m.c2,
+             math.floor(1e9 * (m.cnt / (m.c1 * m.c2))))
+            for i, m in enumerate(picks)
+        ],
         "merge_order int, w1 string, w2 string, pair_count bigint,"
         " left_count bigint, right_count bigint, score_1e9 bigint",
     ).orderBy("merge_order")
-    release_local_checkpoints(docs)  # out scans only the driver-held merges
-    return out

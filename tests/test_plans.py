@@ -312,8 +312,7 @@ def test_runtime_bloom_filter_prunes_fact_scan(spark, sf_dir):
 def test_driver_window_has_no_already_certified_names():
     """Every name in the 50-slot driver window must lack a committed
     CORRECTNESS row — re-submitting certified queries wastes the
-    round's certification capacity (VERDICT r4 item 1). Runs the same
-    computation as scripts/promote_slots.py --check."""
+    round's certification capacity (VERDICT r4 item 1)."""
     import glob
     import json
     import os
@@ -335,10 +334,9 @@ def test_driver_window_has_no_already_certified_names():
         assert stale == [], (
             f"driver slots already certified: {stale}\n"
             "A new CORRECTNESS_r*.json landed without rotating the driver "
-            "window. Remediation: run `python scripts/promote_slots.py` and "
-            "paste its output over the stale _DRIVER_PRIORITY block in "
-            "plans/_core.py (commit the artifact and the queue update "
-            "together)."
+            "window. Remediation: drop the certified names from "
+            "_DRIVER_PRIORITY in plans/_core.py (commit the artifact and "
+            "the queue update together)."
         )
     else:
         # Queue nearly (or fully) exhausted: the invariant is that every

@@ -909,6 +909,48 @@ def test_bpe_apply_compresses_and_conserves(run):
         )
 
 
+def _merge_pair_reference(text: str, w1: str, w2: str) -> str:
+    """Greedy left-to-right merge of adjacent (w1, w2) token pairs."""
+    toks, out, i = text.split(" "), [], 0
+    while i < len(toks):
+        if i + 1 < len(toks) and (toks[i], toks[i + 1]) == (w1, w2):
+            out.append(f"{w1}@@{w2}")
+            i += 2
+        else:
+            out.append(toks[i])
+            i += 1
+    return " ".join(out)
+
+
+@pytest.mark.parametrize(
+    "text,w1,w2",
+    [
+        ("a a a", "a", "a"),  # overlapping run: a@@a a
+        ("a a a a", "a", "a"),
+        ("x y z", "x", "y"),  # pair at the start
+        ("z x y", "x", "y"),  # pair at the end
+        ("x y", "x", "y"),  # the whole string
+        ("x y x y q x", "x", "y"),  # two matches and a stray w1
+        ("xx y x yy", "x", "y"),  # substrings of tokens never match
+        ("a@@b c", "a@@b", "c"),  # an already merged token
+        ("solo", "solo", "solo"),
+    ],
+)
+def test_merge_pair_matches_greedy_reference(spark, text, w1, w2):
+    """``merge_pair`` is the greedy left-to-right pair merge the BPE and
+    WordPiece trainers and the BPE encoder all apply."""
+    from loan_default_prediction_app_big_data_spark.operators.text import merge_pair
+
+    got = (
+        spark.createDataFrame([(text,)], "text string")
+        .select(merge_pair(F.col("text"), w1, w2).alias("m"))
+        .first()["m"]
+    )
+    assert got == _merge_pair_reference(text, w1, w2)
+    if (text, w1, w2) == ("a a a", "a", "a"):
+        assert got == "a@@a a"
+
+
 def test_append_mode_withholds_open_windows(run, spark, sf_dir):
     """Append-mode output must be a strict subset of the complete
     batch aggregate: closed windows identical, open windows absent."""

@@ -46,6 +46,10 @@ _PINNED_LOCALLY = [
     "graph_assortativity",
 ]
 
+# Queries that pin a data-scale frame and release it before returning:
+# the shared merge-rule trainer's one corpus pin per training.
+_RELEASED_IN_QUERY = ["bpe_merge_training", "wordpiece_merge_training"]
+
 
 def _pinned(spark):
     return [
@@ -73,7 +77,9 @@ def _settled_pins(spark, baseline, deadline_s=30.0):
     return list(extra.elements())
 
 
-@pytest.mark.parametrize("name", _FORMERLY_LEAKY + _PINNED_LOCALLY)
+@pytest.mark.parametrize(
+    "name", _FORMERLY_LEAKY + _PINNED_LOCALLY + _RELEASED_IN_QUERY
+)
 def test_query_leaves_zero_pinned_storage(spark, sf_smoke, name):
     spark.catalog.clearCache()  # isolate from earlier tests' caches
     # Baseline: earlier tests in a shared session may have left

@@ -174,6 +174,59 @@ def test_prefix_jaccard_planted_recall_and_negative(spark):
     assert r["jaccard"] == 0.948718
 
 
+def test_prefix_jaccard_bad_threshold_runs_no_job_and_pins_nothing(spark):
+    """An invalid threshold must raise before any Spark job runs, so it
+    leaves no block-manager pin behind."""
+    from loan_default_prediction_app_big_data_spark.operators.dedup import (
+        prefix_filtered_jaccard_join,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "a b c d"), (2, "a b c e")], "doc_id long, text string"
+    )
+    jsc = spark.sparkContext._jsc.sc()
+
+    def next_job_id():
+        return int(jsc.dagScheduler().nextJobId())
+
+    def n_pins():
+        return len(jsc.getRDDStorageInfo())
+
+    jobs0, pins0 = next_job_id(), n_pins()
+    with pytest.raises(ValueError, match="1-decimal"):
+        prefix_filtered_jaccard_join(df, threshold=0.65)
+    assert (next_job_id() - jobs0, n_pins() - pins0) == (0, 0)
+
+
+def test_prefix_jaccard_self_join_agrees_with_asym(spark):
+    """The self-join's counts equal the asymmetric join of the frame
+    with itself restricted to id_a < id_b (one kernel, two wrappers)."""
+    from loan_default_prediction_app_big_data_spark.operators.dedup import (
+        prefix_filtered_jaccard_join,
+        prefix_filtered_jaccard_join_asym,
+    )
+
+    base = [f"w{i}" for i in range(30)]
+    texts = [
+        " ".join(base),
+        " ".join(base[:29] + ["x"]),  # one edit: J well above 0.6
+        " ".join(base[:22] + ["y"] * 8),  # borderline overlap
+        " ".join(base[5:] + base[:5]),  # rotation: shares most shingles
+        " ".join(f"z{i}" for i in range(30)),  # negative control
+        "w0 w1",  # shorter than k: one shingle
+    ]
+    df = spark.createDataFrame(
+        list(enumerate(texts, start=1)), "doc_id long, text string"
+    )
+    sym = prefix_filtered_jaccard_join(df, threshold=0.6, with_counts=True)
+    asym = prefix_filtered_jaccard_join_asym(df, df, threshold=0.6).filter(
+        F.col("id_a") < F.col("id_b")
+    )
+    got = sorted(tuple(r) for r in sym.collect())
+    assert got == sorted(tuple(r) for r in asym.collect())
+    assert (1, 2, 27, 29) in got  # planted near-dup found with exact counts
+
+
 def test_decontamination_planted_flag_and_negative(spark):
     from loan_default_prediction_app_big_data_spark.operators.textprep import (
         benchmark_decontamination,
