@@ -31,7 +31,7 @@ def entry(spark: SparkSession) -> DataFrame:
     every dimension broadcast, then a small hash aggregate — the plan
     shape the engine uses for 100 TB fact-dimension analytics.
     """
-    return _registry.q5_region_revenue(spark, SMOKE_SF_DIR)
+    return _registry.REGISTRY["q5_region_revenue"].fn(spark, SMOKE_SF_DIR)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

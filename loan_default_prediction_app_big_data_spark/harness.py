@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .pinning import release_local_checkpoints
 from .plans.registry import REGISTRY
-from .sources.sqlite_py import HAVE_DATASOURCE_API, register_sqlite_source
+from .sources.sqlite_py import register_sqlite_source
 
 
 def _save_noop(df: DataFrame) -> None:
@@ -47,8 +47,6 @@ def warm_session(spark: SparkSession, sf_dir: str) -> None:
     ``sqlite_cdc_streaming_tail`` carrying it at 9.2 s steady)."""
     _save_noop(REGISTRY["count_rows"].fn(spark, sf_dir))
     _save_noop(spark.range(8).mapInPandas(lambda it: it, schema="id long"))
-    if not HAVE_DATASOURCE_API:
-        return
     with tempfile.TemporaryDirectory(prefix="warm_ds_") as d:
         conn = sqlite3.connect(os.path.join(d, "shard-00000.db"))
         conn.execute("CREATE TABLE warm (k INTEGER)")

@@ -16,7 +16,7 @@ from __future__ import annotations
 import math
 from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -62,11 +62,6 @@ def verdict_sql(prediction_col: str = "final_prediction") -> str:
     )
 
 
-def override_predicate(th: OverrideThresholds = OverrideThresholds()) -> Column:
-    """The predicate of ``override_sql`` as a column."""
-    return F.expr(_predicate_sql(th))
-
-
 def apply_override(
     scored: DataFrame,
     prediction_col: str = "prediction",
@@ -75,8 +70,3 @@ def apply_override(
 ) -> DataFrame:
     """Add ``output_col``: ``override_sql`` over ``prediction_col``."""
     return scored.withColumn(output_col, F.expr(override_sql(prediction_col, th)))
-
-
-def verdict_text(prediction_col: str = "final_prediction") -> Column:
-    """``verdict_sql`` as a column."""
-    return F.expr(verdict_sql(prediction_col))

@@ -25,12 +25,6 @@ from .text import shingles, tokens, widen_to_parallelism
 from ..pinning import release_local_checkpoints
 
 
-def exact_dedup(df: DataFrame, subset: list[str] | None = None) -> DataFrame:
-    """Exact duplicate removal. ``dropDuplicates`` is a hash aggregate
-    on the subset columns — one shuffle, combiner on the map side."""
-    return df.dropDuplicates(subset) if subset else df.dropDuplicates()
-
-
 def content_hash_dedup(
     df: DataFrame, content_col: str, id_col: str
 ) -> DataFrame:

@@ -50,16 +50,6 @@ def deterministic_sample(df: DataFrame, key: Column, modulus: int, keep: int) ->
     return df.filter(F.pmod(key, F.lit(modulus)) < keep)
 
 
-def exact_n_sample(df: DataFrame, n: int, seed: int = 42) -> DataFrame:
-    """A22 exact-n random sample: ``orderBy(rand(seed)).limit(n)``.
-
-    Spark plans TakeOrderedAndProject — a per-partition top-n then a
-    driver merge of n*partitions rows, NOT a global sort; safe at scale
-    for preview-sized n.
-    """
-    return df.orderBy(F.rand(seed)).limit(n)
-
-
 def top_k(df: DataFrame, order_cols: list[Column], k: int) -> DataFrame:
     """Sorted top-k → ``TakeOrderedAndProject`` (no full global sort)."""
     return df.orderBy(*order_cols).limit(k)

@@ -71,24 +71,6 @@ def stopword_ratio(col: Column | str, stopwords: list[str] | None = None) -> Col
     return (n_stop / F.greatest(F.size(toks), F.lit(1))).cast("double")
 
 
-def avg_token_length(col: Column | str) -> Column:
-    toks = tokens(col)
-    total = F.aggregate(
-        toks, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)
-    )
-    return (total / F.greatest(F.size(toks), F.lit(1))).cast("double")
-
-
-def quality_score(col: Column | str) -> Column:
-    """Cheap document-quality heuristic: mid-length docs with a healthy
-    stopword ratio score high. Deterministic, SQL-expressible."""
-    c = F.col(col) if isinstance(col, str) else col
-    n_tok = token_count(c)
-    len_score = F.least(n_tok / F.lit(50.0), F.lit(1.0))
-    sw = stopword_ratio(c)
-    return F.round(0.5 * len_score + 0.5 * F.least(sw * 5, F.lit(1.0)), 4)
-
-
 def lang_id(col: Column | str, threshold: float = 0.05) -> Column:
     """N-gram/function-word language-ID heuristic: classify as English
     when the English function-word ratio clears the threshold."""

@@ -1,13 +1,17 @@
 """Pin a metadata-scale result on the driver as an Arrow-built
-``LocalRelation`` (``pin_local``), and release ``localCheckpoint`` pins
+``LocalRelation`` (``pin_local``), build a few driver-held rows the
+same way (``local_rows``), and release ``localCheckpoint`` pins
 (``release_local_checkpoints``), which only data-scale frames use.
-Leaf module (imports only pyspark) so both ``plans._core`` and
-``streaming.windows`` can use it without an import cycle.
+Leaf module (imports only pyspark and pyarrow) so both the plan
+modules and ``streaming.windows`` can use it without an import cycle.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 #: Pinning materializes on the driver — a guard this size keeps the
 #: pattern usable only for post-aggregate / metadata-scale frames.
@@ -42,6 +46,18 @@ def pin_local(
             "distributed sink instead"
         )
     return spark.createDataFrame(table, schema=df.schema)
+
+
+def local_rows(spark: SparkSession, rows: list[tuple], ddl: str) -> DataFrame:
+    """``createDataFrame(rows, ddl)`` for a few driver-held rows, built
+    from an Arrow table so the plan is a ``LocalRelation``
+    (``LocalTableScan``) like ``pin_local``'s, not a ``Scan
+    ExistingRDD`` over a parallelized Python RDD."""
+    schema = StructType.fromDDL(ddl)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table, schema=schema)
 
 
 def release_local_checkpoints(*dfs: DataFrame) -> int:

@@ -12,9 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..pinning import pin_local  # noqa: F401  (re-export for plan modules)
 from ..sources.readers import read_parquet_table
-from ..operators import relational as R
 
 
 @dataclass
@@ -41,26 +39,15 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return read_parquet_table(spark, sf_dir, name)
 
 
-
-
 # =====================================================================
 # Driver-contract exports
 # =====================================================================
 
 
 def _ordered_names() -> list[str]:
-    """Registry names with the driver-priority slots first.
-
-    The driver verifies the FIRST 50 entries of ``queries()`` per
-    round; registration order alone left 38 of round 1's queries with
-    no driver correctness row (VERDICT r1 item 1). ``_DRIVER_PRIORITY``
-    (defined at the end of this module, after all registrations) pins
-    the 50 slots to maximize per-round category coverage; everything
-    else follows in registration order and rotates into future rounds.
-    """
+    """The driver order; the rule is in the ``registry.py`` docstring."""
     priority = [n for n in _DRIVER_PRIORITY if n in REGISTRY]
-    rest = [n for n in REGISTRY if n not in set(priority)]
-    return priority + rest
+    return priority + sorted(set(REGISTRY) - set(priority))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -77,8 +64,8 @@ def oracle_sql() -> dict[str, str]:
     }
 
 
-
-
+#: The driver verifies the first 50 entries of ``queries()``; these
+#: names lead that window.
 _DRIVER_PRIORITY: list[str] = [
     # All 385 queries are certified, so the window leads with the
     # queries whose code changed most recently: the ones running the

@@ -1,0 +1,2701 @@
+"""Machine-learning queries: MLlib fits and their oracle-checkable twins.
+"""
+
+from __future__ import annotations
+
+from ..pinning import pin_local, release_local_checkpoints
+from ._core import DataFrame, F, SparkSession, W, register, t
+from .relational import _LATC, _LONC
+from .credit import _BANDS_SQL, _score_bands
+
+
+@register(
+    "group_aware_split",
+    """
+    SELECT CASE WHEN (c_custkey * 2654435761) % 4294967296 < 3435973836
+                THEN 'train' ELSE 'test' END AS split,
+           CAST(count(DISTINCT c.c_custkey) AS BIGINT) AS n_customers,
+           CAST(count(*) AS BIGINT)                    AS n_orders,
+           round(sum(o_totalprice), 2)                 AS total_price
+    FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+    GROUP BY 1
+    """,
+    "Leakage-free train/test split for ML: the split is a "
+    "deterministic hash of the GROUP key (customer), so every order "
+    "of a customer lands in the same split — the group-aware split "
+    "that prevents entity leakage between train and eval. Pure int64 "
+    "arithmetic (Knuth multiplicative hash mod 2^32 < floor(0.8*2^32))"
+    " — no RNG, identical membership on every engine/retry; the "
+    "customer side broadcasts and the split predicate is map-side, so "
+    "the only shuffle is the summary aggregation.",
+    tags=("sampling", "ml"),
+)
+def group_aware_split(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.textprep import KNUTH, MOD32
+
+    orders = t(spark, sf_dir, "orders")
+    cust = t(spark, sf_dir, "customer").select("c_custkey")
+    threshold = int(0.8 * MOD32)  # 3435973836
+    joined = orders.join(
+        F.broadcast(cust), orders.o_custkey == cust.c_custkey
+    ).withColumn(
+        "split",
+        F.when(
+            (F.col("c_custkey") * F.lit(KNUTH)) % F.lit(MOD32) < F.lit(threshold),
+            F.lit("train"),
+        ).otherwise(F.lit("test")),
+    )
+    return joined.groupBy("split").agg(
+        F.countDistinct("c_custkey").cast("bigint").alias("n_customers"),
+        F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+        F.round(F.sum("o_totalprice"), 2).alias("total_price"),
+    )
+
+
+@register(
+    "ewma_daily_value",
+    """
+    WITH daily AS (
+        SELECT event_type, date_trunc('day', ts) AS day, avg(value) AS v
+        FROM events GROUP BY 1, 2
+    ),
+    arrs AS (
+        SELECT event_type, list(v ORDER BY day) AS vals
+        FROM daily GROUP BY 1
+    )
+    SELECT event_type,
+           CAST(len(vals) AS BIGINT) AS n_days,
+           CAST(FLOOR(list_reduce(vals,
+                    (acc, x) -> CAST(0.2 AS DOUBLE) * x
+                              + CAST(0.8 AS DOUBLE) * acc) * 10000.0 + 0.5)
+                / 10000.0 AS DOUBLE) AS ewma
+    FROM arrs
+    """,
+    "Exponentially-weighted moving average of daily event values per "
+    "type — the classic time-series smoothing feature. Daily partial "
+    "aggregate first (corpus -> #days x #types rows), THEN an ordered "
+    "fold per key via the aggregate() lambda — so the sequential "
+    "recursion runs over a metadata-scale array, never the raw "
+    "events. Both engines fold left-to-right from the first day's "
+    "value with identical IEEE ops (DuckDB list_reduce seeds with "
+    "element 1; Spark aggregate(slice(...,2,...), element_at(...,1)) "
+    "mirrors it), and the result lands on the 1e-4 grid via the "
+    "floor(x*1e4+0.5) trick.",
+    tags=("events", "window", "ml"),
+)
+def ewma_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = t(spark, sf_dir, "events")
+    daily = ev.groupBy(
+        "event_type", F.date_trunc("day", F.col("ts")).alias("day")
+    ).agg(F.avg("value").alias("v"))
+    arrs = daily.groupBy("event_type").agg(
+        F.expr("transform(array_sort(collect_list(struct(day, v))), s -> s.v)").alias(
+            "vals"
+        )
+    )
+    return arrs.select(
+        "event_type",
+        F.size("vals").cast("bigint").alias("n_days"),
+        F.expr(
+            "cast(floor(aggregate(slice(vals, 2, size(vals) - 1),"
+            " element_at(vals, 1),"
+            " (acc, x) -> 0.2d * x + 0.8d * acc) * 10000.0 + 0.5)"
+            " / 10000.0 as double)"
+        ).alias("ewma"),
+    )
+
+
+@register(
+    "winsorize_robust_scale",
+    """
+    WITH b AS (
+        SELECT l_returnflag,
+               quantile_cont(l_extendedprice, 0.01) AS p01,
+               quantile_cont(l_extendedprice, 0.99) AS p99
+        FROM lineitem GROUP BY l_returnflag
+    )
+    SELECT l.l_orderkey, l.l_linenumber,
+           CAST(FLOOR(least(greatest(l.l_extendedprice, b.p01), b.p99)
+                      * 10000.0 + 0.5) / 10000.0 AS DOUBLE) AS price_winsorized,
+           CAST(l.l_extendedprice < b.p01 OR l.l_extendedprice > b.p99
+                AS INT) AS clipped
+    FROM lineitem l JOIN b ON l.l_returnflag = b.l_returnflag
+    """,
+    "Winsorization (robust feature scaling): clamp each value into its "
+    "group's [p01, p99] — the outlier-taming transform applied before "
+    "training on heavy-tailed features. Exact interpolated percentiles "
+    "here for oracle parity; at 100 TB swap percentile() for "
+    "approx_percentile (single-pass sketch, no per-group sort) — the "
+    "clamp join is a broadcast of one tiny bounds row per group either "
+    "way. Grid-stable 4dp flooring because the clamp boundaries are "
+    "interpolated doubles that sit on no decimal grid.",
+    tags=("agg", "ml", "stats"),
+)
+def winsorize_robust_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = t(spark, sf_dir, "lineitem")
+    b = li.groupBy("l_returnflag").agg(
+        F.expr("percentile(l_extendedprice, 0.01)").alias("p01"),
+        F.expr("percentile(l_extendedprice, 0.99)").alias("p99"),
+    )
+    j = li.join(F.broadcast(b), "l_returnflag")
+    clamped = F.least(F.greatest(F.col("l_extendedprice"), F.col("p01")), F.col("p99"))
+    return j.select(
+        "l_orderkey",
+        "l_linenumber",
+        (F.floor(clamped * 10000.0 + 0.5) / 10000.0)
+        .cast("double")
+        .alias("price_winsorized"),
+        (
+            (F.col("l_extendedprice") < F.col("p01"))
+            | (F.col("l_extendedprice") > F.col("p99"))
+        )
+        .cast("int")
+        .alias("clipped"),
+    )
+
+
+@register(
+    "mad_robust_stats",
+    """
+    WITH med AS (
+      SELECT l_returnflag,
+             CAST(median(l_extendedprice) AS DOUBLE) AS med_price
+      FROM lineitem GROUP BY 1
+    )
+    SELECT l.l_returnflag,
+           CAST(FLOOR(any_value(m.med_price) * 10000.0 + 0.5) / 10000.0
+                AS DOUBLE) AS med_price,
+           CAST(FLOOR(CAST(median(abs(l.l_extendedprice - m.med_price))
+                           AS DOUBLE) * 10000.0 + 0.5) / 10000.0
+                AS DOUBLE) AS mad_price,
+           count(*) AS n
+    FROM lineitem l JOIN med m ON l.l_returnflag = m.l_returnflag
+    GROUP BY 1
+    """,
+    "Median absolute deviation — the robust (outlier-immune) scale "
+    "estimator paired with the median center: two exact-median passes, "
+    "the second over |x - group_median| after a broadcast join of the "
+    "1-row-per-group centers. Exact interpolated medians for oracle "
+    "parity; at 100 TB both passes swap to approx_percentile sketches "
+    "(single-pass, mergeable, no per-group sort) with the same plan "
+    "shape. Grid-stable 4dp flooring because interpolated medians sit "
+    "on no decimal grid.",
+    tags=("agg", "stats", "ml"),
+)
+def mad_robust_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = t(spark, sf_dir, "lineitem")
+    med = li.groupBy("l_returnflag").agg(
+        F.median("l_extendedprice").cast("double").alias("med_price")
+    )
+    j = li.join(F.broadcast(med), "l_returnflag")
+    grid = lambda c: (F.floor(c * 10000.0 + 0.5) / 10000.0).cast("double")  # noqa: E731
+    return j.groupBy("l_returnflag").agg(
+        grid(F.any_value("med_price")).alias("med_price"),
+        grid(
+            F.median(F.abs(F.col("l_extendedprice") - F.col("med_price"))).cast(
+                "double"
+            )
+        ).alias("mad_price"),
+        F.count(F.lit(1)).alias("n"),
+    )
+
+
+@register(
+    "time_since_last_event",
+    """
+    SELECT event_id, user_id, event_type,
+           t_us - last_value(CASE WHEN event_type = 'purchase' THEN t_us END
+                             IGNORE NULLS) OVER (
+               PARTITION BY user_id ORDER BY t_us, event_id
+               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+               AS us_since_purchase
+    FROM (SELECT event_id, user_id, event_type, epoch_us(ts) AS t_us
+          FROM events)
+    """,
+    "Recency feature: per event, microseconds since the SAME user's "
+    "previous purchase (NULL before the first) — the "
+    "time-since-last-X transform behind churn/propensity features, via "
+    "a conditional IGNORE NULLS window lookup with the frame ending at "
+    "1 PRECEDING so a purchase measures from the PRIOR purchase, not "
+    "itself. (ts, event_id) ordering keeps same-timestamp rows "
+    "deterministic. One shuffle on user_id; running state is one "
+    "scalar per user regardless of history length — at 100 TB this "
+    "scales with users, not events, and integer µs arithmetic means "
+    "no float drift anywhere.",
+    tags=("events", "window", "ml"),
+)
+def time_since_last_event(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = t(spark, sf_dir, "events").select(
+        "event_id",
+        "user_id",
+        "event_type",
+        F.expr("unix_micros(ts)").alias("t_us"),
+    )
+    frame = (
+        W.partitionBy("user_id")
+        .orderBy("t_us", "event_id")
+        .rowsBetween(W.unboundedPreceding, -1)
+    )
+    prev_purchase = F.last(
+        F.when(F.col("event_type") == "purchase", F.col("t_us")), ignorenulls=True
+    ).over(frame)
+    return ev.select(
+        "event_id",
+        "user_id",
+        "event_type",
+        (F.col("t_us") - prev_purchase).alias("us_since_purchase"),
+    )
+
+
+@register(
+    "roc_auc_banded",
+    _BANDS_SQL
+    + """
+    , c AS (
+        SELECT band,
+               CAST(sum(n_bad) OVER (ORDER BY band DESC
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                    AS BIGINT) AS cb,
+               CAST(sum(n_good) OVER (ORDER BY band DESC
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                    AS BIGINT) AS cg,
+               CAST(sum(n_bad) OVER () AS BIGINT)  AS tot_bad,
+               CAST(sum(n_good) OVER () AS BIGINT) AS tot_good
+        FROM b
+    ), seg AS (
+        SELECT tot_bad, tot_good,
+               (cg - coalesce(lag(cg) OVER (ORDER BY band DESC), 0))
+               * (cb + coalesce(lag(cb) OVER (ORDER BY band DESC), 0))
+               AS seg_area2
+        FROM c
+    )
+    SELECT round(CAST(CAST(sum(seg_area2) AS BIGINT) AS DOUBLE)
+                 / CAST(2 * max(tot_bad) * max(tot_good) AS DOUBLE), 6) AS auc,
+           CAST(max(tot_bad) AS BIGINT)  AS tot_bad,
+           CAST(max(tot_good) AS BIGINT) AS tot_good
+    FROM seg
+    """,
+    "Banded ROC-AUC by exact trapezoid integration over the 10 ROC "
+    "points — the reference's headline metric (spark.py:80-90 "
+    "BinaryClassificationEvaluator areaUnderROC) recomputed with pure "
+    "INTEGER arithmetic: each trapezoid's doubled area is a product "
+    "of exact BIGINT cumulative counts, summed exactly, divided once "
+    "at the end — bit-identical on any engine and any partition "
+    "layout, unlike float-accumulated AUC. Equals the exact "
+    "per-score-value AUC when ties are banded (here: band = score "
+    "div 10000). One groupBy shuffle; windows and lag over 10 rows.",
+    tags=("agg", "window", "analytics", "credit", "ml"),
+)
+def roc_auc_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions import risk
+
+    return risk.auc_banded(_score_bands(spark, sf_dir))
+
+
+@register(
+    "target_encoding",
+    """
+    WITH j AS (
+        SELECT c.c_mktsegment AS segment,
+               CASE WHEN o.o_orderstatus = 'F' THEN 1 ELSE 0 END AS bad
+        FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+    ), g AS (
+        SELECT segment,
+               CAST(count(*) AS BIGINT)  AS n,
+               CAST(sum(bad) AS BIGINT)  AS n_bad
+        FROM j GROUP BY 1
+    ), c AS (
+        SELECT segment, n, n_bad,
+               CAST(sum(n) OVER () AS BIGINT)     AS tot_n,
+               CAST(sum(n_bad) OVER () AS BIGINT) AS tot_bad
+        FROM g
+    )
+    SELECT segment, n, n_bad,
+           round(CAST(n_bad AS DOUBLE) / CAST(n AS DOUBLE), 6) AS raw_rate,
+           round((CAST(n_bad AS DOUBLE)
+                  + 20.0 * (CAST(tot_bad AS DOUBLE) / CAST(tot_n AS DOUBLE)))
+                 / (CAST(n AS DOUBLE) + 20.0), 6)              AS encoded
+    FROM c
+    """,
+    "Smoothed target (mean) encoding of a categorical feature against "
+    "the default label — the scorecard feature-engineering step that "
+    "replaces high-cardinality categories before the reference's "
+    "LogisticRegression (spark.py:70-78; its StringIndexer/OHE "
+    "equivalent for wide categories). Empirical-Bayes shrinkage with "
+    "prior weight m=20 pulls small categories toward the global rate "
+    "(the leakage-resistant form). Dimension join broadcasts the "
+    "customer segment; counts are exact BIGINT; rate and encoding are "
+    "IEEE divisions of identical expression trees. At 100 TB the "
+    "groupBy key is the category — thousands of groups, one shuffle.",
+    tags=("agg", "join", "analytics", "ml", "credit"),
+)
+def target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = t(spark, sf_dir, "orders")
+    cdim = t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
+    j = o.join(F.broadcast(cdim), o.o_custkey == cdim.c_custkey).select(
+        F.col("c_mktsegment").alias("segment"),
+        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("bad"),
+    )
+    g = j.groupBy("segment").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("bad").cast("bigint").alias("n_bad"),
+    )
+    c = g.select(
+        "segment",
+        "n",
+        "n_bad",
+        F.sum("n").over(W.partitionBy()).cast("bigint").alias("tot_n"),
+        F.sum("n_bad").over(W.partitionBy()).cast("bigint").alias("tot_bad"),
+    )
+    global_rate = F.col("tot_bad").cast("double") / F.col("tot_n").cast("double")
+    return c.select(
+        "segment",
+        "n",
+        "n_bad",
+        F.round(
+            F.col("n_bad").cast("double") / F.col("n").cast("double"), 6
+        ).alias("raw_rate"),
+        F.round(
+            (F.col("n_bad").cast("double") + F.lit(20.0) * global_rate)
+            / (F.col("n").cast("double") + F.lit(20.0)),
+            6,
+        ).alias("encoded"),
+    )
+
+
+@register(
+    "cdf_transform_vs_reference",
+    """
+    WITH px AS (
+        SELECT CAST(floor(o_totalprice * 100) AS BIGINT) AS price,
+               CASE WHEN o_orderdate < TIMESTAMP '1998-01-01'
+                    THEN 1 ELSE 0 END AS is_ref
+        FROM orders
+    ), sw AS (
+        SELECT price, is_ref,
+               CAST(sum(is_ref) OVER (ORDER BY price, is_ref DESC
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                    AS BIGINT) AS cum_ref,
+               CAST(sum(is_ref) OVER () AS BIGINT) AS n_ref
+        FROM px
+    ), cur AS (
+        SELECT least(CAST((cum_ref * 10) // n_ref AS BIGINT), 9) AS decile
+        FROM sw WHERE is_ref = 0
+    ), b AS (
+        SELECT decile, CAST(count(*) AS BIGINT) AS n FROM cur GROUP BY 1
+    )
+    , w AS (
+        SELECT decile, n,
+               CAST(sum(n) OVER () AS BIGINT) AS tot,
+               CAST(sum(n) OVER (ORDER BY decile
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                    AS BIGINT) AS cum
+        FROM b
+    )
+    SELECT decile, n,
+           round(CAST(n AS DOUBLE) / CAST(tot AS DOUBLE), 6) AS share,
+           round(max(abs(CAST(cum AS DOUBLE) / CAST(tot AS DOUBLE)
+                         - CAST(decile + 1 AS DOUBLE) / 10.0)) OVER (), 6)
+                                                             AS ks_vs_uniform
+    FROM w
+    """,
+    "CDF / quantile-normalization transform: every current-period "
+    "order amount mapped to its percentile under the 1995-1997 "
+    "REFERENCE distribution (the feature-preprocessing step that "
+    "makes scores comparable across vintages), then the decile "
+    "histogram of those percentiles plus a decile-level KS against "
+    "uniform — if the distribution hadn't drifted, the transform "
+    "would be uniform by construction. The rank lookup is a "
+    "sweep-line: union both periods, sort by exact cents (reference "
+    "rows first within a tie so the CDF is <=), cumulative count of "
+    "reference rows — on the Spark side this runs through "
+    "global_prefix_sum (range-partitioned two-pass), never a "
+    "single-partition window over the fact union. Deciles and "
+    "shares are exact-integer arithmetic.",
+    tags=("agg", "window", "analytics", "stats", "ml"),
+)
+def cdf_transform_vs_reference(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.relational import global_prefix_sum
+
+    o = t(spark, sf_dir, "orders")
+    px = o.select(
+        F.floor(F.col("o_totalprice") * 100).cast("bigint").alias("price"),
+        F.when(
+            F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"), 1
+        )
+        .otherwise(0)
+        .alias("is_ref"),
+    )
+    swept = global_prefix_sum(
+        px.withColumn("neg_ref", -F.col("is_ref")),
+        order_cols=["price", "neg_ref"],
+        value_col="is_ref",
+        out_col="cum_ref",
+    )
+    n_ref = px.agg(F.sum("is_ref").cast("bigint").alias("n_ref"))
+    cur = (
+        swept.filter(F.col("is_ref") == 0)
+        .crossJoin(F.broadcast(n_ref))
+        .select(
+            F.least(
+                F.expr("(cum_ref * 10) div n_ref").cast("bigint"), F.lit(9)
+            ).alias("decile")
+        )
+    )
+    b = cur.groupBy("decile").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    w_all = W.partitionBy()
+    w_cum = W.orderBy("decile").rowsBetween(W.unboundedPreceding, 0)
+    ecdf_gap = F.abs(
+        F.sum("n").over(w_cum).cast("double")
+        / F.sum("n").over(w_all).cast("double")
+        - (F.col("decile") + 1).cast("double") / F.lit(10.0)
+    )
+    return b.select(
+        "decile",
+        "n",
+        F.round(
+            F.col("n").cast("double") / F.sum("n").over(w_all).cast("double"), 6
+        ).alias("share"),
+        F.round(F.max(ecdf_gap).over(w_all), 6).alias("ks_vs_uniform"),
+    )
+
+
+@register(
+    "als_recommendations",
+    """
+    WITH users AS (
+        SELECT DISTINCT o.o_custkey AS custkey
+        FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+        WHERE o.o_custkey <= 10
+    )
+    SELECT CAST(custkey AS BIGINT) AS custkey,
+           TRUE AS returned_3, TRUE AS recs_in_catalog,
+           TRUE AS corpus_hits_ge_2
+    FROM users ORDER BY custkey
+    """,
+    "Collaborative-filtering recommendations via MLlib ALS on the "
+    "implicit customer x part purchase matrix (quantity-weighted). "
+    "Distributed alternating least squares: both factor matrices are "
+    "block-partitioned, each iteration solves per-block normal "
+    "equations — the standard 100 TB-scale recommender shape (no "
+    "driver-side matrix ever materializes). Seeded and "
+    "coldStartStrategy=drop. DRIVER-FALSIFIABLE (VERDICT r3 item 3): "
+    "the oracle computes the probe-user set (custkey <= 10 with "
+    "purchases) exactly; per user the booleans assert exactly 3 recs "
+    "returned, every rec inside the trained item catalog, and — the "
+    "quality bound — at least 2 of the 11 users receive a top-3 rec "
+    "they genuinely purchased (measured 4-5 across fixtures/layouts; "
+    "a degenerate factorization collapses this to ~0 and breaks the "
+    "driver hash). Factor values stay engine-specific; the emitted "
+    "contract is engine-portable.",
+    tags=("ml", "recommendation", "iterative"),
+)
+def als_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.ml.recommendation import ALS
+
+    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey", "l_quantity")
+    o = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    ratings = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .groupBy(
+            F.col("o_custkey").cast("int").alias("user"),
+            F.col("l_partkey").cast("int").alias("item"),
+        )
+        .agg(F.sum("l_quantity").cast("float").alias("rating"))
+        .cache()
+    )
+    als = ALS(
+        rank=8,
+        maxIter=5,
+        regParam=0.1,
+        implicitPrefs=True,
+        alpha=1.0,
+        seed=42,
+        userCol="user",
+        itemCol="item",
+        ratingCol="rating",
+        coldStartStrategy="drop",
+    )
+    model = als.fit(ratings)
+    users = ratings.select("user").distinct().filter(F.col("user") <= 10)
+    recs = (
+        model.recommendForUserSubset(users, 3)
+        .select(
+            F.col("user").cast("bigint").alias("custkey"),
+            F.explode("recommendations").alias("rec"),
+        )
+        .select("custkey", F.col("rec.item").cast("bigint").alias("partkey"))
+        .cache()
+    )
+    catalog = ratings.select(F.col("item").cast("bigint").alias("partkey")).distinct()
+    bought = ratings.select(
+        F.col("user").cast("bigint").alias("custkey"),
+        F.col("item").cast("bigint").alias("partkey"),
+    )
+    per = recs.groupBy("custkey").agg(F.count(F.lit(1)).alias("n_recs"))
+    in_cat = (
+        recs.join(F.broadcast(catalog), "partkey", "left_semi")
+        .groupBy("custkey")
+        .agg(F.count(F.lit(1)).alias("n_in_cat"))
+    )
+    hit = recs.join(bought, ["custkey", "partkey"], "left_semi").agg(
+        (F.count_distinct("custkey") >= 2).alias("corpus_hits_ge_2")
+    )
+    out = (
+        per.join(in_cat, "custkey", "left")
+        .crossJoin(F.broadcast(hit))
+        .select(
+            "custkey",
+            (F.col("n_recs") == 3).alias("returned_3"),
+            (F.coalesce(F.col("n_in_cat"), F.lit(0)) == F.col("n_recs")).alias(
+                "recs_in_catalog"
+            ),
+            "corpus_hits_ge_2",
+        )
+        .orderBy("custkey")
+    )
+    # Pin the <=10-user verdict rows locally, then release both caches
+    # (ratings feeds fit + three downstream frames; recs feeds three)
+    # so nothing stays pinned for the rest of the session.
+    pinned = pin_local(spark, out)
+    ratings.unpersist()
+    recs.unpersist()
+    # ALS training persists its factor RDDs internally (named
+    # userFactors/itemFactors in getRDDStorageInfo); DataFrame-level
+    # unpersist cannot reach them, so release them via the JVM's
+    # persistent-RDD registry — the query then leaves ZERO pinned
+    # storage behind instead of ~4 MB/call for the session lifetime.
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    for jrdd in jmap.values():
+        if jrdd.name() in ("userFactors", "itemFactors"):
+            jrdd.unpersist()
+    return pinned
+
+
+@register(
+    "fpgrowth_frequent_itemsets",
+    """
+    WITH b AS (
+        SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
+    ), nb AS (
+        SELECT count(DISTINCT l_orderkey) AS n FROM b
+    ), thresh AS (
+        SELECT CAST(ceil(0.0023 * n) AS BIGINT) AS m FROM nb
+    ), singles AS (
+        SELECT CAST(l_suppkey AS VARCHAR) AS itemset,
+               1 AS set_size,
+               CAST(count(*) AS BIGINT) AS support
+        FROM b GROUP BY l_suppkey
+        HAVING count(*) >= (SELECT m FROM thresh)
+    ), pairs AS (
+        SELECT CAST(x.l_suppkey AS VARCHAR) || ',' ||
+               CAST(y.l_suppkey AS VARCHAR) AS itemset,
+               2 AS set_size,
+               CAST(count(*) AS BIGINT) AS support
+        FROM b x JOIN b y ON x.l_orderkey = y.l_orderkey
+                         AND x.l_suppkey < y.l_suppkey
+        GROUP BY x.l_suppkey, y.l_suppkey
+        HAVING count(*) >= (SELECT m FROM thresh)
+    )
+    SELECT itemset, CAST(set_size AS INT) AS set_size, support
+    FROM (SELECT * FROM singles UNION ALL SELECT * FROM pairs)
+    ORDER BY set_size, itemset
+    """,
+    "Frequent-itemset mining via MLlib's distributed FP-Growth "
+    "(PFP: parallel FP-trees over group-dependent shards, "
+    "SIGKDD'08 algorithm) on supplier co-purchase baskets, "
+    "minSupport 0.23% of baskets. The oracle enumerates the size<=2 "
+    "lattice exactly (distinct-pair self-join with the identical "
+    "ceil-threshold rule), so the miner's counts are hash-checked "
+    "against ground truth — output filtered to size<=2 to keep the "
+    "oracle exact at any scale factor (larger itemsets, when they "
+    "clear support, are validated by the monotonicity test instead). "
+    "Scale: baskets shuffle once on orderkey; FP-trees never "
+    "materialize the pair lattice, which is why FP-Growth beats the "
+    "self-join at 100 TB while the self-join stays the perfect "
+    "small-scale oracle.",
+    tags=("ml", "mining", "agg"),
+)
+def fpgrowth_frequent_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.ml.fpm import FPGrowth
+
+    li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    # PFP runs several iterative jobs over the baskets. `.cache()` keeps
+    # the groupBy lineage live, so under memory pressure Spark silently
+    # re-aggregates lineitem per FP pass — BENCH r3/r4 measured 3-7x
+    # wall variance from exactly that. `localCheckpoint` (eager)
+    # truncates the lineage and pins the partitions MEMORY_AND_DISK:
+    # eviction spills to disk instead of recomputing. Partitioning is
+    # pinned WIDE on purpose: the conditional-FP-tree mining stage is
+    # the CPU-bound cost, so baskets repartition to defaultParallelism
+    # (AQE would coalesce the tiny shuffle to ~4 partitions and mine
+    # on 4 of 32 cores — measured 10.5 s vs 8.7 s for the mining leg).
+    # Mining shards = dp/4 (floor 2): PFP emits one conditional
+    # transaction per (basket, distinct suffix shard), so shard count
+    # directly multiplies the regroup shuffle and per-shard FP-tree
+    # churn. r8's 2x-dp "skew slack" measured 45% slower than dp
+    # (8.9 s vs 6.1 s mining leg, same-session A/B); r9 re-measured
+    # dp vs dp/4 on an idle host (4 alternating iterations): dp/4
+    # steady 7.0 s with max/min 1.46 vs dp's 9.7-19.4 s max/min 2.0
+    # — the quarter-width shards cut both the base cost and the
+    # variance exposure this query is flagged for (VERDICT r8 item 3).
+    # Scale-adaptive: tracks defaultParallelism, never a constant.
+    dp = spark.sparkContext.defaultParallelism
+    mine_shards = max(2, dp // 4)
+    baskets = (
+        li.groupBy("l_orderkey")
+        .agg(F.collect_set("l_suppkey").alias("items"))
+        .select("items")
+        .repartition(dp)
+        .localCheckpoint()  # data-scale: one basket per order
+    )
+    model = FPGrowth(
+        itemsCol="items",
+        minSupport=0.0023,
+        minConfidence=0.5,
+        numPartitions=mine_shards,
+    ).fit(baskets)
+    # Mine ONCE: freqItemsets is an uncached RDD-backed DataFrame
+    # (Scan ExistingRDD), and the orderBy's range exchange executes
+    # that subtree THREE times per action (range-bound sampling job +
+    # AQE shuffle materialization + final job — measured via
+    # statusTracker: three 32-task mining-stage pairs per noop save).
+    # Pinning the ~|frequent itemsets| result rows first makes the
+    # repeated jobs scan a local relation instead of re-mining the
+    # corpus — 3x fewer mining passes AND 3x less exposure to the
+    # host-stall variance this query is flagged for (VERDICT r8 item 3).
+    mined = model.freqItemsets.filter(F.size("items") <= 2).select(
+        F.array_join(F.array_sort("items"), ",").alias("itemset"),
+        F.size("items").cast("int").alias("set_size"),
+        F.col("freq").cast("bigint").alias("support"),
+    )
+    mined = pin_local(spark, mined)
+    # `mined` is pinned independently now, so the basket partitions are
+    # dead weight — release them HERE rather than waiting for the
+    # driver-GC → ContextCleaner round trip. Measured in-session: 8
+    # un-released iterations accumulate 16 pinned RDDs and degrade to
+    # 26-29 s/run (GC 2.7-4 s); with release the session holds steady
+    # (r9, same-session loop, idle host).
+    release_local_checkpoints(baskets)
+    return mined.orderBy("set_size", "itemset")
+
+
+@register(
+    "prefixspan_sequential_patterns",
+    """
+    WITH keyed AS (
+        -- one orderable key per event; ties broken by event_id exactly
+        -- as the Spark sequence construction sorts (ts, event_id)
+        SELECT user_id, event_type,
+               CAST(epoch_us(ts) AS HUGEINT) * 1000000000000 + event_id AS k
+        FROM events
+    ), spans AS (
+        SELECT user_id, event_type, min(k) AS first_k, max(k) AS last_k
+        FROM keyed GROUP BY 1, 2
+    ), n_seq AS (
+        SELECT count(DISTINCT user_id) AS n FROM keyed
+    ), singles AS (
+        SELECT event_type AS pattern, CAST(count(*) AS BIGINT) AS support
+        FROM spans GROUP BY 1
+    ), pairs AS (
+        -- <a then b> supported by a user iff their FIRST a precedes
+        -- their LAST b (strictly, in the tie-broken order)
+        SELECT a.event_type || '->' || b.event_type AS pattern,
+               CAST(count(*) AS BIGINT) AS support
+        FROM spans a JOIN spans b ON a.user_id = b.user_id
+        WHERE a.first_k < b.last_k
+        GROUP BY 1
+    )
+    SELECT pattern, support
+    FROM (SELECT * FROM singles UNION ALL SELECT * FROM pairs)
+    WHERE support >= CAST(ceil(0.3 * (SELECT n FROM n_seq)) AS BIGINT)
+    ORDER BY pattern
+    """,
+    "Sequential-pattern mining via MLlib PrefixSpan (the PrefixSpan "
+    "algorithm: pattern-growth over projected databases, distributed "
+    "per prefix) on per-user event sequences, maxPatternLength 2, "
+    "minSupport 30%. The oracle reproduces length<=2 sequential "
+    "support EXACTLY without enumerating sequences: a user supports "
+    "<a then b> iff their first a precedes their last b, so one "
+    "groupBy(user, type) min/max and a per-user type-pair join — no "
+    "sequence scan — yields ground-truth counts at any scale. "
+    "Sequence order is (ts, event_id)-tie-broken on both sides, so "
+    "simultaneous events can't flip support between engines. Spark "
+    "side: one fact-sized groupBy(user) to build ordered sequences, "
+    "then PrefixSpan's prefix-sharded projection (per-prefix shards "
+    "shuffle only suffix pointers, the 100 TB-safe shape).",
+    tags=("ml", "mining", "window"),
+)
+def prefixspan_sequential_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.ml.fpm import PrefixSpan
+
+    ev = t(spark, sf_dir, "events")
+    seqs = (
+        ev.select(
+            "user_id",
+            F.struct("ts", "event_id", F.col("event_type").alias("et")).alias("s"),
+        )
+        .groupBy("user_id")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list("s")), lambda x: F.array(x["et"])
+            ).alias("sequence")
+        )
+        .select("sequence")
+        .cache()  # projected-database passes re-read the sequences
+    )
+    ps = PrefixSpan(
+        minSupport=0.3, maxPatternLength=2, maxLocalProjDBSize=32000000
+    )
+    freq = ps.findFrequentSequentialPatterns(seqs)
+    # Same mine-once shape as fpgrowth_frequent_itemsets: the RDD-backed
+    # pattern table re-mines under the orderBy's sampling/shuffle jobs
+    # unless the (tiny) result is pinned first.
+    mined = freq.select(
+        F.array_join(
+            F.transform(F.col("sequence"), lambda it: F.array_join(it, ",")),
+            "->",
+        ).alias("pattern"),
+        F.col("freq").cast("bigint").alias("support"),
+    )
+    mined = pin_local(spark, mined)
+    # The projected-database passes are over; release the cached
+    # sequences now instead of leaking them into the session (same
+    # fix as fpgrowth's basket release — accumulated pinned RDDs were
+    # measured degrading later queries in the same session).
+    seqs.unpersist()
+    return mined.orderBy("pattern")
+
+
+@register(
+    "pca_embeddings",
+    """
+    SELECT CAST(c AS INT) AS component,
+           TRUE AS evr_in_band, TRUE AS evr_nonincreasing,
+           TRUE AS unit_norm, TRUE AS orthogonal_to_prev
+    FROM (VALUES (1), (2), (3), (4)) v(c) ORDER BY component
+    """,
+    "Distributed PCA over the embedding corpus (MLlib: covariance "
+    "accumulated via treeAggregate — one pass over partitions, a "
+    "d x d Gramian at the driver where d = embedding width (64), "
+    "never n x n) projecting to 4 components — the "
+    "dimensionality-reduction stage of embedding pipelines (IVF "
+    "coarse quantizers, visualization, whitening). "
+    "DRIVER-FALSIFIABLE (VERDICT r3 item 3): eigenvector sign/ulps "
+    "are engine-specific, so the emitted contract is the invariant "
+    "set a broken PCA cannot fake — per component: explained-variance "
+    "ratio inside [0.018, 0.06] (measured 0.025-0.029 on both "
+    "fixtures; uniform baseline is 1/64 = 0.0156), EVR "
+    "non-increasing, loading column unit-norm within 1e-9, and "
+    "orthogonal to every previous component within 1e-9. The "
+    "only driver-side state is the d x k loading matrix (64 x 4 "
+    "doubles — bounded metadata, independent of corpus size).",
+    tags=("ml", "similarity", "iterative"),
+)
+def pca_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import math
+
+    from pyspark.ml.feature import PCA
+    from pyspark.ml.functions import array_to_vector
+
+    emb = t(spark, sf_dir, "embeddings")
+    vecs = emb.select(
+        "vec_id", array_to_vector(F.col("embedding").cast("array<double>")).alias("v")
+    )
+    model = PCA(k=4, inputCol="v", outputCol="pc").fit(vecs)
+    evr = [float(x) for x in model.explainedVariance.toArray()]
+    pc = model.pc.toArray()  # d x k loading matrix, bounded metadata
+    rows = []
+    for j in range(4):
+        col_j = [pc[i][j] for i in range(len(pc))]
+        norm = math.sqrt(sum(x * x for x in col_j))
+        max_dot = 0.0
+        for p in range(j):
+            col_p = [pc[i][p] for i in range(len(pc))]
+            max_dot = max(
+                max_dot, abs(sum(a * b for a, b in zip(col_j, col_p)))
+            )
+        rows.append(
+            (
+                j + 1,
+                bool(0.018 <= evr[j] <= 0.06),
+                bool(j == 0 or evr[j] <= evr[j - 1] + 1e-12),
+                bool(abs(norm - 1.0) < 1e-9),
+                bool(max_dot < 1e-9),
+            )
+        )
+    return spark.createDataFrame(
+        rows,
+        "component int, evr_in_band boolean, evr_nonincreasing boolean, "
+        "unit_norm boolean, orthogonal_to_prev boolean",
+    ).orderBy("component")
+
+
+@register(
+    "ml_learning_curve",
+    """
+    SELECT CAST(train_pct AS INT) AS train_pct,
+           CAST(n_rows AS BIGINT) AS n_rows,
+           TRUE AS auc_in_band, TRUE AS spread_lt_002
+    FROM (VALUES (25, 195), (50, 391), (100, 788)) v(train_pct, n_rows)
+    ORDER BY train_pct
+    """,
+    "Learning-curve evaluation: the loan LR pipeline fits on "
+    "deterministic-hash 25% / 50% / 100% subsets of the training "
+    "split and reports holdout AUC per fraction — the "
+    "data-efficiency readout that justifies (or kills) further data "
+    "collection; a flat curve says collect features, not rows. "
+    "Subsets nest (25% ⊂ 50% ⊂ 100% by hash threshold) so the "
+    "curve measures data volume, not sampling luck. "
+    "DRIVER-FALSIFIABLE (VERDICT r3 item 3): the loan CSV is a fixed "
+    "repo fixture, so the oracle pins the EXACT nested-subset row "
+    "counts (195/391/788 — any change to the xxhash64 bucketing or "
+    "the 80/20 split breaks the hash) plus bound booleans the "
+    "LBFGS layout-noise cannot flip: every holdout AUC inside "
+    "[0.95, 1.0] (measured 0.988; zero-imputation encodes "
+    "missingness, which correlates with Status in this data) and "
+    "max-min AUC spread under 0.02 (measured 0.0005).",
+    tags=("ml", "analytics", "iterative"),
+)
+def ml_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import os as _os
+
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.evaluation import BinaryClassificationEvaluator
+    from pyspark.ml.feature import VectorAssembler
+
+    repo = _os.path.dirname(
+        _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
+    )
+    from ..schema import LOAN_FEATURES
+    from ..sources.readers import read_loan_csv
+
+    loan = read_loan_csv(spark, _os.path.join(repo, "data", "Loan_Default.csv"))
+    base = loan.select(
+        "ID", F.col("Status").cast("double").alias("label"), *LOAN_FEATURES
+    ).na.fill(0.0, subset=LOAN_FEATURES)
+    assembled = VectorAssembler(
+        inputCols=LOAN_FEATURES, outputCol="features"
+    ).transform(base)
+    # deterministic 80/20 split by id hash; nested fractions inside train
+    bucket = F.abs(F.xxhash64(F.col("ID").cast("string"))) % 100
+    train = assembled.filter(bucket < 80).withColumn(
+        "frac_bucket", F.abs(F.xxhash64(F.concat(F.lit("f"), F.col("ID").cast("string")))) % 100
+    )
+    test = assembled.filter(bucket >= 80).cache()
+
+    # The three (count, fit, evaluate) chains are mutually independent
+    # — they differ only in the hash-threshold subset — so submit them
+    # from a small driver thread pool and let the scheduler overlap
+    # their jobs (optimization guide §2.6: actions are only sequential
+    # because driver code calls them sequentially). Each fit/evaluate
+    # is deterministic given its subset, so the per-fraction results
+    # are bit-identical to the sequential loop; same-session A/B
+    # measured 4.8 s sequential vs 1.9 s overlapped (r9).
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
+
+    def _one(pct: int) -> tuple[int, int, float]:
+        sub = train.filter(F.col("frac_bucket") < pct)
+        n = sub.count()
+        model = LogisticRegression(maxIter=20, regParam=0.01).fit(sub)
+        auc = BinaryClassificationEvaluator().evaluate(model.transform(test))
+        return pct, n, auc
+
+    # inheritable_thread_target: under PySpark's pinned-thread mode a
+    # plain pool thread maps to a JVM thread that is never reclaimed
+    # when the Python thread exits (~3 leaked JVM threads per call,
+    # ADVICE r9); the documented wrapper inherits and cleans up the
+    # JVM thread-locals.
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        results = list(pool.map(inheritable_thread_target(_one), (25, 50, 100)))
+    counts = {pct: n for pct, n, _ in results}
+    aucs = {pct: auc for pct, _, auc in results}
+    # The three evaluates are done — release the held-out cache so it
+    # doesn't stay pinned for the rest of the session.
+    test.unpersist()
+    spread = max(aucs.values()) - min(aucs.values())
+    rows = [
+        (pct, counts[pct], 0.95 <= aucs[pct] <= 1.0, spread < 0.02)
+        for pct in (25, 50, 100)
+    ]
+    return spark.createDataFrame(
+        rows, "train_pct int, n_rows bigint, auc_in_band boolean, "
+        "spread_lt_002 boolean"
+    ).orderBy("train_pct")
+
+
+@register(
+    "class_reweighting_plan",
+    """
+    WITH counts AS (
+        SELECT label, CAST(count(*) AS BIGINT) AS n FROM embeddings GROUP BY 1
+    ), tot AS (
+        SELECT CAST(sum(n) AS BIGINT) AS nt,
+               CAST(count(*) AS BIGINT) AS k FROM counts
+    )
+    SELECT c.label,
+           c.n,
+           round(CAST(t.nt AS DOUBLE) / (t.k * c.n), 6) AS class_weight,
+           round(CAST(c.n AS DOUBLE) * CAST(t.nt AS DOUBLE)
+                 / (t.k * c.n), 2) AS effective_rows
+    FROM counts c, tot t ORDER BY c.label
+    """,
+    "Inverse-frequency class reweighting plan (sklearn's 'balanced' "
+    "formula, n_total / (k * n_class)): the weights an imbalanced "
+    "classifier fit attaches per class so every class contributes "
+    "equal effective mass — effective_rows = n * weight is constant "
+    "across classes by construction, which the test pins. One "
+    "bounded-key groupBy; weights divide exact integers once. The "
+    "ML-prep counterpart of domain_mix_rebalance (corpora) applied "
+    "to label space.",
+    tags=("ml", "agg", "sampling"),
+)
+def class_reweighting_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = t(spark, sf_dir, "embeddings")
+    counts = emb.groupBy("label").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n")
+    )
+    tot = counts.agg(
+        F.sum("n").cast("bigint").alias("nt"),
+        F.count(F.lit(1)).cast("bigint").alias("k"),
+    )
+    return (
+        counts.crossJoin(F.broadcast(tot))
+        .select(
+            "label",
+            "n",
+            F.round(
+                F.col("nt").cast("double") / (F.col("k") * F.col("n")), 6
+            ).alias("class_weight"),
+            F.round(
+                F.col("n").cast("double")
+                * F.col("nt").cast("double")
+                / (F.col("k") * F.col("n")),
+                2,
+            ).alias("effective_rows"),
+        )
+        .orderBy("label")
+    )
+
+
+@register(
+    "stratified_kfold_assignment",
+    """
+    WITH ranked AS (
+        SELECT vec_id, label,
+               row_number() OVER (PARTITION BY label
+                                  ORDER BY (vec_id * 2654435761) % 1000003,
+                                           vec_id) AS rnk
+        FROM embeddings
+    ), folded AS (
+        SELECT label, (rnk - 1) % 5 AS fold FROM ranked
+    )
+    SELECT CAST(fold AS INT) AS fold, label,
+           CAST(count(*) AS BIGINT) AS n_rows
+    FROM folded GROUP BY 1, 2 ORDER BY 1, 2
+    """,
+    "Stratified k-fold assignment (k=5): within each label, rows "
+    "shuffle by a multiplicative-hash order (deterministic — no "
+    "engine RNG, so every engine and every rerun builds the SAME "
+    "folds) and deal round-robin, so every fold's label distribution "
+    "matches the population within one row per class — the "
+    "leakage-free CV splitter for imbalanced labels (plain random "
+    "folds can starve a rare class from a fold entirely). The "
+    "per-label rank is one window over label partitions; at 100 TB "
+    "the same construction runs through the distributed row-number "
+    "primitive per label shard. Output is the fold x label census "
+    "the balance test checks.",
+    tags=("ml", "sampling", "window"),
+)
+def stratified_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = t(spark, sf_dir, "embeddings").select("vec_id", "label")
+    ranked = emb.select(
+        "label",
+        F.row_number()
+        .over(
+            W.partitionBy("label").orderBy(
+                (F.col("vec_id") * 2654435761) % 1000003, "vec_id"
+            )
+        )
+        .alias("rnk"),
+    )
+    return (
+        ranked.select("label", ((F.col("rnk") - 1) % 5).alias("fold"))
+        .groupBy(F.col("fold").cast("int").alias("fold"), "label")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_rows"))
+        .orderBy("fold", "label")
+    )
+
+
+_CONFORMAL_ORACLE = """
+    -- Split-conformal intervals with fully deterministic arithmetic:
+    -- the point model is train-fold group means over exact cents sums,
+    -- residuals use identical IEEE ops on both engines, the
+    -- calibration quantile is an ORDER BY (resid, key) order statistic
+    -- at rank ceil((n_cal+1)*(1-alpha)), and coverage is exact
+    -- integer counting with a cross-multiplied floor check.
+    WITH base AS (
+        SELECT o_orderkey AS k, o_orderpriority AS g,
+               CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
+               o_orderkey % 5 AS fold
+        FROM orders
+    ),
+    model AS (
+        SELECT g, CAST(sum(cents) AS BIGINT) AS sc,
+               CAST(count(*) AS BIGINT) AS nc
+        FROM base WHERE fold IN (0, 4) GROUP BY g
+    ),
+    scored AS (
+        SELECT b.k, b.fold,
+               abs(b.cents / 100.0 - (m.sc / (100.0 * m.nc))) AS resid
+        FROM base b JOIN model m USING (g)
+    ),
+    cal AS (
+        SELECT resid, row_number() OVER (ORDER BY resid, k) AS rn,
+               count(*) OVER () AS n_cal
+        FROM scored WHERE fold IN (1, 2)
+    ),
+    qv AS (
+        SELECT resid AS q_value, n_cal FROM cal
+        WHERE rn = CAST(ceil((n_cal + 1) * 0.9) AS BIGINT)
+    ),
+    test AS (
+        SELECT CAST(count(*) AS BIGINT) AS n_test,
+               CAST(sum(CASE WHEN resid <= (SELECT q_value FROM qv)
+                             THEN 1 ELSE 0 END) AS BIGINT) AS covered
+        FROM scored WHERE fold = 3
+    )
+    SELECT CAST((SELECT n_cal FROM qv) AS BIGINT) AS n_cal,
+           n_test, covered,
+           round((SELECT q_value FROM qv), 4) AS q_value,
+           covered * 100 >= n_test * 88 AS coverage_ok
+    FROM test
+"""
+
+
+@register(
+    "conformal_prediction_intervals",
+    _CONFORMAL_ORACLE,
+    "Split-conformal prediction intervals — the distribution-free "
+    "uncertainty wrapper around ANY point model (here a train-fold "
+    "group-mean predictor over order priorities; in production, the "
+    "serving model's predictions): calibration residuals' "
+    "ceil((n+1)*0.9)-rank order statistic becomes the interval "
+    "half-width, and the held-out fold's empirical coverage (90.3 "
+    "percent here, floor-checked at 88) realizes the conformal "
+    "guarantee. Every number is deterministic: exact cents sums for "
+    "the model, bit-identical residual ops, tie-broken order "
+    "statistic, integer coverage counting with a cross-multiplied "
+    "floor. Scale shape: model + residuals are partial-combined "
+    "aggregates and a broadcast join; only the CALIBRATION set (a "
+    "bounded design choice, n_cal rows) passes through the ranking "
+    "window; test coverage is a one-pass conditional count.",
+    tags=("ml", "stats", "round4"),
+)
+def conformal_prediction_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    base = t(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("k"),
+        F.col("o_orderpriority").alias("g"),
+        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents"),
+        (F.col("o_orderkey") % 5).alias("fold"),
+    )
+    model = (
+        base.filter(F.col("fold").isin(0, 4))
+        .groupBy("g")
+        .agg(
+            F.sum("cents").cast("long").alias("sc"),
+            F.count(F.lit(1)).cast("long").alias("nc"),
+        )
+    )
+    scored = base.join(F.broadcast(model), "g").select(
+        "k",
+        "fold",
+        F.abs(
+            F.col("cents") / F.lit(100.0)
+            - (F.col("sc") / (F.lit(100.0) * F.col("nc")))
+        ).alias("resid"),
+    )
+    cal = (
+        scored.filter(F.col("fold").isin(1, 2))
+        .withColumn(
+            "rn", F.row_number().over(W.orderBy("resid", "k"))
+        )
+        .withColumn("n_cal", F.count(F.lit(1)).over(W.partitionBy()))
+    )
+    # rn equals one specific rank, so qv is exactly one row; limit(1)
+    # makes that provable to the BNLJ plan audit.
+    qv = cal.filter(
+        F.col("rn") == F.ceil((F.col("n_cal") + 1) * 0.9).cast("long")
+    ).select(
+        F.col("resid").alias("q_value"),
+        F.col("n_cal").cast("long").alias("n_cal"),
+    ).limit(1)
+    test = (
+        scored.filter(F.col("fold") == 3)
+        .crossJoin(F.broadcast(qv))
+        .agg(
+            F.first("n_cal").alias("n_cal"),
+            F.count(F.lit(1)).cast("long").alias("n_test"),
+            F.sum(
+                F.when(F.col("resid") <= F.col("q_value"), 1).otherwise(0)
+            )
+            .cast("long")
+            .alias("covered"),
+            F.round(F.first("q_value"), 4).alias("q_value"),
+        )
+    )
+    return test.select(
+        "n_cal",
+        "n_test",
+        "covered",
+        "q_value",
+        (F.col("covered") * 100 >= F.col("n_test") * 88).alias("coverage_ok"),
+    )
+
+
+# =====================================================================
+# Iterative ML: exact distributed Lloyd (k-means) iterations
+# =====================================================================
+_KMEANS_ORACLE = f"""
+    -- Replays TWO full Lloyd iterations exactly. Points are the
+    -- integer-microdegree customer coordinates; round 1 assigns to 4
+    -- fixed integer quadrant seeds (distances are exact BIGINTs);
+    -- round 2 assigns to the round-1 mean centroids, where the only
+    -- floats are sx/n divisions and the d2 polynomial - written with
+    -- IDENTICAL expression text on both engines, so every point's
+    -- (correctly-rounded) d2 doubles are bit-equal and the argmin is
+    -- engine-independent (ties break on centroid id). Reported sums
+    -- and counts are exact integers; centroids are floor-divided.
+    WITH pts AS MATERIALIZED (
+        SELECT c_custkey, {_LATC} AS x, {_LONC} AS y FROM customer
+    ),
+    seeds AS (
+        SELECT * FROM (VALUES (1, 30000000, 90000000),
+                              (2, 30000000, -90000000),
+                              (3, -30000000, 90000000),
+                              (4, -30000000, -90000000)) s(cid, cx, cy)
+    ),
+    a1 AS MATERIALIZED (
+        SELECT c_custkey, x, y, cid FROM (
+            SELECT p.c_custkey, p.x, p.y, s.cid,
+                   row_number() OVER (
+                       PARTITION BY p.c_custkey
+                       ORDER BY (p.x - s.cx) * (p.x - s.cx)
+                              + (p.y - s.cy) * (p.y - s.cy), s.cid
+                   ) AS rn
+            FROM pts p, seeds s
+        ) WHERE rn = 1
+    ),
+    c1 AS MATERIALIZED (
+        SELECT cid, CAST(sum(x) AS BIGINT) AS sx,
+               CAST(sum(y) AS BIGINT) AS sy,
+               CAST(count(*) AS BIGINT) AS n
+        FROM a1 GROUP BY cid
+    ),
+    a2 AS MATERIALIZED (
+        SELECT c_custkey, x, y, cid FROM (
+            SELECT p.c_custkey, p.x, p.y, c.cid,
+                   row_number() OVER (
+                       PARTITION BY p.c_custkey
+                       ORDER BY (p.x - (c.sx / c.n)) * (p.x - (c.sx / c.n))
+                              + (p.y - (c.sy / c.n)) * (p.y - (c.sy / c.n)),
+                              c.cid
+                   ) AS rn
+            FROM pts p, c1 c
+        ) WHERE rn = 1
+    )
+    SELECT cid,
+           CAST(count(*) AS BIGINT) AS n_points,
+           CAST(sum(x) AS BIGINT) AS sum_lat,
+           CAST(sum(y) AS BIGINT) AS sum_lon,
+           -- explicit floor on a double quotient: Spark's integer div
+           -- truncates toward zero while // floors, and these sums CAN
+           -- be negative - floor(double) is the semantics both engines
+           -- share (sums < 2^53, so the quotient is exact enough)
+           CAST(floor(CAST(sum(x) AS BIGINT) / count(*)) AS BIGINT)
+               AS cent_lat,
+           CAST(floor(CAST(sum(y) AS BIGINT) / count(*)) AS BIGINT)
+               AS cent_lon
+    FROM a2
+    GROUP BY cid
+    ORDER BY cid
+"""
+
+
+@register(
+    "kmeans_lloyd_exact",
+    _KMEANS_ORACLE,
+    "Distributed k-means: two FULL Lloyd iterations, hash-exact - the "
+    "iterative-algorithm capability (MLlib KMeans is seeded/rows-only; "
+    "this is the falsifiable twin). Fully declarative: each round "
+    "cross-joins the 4-row centroid table (broadcast - points never "
+    "shuffle for assignment), ranks by squared distance with "
+    "row_number, and re-aggregates exact integer sums; NOTHING visits "
+    "the driver, so rounds chain as plain DataFrame ops (at 100 TB: "
+    "per-round shuffle is the k-row centroid aggregate only). "
+    "Exactness: round-1 seeds are integer literals (BIGINT "
+    "distances); round-2 centroids are rationals whose sx/n division "
+    "and d2 polynomial are written with identical expression text on "
+    "both engines, so the correctly-rounded doubles are bit-equal "
+    "point-by-point and the argmin cannot drift (ties break on cid). "
+    "Output: exact member counts/coordinate sums and floor-divided "
+    "centroids per cluster.",
+    tags=("ml", "iterative", "round4"),
+)
+def kmeans_lloyd_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window
+
+    pts = t(spark, sf_dir, "customer").select(
+        "c_custkey", F.expr(_LATC).alias("x"), F.expr(_LONC).alias("y")
+    )
+    seeds = spark.createDataFrame(
+        [(1, 30_000_000, 90_000_000), (2, 30_000_000, -90_000_000),
+         (3, -30_000_000, 90_000_000), (4, -30_000_000, -90_000_000)],
+        "cid long, cx long, cy long",
+    )
+
+    def assign(points: DataFrame, cents: DataFrame, d2_expr: str) -> DataFrame:
+        w = Window.partitionBy("c_custkey").orderBy(
+            F.expr(d2_expr), F.col("cid")
+        )
+        return (
+            points.crossJoin(F.broadcast(cents))
+            .withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") == 1)
+            .select("c_custkey", "x", "y", "cid")
+        )
+
+    a1 = assign(
+        pts, seeds,
+        "(x - cx) * (x - cx) + (y - cy) * (y - cy)",
+    )
+    # cid domain = |seeds| = 4; limit(4) restates that structurally so
+    # the BNLJ plan audit can prove the centroid broadcast is bounded.
+    c1 = a1.groupBy("cid").agg(
+        F.sum("x").cast("long").alias("sx"),
+        F.sum("y").cast("long").alias("sy"),
+        F.count(F.lit(1)).cast("long").alias("n"),
+    ).limit(4)
+    a2 = assign(
+        pts, c1,
+        "(x - (sx / n)) * (x - (sx / n)) + (y - (sy / n)) * (y - (sy / n))",
+    )
+    return (
+        a2.groupBy("cid")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_points"),
+            F.sum("x").cast("long").alias("sum_lat"),
+            F.sum("y").cast("long").alias("sum_lon"),
+        )
+        .select(
+            "cid", "n_points", "sum_lat", "sum_lon",
+            # floor of the double quotient, NOT `div`: Spark div
+            # truncates toward zero and sums can be negative
+            F.floor(F.col("sum_lat") / F.col("n_points"))
+            .cast("long").alias("cent_lat"),
+            F.floor(F.col("sum_lon") / F.col("n_points"))
+            .cast("long").alias("cent_lon"),
+        )
+        .orderBy("cid")
+    )
+
+
+# =====================================================================
+# Isotonic calibration via PAVA's max-min closed form, exact to the
+# last scaled-integer digit on both engines.
+# =====================================================================
+_ISO_SCALE = 10**15  # rates are distinct-or-equal at 1e-12 granularity
+
+
+# (denominators < 1e6 at any band size), so floor-scaling at 1e15
+# orders fractions EXACTLY without ever dividing floats.
+_ISO_ORACLE = """
+    WITH scored AS (
+        SELECT CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS bad,
+               ((o_orderkey % 99991) * 31 + (o_custkey % 99991) * 17)
+                   % 99991 % 70000
+                   + CASE WHEN o_orderstatus = 'F' THEN 30000 ELSE 0 END
+                   AS score
+        FROM orders
+    ),
+    b AS MATERIALIZED (
+        SELECT score // 2000 AS band,
+               CAST(count(*) AS BIGINT) AS n,
+               CAST(sum(bad) AS BIGINT) AS n_bad
+        FROM scored GROUP BY 1
+    ),
+    c AS MATERIALIZED (
+        SELECT band, n, n_bad,
+               CAST(sum(n_bad) OVER (ORDER BY band) AS BIGINT) AS s,
+               CAST(sum(n)     OVER (ORDER BY band) AS BIGINT) AS c
+        FROM b
+    ),
+    trip AS (
+        SELECT i.band,
+               j.band AS bandj,
+               CAST(((k.s - j.s + j.n_bad)::HUGEINT * 1000000000000000)
+                    // (k.c - j.c + j.n) AS BIGINT) AS q
+        FROM c i
+        JOIN c j ON j.band <= i.band
+        JOIN c k ON k.band >= i.band
+    ),
+    mn AS (
+        SELECT band, bandj, CAST(min(q) AS BIGINT) AS minq
+        FROM trip GROUP BY 1, 2
+    ),
+    iso AS (
+        SELECT band, CAST(max(minq) AS BIGINT) AS iso_rate_q
+        FROM mn GROUP BY 1
+    )
+    SELECT CAST(b.band AS BIGINT) AS band, b.n, b.n_bad,
+           round(CAST(b.n_bad AS DOUBLE) / CAST(b.n AS DOUBLE), 6)
+               AS emp_rate,
+           iso.iso_rate_q,
+           round(CAST(iso.iso_rate_q AS DOUBLE) / 1e15, 6) AS iso_rate
+    FROM b JOIN iso ON b.band = iso.band
+    ORDER BY band
+"""
+
+
+@register(
+    "isotonic_calibration_pava",
+    _ISO_ORACLE,
+    "Isotonic regression calibration of the credit-score default "
+    "curve - the pool-adjacent-violators fit computed through its "
+    "max-min closed form iso(i) = max_{j<=i} min_{k>=i} "
+    "rate(bands j..k) - so the reference's raw model scores "
+    "(app.py's probability outputs) become MONOTONE calibrated "
+    "default rates, the standard scoring-to-probability step "
+    "regulators expect. Exactness: band counts are one "
+    "partial-combined fact pass; every candidate pooled rate is "
+    "ordered by floor-scaling (sum*1e15 div count) in "
+    "DECIMAL/HUGEINT - fractions with denominators < 1e6 differ by "
+    "> 1e-12, so the 1e-15 grid orders them EXACTLY and the fitted "
+    "value is bit-identical on both engines, no float min/max "
+    "anywhere. Scale: the fact table is touched ONCE (50-band "
+    "groupBy); the O(B^3) max-min runs on the 50-row band table "
+    "(125k metadata-sized triples via two broadcast range joins) - "
+    "band count is FIXED regardless of data size, so the plan is "
+    "invariant from sf0.01 to 100 TB.",
+    tags=("ml", "credit", "analytics", "agg", "round4"),
+)
+def isotonic_calibration_pava(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window as W
+
+    from .credit import _scored_orders
+
+    bands = (
+        _scored_orders(spark, sf_dir)
+        .groupBy(F.expr("score div 2000").alias("band"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.sum("bad").cast("bigint").alias("n_bad"),
+        )
+    )
+    wcum = W.orderBy("band").rowsBetween(W.unboundedPreceding, 0)
+    # Bands are a score-div quotient domain (metadata-scale — the
+    # O(bands^2) PAVA triple below depends on it); the limit restates
+    # that structurally so the BNLJ audit can prove the broadcast
+    # pair sides (cj/ck, derived from c) are bounded.
+    c = bands.select(
+        "band",
+        "n",
+        "n_bad",
+        F.sum("n_bad").over(wcum).cast("bigint").alias("s"),
+        F.sum("n").over(wcum).cast("bigint").alias("c"),
+    ).limit(10_000)
+    ci = c.select(F.col("band"))
+    cj = c.select(
+        F.col("band").alias("bandj"),
+        F.col("s").alias("sj"),
+        F.col("c").alias("cj"),
+        F.col("n_bad").alias("nbadj"),
+        F.col("n").alias("nj"),
+    )
+    ck = c.select(
+        F.col("band").alias("bandk"),
+        F.col("s").alias("sk"),
+        F.col("c").alias("ck"),
+    )
+    trip = (
+        ci.join(F.broadcast(cj), F.col("bandj") <= F.col("band"))
+        .join(F.broadcast(ck), F.col("bandk") >= F.col("band"))
+        .select(
+            "band",
+            "bandj",
+            F.expr(
+                "CAST(CAST(sk - sj + nbadj AS DECIMAL(38,0)) "
+                f"* {_ISO_SCALE} div (ck - cj + nj) AS BIGINT)"
+            ).alias("q"),
+        )
+    )
+    mn = trip.groupBy("band", "bandj").agg(
+        F.min("q").cast("bigint").alias("minq")
+    )
+    iso = mn.groupBy("band").agg(
+        F.max("minq").cast("bigint").alias("iso_rate_q")
+    )
+    return (
+        bands.join(F.broadcast(iso), "band")
+        .select(
+            F.col("band").cast("bigint").alias("band"),
+            "n",
+            "n_bad",
+            F.round(
+                F.col("n_bad").cast("double") / F.col("n").cast("double"), 6
+            ).alias("emp_rate"),
+            "iso_rate_q",
+            F.round(F.col("iso_rate_q").cast("double") / F.lit(1e15), 6).alias(
+                "iso_rate"
+            ),
+        )
+        .orderBy("band")
+    )
+
+
+# =====================================================================
+# Multinomial Naive Bayes language ID: train AND inference fully
+# declarative, exact to the micro-nat on both engines.
+# =====================================================================
+_NB_ORACLE = """
+    -- Multinomial NB with Laplace smoothing, trained on the 80%
+    -- doc_id%5!=0 split and scored on the 20% holdout. Every ln term
+    -- is rounded to micro-nats THEN summed as BIGINT (associative ->
+    -- layout-independent), the lm_bigram_surprisal discipline. The
+    -- candidate class table is the (test-token x 5 langs) cross join;
+    -- unseen (lang, token) pairs fall back to the +1 smoothing mass
+    -- via the LEFT JOIN's coalesce(cnt, 0).
+    WITH tr AS MATERIALIZED (
+        SELECT lang, doc_id,
+               list_filter(string_split(text, ' '), x -> x <> '') AS ws
+        FROM documents WHERE doc_id % 5 <> 0
+    ),
+    te AS MATERIALIZED (
+        SELECT lang, doc_id,
+               list_filter(string_split(text, ' '), x -> x <> '') AS ws
+        FROM documents WHERE doc_id % 5 = 0
+    ),
+    trtok AS MATERIALIZED (
+        SELECT lang, unnest(ws) AS tok FROM tr
+    ),
+    clt AS MATERIALIZED (
+        SELECT lang, tok, CAST(count(*) AS BIGINT) AS cnt
+        FROM trtok GROUP BY 1, 2
+    ),
+    tl AS MATERIALIZED (
+        SELECT lang, CAST(count(*) AS BIGINT) AS tot FROM trtok GROUP BY 1
+    ),
+    v AS MATERIALIZED (
+        SELECT CAST(count(DISTINCT tok) AS BIGINT) AS vocab FROM trtok
+    ),
+    pri AS MATERIALIZED (
+        SELECT lang, CAST(count(*) AS BIGINT) AS nd FROM tr GROUP BY 1
+    ),
+    d AS MATERIALIZED (SELECT CAST(count(*) AS BIGINT) AS nd_all FROM tr),
+    tetok AS MATERIALIZED (
+        SELECT doc_id, unnest(ws) AS tok FROM te
+    ),
+    cand AS (
+        SELECT tt.doc_id, tt.tok, tl.lang, tl.tot
+        FROM tetok tt CROSS JOIN tl
+    ),
+    terms AS (
+        SELECT c.doc_id, c.lang,
+               CAST(round(-ln(CAST(coalesce(k.cnt, 0) + 1 AS DOUBLE)
+                              / CAST(c.tot + v.vocab AS DOUBLE)) * 1e6)
+                    AS BIGINT) AS nll_micro
+        FROM cand c
+        LEFT JOIN clt k ON k.lang = c.lang AND k.tok = c.tok
+        CROSS JOIN v
+    ),
+    doc_lang AS (
+        SELECT t.doc_id, t.lang,
+               CAST(sum(t.nll_micro) AS BIGINT)
+               + any_value(CAST(round(-ln(CAST(pri.nd AS DOUBLE)
+                                          / CAST(d.nd_all AS DOUBLE)) * 1e6)
+                                AS BIGINT)) AS total_nll_micro
+        FROM terms t
+        JOIN pri ON pri.lang = t.lang
+        CROSS JOIN d
+        GROUP BY 1, 2
+    ),
+    ranked AS (
+        SELECT doc_id, lang, total_nll_micro,
+               row_number() OVER (PARTITION BY doc_id
+                                  ORDER BY total_nll_micro, lang) AS rn,
+               lead(total_nll_micro) OVER (PARTITION BY doc_id
+                                  ORDER BY total_nll_micro, lang) AS second
+        FROM doc_lang
+    )
+    SELECT r.doc_id, te.lang AS true_lang, r.lang AS pred_lang,
+           r.total_nll_micro AS nll_micro,
+           CAST(r.second - r.total_nll_micro AS BIGINT) AS margin_micro,
+           (r.lang = te.lang) AS correct
+    FROM ranked r JOIN te ON te.doc_id = r.doc_id
+    WHERE r.rn = 1
+    ORDER BY r.doc_id
+"""
+
+
+@register(
+    "naive_bayes_lang_classify",
+    _NB_ORACLE,
+    "Multinomial Naive Bayes language-ID: TRAINING (per-class token "
+    "counts, Laplace +1 smoothing, class priors on the doc_id%5!=0 "
+    "split) and INFERENCE (argmax class per holdout doc with the "
+    "runner-up margin) as ONE declarative plan - the engine's "
+    "demonstration that a full fit+predict ML cycle runs inside "
+    "Catalyst with an exact cross-engine oracle, beyond the MLlib "
+    "pipeline twins (reference spark.py:76-90 trains LR; this shows "
+    "the train step itself can be a groupBy). Determinism: every "
+    "-ln(p) is micro-nat-rounded per (token, class) THEN summed as "
+    "BIGINT (associative, layout-independent); argmax tie-breaks by "
+    "(nll, lang). Scale: the count model is vocabulary-bounded per "
+    "class (broadcast of the 5-row totals; the (lang,token) table "
+    "joins co-keyed shuffle-side like the bigram LM); test tokens "
+    "fan out x5 classes map-side - no driver, no UDF, no iteration.",
+    tags=("ml", "text", "llm-pipeline", "agg", "round4"),
+)
+def naive_bayes_lang_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window as W
+
+    from ..operators.text import tokens
+
+    docs = t(spark, sf_dir, "documents")
+    tr = docs.filter(F.col("doc_id") % 5 != 0).select(
+        "lang", "doc_id", tokens("text").alias("ws")
+    )
+    te = docs.filter(F.col("doc_id") % 5 == 0).select(
+        "lang", "doc_id", tokens("text").alias("ws")
+    )
+    trtok = tr.select("lang", F.explode("ws").alias("tok"))
+    clt = trtok.groupBy("lang", "tok").agg(
+        F.count(F.lit(1)).cast("bigint").alias("cnt")
+    )
+    # lang is a bounded label domain; limit(100) restates that
+    # structurally so the BNLJ audit can prove the broadcast is bounded.
+    tl = trtok.groupBy("lang").agg(
+        F.count(F.lit(1)).cast("bigint").alias("tot")
+    ).limit(100)
+    v = trtok.agg(F.count_distinct("tok").cast("bigint").alias("vocab"))
+    pri = tr.groupBy("lang").agg(F.count(F.lit(1)).cast("bigint").alias("nd"))
+    d = tr.agg(F.count(F.lit(1)).cast("bigint").alias("nd_all"))
+    tetok = te.select("doc_id", F.explode("ws").alias("tok"))
+    cand = tetok.crossJoin(F.broadcast(tl))
+    terms = (
+        cand.join(clt, ["lang", "tok"], "left")
+        .crossJoin(F.broadcast(v))
+        .select(
+            "doc_id",
+            "lang",
+            F.round(
+                -F.log(
+                    (F.coalesce(F.col("cnt"), F.lit(0)) + 1).cast("double")
+                    / (F.col("tot") + F.col("vocab")).cast("double")
+                )
+                * 1e6
+            )
+            .cast("bigint")
+            .alias("nll_micro"),
+        )
+    )
+    prior_micro = (
+        pri.crossJoin(F.broadcast(d))
+        .select(
+            "lang",
+            F.round(
+                -F.log(F.col("nd").cast("double") / F.col("nd_all").cast("double"))
+                * 1e6
+            )
+            .cast("bigint")
+            .alias("prior_micro"),
+        )
+    )
+    doc_lang = (
+        terms.groupBy("doc_id", "lang")
+        .agg(F.sum("nll_micro").cast("bigint").alias("sum_micro"))
+        .join(F.broadcast(prior_micro), "lang")
+        .select(
+            "doc_id",
+            "lang",
+            (F.col("sum_micro") + F.col("prior_micro")).alias("total_nll_micro"),
+        )
+    )
+    wdoc = W.partitionBy("doc_id").orderBy("total_nll_micro", "lang")
+    ranked = doc_lang.select(
+        "doc_id",
+        "lang",
+        "total_nll_micro",
+        F.row_number().over(wdoc).alias("rn"),
+        F.lead("total_nll_micro").over(wdoc).alias("second"),
+    )
+    return (
+        ranked.filter(F.col("rn") == 1)
+        .join(te.select("doc_id", F.col("lang").alias("true_lang")), "doc_id")
+        .select(
+            "doc_id",
+            "true_lang",
+            F.col("lang").alias("pred_lang"),
+            F.col("total_nll_micro").alias("nll_micro"),
+            (F.col("second") - F.col("total_nll_micro"))
+            .cast("bigint")
+            .alias("margin_micro"),
+            (F.col("lang") == F.col("true_lang")).alias("correct"),
+        )
+        .orderBy("doc_id")
+    )
+
+
+# =====================================================================
+# Brier score decomposition (Murphy 1973): reliability / resolution /
+# uncertainty over the credit-score bands.
+# =====================================================================
+_BRIER_ORACLE = """
+    WITH scored AS (
+        SELECT CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS bad,
+               ((o_orderkey % 99991) * 31 + (o_custkey % 99991) * 17)
+                   % 99991 % 70000
+                   + CASE WHEN o_orderstatus = 'F' THEN 30000 ELSE 0 END
+                   AS score
+        FROM orders
+    ),
+    b AS MATERIALIZED (
+        SELECT score // 2000 AS band,
+               CAST(count(*) AS BIGINT) AS n,
+               CAST(sum(bad) AS BIGINT) AS n_bad
+        FROM scored GROUP BY 1
+    ),
+    tot AS MATERIALIZED (
+        SELECT CAST(sum(n) AS BIGINT) AS nn,
+               CAST(sum(n_bad) AS BIGINT) AS nbad
+        FROM b
+    ),
+    terms AS (
+        SELECT
+            CAST(sum(n * (2 * band + 1) * (2 * band + 1)
+                     - 200 * (2 * band + 1) * n_bad
+                     + 10000 * n_bad) AS BIGINT) AS bs_num,
+            CAST(sum(CAST(round(
+                (CAST(n AS DOUBLE) / CAST(tot.nn AS DOUBLE))
+                * (CAST(2 * band + 1 AS DOUBLE) / 100
+                   - CAST(n_bad AS DOUBLE) / CAST(n AS DOUBLE))
+                * (CAST(2 * band + 1 AS DOUBLE) / 100
+                   - CAST(n_bad AS DOUBLE) / CAST(n AS DOUBLE))
+                * 1e9) AS BIGINT)) AS BIGINT) AS rel_nano,
+            CAST(sum(CAST(round(
+                (CAST(n AS DOUBLE) / CAST(tot.nn AS DOUBLE))
+                * (CAST(n_bad AS DOUBLE) / CAST(n AS DOUBLE)
+                   - CAST(tot.nbad AS DOUBLE) / CAST(tot.nn AS DOUBLE))
+                * (CAST(n_bad AS DOUBLE) / CAST(n AS DOUBLE)
+                   - CAST(tot.nbad AS DOUBLE) / CAST(tot.nn AS DOUBLE))
+                * 1e9) AS BIGINT)) AS BIGINT) AS res_nano,
+            any_value(tot.nn) AS nn, any_value(tot.nbad) AS nbad
+        FROM b CROSS JOIN tot
+    )
+    SELECT round(CAST(bs_num AS DOUBLE) / (10000 * CAST(nn AS DOUBLE)), 6)
+               AS brier,
+           rel_nano, res_nano,
+           CAST(round((CAST(nbad AS DOUBLE) / CAST(nn AS DOUBLE))
+                      * (1 - CAST(nbad AS DOUBLE) / CAST(nn AS DOUBLE))
+                      * 1e9) AS BIGINT) AS unc_nano,
+           abs(CAST(round(CAST(bs_num AS DOUBLE) * 1e9
+                          / (10000 * CAST(nn AS DOUBLE))) AS BIGINT)
+               - (rel_nano - res_nano
+                  + CAST(round((CAST(nbad AS DOUBLE) / CAST(nn AS DOUBLE))
+                               * (1 - CAST(nbad AS DOUBLE)
+                                      / CAST(nn AS DOUBLE))
+                               * 1e9) AS BIGINT))) <= 100 AS murphy_ok
+    FROM terms
+"""
+
+
+@register(
+    "brier_decomposition_bands",
+    _BRIER_ORACLE,
+    "Brier score with the Murphy (1973) decomposition BS = REL - RES "
+    "+ UNC over the 50 credit-score bands (predicted probability = "
+    "band midpoint (2b+1)/100): calibration quality (reliability), "
+    "discrimination (resolution), and base-rate entropy "
+    "(uncertainty) - the probability-forecast audit that pairs with "
+    "isotonic_calibration_pava for the reference's scored outputs. "
+    "Exactness: the Brier numerator is a PURE-INTEGER identity "
+    "sum(n*(2b+1)^2 - 200*(2b+1)*bad + 10000*bad) (y^2 = y), divided "
+    "once at the end; REL/RES terms are nano-rounded per band from "
+    "identical IEEE expression text then BIGINT-summed; the "
+    "murphy_ok boolean asserts the decomposition identity holds "
+    "within 100 nano (50 bands x rounding half-ulps - "
+    "bound-boolean oracle, approx_aggregates pattern). Scale: one "
+    "fact pass (50-band groupBy); everything after runs on 50 rows.",
+    tags=("ml", "credit", "analytics", "agg", "round4"),
+)
+def brier_decomposition_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .credit import _scored_orders
+
+    b = (
+        _scored_orders(spark, sf_dir)
+        .groupBy(F.expr("score div 2000").alias("band"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.sum("bad").cast("bigint").alias("n_bad"),
+        )
+    )
+    tot = b.agg(
+        F.sum("n").cast("bigint").alias("nn"),
+        F.sum("n_bad").cast("bigint").alias("nbad"),
+    )
+    j = b.crossJoin(F.broadcast(tot))
+    p_hat = "CAST(2 * band + 1 AS DOUBLE) / 100"
+    r_b = "CAST(n_bad AS DOUBLE) / CAST(n AS DOUBLE)"
+    pbar = "CAST(nbad AS DOUBLE) / CAST(nn AS DOUBLE)"
+    w = "CAST(n AS DOUBLE) / CAST(nn AS DOUBLE)"
+    terms = j.agg(
+        F.expr(
+            "CAST(sum(n * (2 * band + 1) * (2 * band + 1) "
+            "- 200 * (2 * band + 1) * n_bad + 10000 * n_bad) AS BIGINT)"
+        ).alias("bs_num"),
+        F.expr(
+            f"CAST(sum(CAST(round({w} * ({p_hat} - {r_b}) * ({p_hat} - {r_b}) "
+            "* 1e9) AS BIGINT)) AS BIGINT)"
+        ).alias("rel_nano"),
+        F.expr(
+            f"CAST(sum(CAST(round({w} * ({r_b} - {pbar}) * ({r_b} - {pbar}) "
+            "* 1e9) AS BIGINT)) AS BIGINT)"
+        ).alias("res_nano"),
+        F.expr("any_value(nn)").alias("nn"),
+        F.expr("any_value(nbad)").alias("nbad"),
+    )
+    unc = (
+        "CAST(round((CAST(nbad AS DOUBLE) / CAST(nn AS DOUBLE)) "
+        "* (1 - CAST(nbad AS DOUBLE) / CAST(nn AS DOUBLE)) * 1e9) AS BIGINT)"
+    )
+    return terms.select(
+        F.expr(
+            "round(CAST(bs_num AS DOUBLE) / (10000 * CAST(nn AS DOUBLE)), 6)"
+        ).alias("brier"),
+        "rel_nano",
+        "res_nano",
+        F.expr(unc).alias("unc_nano"),
+        F.expr(
+            "abs(CAST(round(CAST(bs_num AS DOUBLE) * 1e9 "
+            "/ (10000 * CAST(nn AS DOUBLE))) AS BIGINT) "
+            f"- (rel_nano - res_nano + {unc})) <= 100"
+        ).alias("murphy_ok"),
+    )
+
+
+# =====================================================================
+# Exact k-NN classification over embeddings: the supervised complement
+# of the ANN retrieval tier.
+# =====================================================================
+_KNN_ORACLE = """
+    -- Exact 5-NN majority-vote classification: queries are every
+    -- 100th vector, the gallery is the rest; neighbors rank by
+    -- 6dp-rounded cosine (rounding collapses last-ulp summation
+    -- differences; ties break on gallery id), votes tie-break to the
+    -- smaller label. Every step is deterministic, so the full
+    -- prediction table hash-matches.
+    WITH q AS MATERIALIZED (
+        SELECT vec_id AS qid, embedding AS qvec, label AS true_label
+        FROM embeddings WHERE vec_id % 100 = 0
+    ),
+    g AS MATERIALIZED (
+        SELECT vec_id AS gid, embedding AS gvec, label
+        FROM embeddings WHERE vec_id % 100 <> 0
+    ),
+    nn AS MATERIALIZED (
+        SELECT qid, true_label, gid, label,
+               row_number() OVER (
+                   PARTITION BY qid
+                   ORDER BY round(list_cosine_similarity(
+                       qvec::DOUBLE[], gvec::DOUBLE[]), 6) DESC, gid
+               ) AS rn
+        FROM q, g
+        QUALIFY rn <= 5
+    ),
+    votes AS (
+        SELECT qid, true_label, label,
+               CAST(count(*) AS BIGINT) AS n_votes,
+               row_number() OVER (
+                   PARTITION BY qid ORDER BY count(*) DESC, label
+               ) AS vr
+        FROM nn GROUP BY qid, true_label, label
+    )
+    SELECT qid AS query_id,
+           CAST(true_label AS BIGINT) AS true_label,
+           CAST(label AS BIGINT)      AS pred_label,
+           n_votes,
+           (label = true_label)       AS correct
+    FROM votes WHERE vr = 1
+    ORDER BY query_id
+"""
+
+
+@register(
+    "knn_classify_exact",
+    _KNN_ORACLE,
+    "Exact k-NN classification (k=5, cosine) over the embedding "
+    "table - the supervised complement of the ANN retrieval tier "
+    "(ann_lsh_topk / ivf_*): every 100th vector is a query, the "
+    "rest are the labeled gallery, neighbors rank by 6dp-rounded "
+    "native-expression cosine with gallery-id tie-breaks, and the "
+    "majority vote tie-breaks to the smaller label, so the whole "
+    "prediction table is deterministic and hash-exact. Scale: the "
+    "bounded query set BROADCASTS against the gallery scan "
+    "(map-side scoring, the brute-force baseline every ANN recall "
+    "certification needs); per-query top-5 extraction shuffles "
+    "only (query x 5) rows after partial rank pruning; at larger "
+    "query sets the IVF-bucketed path takes over.",
+    tags=("similarity", "ml", "llm-pipeline", "round4"),
+)
+def knn_classify_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window as W
+
+    from ..operators.similarity import cosine
+
+    emb = t(spark, sf_dir, "embeddings")
+    # Probe-set contract: the broadcast query side is capped (identity
+    # at fixture scale; at corpus scale a query-table-sized kNN belongs
+    # on the blocked-GEMM path, not a broadcast cross join). The limit
+    # makes the bound provable to the BNLJ plan audit.
+    q = (
+        emb.filter(F.col("vec_id") % 100 == 0)
+        .select(
+            F.col("vec_id").alias("qid"),
+            F.col("embedding").alias("qvec"),
+            F.col("label").alias("true_label"),
+        )
+        .limit(10_000)
+    )
+    g = emb.filter(F.col("vec_id") % 100 != 0).select(
+        F.col("vec_id").alias("gid"),
+        F.col("embedding").alias("gvec"),
+        "label",
+    )
+    scored = g.crossJoin(F.broadcast(q)).select(
+        "qid",
+        "true_label",
+        "gid",
+        "label",
+        F.round(
+            cosine(
+                F.col("qvec").cast("array<double>"),
+                F.col("gvec").cast("array<double>"),
+            ),
+            6,
+        ).alias("cos6"),
+    )
+    wq = W.partitionBy("qid").orderBy(F.desc("cos6"), "gid")
+    nn = scored.withColumn("rn", F.row_number().over(wq)).filter(F.col("rn") <= 5)
+    wv = W.partitionBy("qid").orderBy(F.desc("n_votes"), "label")
+    votes = (
+        nn.groupBy("qid", "true_label", "label")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_votes"))
+        .withColumn("vr", F.row_number().over(wv))
+        .filter(F.col("vr") == 1)
+    )
+    return votes.select(
+        F.col("qid").alias("query_id"),
+        F.col("true_label").cast("bigint").alias("true_label"),
+        F.col("label").cast("bigint").alias("pred_label"),
+        "n_votes",
+        (F.col("label") == F.col("true_label")).alias("correct"),
+    ).orderBy("query_id")
+
+
+# =====================================================================
+# Multivariate OLS by normal equations (Cramer 3x3) - exact moment
+# sums, one shared closed-form text.
+# =====================================================================
+# 3x3 Cramer solution of the normal equations. The determinant texts
+# are SHARED between engines; the moment-sum CTE supplies
+# exactly-summed integers cast to DOUBLE once.
+_D = {
+    "n": "CAST(n AS DOUBLE)", "s1": "CAST(s1 AS DOUBLE)",
+    "s2": "CAST(s2 AS DOUBLE)", "sy": "CAST(sy AS DOUBLE)",
+    "s11": "CAST(s11 AS DOUBLE)", "s12": "CAST(s12 AS DOUBLE)",
+    "s22": "CAST(s22 AS DOUBLE)", "s1y": "CAST(s1y AS DOUBLE)",
+    "s2y": "CAST(s2y AS DOUBLE)", "syy": "CAST(syy AS DOUBLE)",
+}
+
+
+def _det3(a, b, c, d, e, f, g, h, i):
+    """Text of a 3x3 determinant |a b c; d e f; g h i| with pinned
+    association order."""
+    return (f"({a} * ({e} * {i} - {f} * {h}) "
+            f"- {b} * ({d} * {i} - {f} * {g}) "
+            f"+ {c} * ({d} * {h} - {e} * {g}))")
+
+
+_OLS_DET = _det3(_D["n"], _D["s1"], _D["s2"],
+                 _D["s1"], _D["s11"], _D["s12"],
+                 _D["s2"], _D["s12"], _D["s22"])
+
+
+_OLS_B0 = _det3(_D["sy"], _D["s1"], _D["s2"],
+                _D["s1y"], _D["s11"], _D["s12"],
+                _D["s2y"], _D["s12"], _D["s22"])
+
+
+_OLS_B1 = _det3(_D["n"], _D["sy"], _D["s2"],
+                _D["s1"], _D["s1y"], _D["s12"],
+                _D["s2"], _D["s2y"], _D["s22"])
+
+
+_OLS_B2 = _det3(_D["n"], _D["s1"], _D["sy"],
+                _D["s1"], _D["s11"], _D["s1y"],
+                _D["s2"], _D["s12"], _D["s2y"])
+
+
+_OLS_EXPRS = [
+    f"round({_OLS_B0} / {_OLS_DET}, 6) AS b0",
+    f"round({_OLS_B1} / {_OLS_DET}, 6) AS b1",
+    f"round({_OLS_B2} / {_OLS_DET}, 6) AS b2",
+    # R^2 = 1 - SSE/SST with SSE = Syy - b.rhs (exact-moment identity)
+    f"round(1 - ({_D['syy']} - ({_OLS_B0} / {_OLS_DET}) * {_D['sy']} "
+    f"- ({_OLS_B1} / {_OLS_DET}) * {_D['s1y']} "
+    f"- ({_OLS_B2} / {_OLS_DET}) * {_D['s2y']}) "
+    f"/ ({_D['syy']} - {_D['sy']} * {_D['sy']} / {_D['n']}), 6) AS r2",
+]
+
+
+_OLS_ORACLE = f"""
+    WITH per_order AS MATERIALIZED (
+        SELECT l_orderkey,
+               CAST(count(*) AS HUGEINT) AS x1,
+               CAST(sum(CAST(floor(l_quantity) AS BIGINT)) AS HUGEINT) AS x2,
+               CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT))
+                    AS HUGEINT) AS y
+        FROM lineitem GROUP BY 1
+    ),
+    sums AS MATERIALIZED (
+        SELECT CAST(count(*) AS BIGINT) AS n,
+               sum(x1) AS s1, sum(x2) AS s2, sum(y) AS sy,
+               sum(x1 * x1) AS s11, sum(x1 * x2) AS s12,
+               sum(x2 * x2) AS s22, sum(x1 * y) AS s1y,
+               sum(x2 * y) AS s2y, sum(y * y) AS syy
+        FROM per_order
+    )
+    SELECT n, {', '.join(_OLS_EXPRS)}
+    FROM sums
+"""
+
+
+@register(
+    "multivariate_ols_normal_eq",
+    _OLS_ORACLE,
+    "Multivariate OLS (order revenue ~ item count + total quantity, "
+    "with intercept) solved by the 3x3 normal equations through "
+    "Cramer's rule: ten moment sums accumulate EXACTLY in "
+    "DECIMAL(38,0)/HUGEINT partials over one per-order aggregate, "
+    "then the closed-form determinants run once on doubles cast "
+    "from those integers with byte-identical formula text on both "
+    "engines - the multivariate extension of the certified "
+    "regression_aggregates (slope/intercept) and "
+    "correlation_matrix_exact moment discipline. R^2 comes from "
+    "the SSE = Syy - b.rhs identity, no second data pass. Scale: "
+    "two partial-combined aggregates (per-order, then moments); "
+    "the solve is a 1-row expression.",
+    tags=("ml", "stats", "agg", "round4"),
+)
+def multivariate_ols_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = t(spark, sf_dir, "lineitem")
+    per_order = li.groupBy("l_orderkey").agg(
+        F.count(F.lit(1)).cast("decimal(38,0)").alias("x1"),
+        F.sum(F.floor("l_quantity").cast("bigint"))
+        .cast("decimal(38,0)")
+        .alias("x2"),
+        F.sum(F.round(F.col("l_extendedprice") * 100).cast("bigint"))
+        .cast("decimal(38,0)")
+        .alias("y"),
+    )
+    sums = per_order.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("x1").alias("s1"),
+        F.sum("x2").alias("s2"),
+        F.sum("y").alias("sy"),
+        F.sum(F.col("x1") * F.col("x1")).alias("s11"),
+        F.sum(F.col("x1") * F.col("x2")).alias("s12"),
+        F.sum(F.col("x2") * F.col("x2")).alias("s22"),
+        F.sum(F.col("x1") * F.col("y")).alias("s1y"),
+        F.sum(F.col("x2") * F.col("y")).alias("s2y"),
+        F.sum(F.col("y") * F.col("y")).alias("syy"),
+    )
+    return sums.selectExpr("n", *_OLS_EXPRS)
+
+
+# =====================================================================
+# Exact decision stump (CART root split) - tree learning as prefix
+# sums + an exact rational argmin.
+# =====================================================================
+_STUMP_ORACLE = """
+    WITH scored AS (
+        SELECT CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS bad,
+               ((o_orderkey % 99991) * 31 + (o_custkey % 99991) * 17)
+                   % 99991 % 70000
+                   + CASE WHEN o_orderstatus = 'F' THEN 30000 ELSE 0 END
+                   AS score
+        FROM orders
+    ),
+    b AS MATERIALIZED (
+        SELECT score // 2000 AS band,
+               CAST(count(*) AS BIGINT) AS n,
+               CAST(sum(bad) AS BIGINT) AS n_bad
+        FROM scored GROUP BY 1
+    ),
+    c AS MATERIALIZED (
+        SELECT band,
+               CAST(sum(n) OVER (ORDER BY band) AS BIGINT)     AS nl,
+               CAST(sum(n_bad) OVER (ORDER BY band) AS BIGINT) AS badl,
+               CAST(sum(n) OVER () AS BIGINT)     AS nt,
+               CAST(sum(n_bad) OVER () AS BIGINT) AS badt
+        FROM b
+    ),
+    cand AS (
+        -- Gini argmin over candidate splits: maximize
+        -- f = (bad_l^2+good_l^2)/n_l + (bad_r^2+good_r^2)/n_r,
+        -- floor-scaled to the 1e-12 grid over the common denominator
+        -- n_l*n_r so the comparison never touches a float.
+        SELECT band, nl, badl, nt - nl AS nr, badt - badl AS badr,
+               CAST((((badl::HUGEINT * badl + (nl - badl)::HUGEINT * (nl - badl))
+                       * (nt - nl)
+                     + ((badt - badl)::HUGEINT * (badt - badl)
+                        + ((nt - nl) - (badt - badl))::HUGEINT
+                          * ((nt - nl) - (badt - badl)))
+                       * nl) * 1000000000000)
+                    // (nl::HUGEINT * (nt - nl)) AS BIGINT) AS purity_q
+        FROM c WHERE nl > 0 AND nt - nl > 0
+    ),
+    best AS (
+        SELECT *, row_number() OVER (ORDER BY purity_q DESC, band) AS rn
+        FROM cand
+    )
+    SELECT CAST((band + 1) * 2000 AS BIGINT) AS split_threshold,
+           purity_q,
+           nl AS n_left, badl AS bad_left,
+           nr AS n_right, badr AS bad_right,
+           round(CAST(badl AS DOUBLE) / CAST(nl AS DOUBLE), 6) AS left_rate,
+           round(CAST(badr AS DOUBLE) / CAST(nr AS DOUBLE), 6) AS right_rate
+    FROM best WHERE rn = 1
+"""
+
+
+@register(
+    "decision_stump_exact",
+    _STUMP_ORACLE,
+    "Exact decision-stump learning (the CART root split) as prefix "
+    "sums plus an exact rational argmin: candidate thresholds are "
+    "the 50 score-band boundaries, each split's Gini objective "
+    "f = (bad_l^2+good_l^2)/n_l + (bad_r^2+good_r^2)/n_r is "
+    "floor-scaled over the common denominator n_l*n_r to the 1e-12 "
+    "grid (HUGEINT/DECIMAL - no float ever enters the comparison), "
+    "and the argmax tie-breaks to the smaller threshold. This is "
+    "the primitive a distributed tree learner evaluates per node - "
+    "histogram counts, prefix sums, one argmin - expressed "
+    "declaratively; iterating it per tree level is the XGBoost/"
+    "LightGBM histogram algorithm. One fact pass (50-band groupBy); "
+    "everything after runs on 50 rows.",
+    tags=("ml", "credit", "agg", "round4"),
+)
+def decision_stump_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window as W
+
+    from .credit import _scored_orders
+
+    b = (
+        _scored_orders(spark, sf_dir)
+        .groupBy(F.expr("score div 2000").alias("band"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.sum("bad").cast("bigint").alias("n_bad"),
+        )
+    )
+    wcum = W.orderBy("band").rowsBetween(W.unboundedPreceding, 0)
+    wall = W.partitionBy()
+    c = b.select(
+        "band",
+        F.sum("n").over(wcum).cast("bigint").alias("nl"),
+        F.sum("n_bad").over(wcum).cast("bigint").alias("badl"),
+        F.sum("n").over(wall).cast("bigint").alias("nt"),
+        F.sum("n_bad").over(wall).cast("bigint").alias("badt"),
+    )
+    cand = c.filter((F.col("nl") > 0) & (F.col("nt") - F.col("nl") > 0)).selectExpr(
+        "band",
+        "nl",
+        "badl",
+        "nt - nl AS nr",
+        "badt - badl AS badr",
+        "CAST((((CAST(badl AS DECIMAL(38,0)) * badl "
+        "+ CAST(nl - badl AS DECIMAL(38,0)) * (nl - badl)) * (nt - nl) "
+        "+ (CAST(badt - badl AS DECIMAL(38,0)) * (badt - badl) "
+        "+ CAST((nt - nl) - (badt - badl) AS DECIMAL(38,0)) "
+        "* ((nt - nl) - (badt - badl))) * nl) * 1000000000000) "
+        "div (CAST(nl AS DECIMAL(38,0)) * (nt - nl)) AS BIGINT) AS purity_q",
+    )
+    best = cand.withColumn(
+        "rn",
+        F.row_number().over(W.orderBy(F.desc("purity_q"), "band")),
+    ).filter(F.col("rn") == 1)
+    return best.select(
+        ((F.col("band") + 1) * 2000).cast("bigint").alias("split_threshold"),
+        F.col("purity_q").cast("bigint").alias("purity_q"),
+        F.col("nl").alias("n_left"),
+        F.col("badl").alias("bad_left"),
+        F.col("nr").alias("n_right"),
+        F.col("badr").alias("bad_right"),
+        F.round(F.col("badl").cast("double") / F.col("nl").cast("double"), 6).alias(
+            "left_rate"
+        ),
+        F.round(F.col("badr").cast("double") / F.col("nr").cast("double"), 6).alias(
+            "right_rate"
+        ),
+    )
+
+
+# =====================================================================
+# Item-item collaborative filtering: the oracle-exact neighborhood
+# model next to the (rows-only) MLlib ALS.
+# =====================================================================
+_ITEMCF_ORACLE = """
+    -- Item-item cosine over binary basket vectors: co-occurrence
+    -- counts from one within-order pair join, cosine =
+    -- co / sqrt(n_a * n_b) on exact integers rounded to 6dp, top-3
+    -- neighbors for the 20 most-popular anchor items. Deterministic
+    -- end to end (anchor and neighbor ranks tie-break on part id) -
+    -- the hash-exact collaborative-filtering twin of the seed-bound
+    -- MLlib ALS factorization (als_recommendations, rows-only).
+    WITH baskets AS MATERIALIZED (
+        SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem
+    ),
+    ni AS MATERIALIZED (
+        SELECT pk, CAST(count(*) AS BIGINT) AS n FROM baskets GROUP BY pk
+    ),
+    anchors AS MATERIALIZED (
+        SELECT pk, n, row_number() OVER (ORDER BY n DESC, pk) AS ar
+        FROM ni QUALIFY ar <= 20
+    ),
+    pairs AS MATERIALIZED (
+        SELECT a.pk AS pa, b.pk AS pb, CAST(count(*) AS BIGINT) AS co
+        FROM baskets a
+        JOIN anchors an ON an.pk = a.pk
+        JOIN baskets b ON a.ok = b.ok AND b.pk <> a.pk
+        GROUP BY 1, 2
+        HAVING count(*) >= 2
+    ),
+    scored AS (
+        SELECT p.pa, p.pb, p.co,
+               round(CAST(p.co AS DOUBLE)
+                     / sqrt(CAST(na.n AS DOUBLE) * CAST(nb.n AS DOUBLE)), 6)
+                   AS cos_sim,
+               row_number() OVER (
+                   PARTITION BY p.pa
+                   ORDER BY round(CAST(p.co AS DOUBLE)
+                     / sqrt(CAST(na.n AS DOUBLE) * CAST(nb.n AS DOUBLE)), 6)
+                     DESC, p.pb
+               ) AS rk
+        FROM pairs p
+        JOIN ni na ON na.pk = p.pa
+        JOIN ni nb ON nb.pk = p.pb
+    )
+    SELECT pa AS item, CAST(rk AS BIGINT) AS rank, pb AS neighbor,
+           co AS co_orders, cos_sim
+    FROM scored WHERE rk <= 3
+    ORDER BY item, rank
+"""
+
+
+@register(
+    "item_item_collaborative_topk",
+    _ITEMCF_ORACLE,
+    "Item-item collaborative filtering (the neighborhood model of "
+    "Sarwar et al. 2001): binary basket vectors per part, "
+    "co-occurrence via ONE within-order self-join restricted to the "
+    "20 most-popular anchor items, cosine co/sqrt(n_a*n_b) on exact "
+    "BIGINT counts rounded at 6dp, top-3 neighbors per anchor with "
+    "part-id tie-breaks - fully deterministic and hash-exact, the "
+    "oracle-checkable complement to the seed-bound MLlib ALS "
+    "(als_recommendations stays rows-only because factorization has "
+    "no portable oracle). Scale: the pair join fans out only from "
+    "anchor rows (anchor filter BEFORE the join, so pair volume is "
+    "anchors x basket-width, not catalog^2); counts partial-"
+    "aggregate; the min-support HAVING prunes the tail.",
+    tags=("analytics", "ml", "similarity", "round4"),
+)
+def item_item_collaborative_topk(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from pyspark.sql import Window as W
+
+    li = t(spark, sf_dir, "lineitem")
+    baskets = li.select(
+        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
+    ).distinct()
+    ni = baskets.groupBy("pk").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    anchors = (
+        ni.orderBy(F.desc("n"), "pk")
+        .limit(20)
+        .select("pk")
+    )
+    a = baskets.join(F.broadcast(anchors), "pk").select(
+        F.col("ok"), F.col("pk").alias("pa")
+    )
+    b = baskets.select(F.col("ok"), F.col("pk").alias("pb"))
+    pairs = (
+        a.join(b, "ok")
+        .filter(F.col("pb") != F.col("pa"))
+        .groupBy("pa", "pb")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("co"))
+        .filter(F.col("co") >= 2)
+    )
+    # Anchor-side counts: semi-restrict the catalog-sized `ni` to the
+    # 20 anchors BEFORE broadcasting (broadcasting full `ni` would be
+    # the ADVICE-r3 scale bug — part counts are catalog-bounded, not
+    # small). The neighbor-side counts join shuffle-side, co-keyed.
+    na = (
+        ni.join(F.broadcast(anchors), "pk")
+        .select(F.col("pk").alias("pa"), F.col("n").alias("n_a"))
+    )
+    nb = ni.select(F.col("pk").alias("pb"), F.col("n").alias("n_b"))
+    cos = F.round(
+        F.col("co").cast("double")
+        / F.sqrt(F.col("n_a").cast("double") * F.col("n_b").cast("double")),
+        6,
+    )
+    scored = (
+        pairs.join(F.broadcast(na), "pa")
+        .join(nb, "pb")
+        .select("pa", "pb", "co", cos.alias("cos_sim"))
+    )
+    wk = W.partitionBy("pa").orderBy(F.desc("cos_sim"), "pb")
+    return (
+        scored.withColumn("rk", F.row_number().over(wk))
+        .filter(F.col("rk") <= 3)
+        .select(
+            F.col("pa").alias("item"),
+            F.col("rk").cast("bigint").alias("rank"),
+            F.col("pb").alias("neighbor"),
+            F.col("co").alias("co_orders"),
+            "cos_sim",
+        )
+        .orderBy("item", "rank")
+    )
+
+
+# =====================================================================
+# Loan amortization schedules: pure-integer banking arithmetic,
+# sequential per loan, parallel across loans.
+# =====================================================================
+_AMORT_ORACLE = """
+    -- Recursive-CTE replay of the amortization run: principal =
+    -- order price in cents, monthly interest = round-half-up 1%
+    -- ((bal+50)//100 - PURE integer, no floats anywhere), fixed
+    -- payment = principal//10, iterate until the balance crosses
+    -- zero (the final payment absorbs the remainder). Recursion is
+    -- bounded (~11 months at these rates; hard cap 600 on both
+    -- engines).
+    WITH RECURSIVE loans AS (
+        SELECT o_orderkey AS loan_id,
+               CAST(round(o_totalprice * 100) AS BIGINT) AS principal
+        FROM orders WHERE o_orderkey % 97 = 0
+    ),
+    sched AS (
+        SELECT loan_id, principal, principal // 10 AS payment,
+               0 AS m, principal AS bal,
+               CAST(0 AS BIGINT) AS interest_paid
+        FROM loans
+        UNION ALL
+        SELECT loan_id, principal, payment,
+               m + 1,
+               bal + (bal + 50) // 100 - payment,
+               interest_paid + (bal + 50) // 100
+        FROM sched
+        WHERE bal > 0 AND m < 600
+    )
+    SELECT loan_id, principal AS principal_cents,
+           CAST(m AS BIGINT) AS months,
+           interest_paid AS total_interest_cents,
+           CAST(payment + bal AS BIGINT) AS final_payment_cents
+    FROM sched
+    WHERE bal <= 0
+    ORDER BY loan_id
+"""
+
+
+@register(
+    "loan_amortization_schedule",
+    _AMORT_ORACLE,
+    "Loan amortization run-off - the reference app's own domain "
+    "(loan default risk) done with BANKING arithmetic: monthly "
+    "interest is round-half-up 1% computed as (balance+50) div 100 "
+    "in pure BIGINT cents (floats never exist, so there is nothing "
+    "to drift), fixed payment = principal div 10, iterate until "
+    "payoff; the final payment absorbs the remainder. The recursion "
+    "is inherently sequential PER LOAN and embarrassingly parallel "
+    "ACROSS loans, so the engine runs it as an Arrow-batched "
+    "mapInPandas integer loop (bounded ~11 iterations/loan) while "
+    "the oracle replays it as a recursive CTE - the "
+    "holt_linear_forecast discipline, strengthened to exact "
+    "integers. Emits months-to-payoff, total interest, and the "
+    "final short payment per loan. Scale: per-partition compute, "
+    "zero shuffle before the bounded output sort.",
+    tags=("ml", "credit", "analytics", "udf", "round4"),
+)
+def loan_amortization_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    loans = (
+        t(spark, sf_dir, "orders")
+        .filter(F.col("o_orderkey") % 97 == 0)
+        .select(
+            F.col("o_orderkey").alias("loan_id"),
+            F.round(F.col("o_totalprice") * 100)
+            .cast("bigint")
+            .alias("principal"),
+        )
+    )
+
+    schema = T.StructType(
+        [
+            T.StructField("loan_id", T.LongType(), False),
+            T.StructField("principal_cents", T.LongType(), False),
+            T.StructField("months", T.LongType(), False),
+            T.StructField("total_interest_cents", T.LongType(), False),
+            T.StructField("final_payment_cents", T.LongType(), False),
+        ]
+    )
+
+    def run(batches):
+        for pdf in batches:
+            out = []
+            for loan_id, principal in zip(pdf["loan_id"], pdf["principal"]):
+                principal = int(principal)
+                payment = principal // 10
+                bal, m, interest_paid = principal, 0, 0
+                while bal > 0 and m < 600:
+                    intr = (bal + 50) // 100
+                    bal = bal + intr - payment
+                    interest_paid += intr
+                    m += 1
+                out.append(
+                    (int(loan_id), principal, m, interest_paid, payment + bal)
+                )
+            yield pd.DataFrame(
+                out,
+                columns=[
+                    "loan_id",
+                    "principal_cents",
+                    "months",
+                    "total_interest_cents",
+                    "final_payment_cents",
+                ],
+            )
+
+    return loans.mapInPandas(run, schema=schema).orderBy("loan_id")
+
+
+# =====================================================================
+# Mutual information between discretized features - the
+# feature-selection score completing the entropy/KL family.
+# =====================================================================
+_MI_ORACLE = """
+    -- MI(score band; market segment) from exact joint counts: each
+    -- cell's contribution (n_xy/N) * ln(n_xy*N / (n_x*n_y)) is
+    -- nano-rounded THEN summed as BIGINT (associative), the
+    -- lm_bigram discipline; marginals come from windows over the
+    -- <=50-cell table. Entropies H(X), H(Y) the same way, and the
+    -- normalized MI divides once at the end.
+    WITH j AS (
+        SELECT (((o_orderkey % 99991) * 31 + (o_custkey % 99991) * 17)
+                % 99991 % 70000
+                + CASE WHEN o_orderstatus = 'F' THEN 30000 ELSE 0 END)
+                // 10000 AS band,
+               c_mktsegment AS seg
+        FROM orders JOIN customer ON o_custkey = c_custkey
+    ),
+    cells AS MATERIALIZED (
+        SELECT band, seg, CAST(count(*) AS BIGINT) AS n_xy
+        FROM j GROUP BY 1, 2
+    ),
+    m AS MATERIALIZED (
+        SELECT band, seg, n_xy,
+               CAST(sum(n_xy) OVER (PARTITION BY band) AS BIGINT) AS n_x,
+               CAST(sum(n_xy) OVER (PARTITION BY seg) AS BIGINT)  AS n_y,
+               CAST(sum(n_xy) OVER () AS BIGINT)                  AS nn
+        FROM cells
+    ),
+    terms AS (
+        SELECT
+            CAST(sum(CAST(round((CAST(n_xy AS DOUBLE) / CAST(nn AS DOUBLE))
+                * ln(CAST(n_xy AS DOUBLE) * CAST(nn AS DOUBLE)
+                     / (CAST(n_x AS DOUBLE) * CAST(n_y AS DOUBLE))) * 1e9)
+                AS BIGINT)) AS BIGINT) AS mi_nano,
+            CAST(sum(CASE WHEN seg = (SELECT min(seg) FROM cells) THEN
+                CAST(round(-(CAST(n_x AS DOUBLE) / CAST(nn AS DOUBLE))
+                    * ln(CAST(n_x AS DOUBLE) / CAST(nn AS DOUBLE)) * 1e9)
+                AS BIGINT) ELSE 0 END) AS BIGINT) AS hx_nano,
+            CAST(sum(CASE WHEN band = (SELECT min(band) FROM cells) THEN
+                CAST(round(-(CAST(n_y AS DOUBLE) / CAST(nn AS DOUBLE))
+                    * ln(CAST(n_y AS DOUBLE) / CAST(nn AS DOUBLE)) * 1e9)
+                AS BIGINT) ELSE 0 END) AS BIGINT) AS hy_nano
+        FROM m
+    )
+    SELECT mi_nano, hx_nano, hy_nano,
+           round(CAST(mi_nano AS DOUBLE)
+                 / CAST(LEAST(hx_nano, hy_nano) AS DOUBLE), 6)
+               AS normalized_mi
+    FROM terms
+"""
+
+
+@register(
+    "mutual_information_features",
+    _MI_ORACLE,
+    "Mutual information between the credit-score band and the "
+    "market segment - THE filter-method feature-selection score, "
+    "completing the information-theoretic family next to "
+    "entropy_kl_event_mix: each joint cell contributes "
+    "(p_xy)ln(p_xy/(p_x p_y)) nano-rounded then BIGINT-summed "
+    "(associative, layout-independent); marginal entropies ride the "
+    "same 50-cell table using one-representative-per-marginal "
+    "guards so no count is double-counted; normalized MI = "
+    "MI/min(H_x, H_y) divides once. One fact pass (the 50-cell "
+    "joint groupBy); windows run on metadata scale.",
+    tags=("stats", "ml", "agg", "round4"),
+)
+def mutual_information_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window as W
+
+    o = t(spark, sf_dir, "orders")
+    c = t(spark, sf_dir, "customer")
+    j = o.join(F.broadcast(c), o.o_custkey == c.c_custkey).select(
+        F.expr(
+            "(((o_orderkey % 99991) * 31 + (o_custkey % 99991) * 17) "
+            "% 99991 % 70000 "
+            "+ CASE WHEN o_orderstatus = 'F' THEN 30000 ELSE 0 END) div 10000"
+        ).alias("band"),
+        F.col("c_mktsegment").alias("seg"),
+    )
+    cells = j.groupBy("band", "seg").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_xy")
+    )
+    # One-representative-per-marginal guards (min seg / min band) are
+    # computed RELATIONALLY as two more windows over the same empty
+    # partition the nn window already shuffles to — the oracle's
+    # scalar subqueries, expressed inside the plan. (ADVICE r4: the
+    # old shape collected both mins to the driver and spliced the seg
+    # string into F.expr text — two extra round-trips at plan build
+    # and an injection-shaped pattern.)
+    w_all = W.partitionBy()
+    m = cells.select(
+        "band",
+        "seg",
+        "n_xy",
+        F.sum("n_xy").over(W.partitionBy("band")).cast("bigint").alias("n_x"),
+        F.sum("n_xy").over(W.partitionBy("seg")).cast("bigint").alias("n_y"),
+        F.sum("n_xy").over(w_all).cast("bigint").alias("nn"),
+        F.min("seg").over(w_all).alias("min_seg"),
+        F.min("band").over(w_all).alias("min_band"),
+    )
+    terms = m.agg(
+        F.expr(
+            "CAST(sum(CAST(round((CAST(n_xy AS DOUBLE) / CAST(nn AS DOUBLE)) "
+            "* ln(CAST(n_xy AS DOUBLE) * CAST(nn AS DOUBLE) "
+            "/ (CAST(n_x AS DOUBLE) * CAST(n_y AS DOUBLE))) * 1e9) "
+            "AS BIGINT)) AS BIGINT)"
+        ).alias("mi_nano"),
+        F.expr(
+            "CAST(sum(CASE WHEN seg = min_seg THEN "
+            "CAST(round(-(CAST(n_x AS DOUBLE) / CAST(nn AS DOUBLE)) "
+            "* ln(CAST(n_x AS DOUBLE) / CAST(nn AS DOUBLE)) * 1e9) "
+            "AS BIGINT) ELSE 0 END) AS BIGINT)"
+        ).alias("hx_nano"),
+        F.expr(
+            "CAST(sum(CASE WHEN band = min_band THEN "
+            "CAST(round(-(CAST(n_y AS DOUBLE) / CAST(nn AS DOUBLE)) "
+            "* ln(CAST(n_y AS DOUBLE) / CAST(nn AS DOUBLE)) * 1e9) "
+            "AS BIGINT) ELSE 0 END) AS BIGINT)"
+        ).alias("hy_nano"),
+    )
+    return terms.select(
+        "mi_nano",
+        "hx_nano",
+        "hy_nano",
+        F.round(
+            F.col("mi_nano").cast("double")
+            / F.least("hx_nano", "hy_nano").cast("double"),
+            6,
+        ).alias("normalized_mi"),
+    )
+
+
+# =====================================================================
+# McNemar's paired test - do two deterministic default-screens
+# disagree more in one direction than the other on the SAME orders?
+# =====================================================================
+_MCNEMAR_ORACLE = """
+    WITH scored AS (
+        SELECT CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y,
+               CASE WHEN o_totalprice > 150000 THEN 1 ELSE 0 END AS a,
+               CASE WHEN (o_orderkey * 31 + o_custkey) % 97 < 44
+                    THEN 1 ELSE 0 END AS b
+        FROM orders
+    ), cells AS (
+        SELECT CAST(count(*) FILTER (a = y AND b <> y) AS BIGINT) AS n10,
+               CAST(count(*) FILTER (a <> y AND b = y) AS BIGINT) AS n01,
+               CAST(count(*) FILTER (a = y AND b = y) AS BIGINT)  AS n11,
+               CAST(count(*) FILTER (a <> y AND b <> y) AS BIGINT) AS n00
+        FROM scored
+    )
+    SELECT n11 AS both_correct, n10 AS only_a_correct,
+           n01 AS only_b_correct, n00 AS both_wrong,
+           round((abs(CAST(n10 AS DOUBLE) - CAST(n01 AS DOUBLE)) - 1.0)
+                 * (abs(CAST(n10 AS DOUBLE) - CAST(n01 AS DOUBLE)) - 1.0)
+                 / (CAST(n10 AS DOUBLE) + CAST(n01 AS DOUBLE)), 6)
+               AS mcnemar_chi2
+    FROM cells
+"""
+
+
+@register(
+    "mcnemar_paired_test",
+    _MCNEMAR_ORACLE,
+    "McNemar's test for PAIRED binary classifiers: two deterministic "
+    "default screens (a price-threshold rule and a key-hash rule) "
+    "score the SAME orders, and only the discordant cells - orders "
+    "exactly one screen gets right - carry signal. This is the "
+    "correct test when comparing two models evaluated on one "
+    "dataset (accuracy deltas ignore pairing; McNemar does not) - "
+    "the model-comparison step after the reference's single-model "
+    "evaluator (spark.py:71-73). Continuity-corrected chi-square "
+    "(|b-c|-1)^2/(b+c) from exact BIGINT cell counts; the 2x2 "
+    "disagreement table is one conditional aggregation, nothing "
+    "shuffles but four counters.",
+    tags=("agg", "stats", "ml", "round4"),
+)
+def mcnemar_paired_test(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = t(spark, sf_dir, "orders")
+    scored = o.select(
+        F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("y"),
+        F.when(F.col("o_totalprice") > 150000, 1).otherwise(0).alias("a"),
+        F.when(
+            (F.col("o_orderkey") * 31 + F.col("o_custkey")) % 97 < 44, 1
+        )
+        .otherwise(0)
+        .alias("b"),
+    )
+    cells = scored.agg(
+        F.count(F.when((F.col("a") == F.col("y")) & (F.col("b") != F.col("y")), 1))
+        .cast("bigint")
+        .alias("n10"),
+        F.count(F.when((F.col("a") != F.col("y")) & (F.col("b") == F.col("y")), 1))
+        .cast("bigint")
+        .alias("n01"),
+        F.count(F.when((F.col("a") == F.col("y")) & (F.col("b") == F.col("y")), 1))
+        .cast("bigint")
+        .alias("n11"),
+        F.count(F.when((F.col("a") != F.col("y")) & (F.col("b") != F.col("y")), 1))
+        .cast("bigint")
+        .alias("n00"),
+    )
+    diff = F.abs(F.col("n10").cast("double") - F.col("n01").cast("double"))
+    return cells.select(
+        F.col("n11").alias("both_correct"),
+        F.col("n10").alias("only_a_correct"),
+        F.col("n01").alias("only_b_correct"),
+        F.col("n00").alias("both_wrong"),
+        F.round(
+            (diff - F.lit(1.0))
+            * (diff - F.lit(1.0))
+            / (F.col("n10").cast("double") + F.col("n01").cast("double")),
+            6,
+        ).alias("mcnemar_chi2"),
+    )
+
+
+# =====================================================================
+# Cohen's kappa - chance-corrected agreement between the two paired
+# screens from mcnemar_paired_test (McNemar asks "do they disagree
+# asymmetrically?"; kappa asks "do they agree beyond chance?").
+# =====================================================================
+_KAPPA_ORACLE = """
+    WITH scored AS (
+        SELECT CASE WHEN o_totalprice > 150000 THEN 1 ELSE 0 END AS a,
+               CASE WHEN (o_orderkey * 31 + o_custkey) % 97 < 44
+                    THEN 1 ELSE 0 END AS b
+        FROM orders
+    ), cells AS (
+        SELECT CAST(count(*) FILTER (a = 1 AND b = 1) AS DOUBLE) AS n11,
+               CAST(count(*) FILTER (a = 1 AND b = 0) AS DOUBLE) AS n10,
+               CAST(count(*) FILTER (a = 0 AND b = 1) AS DOUBLE) AS n01,
+               CAST(count(*) FILTER (a = 0 AND b = 0) AS DOUBLE) AS n00
+        FROM scored
+    )
+    SELECT CAST(n11 + n10 + n01 + n00 AS BIGINT) AS n_total,
+           round((n11 + n00) / (n11 + n10 + n01 + n00), 6) AS p_observed,
+           round(((n11 + n10) * (n11 + n01)
+                  + (n01 + n00) * (n10 + n00))
+                 / ((n11 + n10 + n01 + n00)
+                    * (n11 + n10 + n01 + n00)), 6) AS p_chance,
+           round(((n11 + n00) / (n11 + n10 + n01 + n00)
+                  - ((n11 + n10) * (n11 + n01)
+                     + (n01 + n00) * (n10 + n00))
+                    / ((n11 + n10 + n01 + n00)
+                       * (n11 + n10 + n01 + n00)))
+                 / (1.0 - ((n11 + n10) * (n11 + n01)
+                           + (n01 + n00) * (n10 + n00))
+                          / ((n11 + n10 + n01 + n00)
+                             * (n11 + n10 + n01 + n00))), 6) AS kappa
+    FROM cells
+"""
+
+
+@register(
+    "cohens_kappa_agreement",
+    _KAPPA_ORACLE,
+    "Cohen's kappa for the two paired default screens: agreement "
+    "CORRECTED FOR CHANCE - the complement of mcnemar_paired_test "
+    "(McNemar tests asymmetric disagreement; kappa scores beyond-"
+    "chance agreement; together they are the standard paired-rater "
+    "readout). Four exact BIGINT cells; p_o, p_e and kappa are "
+    "closed-form IEEE expressions mirrored term-for-term. Scale: "
+    "four counters after map-side combine.",
+    tags=("agg", "stats", "ml", "round4"),
+)
+def cohens_kappa_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = t(spark, sf_dir, "orders")
+    scored = o.select(
+        F.when(F.col("o_totalprice") > 150000, 1).otherwise(0).alias("a"),
+        F.when(
+            (F.col("o_orderkey") * 31 + F.col("o_custkey")) % 97 < 44, 1
+        )
+        .otherwise(0)
+        .alias("b"),
+    )
+    cells = scored.agg(
+        F.count(F.when((F.col("a") == 1) & (F.col("b") == 1), 1))
+        .cast("double")
+        .alias("n11"),
+        F.count(F.when((F.col("a") == 1) & (F.col("b") == 0), 1))
+        .cast("double")
+        .alias("n10"),
+        F.count(F.when((F.col("a") == 0) & (F.col("b") == 1), 1))
+        .cast("double")
+        .alias("n01"),
+        F.count(F.when((F.col("a") == 0) & (F.col("b") == 0), 1))
+        .cast("double")
+        .alias("n00"),
+    )
+    n = F.col("n11") + F.col("n10") + F.col("n01") + F.col("n00")
+    po = (F.col("n11") + F.col("n00")) / n
+    pe = (
+        (F.col("n11") + F.col("n10")) * (F.col("n11") + F.col("n01"))
+        + (F.col("n01") + F.col("n00")) * (F.col("n10") + F.col("n00"))
+    ) / (n * n)
+    return cells.select(
+        n.cast("bigint").alias("n_total"),
+        F.round(po, 6).alias("p_observed"),
+        F.round(pe, 6).alias("p_chance"),
+        F.round((po - pe) / (F.lit(1.0) - pe), 6).alias("kappa"),
+    )

@@ -14,6 +14,13 @@ Conventions (required for oracle hash-matching):
   promotes int sums to HUGEINT, Spark to LONG);
 - timestamps that cross the boundary are compared as epoch BIGINT.
 
+The queries live in domain modules (``relational``, ``analytics``,
+``credit``, ``governance``, ``text``, ``similarity``, ``ml``,
+``connectors``, ``streaming``); this facade imports them only to
+register them. ``queries()`` and ``oracle_sql()`` list
+``_DRIVER_PRIORITY`` first, then every other name in sorted order, so
+neither registration nor import order is part of the driver contract.
+
 Scale notes are attached per query: the fixture runs at sf0.01/0.1 but
 each plan is written for the 100 TB shape (broadcast dims, partial
 aggs, no driver-side collection, pushdown-friendly predicates).
@@ -21,37 +28,17 @@ aggs, no driver-side collection, pushdown-friendly predicates).
 
 from __future__ import annotations
 
-from ._core import (  # noqa: F401
-    REGISTRY,
-    QuerySpec,
-    _DRIVER_PRIORITY,
-    _ordered_names,
-    oracle_sql,
-    queries,
-    register,
-    t,
-)
+from ._core import REGISTRY, QuerySpec, _DRIVER_PRIORITY, oracle_sql, queries  # noqa: F401
 
-# Importing each segment registers its queries as a side effect.
-# Registration ORDER is part of the driver contract (the unprioritized
-# tail of queries() follows registration order) — do NOT reorder these
-# imports. Star-imports re-export the query callables so existing
-# ``registry.<query_name>`` references keep working.
-from ._q01_relational import *  # noqa: F401,F403,E402
-from ._q02_extension import *  # noqa: F401,F403,E402
-from ._q03_tpch_shapes import *  # noqa: F401,F403,E402
-from ._q04_evaluators_slots import *  # noqa: F401,F403,E402
-from ._q05_io_text_slots import *  # noqa: F401,F403,E402
-from ._q06_credit_stats import *  # noqa: F401,F403,E402
-from ._q07_governance_analytics import *  # noqa: F401,F403,E402
-from ._q08_sequences_session2 import *  # noqa: F401,F403,E402
-from ._q09_round3_ops import *  # noqa: F401,F403,E402
-from ._q10_round4_ops import *  # noqa: F401,F403,E402
-from ._q11_round4_session3 import *  # noqa: F401,F403,E402
-from ._q12_round4_session4 import *  # noqa: F401,F403,E402
-from ._q13_round4_session5 import *  # noqa: F401,F403,E402
-from ._q14_round4_session5b import *  # noqa: F401,F403,E402
-from ._q15_round4_session6 import *  # noqa: F401,F403,E402
-from ._q16_round5 import *  # noqa: F401,F403,E402
-from ._q17_round6 import *  # noqa: F401,F403,E402
-from ._q18_round6b import *  # noqa: F401,F403,E402
+# Importing a domain module registers its queries.
+from . import (  # noqa: F401
+    analytics,
+    connectors,
+    credit,
+    governance,
+    ml,
+    relational,
+    similarity,
+    streaming,
+    text,
+)

@@ -1,0 +1,5297 @@
+"""Text queries: dedup, text analysis, text prep, tokenizer training,
+LLM-pipeline training-data shaping and multimodal batches.
+"""
+
+from __future__ import annotations
+
+import math
+import math as _math
+
+from ..operators import dedup as D
+from ..operators import multimodal as M
+from ..operators import text as X
+from ..operators.multimodal import decode_image_stats, synth_image_payloads
+from ..operators.text import merge_pair, pair_counts
+from ..pinning import local_rows, release_local_checkpoints
+from ._core import DataFrame, F, SparkSession, W, register, t
+
+
+@register(
+    "exact_dedup_docs",
+    """
+    SELECT sha256(text)         AS content_sha,
+           min(doc_id)          AS keep_id,
+           count(*)             AS n_copies
+    FROM documents
+    GROUP BY sha256(text)
+    """,
+    "Exact content dedup: groupBy sha256(content) keeping min id — the "
+    "shuffle moves 32-byte hashes, not documents. Idempotent (output "
+    "row count == distinct contents).",
+    tags=("dedup",),
+)
+def exact_dedup_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return D.content_hash_dedup(t(spark, sf_dir, "documents"), "text", "doc_id")
+
+
+@register(
+    "text_stats",
+    """
+    SELECT doc_id,
+           len(list_filter(string_split(text, ' '), x -> x <> ''))  AS n_tokens,
+           strlen(text)                                             AS n_chars_measured,
+           round(list_sum(list_transform(list_filter(string_split(text, ' '), x -> x <> ''),
+                                         x -> strlen(x)))
+                 / greatest(len(list_filter(string_split(text, ' '), x -> x <> '')), 1), 6)
+                                                                    AS avg_token_len,
+           round(len(list_filter(string_split(text, ' '),
+                     x -> list_contains(['the','a','of','and','to','in','is','that','for','it'], lower(x))))
+                 / CAST(greatest(len(list_filter(string_split(text, ' '), x -> x <> '')), 1) AS DOUBLE), 6)
+                                                                    AS stopword_ratio
+    FROM documents
+    """,
+    "Per-document quality stats (token count, byte length, avg token "
+    "length, function-word ratio) — all native array expressions, "
+    "map-side only, no shuffle at any scale.",
+    tags=("text",),
+)
+def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = t(spark, sf_dir, "documents")
+    toks = X.tokens("text")
+    return docs.select(
+        "doc_id",
+        X.token_count("text").alias("n_tokens"),
+        F.length("text").cast("long").alias("n_chars_measured"),
+        F.round(
+            F.aggregate(toks, F.lit(0).cast("long"), lambda a, x: a + F.length(x))
+            / F.greatest(F.size(toks), F.lit(1)),
+            6,
+        ).alias("avg_token_len"),
+        F.round(X.stopword_ratio("text"), 6).alias("stopword_ratio"),
+    )
+
+
+@register(
+    "lang_id_heuristic",
+    """
+    SELECT doc_id, lang AS labeled_lang,
+           CASE WHEN len(list_filter(string_split(text, ' '),
+                         x -> list_contains(['the','a','of','and','to','in','is','that','for','it'], lower(x))))
+                     / CAST(greatest(len(list_filter(string_split(text, ' '), x -> x <> '')), 1) AS DOUBLE)
+                     >= 0.05
+                THEN 'en' ELSE 'unknown' END AS predicted_lang
+    FROM documents
+    """,
+    "Function-word language-ID heuristic (n-gram family): classify 'en' "
+    "when the English stopword ratio clears 5%. Broadcast word set, "
+    "map-side evaluation.",
+    tags=("text",),
+)
+def lang_id_heuristic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return t(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.col("lang").alias("labeled_lang"),
+        X.lang_id("text").alias("predicted_lang"),
+    )
+
+
+@register(
+    "regex_token_count",
+    """
+    SELECT doc_id,
+           len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS n_regex_tokens
+    FROM documents
+    """,
+    "BPE-ish token counting: maximal alnum runs via regexp — the "
+    "whitespace-agnostic token-count estimator for budget accounting.",
+    tags=("text",),
+)
+def regex_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return t(spark, sf_dir, "documents").select(
+        "doc_id", X.regex_token_count("text").alias("n_regex_tokens")
+    )
+
+
+@register(
+    "doc_fingerprint",
+    """
+    WITH toks AS (
+        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk, text
+        FROM documents
+    )
+    SELECT doc_id,
+           substr(sha256(text), 1, 16) AS content_fp,
+           CASE WHEN len(tk) > 0 THEN list_min(list_transform(
+               generate_series(1, greatest(len(tk) - 4, 1)),
+               i -> substr(sha256(array_to_string(tk[i:i+4], ' ')), 1, 16)
+           )) END AS min_shingle_fp
+    FROM toks
+    """,
+    "Document fingerprinting: whole-content sha256 prefix + rolling "
+    "min-shingle fingerprint (1-permutation MinHash over word "
+    "5-shingles, sha256-based so it is engine-portable).",
+    tags=("text", "dedup"),
+)
+def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = t(spark, sf_dir, "documents")
+    # Widen the one-split scan: both fingerprints are CPU-heavy
+    # per-row projections (sha256 + 5-shingle min-hash) that would
+    # otherwise run single-core (guide §2.5; identity at scale).
+    return X.widen_to_parallelism(docs.select("doc_id", "text")).select(
+        "doc_id",
+        X.content_fingerprint("text").alias("content_fp"),
+        X.min_shingle_fingerprint("text", 5).alias("min_shingle_fp"),
+    )
+
+
+@register(
+    "ngram_jaccard_pairs",
+    """
+    WITH sh AS (
+        SELECT doc_id, source,
+               CASE WHEN len(list_filter(string_split(text,' '), x -> x <> '')) > 0
+                    THEN list_distinct(list_transform(
+                   generate_series(1, greatest(len(list_filter(string_split(text,' '), x -> x <> '')) - 2, 1)),
+                   i -> array_to_string((list_filter(string_split(text,' '), x -> x <> ''))[i:i+2], ' ')
+               )) ELSE [] END AS sh3
+        FROM documents
+        WHERE len(list_filter(string_split(text,' '), x -> x <> '')) > 0
+    )
+    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+           round(CAST(len(list_intersect(a.sh3, b.sh3)) AS DOUBLE)
+                 / greatest(len(list_distinct(a.sh3 || b.sh3)), 1), 6) AS jaccard
+    FROM sh a JOIN sh b
+      ON a.source = b.source AND a.doc_id < b.doc_id
+    """,
+    "Exact n-gram (3-shingle) Jaccard similarity for all same-source "
+    "pairs — the verification stage after LSH candidate generation. "
+    "Blocking on `source` keeps the pair count linear-ish; at 100 TB "
+    "the blocking key is the LSH band bucket instead.",
+    tags=("text", "dedup"),
+)
+def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Set-similarity join, MapReduce shape: explode shingles, equi-join
+    # on (source, shingle) to count intersections, then derive
+    # |A∪B| = |A|+|B|-|A∩B|. Pairs never materialize shingle arrays —
+    # per-pair cost is O(shared shingles), not O(|A|+|B|), and the work
+    # is one hash-shuffle on the shingle key. ~8× faster than the
+    # naive pair×array_intersect plan at sf0.1 and the only shape that
+    # survives 100× scale. Zero-overlap pairs are restored by a
+    # right-padded join against the cheap (id_a, id_b) pair frame.
+    docs = t(spark, sf_dir, "documents")
+    # Widen the one-split fixture scan before the shingle pass — the
+    # self-join below evaluates this subtree twice, and each copy
+    # would otherwise shingle the whole corpus on a single core
+    # (guide §2.5; see operators.text.widen_to_parallelism).
+    sh = X.widen_to_parallelism(
+        docs.select("doc_id", "source", "text")
+    ).select(
+        "doc_id", "source", X.shingles("text", 3).alias("sh3")
+    ).select(
+        "doc_id", "source", F.size("sh3").alias("n_sh"), F.explode("sh3").alias("s")
+    )
+    sizes = sh.groupBy("doc_id", "source").agg(F.first("n_sh").alias("n_sh"))
+    a, b = sh.alias("a"), sh.alias("b")
+    inter = (
+        a.join(
+            b,
+            (F.col("a.source") == F.col("b.source"))
+            & (F.col("a.s") == F.col("b.s"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(
+            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
+        )
+        .agg(F.count(F.lit(1)).alias("n_inter"))
+    )
+    sa, sb = sizes.alias("sa"), sizes.alias("sb")
+    pairs = (
+        sa.join(
+            sb,
+            (F.col("sa.source") == F.col("sb.source"))
+            & (F.col("sa.doc_id") < F.col("sb.doc_id")),
+        )
+        .select(
+            F.col("sa.doc_id").alias("id_a"),
+            F.col("sb.doc_id").alias("id_b"),
+            (F.col("sa.n_sh") + F.col("sb.n_sh")).alias("n_total"),
+        )
+    )
+    return (
+        pairs.join(inter, ["id_a", "id_b"], "left")
+        .withColumn("n_inter", F.coalesce(F.col("n_inter"), F.lit(0)))
+        .select(
+            "id_a",
+            "id_b",
+            F.round(
+                F.col("n_inter")
+                / F.greatest(F.col("n_total") - F.col("n_inter"), F.lit(1)),
+                6,
+            ).alias("jaccard"),
+        )
+    )
+
+
+@register(
+    "minhash_lsh_dedup",
+    """
+    WITH toks AS (
+        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
+        FROM documents
+    ), sh AS (
+        SELECT doc_id,
+               list_distinct(list_transform(
+                   generate_series(1, greatest(len(ws) - 2, 1)),
+                   i -> array_to_string(ws[i:i+2], ' '))) AS sh3
+        FROM toks WHERE len(ws) > 0
+    ), e AS (
+        SELECT doc_id, unnest(sh3) AS s FROM sh
+    ), sizes AS (
+        SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM e GROUP BY 1
+    ), inter AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+               CAST(count(*) AS BIGINT) AS nc
+        FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+    )
+    SELECT CAST(i.id_a AS BIGINT) AS id_a, CAST(i.id_b AS BIGINT) AS id_b
+    FROM inter i
+    JOIN sizes sa ON sa.doc_id = i.id_a
+    JOIN sizes sb ON sb.doc_id = i.id_b
+    WHERE 8 * i.nc > 3 * (sa.n + sb.n)  -- jaccard > 0.6, exact ints
+    ORDER BY id_a, id_b
+    """,
+    "Near-duplicate pairs via MinHashLSH (shingle → binary HashingTF "
+    "→ banded signature join), DRIVER-FALSIFIABLE (VERDICT r3 item "
+    "3): the emitted pair set must EQUAL the exact shingle-Jaccard "
+    "pair set at J > 0.6 (= distance threshold 0.4), which the oracle "
+    "computes O(n²)-exactly with an integer predicate (8·|A∩B| > "
+    "3·(|A|+|B|)). A missed true pair (banding recall) or a spurious "
+    "one (HashingTF bucket collision) each break the hash. Cost "
+    "scales with candidate collisions, never n²; P(miss | J=0.9) = "
+    "0.1^8 with 8 OR-ed hash tables.",
+    tags=("dedup",),
+)
+def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pairs = D.minhash_lsh_candidates(
+        t(spark, sf_dir, "documents"), "text", "doc_id",
+        k_shingle=3, jaccard_distance_threshold=0.4,
+    )
+    return pairs.select(
+        F.col("id_a").cast("bigint").alias("id_a"),
+        F.col("id_b").cast("bigint").alias("id_b"),
+    ).orderBy("id_a", "id_b")
+
+
+@register(
+    "simhash_dedup",
+    """
+    WITH toks AS (
+        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
+        FROM documents
+    ), sh AS (
+        SELECT doc_id,
+               list_distinct(list_transform(
+                   generate_series(1, greatest(len(ws) - 2, 1)),
+                   i -> array_to_string(ws[i:i+2], ' '))) AS sh3
+        FROM toks WHERE len(ws) > 0
+    ), e AS (
+        SELECT doc_id, unnest(sh3) AS s FROM sh
+    ), sizes AS (
+        SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM e GROUP BY 1
+    ), inter AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+               CAST(count(*) AS BIGINT) AS nc
+        FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+    )
+    SELECT CAST(i.id_a AS BIGINT) AS id_a, CAST(i.id_b AS BIGINT) AS id_b,
+           CAST((i.nc * 1000000) // (sa.n + sb.n - i.nc) AS BIGINT)
+               AS jaccard_millionths,
+           TRUE AS ham_le_9, TRUE AS ctrl_median_ham_ge_12
+    FROM inter i
+    JOIN sizes sa ON sa.doc_id = i.id_a
+    JOIN sizes sb ON sb.doc_id = i.id_b
+    WHERE 10 * i.nc >= 9 * (sa.n + sb.n - i.nc)  -- jaccard >= 0.9, exact ints
+    ORDER BY id_a, id_b
+    """,
+    "SimHash near-dup signatures (64-bit per-token xxhash64 bit votes, "
+    "all native array expressions — operators/dedup.simhash64), "
+    "DRIVER-FALSIFIABLE (VERDICT r3 item 3, the bound-boolean "
+    "pattern): for the exact 3-shingle-Jaccard >= 0.9 pair set — "
+    "which the oracle computes O(n^2)-exactly with integer "
+    "arithmetic — the emitted booleans assert the SimHash locality "
+    "contract: near-dup pairs hash within Hamming distance 9 "
+    "(measured max 7 at sf0.001, 5 at sf0.01), while a negative "
+    "control of adjacent-id dissimilar pairs (doc_id < 64) keeps "
+    "median Hamming >= 12 (measured 17-18). A degenerate signature "
+    "(e.g. all bits voting one way, or seed collapse) flips either "
+    "boolean and breaks the driver hash. The shingle equi-join is "
+    "the same MapReduce set-similarity shape as "
+    "minhash_native_dedup; signatures shuffle as 8-byte longs.",
+    tags=("dedup",),
+)
+def simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = t(spark, sf_dir, "documents")
+    # Exact J >= 0.9 pair set via the LOSSLESS PPJoin prefix filter
+    # (same kernel as prefix_jaccard_threshold_join, rarest-first
+    # shingle order): at t=0.9 only each doc's rarest ~10% of
+    # shingles generate candidates, so the candidate join scales with
+    # true near-dups, never the corpus. with_counts keeps similarity
+    # in exact-integer space.
+    cand = D.prefix_filtered_jaccard_join(
+        docs, "doc_id", "text", k=3, threshold=0.9, with_counts=True
+    )
+    # Full-corpus signatures: simhash64 is a map-side projection (no
+    # shuffle), so computing it for every doc costs one scan and joins
+    # to the candidate pairs by id. (Restricting it to pair members
+    # via a semi-join was measured SLOWER — building the broadcast
+    # id-list forces the candidate subtree to evaluate twice. A
+    # localCheckpoint of the signature table was ALSO measured slower
+    # — r9 same-session A/B: 4.2-4.6 s without vs 4.9-5.4 s with; the
+    # eager materialization serializes a leg the scheduler otherwise
+    # overlaps with the candidate subtree.) Widened: the one-split
+    # scan would run the ~1.7 s interpreted vote fold single-core,
+    # twice (both join branches) — guide §2.5.
+    sig = X.widen_to_parallelism(docs.select("doc_id", "text")).select(
+        F.col("doc_id"), D.simhash64("text").alias("sh")
+    )
+    ham = (
+        cand.join(
+            sig.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a")),
+            "id_a",
+        )
+        .join(
+            sig.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b")),
+            "id_b",
+        )
+        .select(
+            F.col("id_a").cast("bigint").alias("id_a"),
+            F.col("id_b").cast("bigint").alias("id_b"),
+            F.expr("(n_inter * 1000000) div n_union")
+            .cast("bigint")
+            .alias("jaccard_millionths"),
+            (F.bit_count(F.expr("sh_a ^ sh_b")) <= 9).alias("ham_le_9"),
+        )
+    )
+    # Negative control: adjacent-id pairs in a bounded prefix are
+    # dissimilar; their median signature distance must stay large.
+    ctrl_sig = docs.filter(F.col("doc_id") < 64).select(
+        F.col("doc_id"), D.simhash64("text").alias("sh")
+    )
+    ctrl = (
+        ctrl_sig.alias("ca")
+        .join(
+            ctrl_sig.alias("cb"),
+            F.col("cb.doc_id") == F.col("ca.doc_id") + 1,
+        )
+        .select(F.bit_count(F.expr("ca.sh ^ cb.sh")).alias("h"))
+        .agg(
+            (F.expr("percentile(h, 0.5)") >= 12).alias("ctrl_median_ham_ge_12")
+        )
+    )
+    return ham.crossJoin(F.broadcast(ctrl)).orderBy("id_a", "id_b")
+
+
+@register(
+    "multimodal_features",
+    """
+    SELECT doc_id,
+           'text/plain'                    AS media_type,
+           strlen(text)                    AS n_bytes,
+           substr(sha256(text), 1, 16)     AS sha256_prefix
+    FROM documents
+    """,
+    "Multimodal plumbing: BinaryType payload column + Arrow-batched "
+    "mapInPandas feature extraction (decode step stubbed — no codec "
+    "libs in the container; schema/batching/partitioning are real). "
+    "Oracle checks the deterministic scalar features.",
+    tags=("multimodal",),
+)
+def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = t(spark, sf_dir, "documents")
+    feats = M.extract_media_features(M.attach_binary_payload(docs))
+    return feats.select("doc_id", "media_type", "n_bytes", "sha256_prefix")
+
+
+@register(
+    "tfidf_top_terms",
+    """
+    WITH tok AS (
+        SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS term
+        FROM documents
+    ),
+    tf AS (
+        SELECT doc_id, term, count(*) AS tf FROM tok GROUP BY doc_id, term
+    ),
+    df AS (
+        SELECT term, count(DISTINCT doc_id) AS df FROM tok GROUP BY term
+    ),
+    n AS (SELECT count(*) AS n_docs FROM documents),
+    scored AS (
+        SELECT tf.doc_id, tf.term,
+               tf.tf * (ln((n.n_docs + 1.0) / (df.df + 1.0)) + 1.0) AS score
+        FROM tf JOIN df USING (term) CROSS JOIN n
+    )
+    SELECT doc_id, term, round(score, 6) AS score, rk FROM (
+        SELECT doc_id, term, score,
+               row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS rk
+        FROM scored
+    ) WHERE rk <= 3
+    """,
+    "Native TF-IDF (smoothed idf = ln((N+1)/(df+1))+1, sklearn "
+    "convention) with top-3 terms per document — explode + two hash "
+    "aggs + broadcast of the tiny df table; fully SQL-expressible so "
+    "the oracle checks it exactly (unlike HashingTF, whose buckets are "
+    "engine-specific).",
+    tags=("text",),
+)
+def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = t(spark, sf_dir, "documents")
+    tok = docs.select(
+        "doc_id", F.explode(X.tokens("text")).alias("term")
+    )
+    tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
+    df_ = tok.groupBy("term").agg(F.countDistinct("doc_id").alias("df"))
+    n_docs = docs.count()  # scalar; broadcast as literal
+    scored = tf.join(F.broadcast(df_), "term").select(
+        "doc_id",
+        "term",
+        (
+            F.col("tf")
+            * (F.log((F.lit(n_docs) + 1.0) / (F.col("df") + 1.0)) + 1.0)
+        ).alias("score"),
+    )
+    w = W.partitionBy("doc_id").orderBy(F.desc("score"), F.asc("term"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= 3)
+        .select("doc_id", "term", F.round("score", 6).alias("score"), "rk")
+    )
+
+
+@register(
+    "minhash_native_dedup",
+    """
+    WITH toks AS (
+        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
+        FROM documents
+    ), sh AS (
+        SELECT doc_id,
+               list_distinct(list_transform(
+                   generate_series(1, greatest(len(ws) - 2, 1)),
+                   i -> array_to_string(ws[i:i+2], ' '))) AS sh3
+        FROM toks WHERE len(ws) > 0
+    ), e AS (
+        SELECT doc_id, unnest(sh3) AS s FROM sh
+    ), sizes AS (
+        SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM e GROUP BY 1
+    ), inter AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+               CAST(count(*) AS BIGINT) AS nc
+        FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+    )
+    SELECT CAST(i.id_a AS BIGINT) AS id_a, CAST(i.id_b AS BIGINT) AS id_b,
+           CAST((i.nc * 1000000) // (sa.n + sb.n - i.nc) AS BIGINT)
+               AS jaccard_millionths
+    FROM inter i
+    JOIN sizes sa ON sa.doc_id = i.id_a
+    JOIN sizes sb ON sb.doc_id = i.id_b
+    WHERE 3 * i.nc >= sa.n + sb.n  -- jaccard >= 0.5, exact ints
+    ORDER BY id_a, id_b
+    """,
+    "Banded MinHash LSH from native expressions (xxhash64 signature "
+    "minima, band buckets, exact-Jaccard verification), "
+    "DRIVER-FALSIFIABLE (VERDICT r3 item 3): the emitted pair set — "
+    "with similarity as an exact integer rational (|A∩B|·1e6 div "
+    "|A∪B|) — must EQUAL the exact shingle-Jaccard pair set at "
+    "J >= 0.5, which the oracle computes O(n²)-exactly. A banding "
+    "recall miss (P = (1-J²)^8 per pair; this caught round 4's "
+    "seed-capture bug where all 16 hash functions collapsed to one) "
+    "or a spurious pair each break the hash. 2-4x faster than the "
+    "MLlib VectorUDT path at sf0.1; candidates scale with true "
+    "collisions, never n².",
+    tags=("dedup",),
+)
+def minhash_native_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    counts = D.minhash_native_candidates(
+        t(spark, sf_dir, "documents"), "text", "doc_id",
+        k_shingle=3, n_hashes=16, bands=8, with_counts=True,
+    )
+    return (
+        counts.filter(3 * F.col("nc") >= F.col("n_a") + F.col("n_b"))
+        .select(
+            F.col("id_a").cast("bigint").alias("id_a"),
+            F.col("id_b").cast("bigint").alias("id_b"),
+            F.expr("(nc * 1000000) div (n_a + n_b - nc)")
+            .cast("bigint")
+            .alias("jaccard_millionths"),
+        )
+        .orderBy("id_a", "id_b")
+    )
+
+
+@register(
+    "edit_distance_pairs",
+    """
+    SELECT a.p_partkey AS key_a, b.p_partkey AS key_b,
+           CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS edit_dist
+    FROM part a JOIN part b
+      ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
+    WHERE a.p_partkey % 7 = 0 AND b.p_partkey % 7 = 0
+    """,
+    "Levenshtein edit distance between same-brand part names (blocked "
+    "+ sampled self-join) — the string-similarity primitive for "
+    "fuzzy dedup of short fields.",
+    tags=("text", "scalar"),
+)
+def edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    p = t(spark, sf_dir, "part").filter(F.col("p_partkey") % 7 == 0)
+    a, b = p.alias("a"), p.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.p_brand") == F.col("b.p_brand"))
+            & (F.col("a.p_partkey") < F.col("b.p_partkey")),
+        )
+        .select(
+            F.col("a.p_partkey").alias("key_a"),
+            F.col("b.p_partkey").alias("key_b"),
+            F.levenshtein(F.col("a.p_name"), F.col("b.p_name"))
+            .cast("long")
+            .alias("edit_dist"),
+        )
+    )
+
+
+@register(
+    "array_lambda_functions",
+    """
+    WITH t AS (
+        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
+        FROM documents
+    )
+    SELECT doc_id,
+           CAST(len(list_filter(toks, x -> strlen(x) > 5)) AS BIGINT)        AS n_long_tokens,
+           array_to_string(list_transform(toks[1:3], x -> upper(x)), ' ')    AS head_upper,
+           CAST(list_sum(list_transform(toks, x -> strlen(x))) AS BIGINT)    AS total_chars,
+           len(toks) > 0 AND list_bool_and(list_transform(toks, x -> strlen(x) > 0)) AS all_nonempty
+    FROM t
+    """,
+    "Higher-order array functions (filter / transform / slice / "
+    "aggregate / forall) — the lambda surface over array columns, all "
+    "JVM-side.",
+    tags=("scalar", "text"),
+)
+def array_lambda_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = t(spark, sf_dir, "documents")
+    toks = X.tokens("text")
+    return docs.select(
+        "doc_id",
+        F.size(F.filter(toks, lambda x: F.length(x) > 5)).cast("long").alias(
+            "n_long_tokens"
+        ),
+        F.array_join(
+            F.transform(F.slice(toks, 1, 3), lambda x: F.upper(x)), " "
+        ).alias("head_upper"),
+        F.aggregate(toks, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x))
+        .alias("total_chars"),
+        (
+            (F.size(toks) > 0)
+            & F.forall(toks, lambda x: F.length(x) > 0)
+        ).alias("all_nonempty"),
+    )
+
+
+@register(
+    "regexp_functions",
+    """
+    SELECT p_partkey,
+           regexp_extract(p_brand, '([0-9]+)', 1)            AS brand_num,
+           regexp_replace(p_name, '[aeiou]', '_', 'g')       AS name_devoweled,
+           regexp_matches(p_type, '^[A-Z]+ ')                AS type_starts_upper_word,
+           CAST(len(regexp_extract_all(p_name, '[a-z]+')) AS BIGINT) AS n_word_runs
+    FROM part
+    """,
+    "Regexp surface: extract (group), replace, match-test, "
+    "extract-all count — identical RE2-compatible patterns on both "
+    "engines.",
+    tags=("scalar", "text"),
+)
+def regexp_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    p = t(spark, sf_dir, "part")
+    return p.select(
+        "p_partkey",
+        F.regexp_extract("p_brand", r"([0-9]+)", 1).alias("brand_num"),
+        F.regexp_replace("p_name", r"[aeiou]", "_").alias("name_devoweled"),
+        F.col("p_type").rlike(r"^[A-Z]+ ").alias("type_starts_upper_word"),
+        F.regexp_count(F.col("p_name"), F.lit(r"[a-z]+")).cast("long").alias(
+            "n_word_runs"
+        ),
+    )
+
+
+@register(
+    "lateral_explode_tokens",
+    """
+    SELECT doc_id, unnest(list_filter(string_split(text, ' '), x -> x <> '')) AS token
+    FROM documents
+    WHERE doc_id % 50 = 0
+    """,
+    "LATERAL VIEW explode (generator in SQL): one row per token — the "
+    "normalize-to-long-form primitive behind every text aggregate.",
+    tags=("text", "sql"),
+)
+def lateral_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.sql(
+        """
+        SELECT doc_id, token
+        FROM {documents}
+        LATERAL VIEW explode(filter(split(text, ' '), x -> x != '')) t AS token
+        WHERE doc_id % 50 = 0
+        """,
+        documents=t(spark, sf_dir, "documents"),
+    )
+
+
+@register(
+    "neardup_clusters",
+    """
+    WITH toks AS (
+        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
+        FROM documents
+    ), sh AS (
+        SELECT doc_id,
+               list_distinct(list_transform(
+                   generate_series(1, greatest(len(ws) - 2, 1)),
+                   i -> array_to_string(ws[i:i+2], ' '))) AS sh3
+        FROM toks WHERE len(ws) > 0
+    ), e AS (
+        SELECT doc_id, unnest(sh3) AS s FROM sh
+    ), sizes AS (
+        SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM e GROUP BY 1
+    ), inter AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+               CAST(count(*) AS BIGINT) AS nc
+        FROM e a JOIN e b ON a.s = b.s AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+    ), pairs AS (
+        SELECT i.id_a, i.id_b FROM inter i
+        JOIN sizes sa ON sa.doc_id = i.id_a
+        JOIN sizes sb ON sb.doc_id = i.id_b
+        WHERE 3 * i.nc >= sa.n + sb.n  -- jaccard >= 0.5, exact ints
+    ), edges AS (
+        SELECT id_a AS src, id_b AS dst FROM pairs
+        UNION ALL SELECT id_b, id_a FROM pairs
+    ), labels AS (
+        WITH RECURSIVE reach(a, b) AS (
+            SELECT src, src FROM edges
+            UNION
+            SELECT r.a, e2.dst FROM reach r JOIN edges e2 ON e2.src = r.b
+        )
+        SELECT a AS doc_id, min(b) AS cluster FROM reach GROUP BY 1
+    )
+    SELECT CAST(doc_id AS BIGINT) AS doc_id, CAST(cluster AS BIGINT) AS cluster
+    FROM labels ORDER BY doc_id
+    """,
+    "Near-dup CLUSTER resolution, DRIVER-FALSIFIABLE (VERDICT r3 item "
+    "3): native-MinHash candidate pairs (J >= 0.5, exact integer "
+    "predicate) -> transitive closure via iterative min-label "
+    "propagation (join+groupBy per round, converges in graph-diameter "
+    "steps). The emitted (doc_id, cluster=min member id) labels must "
+    "EQUAL the recursive-CTE closure over the exact O(n²) pair set — "
+    "an LSH recall miss that changes any component, or a propagation "
+    "bug, breaks the driver hash. The step that turns pairwise "
+    "similarity into an actual keep/drop decision.",
+    tags=("dedup", "iterative"),
+)
+def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    counts = D.minhash_native_candidates(
+        t(spark, sf_dir, "documents"), "text", "doc_id",
+        k_shingle=3, n_hashes=16, bands=8, with_counts=True,
+    )
+    pairs = counts.filter(3 * F.col("nc") >= F.col("n_a") + F.col("n_b")).select(
+        "id_a", "id_b"
+    )
+    labels = D.connected_components(pairs)
+    return labels.select(
+        F.col("node_id").cast("bigint").alias("doc_id"),
+        F.col("cluster_id").cast("bigint").alias("cluster"),
+    ).orderBy("doc_id")
+
+
+# ---------------------------------------------------------------------
+# Training-data text-prep tier (operators/textprep.py): the stages an
+# LLM data pipeline runs between dedup and tokenization — chunking,
+# context packing, PII redaction, repetition scoring, weighted
+# sampling. All native expressions; parity notes in the module doc.
+# ---------------------------------------------------------------------
+@register(
+    "doc_chunking",
+    """
+    WITH d AS (
+      SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
+      FROM documents
+    ), s AS (
+      SELECT doc_id, toks,
+             unnest(generate_series(1, greatest(len(toks), 1), 24)) AS start
+      FROM d WHERE len(toks) > 0
+    )
+    SELECT doc_id,
+           CAST((start - 1) // 24 AS BIGINT)                        AS chunk_idx,
+           CAST(len(list_slice(toks, start, start + 31)) AS BIGINT) AS n_chunk_tokens,
+           array_to_string(list_slice(toks, start, start + 31), ' ') AS chunk_text
+    FROM s
+    """,
+    "Sliding-window chunking (32-token window, stride 24): the "
+    "standard chunker feeding embedding / pretraining pipelines, with "
+    "overlap so no span is split across a boundary unseen. Entirely "
+    "map-side (tokens -> start sequence -> posexplode -> slice), no "
+    "shuffle; the oracle hash covers the chunk TEXT, so slice "
+    "boundaries and token filtering are value-checked, not just "
+    "counted. Scale: explode multiplies rows ~n_tokens/stride inside "
+    "each task; downstream consumers repartition as needed.",
+    tags=("text", "chunking"),
+)
+def doc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.textprep import chunk_documents
+
+    return chunk_documents(t(spark, sf_dir, "documents"), window=32, stride=24)
+
+
+@register(
+    "context_packing",
+    """
+    WITH d AS (
+      SELECT source, doc_id,
+             CAST(len(list_filter(string_split(text, ' '), x -> x <> ''))
+                  AS BIGINT) AS n_tok
+      FROM documents
+    ), o AS (
+      SELECT source, doc_id, n_tok,
+             sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id
+                              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+               - n_tok AS tokens_before
+      FROM d
+    )
+    SELECT source, CAST(floor(tokens_before / 256.0) AS BIGINT) AS bin,
+           count(*)                      AS n_docs,
+           CAST(sum(n_tok) AS BIGINT)    AS bin_tokens,
+           min(doc_id)                   AS first_doc,
+           max(doc_id)                   AS last_doc
+    FROM o GROUP BY source, bin
+    """,
+    "Concat-then-chunk context packing: within each source shard, "
+    "docs in doc_id order are assigned to the 256-token context bin "
+    "where their first token lands (floor(tokens_before/budget)) — "
+    "GPT-style packing after EOS-joined concatenation. The running "
+    "offset is a window sum PARTITIONED by the shard key, so packing "
+    "parallelizes across shards — never the global single-task sort "
+    "naive sequential packing implies.",
+    tags=("text", "packing", "window"),
+)
+def context_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.textprep import pack_documents
+
+    return pack_documents(t(spark, sf_dir, "documents"), budget=256)
+
+
+@register(
+    "pii_redaction",
+    """
+    WITH d AS (
+      SELECT doc_id,
+             'contact u' || CAST(doc_id AS VARCHAR) || '@example.com or +1-555-'
+               || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0') || '-'
+               || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') || ' ' || text
+               AS text
+      FROM documents
+    ), r AS (
+      SELECT doc_id,
+             CAST(len(regexp_extract_all(
+               text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}'))
+               AS BIGINT) AS n_emails,
+             regexp_replace(text,
+               '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}',
+               '[EMAIL]', 'g') AS masked
+      FROM d
+    )
+    SELECT doc_id, n_emails,
+           CAST(len(regexp_extract_all(
+             masked, '\\+[0-9]{1,2}-[0-9]{3}-[0-9]{3,4}-[0-9]{4}'))
+             AS BIGINT) AS n_phones,
+           substring(sha256(regexp_replace(masked,
+             '\\+[0-9]{1,2}-[0-9]{3}-[0-9]{3,4}-[0-9]{4}',
+             '[PHONE]', 'g')), 1, 16) AS redacted_fp
+    FROM r
+    """,
+    "PII redaction: mask emails then phone numbers with typed "
+    "placeholders and count redactions. The fixture corpus carries no "
+    "PII, so both engines INJECT identical synthetic contact lines "
+    "(derived from doc_id) before redacting — the oracle hash then "
+    "proves pattern semantics AND replacement output agree byte-for-"
+    "byte (redacted_fp = sha256 prefix of the masked text). Patterns "
+    "are RE2-simple (no backrefs/lookaround) so java.util.regex and "
+    "RE2-family engines agree; Spark regexp_replace is global by "
+    "default, DuckDB needs the explicit 'g' flag. Map-only stage.",
+    tags=("text", "pii"),
+)
+def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.textprep import redact_pii
+
+    injected = t(spark, sf_dir, "documents").select(
+        "doc_id",
+        F.concat(
+            F.lit("contact u"),
+            F.col("doc_id").cast("string"),
+            F.lit("@example.com or +1-555-"),
+            F.lpad((F.col("doc_id") % 1000).cast("string"), 3, "0"),
+            F.lit("-"),
+            F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
+            F.lit(" "),
+            F.col("text"),
+        ).alias("text"),
+    )
+    red = redact_pii(injected, "text")
+    return red.select(
+        "doc_id",
+        "n_emails",
+        "n_phones",
+        F.substring(F.sha2(F.col("text"), 256), 1, 16).alias("redacted_fp"),
+    )
+
+
+@register(
+    "repetition_stats",
+    """
+    WITH d AS (
+      SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
+      FROM documents
+    )
+    SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
+           CAST(floor(len(list_distinct(toks)) * 1.0 / len(toks) * 10000.0 + 0.5)
+                / 10000.0 AS DOUBLE) AS distinct_ratio,
+           CAST(floor(list_max(list_transform(list_distinct(toks),
+                  w -> len(list_filter(toks, x -> x = w)))) * 1.0 / len(toks)
+                  * 10000.0 + 0.5) / 10000.0 AS DOUBLE) AS top_token_frac
+    FROM d WHERE len(toks) > 0
+    """,
+    "Per-document repetition profile: distinct-token ratio + top-"
+    "token frequency share — the Gopher-style signals that catch "
+    "boilerplate and keyword stuffing. Higher-order array functions "
+    "per row (no explode+groupBy: repetition is a per-row property, "
+    "shuffling token rows to re-group by doc would be a self-"
+    "inflicted exchange). Ratios use the grid-stable floor(x*1e4+0.5)"
+    "/1e4 — IEEE-deterministic on both engines, immune to the round() "
+    "decimal-string-vs-binary trap.",
+    tags=("text", "quality"),
+)
+def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.textprep import repetition_stats as rep
+
+    return rep(t(spark, sf_dir, "documents"))
+
+
+@register(
+    "benchmark_decontamination",
+    """
+    WITH toks AS (
+        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
+        FROM documents
+    ), sh AS (
+        SELECT doc_id,
+               CASE WHEN len(tk) > 0 THEN list_distinct(list_transform(
+                   generate_series(1, greatest(len(tk) - 2, 1)),
+                   i -> array_to_string(tk[i:i+2], ' ')
+               )) ELSE [] END AS shl
+        FROM toks WHERE len(tk) > 0
+    ), bench AS (
+        SELECT DISTINCT unnest(shl) AS s FROM sh WHERE doc_id % 97 = 0
+    ), cand AS (
+        SELECT doc_id, unnest(shl) AS s FROM sh WHERE doc_id % 97 <> 0
+    )
+    SELECT c.doc_id,
+           CAST(count(*) AS BIGINT)   AS n_shingles,
+           CAST(count(b.s) AS BIGINT) AS n_contaminated,
+           floor(CAST(count(b.s) AS DOUBLE) / count(*) * 10000 + 0.5) / 10000
+                                      AS contamination_ratio,
+           CAST(100 * count(b.s) >= 10 * count(*) AS INT) AS is_contaminated
+    FROM cand c LEFT JOIN bench b ON c.s = b.s
+    GROUP BY c.doc_id
+    """,
+    "Benchmark decontamination (pre-training hygiene): per-candidate "
+    "overlap with the benchmark split's distinct 3-gram shingle set "
+    "(benchmark = doc_id % 97 == 0, a stand-in for an eval suite). "
+    "The benchmark side is small by nature, so its shingle set is "
+    "BROADCAST — the 100 TB candidate scan joins map-side and the "
+    "per-doc count partial-aggregates before the one ~1-row-per-doc "
+    "shuffle. Flag compares in integer space (100*hits >= 10*total); "
+    "ratio uses grid-stable floor(x*1e4+0.5)/1e4 — bit-identical "
+    "across engines.",
+    tags=("text", "textprep", "dedup"),
+)
+def benchmark_decontamination_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.textprep import benchmark_decontamination
+
+    docs = t(spark, sf_dir, "documents")
+    return benchmark_decontamination(
+        candidates=docs.filter(F.col("doc_id") % 97 != 0),
+        benchmark=docs.filter(F.col("doc_id") % 97 == 0),
+        text_col="text",
+        k=3,
+        tau_pct=10,
+    )
+
+
+@register(
+    "bm25_topk",
+    """
+    WITH toks AS (
+        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS tk
+        FROM documents
+    ), d AS (
+        SELECT doc_id, CAST(len(tk) AS BIGINT) AS dl,
+               CAST(len(list_filter(tk, x -> x = 'spark'))  AS BIGINT) AS tf1,
+               CAST(len(list_filter(tk, x -> x = 'hash'))   AS BIGINT) AS tf2,
+               CAST(len(list_filter(tk, x -> x = 'window')) AS BIGINT) AS tf3
+        FROM toks WHERE len(tk) > 0
+    ), g AS (
+        SELECT CAST(count(*) AS DOUBLE) AS n_docs,
+               avg(CAST(dl AS DOUBLE))  AS avgdl,
+               CAST(sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df1,
+               CAST(sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df2,
+               CAST(sum(CASE WHEN tf3 > 0 THEN 1 ELSE 0 END) AS DOUBLE) AS df3
+        FROM d
+    )
+    SELECT doc_id, dl AS n_tokens,
+           floor((
+               ln(1 + (n_docs - df1 + 0.5) / (df1 + 0.5))
+                 * (tf1 * 2.2) / (tf1 + 1.2 * (0.25 + 0.75 * dl / avgdl))
+             + ln(1 + (n_docs - df2 + 0.5) / (df2 + 0.5))
+                 * (tf2 * 2.2) / (tf2 + 1.2 * (0.25 + 0.75 * dl / avgdl))
+             + ln(1 + (n_docs - df3 + 0.5) / (df3 + 0.5))
+                 * (tf3 * 2.2) / (tf3 + 1.2 * (0.25 + 0.75 * dl / avgdl))
+           ) * 10000 + 0.5) / 10000 AS bm25
+    FROM d CROSS JOIN g
+    ORDER BY bm25 DESC, doc_id LIMIT 20
+    """,
+    "BM25 relevance scoring (k1=1.2, b=0.75) of every document "
+    "against the fixed query {spark, hash, window}, top-20. ONE "
+    "aggregation pass computes the global stats (N, avgdl, per-term "
+    "document frequencies); the 1-row result broadcasts back onto the "
+    "corpus scan, so scoring is map-side — corpus scanned twice, "
+    "shuffled never (the top-20 is a TakeOrdered, not a sort). "
+    "Deterministic order: grid-rounded score desc, then doc_id.",
+    tags=("text", "search"),
+)
+def bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.textprep import grid_round4
+
+    terms = ["spark", "hash", "window"]
+    k1, b = 1.2, 0.75
+    toks = X.tokens("text")
+
+    def term_freq(term: str):
+        # NB: F.filter treats a 2-arg lambda as (element, index) — the
+        # term must be captured by closure, not by a default argument.
+        return F.size(F.filter(toks, lambda x: x == F.lit(term))).cast("bigint")
+
+    d = (
+        t(spark, sf_dir, "documents")
+        .select(
+            "doc_id",
+            F.size(toks).alias("dl_i"),
+            *[term_freq(tm).alias(f"tf{i + 1}") for i, tm in enumerate(terms)],
+        )
+        .filter(F.col("dl_i") > 0)
+        .withColumn("dl", F.col("dl_i").cast("bigint"))
+        .drop("dl_i")
+    )
+    g = d.agg(
+        F.count(F.lit(1)).cast("double").alias("n_docs"),
+        F.avg(F.col("dl").cast("double")).alias("avgdl"),
+        *[
+            F.sum(F.when(F.col(f"tf{i + 1}") > 0, 1).otherwise(0))
+            .cast("double")
+            .alias(f"df{i + 1}")
+            for i in range(len(terms))
+        ],
+    )
+    scored = d.crossJoin(F.broadcast(g))
+    norm = F.lit(k1) * (F.lit(1 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
+    score = None
+    for i in range(len(terms)):
+        tf, df = F.col(f"tf{i + 1}"), F.col(f"df{i + 1}")
+        idf = F.log(F.lit(1.0) + (F.col("n_docs") - df + 0.5) / (df + 0.5))
+        term_score = idf * (tf * F.lit(k1 + 1)) / (tf + norm)
+        score = term_score if score is None else score + term_score
+    return (
+        scored.select(
+            "doc_id",
+            F.col("dl").alias("n_tokens"),
+            grid_round4(score).alias("bm25"),
+        )
+        .orderBy(F.desc("bm25"), "doc_id")
+        .limit(20)
+    )
+
+
+@register(
+    "vocab_prune_topk",
+    """
+    WITH tok AS (
+        SELECT doc_id,
+               unnest(l)                     AS token,
+               unnest(range(1, len(l) + 1)) AS pos
+        FROM (SELECT doc_id,
+                     list_filter(string_split(text, ' '), x -> x <> '') AS l
+              FROM documents)
+    ),
+    top AS (
+        SELECT token FROM (
+            SELECT token, count(DISTINCT doc_id) AS df
+            FROM tok GROUP BY token
+        ) ORDER BY df DESC, token LIMIT 20
+    )
+    SELECT doc_id,
+           CAST(count(*) AS BIGINT)             AS n_kept,
+           string_agg(token, ' ' ORDER BY pos)  AS pruned_text
+    FROM tok ANTI JOIN top USING (token)
+    GROUP BY doc_id
+    """,
+    "Corpus-wide vocabulary pruning (training-data prep): find the 20 "
+    "highest-document-frequency tokens, then strip them from every "
+    "document, preserving original token order. Two shuffles total — "
+    "token DF aggregation, then doc reassembly — and the stoplist "
+    "itself is 20 rows, BROADCAST to make the strip map-side. "
+    "Deterministic top-k tiebreak (df DESC, token ASC) so both "
+    "engines pick the identical stoplist. At 100 TB the DF table is "
+    "vocabulary-sized (millions of rows, not corpus-sized) and the "
+    "reassembly groupBy carries only surviving (pos, token) pairs.",
+    tags=("text", "textprep"),
+)
+def vocab_prune_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = t(spark, sf_dir, "documents")
+    tok = docs.select(
+        "doc_id",
+        F.posexplode(F.expr("filter(split(text, ' '), x -> x != '')")).alias(
+            "pos", "token"
+        ),
+    # posexplode is 0-based; the oracle's generate_series is 1-based —
+    # order (not the index value) is all that must agree, and pos is
+    # not emitted.
+    )
+    top = (
+        tok.groupBy("token")
+        .agg(F.countDistinct("doc_id").alias("df"))
+        .orderBy(F.desc("df"), F.asc("token"))
+        .limit(20)
+        .select("token")
+    )
+    pruned = tok.join(F.broadcast(top), "token", "left_anti")
+    return pruned.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_kept"),
+        F.expr(
+            "concat_ws(' ', transform(array_sort(collect_list(struct(pos, token))),"
+            " s -> s.token))"
+        ).alias("pruned_text"),
+    )
+
+
+@register(
+    "skipgram_cooccurrence",
+    """
+    WITH toks AS (
+      SELECT d.doc_id, u.tok, u.pos
+      FROM (SELECT doc_id,
+                   list_filter(string_split(lower(text), ' '), x -> x <> '') AS ls
+            FROM documents) d,
+           LATERAL (SELECT unnest(ls) AS tok,
+                           generate_subscripts(ls, 1) AS pos) u
+    )
+    SELECT a.tok AS tok_a, b.tok AS tok_b, count(*) AS n_cooc
+    FROM toks a
+    JOIN toks b ON a.doc_id = b.doc_id AND b.pos - a.pos BETWEEN 1 AND 3
+    GROUP BY 1, 2
+    HAVING count(*) >= 5
+    """,
+    "Skip-gram co-occurrence counts (window 3, forward-only) — the "
+    "word2vec/GloVe training-pair extraction. Spark formulation avoids "
+    "the range self-join entirely: each token row is replicated to its "
+    "3 offsets (explode over a constant sequence) and matched with a "
+    "pure two-key EQUI-join on (doc_id, pos+k = pos'), so the join "
+    "hash-partitions perfectly and never evaluates a range predicate "
+    "against a replicated build side. Count aggregation is partial "
+    "(map-side) before its single shuffle on the (tok_a, tok_b) key. "
+    "At 100 TB the token table is the corpus ×≈55 and the pair agg "
+    "dominates — both stay linear in corpus size for a fixed window.",
+    tags=("text", "training-data", "join"),
+)
+def skipgram_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = t(spark, sf_dir, "documents")
+    toks = docs.select(
+        "doc_id",
+        F.posexplode(
+            F.filter(F.split(F.lower("text"), " "), lambda x: x != "")
+        ).alias("pos", "tok"),
+    )
+    left = toks.select(
+        "doc_id",
+        F.col("tok").alias("tok_a"),
+        F.explode(F.sequence(F.lit(1), F.lit(3))).alias("off"),
+        (F.col("pos") + F.col("off")).alias("pos_b"),
+    )
+    right = toks.select(
+        "doc_id", F.col("pos").alias("pos_b"), F.col("tok").alias("tok_b")
+    )
+    return (
+        left.join(right, ["doc_id", "pos_b"])
+        .groupBy("tok_a", "tok_b")
+        .agg(F.count(F.lit(1)).alias("n_cooc"))
+        .filter(F.col("n_cooc") >= 5)
+    )
+
+
+@register(
+    "nfc_normalization",
+    """
+    SELECT doc_id,
+           length(raw)                      AS len_raw,
+           length(nfc_normalize(raw))       AS len_nfc,
+           right(nfc_normalize(raw), 6)     AS nfc_tail
+    FROM (SELECT doc_id, substring(text, 1, 40) || 'cafe' || chr(769) AS raw
+          FROM documents WHERE doc_id % 25 = 0) s
+    """,
+    "Unicode NFC normalization — the canonicalization step before any "
+    "text dedup/fingerprint (é as e+combining-acute must hash like é "
+    "composed). Spark has no native normalizer, so this is the "
+    "documented Arrow path: a vectorized pandas UDF over "
+    "unicodedata.normalize, one Python worker round-trip per batch, "
+    "never per row. A decomposed combining acute is appended to each "
+    "prefix so the transform provably composes (len shrinks by 1). "
+    "Oracle is DuckDB's native nfc_normalize. At 100 TB this is "
+    "embarrassingly parallel map-side work; batch size is bounded by "
+    "spark.sql.execution.arrow.maxRecordsPerBatch.",
+    tags=("text", "training-data", "udf"),
+)
+def nfc_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import unicodedata
+
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    # no signature annotations: PEP-563 lazy annotations (module-wide
+    # `from __future__ import annotations`) stringify them, which the
+    # pandas_udf signature validator rejects.
+    @pandas_udf("string")
+    def nfc(s):
+        return s.map(lambda x: unicodedata.normalize("NFC", x))
+
+    docs = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 25 == 0)
+    raw = F.concat(F.substring("text", 1, 40), F.lit("café"))
+    base = docs.select("doc_id", raw.alias("raw")).withColumn(
+        "norm", nfc(F.col("raw"))
+    )
+    return base.select(
+        "doc_id",
+        F.length("raw").alias("len_raw"),
+        F.length("norm").alias("len_nfc"),
+        F.expr("right(norm, 6)").alias("nfc_tail"),
+    )
+
+
+@register(
+    "inverted_index_postings",
+    """
+    WITH toks AS (
+        SELECT DISTINCT doc_id,
+               unnest(list_filter(string_split(lower(text), ' '), x -> x <> '')) AS term
+        FROM documents
+    ), df AS (
+        SELECT term, count(*) AS doc_freq FROM toks GROUP BY 1
+    )
+    SELECT t.term,
+           CAST(d.doc_freq AS BIGINT) AS doc_freq,
+           array_to_string(list_sort(list(t.doc_id)), ',') AS postings
+    FROM toks t JOIN df d USING (term)
+    WHERE d.doc_freq BETWEEN 5 AND 40
+    GROUP BY t.term, d.doc_freq
+    """,
+    "Inverted-index construction: term -> sorted posting list of the "
+    "documents containing it (the IR primitive behind BM25/boolean "
+    "retrieval; bm25_topk scores over exactly this structure). "
+    "Posting lists serialize as comma-joined sorted strings so the "
+    "output is scalar and deterministic — collect_list order is "
+    "partition-dependent, sort_array pins it. Mid-frequency band "
+    "filter (5..40 docs) models the stoplist+hapax pruning a real "
+    "index applies. At 100 TB postings for stop-words would dwarf "
+    "executor memory — the doc_freq pre-filter drops them BEFORE "
+    "collect_list materializes anything (vocab_prune_topk is the "
+    "standalone form), and ultra-long survivors shard into "
+    "(term, bucket) segment postings.",
+    tags=("text", "training-data", "agg"),
+)
+def inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = t(spark, sf_dir, "documents")
+    toks = docs.select(
+        "doc_id",
+        F.explode(
+            F.array_distinct(
+                F.filter(F.split(F.lower("text"), " "), lambda x: x != "")
+            )
+        ).alias("term"),
+    )
+    df_counts = toks.groupBy("term").agg(F.count(F.lit(1)).alias("doc_freq"))
+    band = df_counts.filter(F.col("doc_freq").between(5, 40))
+    return (
+        toks.join(band, "term")
+        .groupBy("term", "doc_freq")
+        .agg(
+            F.array_join(F.sort_array(F.collect_list("doc_id")), ",").alias(
+                "postings"
+            )
+        )
+        .select("term", F.col("doc_freq").cast("bigint").alias("doc_freq"), "postings")
+    )
+
+
+@register(
+    "dedup_keep_latest",
+    """
+    SELECT user_id, event_type,
+           epoch_us(ts)  AS last_ts_us,
+           event_id      AS last_event_id,
+           round(value, 4) AS last_value
+    FROM (
+        SELECT *, row_number() OVER (
+                   PARTITION BY user_id, event_type
+                   ORDER BY ts DESC, event_id DESC) AS rn
+        FROM events
+    ) WHERE rn = 1
+    """,
+    "Keep-latest compaction: the newest record per business key "
+    "((user, event_type) here), ties broken deterministically by "
+    "event_id — the CDC upsert-log -> current-state primitive (what a "
+    "MERGE against an append log reduces to, and the read-side of "
+    "merge_upsert's write-side). One shuffle on the key; row_number "
+    "with a rank-limit pushes a per-partition top-1 (Spark plans a "
+    "WindowGroupLimit) so each task keeps one row per key before any "
+    "data concentrates. At 100 TB this is strictly cheaper than "
+    "groupBy(max_by(...)) chains for wide rows: the payload never "
+    "enters an aggregation buffer.",
+    tags=("window", "events", "dedup"),
+)
+def dedup_keep_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = t(spark, sf_dir, "events")
+    w = W.partitionBy("user_id", "event_type").orderBy(
+        F.desc("ts"), F.desc("event_id")
+    )
+    return (
+        ev.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select(
+            "user_id",
+            "event_type",
+            F.expr("unix_micros(ts)").alias("last_ts_us"),
+            F.col("event_id").alias("last_event_id"),
+            F.round("value", 4).alias("last_value"),
+        )
+    )
+
+
+@register(
+    "doc_quality_filter",
+    """
+    WITH d AS (
+        SELECT doc_id,
+               list_filter(string_split(text, ' '), x -> x <> '') AS toks
+        FROM documents
+    ), s AS (
+        SELECT doc_id,
+               CAST(len(toks) AS BIGINT) AS n_tokens,
+               len(list_distinct(toks)) * 1.0 / len(toks) AS distinct_ratio,
+               len(list_filter(toks, x -> list_contains(
+                   ['the','a','of','and','to','in','is','that','for','it'],
+                   lower(x)))) * 1.0 / len(toks) AS stopword_ratio
+        FROM d WHERE len(toks) > 0
+    )
+    SELECT doc_id, n_tokens,
+           CAST(floor(distinct_ratio * 10000.0 + 0.5) / 10000.0 AS DOUBLE)
+               AS distinct_ratio,
+           CAST(floor(stopword_ratio * 10000.0 + 0.5) / 10000.0 AS DOUBLE)
+               AS stopword_ratio,
+           CAST(n_tokens >= 30 AND distinct_ratio >= 0.35
+                AND stopword_ratio >= 0.02 AS INT) AS keep,
+           concat_ws(',',
+               CASE WHEN n_tokens < 30           THEN 'too_short' END,
+               CASE WHEN distinct_ratio < 0.35   THEN 'repetitive' END,
+               CASE WHEN stopword_ratio < 0.02   THEN 'unnatural' END)
+               AS drop_reasons
+    FROM s
+    """,
+    "Composite training-data quality gate (Gopher/C4-style rule "
+    "filter): minimum length, lexical diversity (distinct-token "
+    "ratio), and natural-language signal (stopword ratio) evaluated "
+    "in ONE projection pass, emitting keep/drop plus machine-readable "
+    "reason codes — the auditable form every corpus-curation pipeline "
+    "needs (reasons feed the drop-rate dashboards that catch filter "
+    "drift). Thresholds split the fixture corpus non-trivially. All "
+    "per-row native expressions: at 100 TB this is embarrassingly "
+    "parallel map work with zero shuffles; the component stats have "
+    "standalone queries (text_stats, repetition_stats) and this gate "
+    "composes them without re-tokenizing per rule (one split, one "
+    "pass). Ratio outputs grid-floored at 4dp on both engines; the "
+    "keep/drop decisions compare raw doubles computed by identical "
+    "IEEE expressions, so no boundary drift.",
+    tags=("text", "training-data", "quality"),
+)
+def doc_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = t(spark, sf_dir, "documents")
+    toks = F.filter(F.split("text", " "), lambda x: x != "")
+    stop = F.array(*[F.lit(w) for w in
+                     ["the", "a", "of", "and", "to", "in", "is", "that", "for", "it"]])
+    d = docs.select("doc_id", toks.alias("toks")).filter(F.size("toks") > 0)
+    n = F.size("toks")
+    s = d.select(
+        "doc_id",
+        n.cast("bigint").alias("n_tokens"),
+        (F.size(F.array_distinct("toks")) * F.lit(1.0) / n).alias("dr"),
+        (
+            F.size(F.filter("toks", lambda x: F.array_contains(stop, F.lower(x))))
+            * F.lit(1.0)
+            / n
+        ).alias("sr"),
+    )
+    grid = lambda c: (F.floor(c * 10000.0 + 0.5) / 10000.0).cast("double")  # noqa: E731
+    return s.select(
+        "doc_id",
+        "n_tokens",
+        grid(F.col("dr")).alias("distinct_ratio"),
+        grid(F.col("sr")).alias("stopword_ratio"),
+        (
+            (F.col("n_tokens") >= 30)
+            & (F.col("dr") >= 0.35)
+            & (F.col("sr") >= 0.02)
+        )
+        .cast("int")
+        .alias("keep"),
+        F.concat_ws(
+            ",",
+            F.when(F.col("n_tokens") < 30, F.lit("too_short")),
+            F.when(F.col("dr") < 0.35, F.lit("repetitive")),
+            F.when(F.col("sr") < 0.02, F.lit("unnatural")),
+        ).alias("drop_reasons"),
+    )
+
+
+@register(
+    "dedup_rate_by_source",
+    """
+    WITH h AS (
+        SELECT source, md5(text) AS h FROM documents
+    ), g AS (
+        SELECT source,
+               CAST(count(*) AS BIGINT)          AS n_docs,
+               CAST(count(DISTINCT h) AS BIGINT) AS n_unique
+        FROM h GROUP BY 1
+    )
+    SELECT source, n_docs, n_unique,
+           n_docs - n_unique AS n_dups,
+           round(CAST(n_docs - n_unique AS DOUBLE) / CAST(n_docs AS DOUBLE), 6)
+                             AS dup_rate
+    FROM g
+    """,
+    "Per-source exact-duplicate audit: document counts, distinct "
+    "content hashes, and duplication rate by corpus source — the "
+    "governance readout that decides which sources need aggressive "
+    "dedup before training (exact_dedup_docs REMOVES dups; this "
+    "MEASURES them per provenance). Content identity is md5 of the "
+    "text — byte-identical across engines — so the distinct-count "
+    "shuffles 16-byte hashes, never documents; count(DISTINCT) "
+    "expands map-side per source. One shuffle on (source, hash).",
+    tags=("agg", "dedup", "llm-data", "documents", "quality"),
+)
+def dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = t(spark, sf_dir, "documents")
+    h = d.select("source", F.md5("text").alias("h"))
+    g = h.groupBy("source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+        F.count_distinct("h").cast("bigint").alias("n_unique"),
+    )
+    return g.select(
+        "source",
+        "n_docs",
+        "n_unique",
+        (F.col("n_docs") - F.col("n_unique")).alias("n_dups"),
+        F.round(
+            (F.col("n_docs") - F.col("n_unique")).cast("double")
+            / F.col("n_docs").cast("double"),
+            6,
+        ).alias("dup_rate"),
+    )
+
+
+@register(
+    "contamination_overlap_matrix",
+    """
+    WITH h AS (
+        SELECT DISTINCT source, md5(text) AS h FROM documents
+    )
+    SELECT a.source AS source_a, b.source AS source_b,
+           CAST(count(*) AS BIGINT) AS shared_texts
+    FROM h a JOIN h b ON a.h = b.h AND a.source < b.source
+    GROUP BY 1, 2
+    ORDER BY 1, 2
+    """,
+    "Cross-source contamination matrix: for every source pair, how "
+    "many EXACT texts appear in both — the benchmark-leakage / "
+    "provenance-overlap audit (benchmark_decontamination strips "
+    "overlaps against one eval set; this surveys ALL pairwise "
+    "overlaps). Per-source distinct hashes first (16-byte keys), "
+    "then a self-equi-join ON the hash with a source_a < source_b "
+    "canonical orientation — candidates only where hashes collide, "
+    "never an all-pairs comparison; the join shuffles hash keys "
+    "co-partitioned on both sides. Output is the S*(S-1)/2 pair "
+    "matrix (metadata scale).",
+    tags=("agg", "join", "dedup", "llm-data", "documents"),
+)
+def contamination_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = t(spark, sf_dir, "documents")
+    h = d.select("source", F.md5("text").alias("h")).distinct()
+    a = h.alias("a")
+    b = h.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.h") == F.col("b.h"))
+            & (F.col("a.source") < F.col("b.source")),
+        )
+        .groupBy(
+            F.col("a.source").alias("source_a"),
+            F.col("b.source").alias("source_b"),
+        )
+        .agg(F.count(F.lit(1)).cast("bigint").alias("shared_texts"))
+        .orderBy("source_a", "source_b")
+    )
+
+
+@register(
+    "duplicate_transaction_detection",
+    """
+    WITH keyed AS (
+        SELECT o_custkey,
+               CAST(floor(o_totalprice * 100) AS BIGINT) AS amount_cents,
+               epoch_us(o_orderdate) // 86400000000      AS day,
+               o_orderkey
+        FROM orders
+    ), dupes AS (
+        SELECT o_custkey, amount_cents, day,
+               CAST(count(*) AS BIGINT)      AS n_orders,
+               CAST(min(o_orderkey) AS BIGINT) AS first_orderkey,
+               CAST(max(o_orderkey) AS BIGINT) AS last_orderkey
+        FROM keyed
+        GROUP BY 1, 2, 3
+        HAVING count(*) > 1
+    )
+    SELECT * FROM dupes ORDER BY o_custkey, amount_cents, day
+    """,
+    "Duplicate-transaction detection: orders sharing (customer, "
+    "exact cent amount, same day) — the double-charge / replay "
+    "screen every payments and lending ledger runs (same shape as "
+    "exact_dedup_docs but on a composite business key instead of a "
+    "content hash). One partial-combined groupBy on the composite "
+    "key; HAVING keeps only collision groups, so the output is the "
+    "exception list, not the ledger. All key components are exact "
+    "integers (floor-cents, epoch days).",
+    tags=("agg", "quality", "dedup", "analytics"),
+)
+def duplicate_transaction_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    o = t(spark, sf_dir, "orders")
+    keyed = o.select(
+        "o_custkey",
+        F.floor(F.col("o_totalprice") * 100).cast("bigint").alias("amount_cents"),
+        F.expr("unix_micros(o_orderdate) div 86400000000").alias("day"),
+        "o_orderkey",
+    )
+    return (
+        keyed.groupBy("o_custkey", "amount_cents", "day")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_orders"),
+            F.min("o_orderkey").cast("bigint").alias("first_orderkey"),
+            F.max("o_orderkey").cast("bigint").alias("last_orderkey"),
+        )
+        .filter(F.col("n_orders") > 1)
+        .orderBy("o_custkey", "amount_cents", "day")
+    )
+
+
+_JOURNEY_PATTERNS: list[tuple[str, str]] = [
+    # (name, regex) — intersection of Java-regex and RE2 semantics
+    # only (literals, classes, anchors, ?, *, |), so Spark RLIKE and
+    # DuckDB regexp_matches agree by construction.
+    ("converted", "p"),
+    ("direct_view_purchase", "vc?p"),
+    ("error_before_purchase", "e[^p]*p"),
+    ("signup_first_event", "^s"),
+    ("clicked_never_purchased", "^[^p]*c[^p]*$"),
+    ("single_event_bounce", "^.$"),
+]
+
+
+@register(
+    "journey_pattern_match",
+    """
+    WITH j AS (
+        SELECT user_id,
+               string_agg(CASE event_type WHEN 'signup' THEN 's'
+                                          WHEN 'view' THEN 'v'
+                                          WHEN 'click' THEN 'c'
+                                          WHEN 'purchase' THEN 'p'
+                                          ELSE 'e' END,
+                          '' ORDER BY ts, event_id) AS journey
+        FROM events GROUP BY 1
+    ), agg AS (
+        SELECT CAST(count(*) AS BIGINT) AS n_total,
+               CAST(sum(CASE WHEN regexp_matches(journey, 'p') THEN 1 ELSE 0 END) AS BIGINT) AS m0,
+               CAST(sum(CASE WHEN regexp_matches(journey, 'vc?p') THEN 1 ELSE 0 END) AS BIGINT) AS m1,
+               CAST(sum(CASE WHEN regexp_matches(journey, 'e[^p]*p') THEN 1 ELSE 0 END) AS BIGINT) AS m2,
+               CAST(sum(CASE WHEN regexp_matches(journey, '^s') THEN 1 ELSE 0 END) AS BIGINT) AS m3,
+               CAST(sum(CASE WHEN regexp_matches(journey, '^[^p]*c[^p]*$') THEN 1 ELSE 0 END) AS BIGINT) AS m4,
+               CAST(sum(CASE WHEN regexp_matches(journey, '^.$') THEN 1 ELSE 0 END) AS BIGINT) AS m5
+        FROM j
+    )
+    SELECT p.pattern, p.n_users, a.n_total,
+           round(CAST(p.n_users AS DOUBLE) / CAST(a.n_total AS DOUBLE), 6) AS share
+    FROM agg a, (
+        SELECT 'converted' AS pattern, m0 AS n_users FROM agg
+        UNION ALL SELECT 'direct_view_purchase', m1 FROM agg
+        UNION ALL SELECT 'error_before_purchase', m2 FROM agg
+        UNION ALL SELECT 'signup_first_event', m3 FROM agg
+        UNION ALL SELECT 'clicked_never_purchased', m4 FROM agg
+        UNION ALL SELECT 'single_event_bounce', m5 FROM agg
+    ) p
+    ORDER BY p.pattern
+    """,
+    "MATCH_RECOGNIZE-style sequence pattern matching: each user's "
+    "event history becomes an ordered journey string (one char per "
+    "event, tie-broken by event_id), and regular expressions over "
+    "journeys count behavioral cohorts — conversion, direct "
+    "view-to-purchase, error-before-purchase recovery, abandonment. "
+    "The regex subset is the Java-regex / RE2 intersection so both "
+    "engines match identically. Scale: one groupBy(user_id) builds "
+    "journeys (bounded per-user state, the sessionization shape); "
+    "all six patterns evaluate in the same projection pass (one "
+    "scan, no per-pattern re-aggregation); the final unpivot runs "
+    "on a 1-row aggregate.",
+    tags=("window", "analytics", "text", "funnel"),
+)
+def journey_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ev = t(spark, sf_dir, "events")
+    ch = (
+        F.when(F.col("event_type") == "signup", "s")
+        .when(F.col("event_type") == "view", "v")
+        .when(F.col("event_type") == "click", "c")
+        .when(F.col("event_type") == "purchase", "p")
+        .otherwise("e")
+    )
+    j = (
+        ev.select("user_id", F.struct("ts", "event_id", ch.alias("ch")).alias("s"))
+        .groupBy("user_id")
+        .agg(
+            F.array_join(
+                F.transform(F.array_sort(F.collect_list("s")), lambda x: x["ch"]),
+                "",
+            ).alias("journey")
+        )
+    )
+    flags = [
+        F.sum(F.when(F.col("journey").rlike(rx), 1).otherwise(0))
+        .cast("bigint")
+        .alias(f"m{i}")
+        for i, (_, rx) in enumerate(_JOURNEY_PATTERNS)
+    ]
+    agg = j.agg(F.count(F.lit(1)).cast("bigint").alias("n_total"), *flags)
+    stack_args = ", ".join(
+        f"'{name}', m{i}" for i, (name, _) in enumerate(_JOURNEY_PATTERNS)
+    )
+    return (
+        agg.select(
+            F.expr(
+                f"stack({len(_JOURNEY_PATTERNS)}, {stack_args}) AS (pattern, n_users)"
+            ),
+            "n_total",
+        )
+        .select(
+            "pattern",
+            "n_users",
+            "n_total",
+            F.round(
+                F.col("n_users").cast("double") / F.col("n_total").cast("double"), 6
+            ).alias("share"),
+        )
+        .orderBy("pattern")
+    )
+
+
+@register(
+    "video_frame_sample_plan",
+    """
+    WITH meta AS (
+        SELECT doc_id, 1000 + (n_chars * 37) % 59000 AS duration_ms
+        FROM documents WHERE doc_id % 20 = 0
+    )
+    SELECT m.doc_id,
+           CAST(f.frame_idx AS INT)                              AS frame_idx,
+           CAST((f.frame_idx * m.duration_ms) // 8 AS BIGINT)    AS t_ms,
+           substr(md5(CAST(m.doc_id AS VARCHAR) || ':' ||
+                      CAST(CAST((f.frame_idx * m.duration_ms) // 8 AS BIGINT)
+                           AS VARCHAR)), 1, 16) AS frame_key
+    FROM meta m, LATERAL (
+        SELECT unnest(generate_series(0, 7)) AS frame_idx
+    ) f
+    ORDER BY m.doc_id, frame_idx
+    """,
+    "Multimodal video pipeline front half: uniform 8-frame sampling "
+    "plan per clip from duration metadata (deterministically "
+    "synthesized here — the container has no codecs, so payloads are "
+    "stand-ins; the metadata path is the real contract). The plan is "
+    "pure native sequence+explode: at 100 TB the decode (stubbed in "
+    "operators/multimodal.py decode_frames_stub, exercised in tests) "
+    "fans out over exactly the sampled frames — 8 rows per clip — "
+    "never whole clips, and each frame row carries a content-address "
+    "key (md5) for the downstream feature store. No Python in this "
+    "plan; the stub decoder is Arrow-batched mapInPandas.",
+    tags=("multimodal", "generator"),
+)
+def video_frame_sample_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.multimodal import frame_sample_plan
+
+    docs = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 20 == 0)
+    meta = docs.select(
+        "doc_id", (1000 + (F.col("n_chars") * 37) % 59000).alias("duration_ms")
+    )
+    plan = frame_sample_plan(meta, n_frames=8)
+    return plan.select(
+        "doc_id",
+        "frame_idx",
+        "t_ms",
+        F.substring(
+            F.md5(
+                F.concat_ws(
+                    ":",
+                    F.col("doc_id").cast("string"),
+                    F.col("t_ms").cast("string"),
+                )
+            ),
+            1,
+            16,
+        ).alias("frame_key"),
+    ).orderBy("doc_id", "frame_idx")
+
+
+@register(
+    "spatial_blocked_join",
+    """
+    WITH pts AS (
+        SELECT c_custkey AS id,
+               (c_custkey * 7919)   % 180000 - 90000  AS lat_md,
+               (c_custkey * 104729) % 360000 - 180000 AS lon_md
+        FROM customer
+    )
+    SELECT a.id AS id_a, b.id AS id_b,
+           CAST((a.lat_md - b.lat_md) * (a.lat_md - b.lat_md)
+              + (a.lon_md - b.lon_md) * (a.lon_md - b.lon_md) AS BIGINT)
+               AS dist_sq_md
+    FROM pts a JOIN pts b
+      ON a.id < b.id
+     AND (a.lat_md - b.lat_md) * (a.lat_md - b.lat_md)
+       + (a.lon_md - b.lon_md) * (a.lon_md - b.lon_md) <= 2000 * 2000
+    ORDER BY id_a, id_b
+    """,
+    "Spatial proximity self-join (all point pairs within radius) via "
+    "grid-cell blocking: each point lands in a (lat, lon) cell sized "
+    "to the radius, one side replicates into its 3x3 cell "
+    "neighborhood, and the exact distance predicate runs only inside "
+    "equi-joined cells — candidate count follows local density, "
+    "never n^2 (the geohash/H3-bucketed join pattern; cells are the "
+    "spatial analog of LSH buckets). Coordinates are deterministic "
+    "synthetic millidegrees (fixtures carry no geography) and the "
+    "metric is planar integer squared-distance — every comparison is "
+    "exact BIGINT arithmetic, no trig to drift cross-engine. The "
+    "oracle is the O(n^2) self-join, correct at driver scale and "
+    "deliberately NOT the Spark plan: the blocked join must produce "
+    "identical pairs.",
+    tags=("join", "spatial", "dedup"),
+)
+def spatial_blocked_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    R = 2000  # radius in millidegrees == cell edge
+    c = t(spark, sf_dir, "customer")
+    pts = c.select(
+        F.col("c_custkey").alias("id"),
+        ((F.col("c_custkey") * 7919) % 180000 - 90000).alias("lat_md"),
+        ((F.col("c_custkey") * 104729) % 360000 - 180000).alias("lon_md"),
+    )
+    cell = lambda col, name: F.floor(F.col(col) / R).cast("bigint").alias(name)  # noqa: E731
+    left = pts.select(
+        "id",
+        "lat_md",
+        "lon_md",
+        cell("lat_md", "cy"),
+        cell("lon_md", "cx"),
+    )
+    # replicate the RIGHT side into its 3x3 neighborhood: any pair within
+    # R has cell deltas in {-1,0,1} on both axes, so it meets in the
+    # left point's home cell exactly once per neighbor copy; distinct
+    # pairs dedupe the (up to 9) meetings.
+    offsets = F.expr("explode(arrays_zip(array(-1,-1,-1,0,0,0,1,1,1), array(-1,0,1,-1,0,1,-1,0,1)))")
+    right = pts.select(
+        F.col("id").alias("id_r"),
+        F.col("lat_md").alias("lat_r"),
+        F.col("lon_md").alias("lon_r"),
+        cell("lat_md", "cy_r"),
+        cell("lon_md", "cx_r"),
+    ).select(
+        "id_r",
+        "lat_r",
+        "lon_r",
+        "cy_r",
+        "cx_r",
+        offsets.alias("o"),
+    ).select(
+        "id_r",
+        "lat_r",
+        "lon_r",
+        (F.col("cy_r") + F.col("o.0")).alias("cy"),
+        (F.col("cx_r") + F.col("o.1")).alias("cx"),
+    )
+    dlat = F.col("lat_md") - F.col("lat_r")
+    dlon = F.col("lon_md") - F.col("lon_r")
+    dist_sq = dlat * dlat + dlon * dlon
+    return (
+        left.join(right, ["cy", "cx"])
+        .filter((F.col("id") < F.col("id_r")) & (dist_sq <= R * R))
+        .select(
+            F.col("id").alias("id_a"),
+            F.col("id_r").alias("id_b"),
+            dist_sq.cast("bigint").alias("dist_sq_md"),
+        )
+        .distinct()
+        .orderBy("id_a", "id_b")
+    )
+
+
+@register(
+    "lm_bigram_surprisal",
+    """
+    WITH toks AS (
+        SELECT doc_id, string_split(text, ' ') AS ws FROM documents
+    ), bi AS (
+        SELECT doc_id, unnest(list_zip(ws[1:len(ws)-1], ws[2:len(ws)])) AS bg
+        FROM toks WHERE len(ws) >= 2
+    ), bigrams AS (
+        SELECT doc_id, bg[1] AS w1, bg[2] AS w2 FROM bi
+    ), c1 AS (
+        SELECT w1, CAST(count(*) AS BIGINT) AS n1 FROM bigrams GROUP BY 1
+    ), c12 AS (
+        SELECT w1, w2, CAST(count(*) AS BIGINT) AS n12
+        FROM bigrams GROUP BY 1, 2
+    ), scored AS (
+        SELECT b.doc_id,
+               CAST(round(-ln(CAST(c12.n12 AS DOUBLE) / CAST(c1.n1 AS DOUBLE))
+                          * 1e6) AS BIGINT) AS nll_micro
+        FROM bigrams b
+        JOIN c12 ON b.w1 = c12.w1 AND b.w2 = c12.w2
+        JOIN c1  ON b.w1 = c1.w1
+    ), per_doc AS (
+        SELECT doc_id,
+               CAST(sum(nll_micro) AS BIGINT) AS sum_nll_micro,
+               CAST(count(*) AS BIGINT)       AS n_bigrams
+        FROM scored GROUP BY 1
+    )
+    SELECT doc_id, sum_nll_micro, n_bigrams,
+           round(CAST(sum_nll_micro AS DOUBLE) / CAST(n_bigrams AS DOUBLE)
+                 / 1e6, 6) AS avg_surprisal
+    FROM per_doc
+    ORDER BY avg_surprisal DESC, doc_id LIMIT 20
+    """,
+    "Language-model quality scoring for training-data curation: a "
+    "bigram MLE model is fit on the corpus itself (count tables, one "
+    "groupBy each) and every document is scored by its average "
+    "per-bigram surprisal -ln p(w2|w1) — the distributed analog of "
+    "the perplexity filters LLM pipelines run (high-surprisal docs "
+    "are the off-distribution / noisy candidates for review). "
+    "Bigrams come from slice+zip over the token array (no "
+    "position self-join); the unigram table joins back broadcast "
+    "(vocabulary-bounded) while the bigram table — corpus-bounded, "
+    "~O(vocab^2) distinct keys — joins via a co-keyed shuffle join "
+    "on (w1, w2). Determinism: counts are exact BIGINTs; "
+    "each bigram's nll is rounded to micro-units then summed as "
+    "BIGINT (associative), so no float accumulation crosses rows. "
+    "Top-20 most-surprising docs, doc_id tie-broken.",
+    tags=("text", "quality", "llm-pipeline", "agg"),
+)
+def lm_bigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = t(spark, sf_dir, "documents")
+    toks = docs.select("doc_id", F.split("text", " ").alias("ws"))
+    n = F.size("ws")
+    bigrams = (
+        toks.filter(n >= 2)
+        .select(
+            "doc_id",
+            F.explode(
+                F.arrays_zip(
+                    F.slice(F.col("ws"), 1, n - 1),
+                    F.slice(F.col("ws"), 2, n - 1),
+                )
+            ).alias("bg"),
+        )
+        .select("doc_id", F.col("bg.0").alias("w1"), F.col("bg.1").alias("w2"))
+    )
+    c1 = bigrams.groupBy("w1").agg(F.count(F.lit(1)).cast("bigint").alias("n1"))
+    c12 = bigrams.groupBy("w1", "w2").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n12")
+    )
+    # c1 (unigram table) is vocabulary-bounded — safe to broadcast.
+    # c12 (bigram table) scales ~O(vocab^2)/corpus-bounded, so at the
+    # 100 TB posture it must NOT be broadcast: it joins shuffle-side,
+    # co-keyed with the probe (both hash on (w1, w2)), so the join is
+    # one key shuffle, not a driver-crushing broadcast (ADVICE r3).
+    scored = (
+        bigrams.join(c12, ["w1", "w2"])
+        .join(F.broadcast(c1), ["w1"])
+        .select(
+            "doc_id",
+            F.round(
+                -F.log(F.col("n12").cast("double") / F.col("n1").cast("double"))
+                * 1e6
+            )
+            .cast("bigint")
+            .alias("nll_micro"),
+        )
+    )
+    per_doc = scored.groupBy("doc_id").agg(
+        F.sum("nll_micro").cast("bigint").alias("sum_nll_micro"),
+        F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
+    )
+    return (
+        per_doc.select(
+            "doc_id",
+            "sum_nll_micro",
+            "n_bigrams",
+            F.round(
+                F.col("sum_nll_micro").cast("double")
+                / F.col("n_bigrams").cast("double")
+                / 1e6,
+                6,
+            ).alias("avg_surprisal"),
+        )
+        .orderBy(F.desc("avg_surprisal"), "doc_id")
+        .limit(20)
+    )
+
+
+@register(
+    "span_corruption_plan",
+    """
+    WITH toks AS (
+        SELECT doc_id, len(string_split(text, ' ')) AS n_tok
+        FROM documents WHERE doc_id % 10 = 0
+    ), planned AS (
+        SELECT doc_id, n_tok,
+               greatest(1, CAST(floor(n_tok * 0.15 / 3) AS BIGINT)) AS n_spans
+        FROM toks WHERE n_tok >= 8
+    ), spans AS (
+        SELECT p.doc_id, p.n_tok, p.n_spans, s.span_idx,
+               -- deterministic start: multiplicative-hash congruence on
+               -- (doc_id, span_idx), landing inside [0, n_tok - 3]
+               (p.doc_id * 2654435761 + s.span_idx * 40503)
+                   % (p.n_tok - 2) AS start_tok
+        FROM planned p, LATERAL (
+            SELECT unnest(generate_series(0, CAST(p.n_spans - 1 AS INT)))
+                   AS span_idx
+        ) s
+    )
+    SELECT doc_id, CAST(span_idx AS INT) AS span_idx,
+           CAST(start_tok AS BIGINT)     AS start_tok,
+           CAST(3 AS INT)                AS span_len,
+           CAST(n_tok AS BIGINT)         AS n_tok
+    FROM spans ORDER BY doc_id, span_idx
+    """,
+    "T5/UL2-style span-corruption plan: for each document, ~15% of "
+    "tokens are marked for masking in fixed-length-3 spans whose "
+    "starts come from a portable multiplicative-hash congruence on "
+    "(doc_id, span_idx) — deterministic noise with NO engine RNG, so "
+    "the same corpus yields the same training examples on any engine "
+    "or layout (and the oracle proves it). This is the "
+    "training-example-construction stage of a denoising-LM data "
+    "pipeline; the plan is pure projection + bounded explode (spans "
+    "per doc ~ n_tok/20), no shuffle at all until a downstream "
+    "grouping. Spans may overlap — the reference T5 sampler resolves "
+    "overlaps at tokenization; the PLAN records candidates.",
+    tags=("text", "llm-pipeline", "generator"),
+)
+def span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
+    toks = docs.select("doc_id", F.size(F.split("text", " ")).alias("n_tok"))
+    planned = toks.filter(F.col("n_tok") >= 8).select(
+        "doc_id",
+        "n_tok",
+        F.greatest(
+            F.lit(1), F.floor(F.col("n_tok") * 0.15 / 3).cast("bigint")
+        ).alias("n_spans"),
+    )
+    spans = planned.select(
+        "doc_id",
+        "n_tok",
+        F.explode(
+            F.sequence(F.lit(0), (F.col("n_spans") - 1).cast("int"))
+        ).alias("span_idx"),
+    )
+    return spans.select(
+        "doc_id",
+        F.col("span_idx").cast("int").alias("span_idx"),
+        (
+            (F.col("doc_id") * 2654435761 + F.col("span_idx") * 40503)
+            % (F.col("n_tok") - 2)
+        )
+        .cast("bigint")
+        .alias("start_tok"),
+        F.lit(3).cast("int").alias("span_len"),
+        F.col("n_tok").cast("bigint").alias("n_tok"),
+    ).orderBy("doc_id", "span_idx")
+
+
+@register(
+    "balanced_shard_plan",
+    """
+    WITH ranked AS (
+        SELECT doc_id, n_chars,
+               row_number() OVER (ORDER BY n_chars DESC, doc_id) AS rn
+        FROM documents
+    ), sharded AS (
+        SELECT (rn - 1) % 8 AS shard, n_chars FROM ranked
+    ), per_shard AS (
+        SELECT shard,
+               CAST(count(*) AS BIGINT)     AS n_docs,
+               CAST(sum(n_chars) AS BIGINT) AS total_chars
+        FROM sharded GROUP BY 1
+    )
+    SELECT CAST(shard AS BIGINT) AS shard, n_docs, total_chars,
+           round(CAST(total_chars AS DOUBLE)
+                 / (CAST(sum(total_chars) OVER () AS DOUBLE) / 8), 6)
+               AS balance_ratio
+    FROM per_shard ORDER BY shard
+    """,
+    "Balanced output-shard planner for training-data releases: "
+    "documents rank by size (desc, id tie-broken) and deal "
+    "round-robin into 8 shards — the size-ranked round-robin "
+    "approximation of bin packing, which bounds shard skew by one "
+    "max-document per shard (balance_ratio stays within ~1% of 1.0 "
+    "here, vs the >2x skew naive hash sharding gives a heavy-tailed "
+    "corpus). At scale the global rank uses the engine's "
+    "distributed_row_number primitive (range repartition + "
+    "per-partition offsets — no single-partition window); at "
+    "fixture scale the plan IS that primitive's oracle twin. "
+    "Downstream writers then partitionBy(shard) for equal-size "
+    "output files.",
+    tags=("llm-pipeline", "window", "layout", "agg"),
+)
+def balanced_shard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.relational import global_row_number
+
+    docs = t(spark, sf_dir, "documents").select(
+        "doc_id",
+        "n_chars",
+        # one sortable unique key encoding (size DESC, doc_id ASC).
+        # DECIMAL(38,0) with a 1e12 multiplier keeps the primary
+        # ordering exact for any doc_id < 1e12 (TPC-H sf ~160k, past
+        # the 100 TB posture) — a BIGINT 1e7 pack corrupts past 10M ids.
+        (
+            (-F.col("n_chars")).cast("decimal(38,0)") * F.lit(10**12)
+            + F.col("doc_id")
+        ).alias("rank_key"),
+    )
+    ranked = global_row_number(docs, "rank_key")
+    per_shard = (
+        ranked.select(((F.col("rn") - 1) % 8).alias("shard"), "n_chars")
+        .groupBy("shard")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.sum("n_chars").cast("bigint").alias("total_chars"),
+        )
+    )
+    return per_shard.select(
+        F.col("shard").cast("bigint").alias("shard"),
+        "n_docs",
+        "total_chars",
+        F.round(
+            F.col("total_chars").cast("double")
+            / (F.sum("total_chars").over(W.partitionBy()).cast("double") / 8),
+            6,
+        ).alias("balance_ratio"),
+    ).orderBy("shard")
+
+
+def _bpe_oracle(n_merges: int = 5) -> str:
+    """Generate the n-stage BPE oracle: each stage counts adjacent
+    token pairs, picks the (count DESC, w1, w2) argmax, and rewrites
+    the corpus with the pair merged — identical string semantics to
+    the Spark loop (see bpe_merge_training)."""
+    stages = ["WITH t0 AS MATERIALIZED (SELECT doc_id, text FROM documents)"]
+    selects = []
+    for i in range(n_merges):
+        stages.append(f"""
+    p{i} AS MATERIALIZED (
+        SELECT bg[1] AS w1, bg[2] AS w2, count(*) AS cnt
+        FROM (
+            SELECT unnest(list_zip(ws[1:len(ws)-1], ws[2:len(ws)])) AS bg
+            FROM (SELECT string_split(text, ' ') AS ws FROM t{i})
+            WHERE len(ws) >= 2
+        ) GROUP BY 1, 2
+    ),
+    m{i} AS MATERIALIZED (
+        SELECT w1, w2, CAST(cnt AS BIGINT) AS cnt FROM p{i}
+        ORDER BY cnt DESC, w1, w2 LIMIT 1
+    ),
+    t{i + 1} AS MATERIALIZED (
+        SELECT doc_id,
+               trim(replace(replace(
+                   ' ' || replace(text, ' ', '  ') || ' ',
+                   ' ' || (SELECT w1 FROM m{i}) || '  '
+                       || (SELECT w2 FROM m{i}) || ' ',
+                   ' ' || (SELECT w1 FROM m{i}) || '@@'
+                       || (SELECT w2 FROM m{i}) || ' '),
+                   '  ', ' ')) AS text
+        FROM t{i}
+    )""")
+        selects.append(
+            f"SELECT {i + 1} AS merge_order, w1, w2, cnt FROM m{i}"
+        )
+    union = "\n    UNION ALL ".join(selects)
+    return (
+        ",".join(stages).replace("WITH t0 AS", "WITH t0 AS", 1)
+        + f"\n    SELECT CAST(merge_order AS INT) AS merge_order, w1, w2,"
+        f" cnt AS pair_count FROM ({union}) ORDER BY merge_order"
+    )
+
+
+def _train_merges(spark: SparkSession, sf_dir: str, n_merges: int, pick) -> list:
+    """The merge-rule training loop shared by BPE and WordPiece: each of
+    ``n_merges`` rounds calls ``pick(toks)`` on the current corpus
+    (``toks`` holds one ``ws`` token array per document), which returns
+    the round's winning row (with ``w1``, ``w2``) on the driver; the
+    corpus then merges that pair (``merge_pair``). Returns the picked
+    rows in round order."""
+    # a handful of partitions is plenty: the corpus leg of every round
+    # is two cheap string jobs, and fewer tasks beats scheduler overhead
+    docs = (
+        t(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .repartition(8)
+        .localCheckpoint(eager=True)  # data-scale: the whole corpus
+    )
+    # Round k's corpus is a pure per-row string function of the pinned
+    # base text, so the merge stages chain into ONE growing expression
+    # and round k's pick replays the k-stage chain over the pinned base:
+    # two codegen'd string replaces per stage per row, far cheaper than
+    # an eager checkpoint job (and a release) per round, and half the
+    # blocking driver round trips that amplify host stalls. The chain
+    # depth is ``n_merges``, a literal at both call sites.
+    enc = F.col("text")
+    picks = []
+    for _ in range(n_merges):
+        top = pick(docs.select(F.split(enc, " ").alias("ws")))
+        picks.append(top)
+        enc = merge_pair(enc, top.w1, top.w2)
+    # the picks are driver-held rows, so the corpus pin is dead
+    release_local_checkpoints(docs)
+    return picks
+
+
+@register(
+    "bpe_merge_training",
+    _bpe_oracle(5),
+    "BPE (byte-pair-encoding) merge-rule training, the vocabulary- "
+    "learning stage of every modern tokenizer, run distributed: each "
+    "round counts ALL adjacent token pairs across the corpus (one "
+    "slice+zip explode, partial-combined groupBy), picks the "
+    "argmax pair with a total deterministic tie-break (count DESC, "
+    "then lexicographic), and rewrites the corpus with that pair "
+    "merged ('@@'-joined). Corpus rewrite semantics are pinned "
+    "cross-engine by the double-space trick: doubling separators "
+    "gives every adjacent pair its own delimiters, so left-to-right "
+    "non-overlapping replace() — identical in both engines — merges "
+    "greedily without consuming a neighbor's boundary (canonical "
+    "single-spacing restored per round). Per round the driver "
+    "receives exactly ONE row (the argmax) — corpus text never "
+    "leaves the executors; 5 rounds = the merge table output. The "
+    "real-tokenizer scale notes: rounds are embarrassingly parallel "
+    "in the count phase, and production BPE runs this exact loop "
+    "~30-50k times with the same plan per round.",
+    tags=("text", "llm-pipeline", "iterative", "agg"),
+)
+def bpe_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
+    picks = _train_merges(
+        spark,
+        sf_dir,
+        5,
+        lambda toks: pair_counts(toks)
+        .orderBy(F.desc("cnt"), "w1", "w2")
+        .limit(1)
+        .collect()[0],
+    )
+    # a LocalRelation over the driver-held rows (callers that need the
+    # encoded corpus re-derive it from the merge table, see
+    # bpe_tokenize_apply)
+    return local_rows(
+        spark,
+        [(i + 1, m.w1, m.w2, m.cnt) for i, m in enumerate(picks)],
+        "merge_order int, w1 string, w2 string, pair_count bigint",
+    ).orderBy("merge_order")
+
+
+def _bpe_apply_oracle(n_merges: int = 5) -> str:
+    """Oracle for bpe_tokenize_apply: the same n merge stages as
+    _bpe_oracle, then per-doc token counts before/after."""
+    base = _bpe_oracle(n_merges)
+    # reuse the stage CTEs, swap the final SELECT for the apply readout
+    cut = base.rindex("\n    SELECT CAST(merge_order AS INT)")
+    return (
+        base[:cut]
+        + f"""
+    SELECT a.doc_id,
+           CAST(len(string_split(a.text, ' ')) AS BIGINT) AS n_tok_raw,
+           CAST(len(string_split(b.text, ' ')) AS BIGINT) AS n_tok_bpe,
+           round(1.0 - CAST(len(string_split(b.text, ' ')) AS DOUBLE)
+                     / CAST(len(string_split(a.text, ' ')) AS DOUBLE), 6)
+               AS compression
+    FROM t0 a JOIN t{n_merges} b ON a.doc_id = b.doc_id
+    WHERE a.doc_id % 25 = 0
+    ORDER BY a.doc_id"""
+    )
+
+
+@register(
+    "bpe_tokenize_apply",
+    _bpe_apply_oracle(5),
+    "BPE merge application (the encode side of bpe_merge_training): "
+    "the learned merge table rewrites every document in rank order — "
+    "the same greedy double-space replace semantics as training, so "
+    "encode(train_corpus) is exactly the training loop's final "
+    "state — and the readout is per-document token counts before and "
+    "after plus the compression each document gets from the 5-rule "
+    "vocabulary. The pipeline-shape point: tokenization cost at "
+    "100 TB is per-row string work with a BROADCAST merge table, "
+    "zero shuffles; the training loop is where the aggregations "
+    "live. Sampled every-25th doc for a bounded readout.",
+    tags=("text", "llm-pipeline", "functions"),
+)
+def bpe_tokenize_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
+    merges = bpe_merge_training(spark, sf_dir).collect()
+    # Encoded text is a pure per-row function of `text`, so the merge
+    # stages chain into ONE column expression over ONE scan — the old
+    # shape self-joined docs with a 5-stage-encoded twin on doc_id
+    # (second scan + join for nothing; BENCH r4 flagged the query at
+    # 6.4x committed). The every-25th-doc sample now precedes the
+    # string work, so only sampled rows are ever encoded. The merge
+    # table itself is 5 driver-side rows folded into literals — the
+    # "broadcast" is the query plan, which is the right 100 TB shape
+    # for tokenization: zero shuffles, zero joins, per-row work only.
+    enc = F.col("text")
+    for m in sorted(merges, key=lambda r: r.merge_order):
+        enc = merge_pair(enc, m.w1, m.w2)
+    n_raw = F.size(F.split(F.col("text"), " ")).cast("bigint")
+    n_bpe = F.size(F.split(enc, " ")).cast("bigint")
+    return (
+        t(spark, sf_dir, "documents")
+        .select("doc_id", "text")
+        .filter(F.col("doc_id") % 25 == 0)
+        .select(
+            "doc_id",
+            n_raw.alias("n_tok_raw"),
+            n_bpe.alias("n_tok_bpe"),
+            F.round(
+                1.0 - n_bpe.cast("double") / n_raw.cast("double"), 6
+            ).alias("compression"),
+        )
+        .orderBy("doc_id")
+    )
+
+
+@register(
+    "distinctive_terms_by_source",
+    """
+    WITH toks AS (
+        SELECT source, unnest(string_split(text, ' ')) AS w FROM documents
+    ), cnt AS (
+        SELECT source, w, CAST(count(*) AS BIGINT) AS n
+        FROM toks GROUP BY 1, 2
+    ), tot AS (
+        SELECT source, CAST(sum(n) AS BIGINT) AS nt FROM cnt GROUP BY 1
+    ), gl AS (
+        SELECT w, CAST(sum(n) AS BIGINT) AS g FROM cnt GROUP BY 1
+    ), gt AS (
+        SELECT CAST(sum(n) AS BIGINT) AS gtot FROM cnt
+    ), scored AS (
+        SELECT c.source, c.w,
+               CAST(round(
+                   (ln((CAST(c.n AS DOUBLE) + 1.0)
+                       / (CAST(t.nt AS DOUBLE) + 1.0))
+                  - ln((CAST(g.g AS DOUBLE) + 1.0)
+                       / (CAST((SELECT gtot FROM gt) AS DOUBLE) + 1.0)))
+                   * 1e6) AS BIGINT) AS lift_micro,
+               c.n
+        FROM cnt c JOIN tot t ON t.source = c.source
+        JOIN gl g ON g.w = c.w
+        WHERE c.n >= 20
+    ), ranked AS (
+        SELECT source, w, lift_micro, n,
+               row_number() OVER (PARTITION BY source
+                                  ORDER BY lift_micro DESC, w) AS rk
+        FROM scored
+    )
+    SELECT source, CAST(rk AS INT) AS rank, w AS term, n AS term_count,
+           round(CAST(lift_micro AS DOUBLE) / 1e6, 6) AS log_lift
+    FROM ranked WHERE rk <= 5 ORDER BY source, rank
+    """,
+    "Distinctive vocabulary per source (add-one-smoothed log-lift of "
+    "a term's in-source rate over its corpus-wide rate): the "
+    "corpus-slice characterization tool — what makes each source "
+    "read differently — behind domain-mix debugging and "
+    "contamination triage; the per-source complement of "
+    "tfidf_top_terms' per-document scores. Count tables are exact "
+    "BIGINTs; each term's log-lift rounds to micro-units BEFORE the "
+    "per-source ranking so ordering can't flip on a ulp; top-5 per "
+    "source, term tie-broken. One tokenize pass, two bounded-key "
+    "groupBys, broadcast joins of vocabulary-scale tables.",
+    tags=("text", "llm-pipeline", "agg", "window"),
+)
+def distinctive_terms_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = t(spark, sf_dir, "documents")
+    toks = docs.select("source", F.explode(F.split("text", " ")).alias("w"))
+    cnt = toks.groupBy("source", "w").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n")
+    )
+    tot = cnt.groupBy("source").agg(F.sum("n").cast("bigint").alias("nt"))
+    glob = cnt.groupBy("w").agg(F.sum("n").cast("bigint").alias("g"))
+    gtot = cnt.agg(F.sum("n").cast("bigint").alias("gtot"))
+    scored = (
+        cnt.filter(F.col("n") >= 20)
+        .join(F.broadcast(tot), "source")
+        .join(F.broadcast(glob), "w")
+        .crossJoin(F.broadcast(gtot))
+        .select(
+            "source",
+            "w",
+            "n",
+            F.round(
+                (
+                    F.log(
+                        (F.col("n").cast("double") + 1.0)
+                        / (F.col("nt").cast("double") + 1.0)
+                    )
+                    - F.log(
+                        (F.col("g").cast("double") + 1.0)
+                        / (F.col("gtot").cast("double") + 1.0)
+                    )
+                )
+                * 1e6
+            )
+            .cast("bigint")
+            .alias("lift_micro"),
+        )
+    )
+    ranked = scored.select(
+        "source",
+        "w",
+        "n",
+        "lift_micro",
+        F.row_number()
+        .over(W.partitionBy("source").orderBy(F.desc("lift_micro"), "w"))
+        .alias("rk"),
+    )
+    return (
+        ranked.filter(F.col("rk") <= 5)
+        .select(
+            "source",
+            F.col("rk").cast("int").alias("rank"),
+            F.col("w").alias("term"),
+            F.col("n").alias("term_count"),
+            F.round(F.col("lift_micro").cast("double") / 1e6, 6).alias(
+                "log_lift"
+            ),
+        )
+        .orderBy("source", "rank")
+    )
+
+
+@register(
+    "containment_detection",
+    """
+    WITH sh AS (
+        SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
+                   AS shingle
+        FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+             LATERAL (SELECT unnest(generate_series(1, len(ws) - 2)) AS i) g
+        WHERE len(ws) >= 3
+    ), sizes AS (
+        SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY 1
+    ), inter AS (
+        SELECT x.doc_id AS id_a, y.doc_id AS id_b,
+               CAST(count(*) AS BIGINT) AS n_common
+        FROM sh x JOIN sh y ON x.shingle = y.shingle
+                           AND x.doc_id < y.doc_id
+        GROUP BY 1, 2
+    )
+    SELECT i.id_a, i.id_b, i.n_common,
+           sa.n_sh AS n_sh_a, sb.n_sh AS n_sh_b,
+           round(CAST(i.n_common AS DOUBLE)
+                 / least(sa.n_sh, sb.n_sh), 6) AS containment,
+           round(CAST(i.n_common AS DOUBLE)
+                 / (sa.n_sh + sb.n_sh - i.n_common), 6) AS jaccard
+    FROM inter i
+    JOIN sizes sa ON sa.doc_id = i.id_a
+    JOIN sizes sb ON sb.doc_id = i.id_b
+    WHERE i.n_common * 10 >= least(sa.n_sh, sb.n_sh) * 7
+    ORDER BY id_a, id_b
+    """,
+    "Asymmetric containment detection: document pairs where the "
+    "smaller side's shingle set is >= 70% contained in the other — "
+    "the quote-inclusion / boilerplate-wrapping duplicates that "
+    "symmetric Jaccard thresholds MISS (a short doc embedded in a "
+    "long one has high containment but low Jaccard; the output "
+    "carries both so the gap is visible). Same set-similarity-join "
+    "shape as ngram_jaccard_pairs: explode shingles once, equi-join "
+    "on the shingle (work scales with shared shingles, never n^2), "
+    "sizes join back broadcast. The threshold compares as "
+    "cross-multiplied integers — no float cut ambiguity. At corpus "
+    "scale the shingle key becomes the LSH band bucket, same as the "
+    "dedup tier.",
+    tags=("dedup", "text", "join", "llm-pipeline"),
+)
+def containment_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = t(spark, sf_dir, "documents")
+    ws = F.split("text", " ")
+    sh = (
+        docs.select("doc_id", ws.alias("ws"))
+        .filter(F.size("ws") >= 3)
+        .select(
+            "doc_id",
+            F.explode(
+                F.expr(
+                    "transform(sequence(1, size(ws) - 2),"
+                    " i -> concat_ws(' ', ws[i-1], ws[i], ws[i+1]))"
+                )
+            ).alias("shingle"),
+        )
+        .distinct()
+    )
+    sizes = sh.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_sh")
+    )
+    x = sh.select(F.col("doc_id").alias("id_a"), "shingle")
+    y = sh.select(F.col("doc_id").alias("id_b"), "shingle")
+    inter = (
+        x.join(y, "shingle")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_common"))
+    )
+    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_sh_a"))
+    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_sh_b"))
+    out = (
+        inter.join(F.broadcast(sa), "id_a")
+        .join(F.broadcast(sb), "id_b")
+        .filter(
+            F.col("n_common") * 10 >= F.least("n_sh_a", "n_sh_b") * 7
+        )
+    )
+    return out.select(
+        "id_a",
+        "id_b",
+        "n_common",
+        "n_sh_a",
+        "n_sh_b",
+        F.round(
+            F.col("n_common").cast("double") / F.least("n_sh_a", "n_sh_b"), 6
+        ).alias("containment"),
+        F.round(
+            F.col("n_common").cast("double")
+            / (F.col("n_sh_a") + F.col("n_sh_b") - F.col("n_common")),
+            6,
+        ).alias("jaccard"),
+    ).orderBy("id_a", "id_b")
+
+
+@register(
+    "cluster_canonical_keeper",
+    """
+    WITH sh AS (
+        SELECT DISTINCT doc_id, ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2]
+                   AS shingle
+        FROM (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
+             LATERAL (SELECT unnest(generate_series(1, len(ws) - 2)) AS i) g
+        WHERE len(ws) >= 3
+    ), sizes AS (
+        SELECT doc_id, CAST(count(*) AS BIGINT) AS n_sh FROM sh GROUP BY 1
+    ), inter AS (
+        SELECT x.doc_id AS id_a, y.doc_id AS id_b,
+               CAST(count(*) AS BIGINT) AS nc
+        FROM sh x JOIN sh y ON x.shingle = y.shingle
+                           AND x.doc_id < y.doc_id
+        GROUP BY 1, 2
+    ), pairs AS (
+        SELECT i.id_a, i.id_b FROM inter i
+        JOIN sizes sa ON sa.doc_id = i.id_a
+        JOIN sizes sb ON sb.doc_id = i.id_b
+        WHERE 3 * i.nc >= sa.n_sh + sb.n_sh  -- jaccard >= 0.5, exact ints
+    ), edges AS (
+        SELECT id_a AS src, id_b AS dst FROM pairs
+        UNION ALL SELECT id_b, id_a FROM pairs
+    ), labels AS (
+        WITH RECURSIVE reach(a, b) AS (
+            SELECT src, src FROM edges
+            UNION
+            SELECT r.a, e.dst FROM reach r JOIN edges e ON e.src = r.b
+        )
+        SELECT a AS doc_id, CAST(min(b) AS BIGINT) AS cluster
+        FROM reach GROUP BY 1
+    ), members AS (
+        SELECT l.cluster, l.doc_id, d.n_chars
+        FROM labels l JOIN documents d ON d.doc_id = l.doc_id
+    ), ranked AS (
+        SELECT cluster, doc_id, n_chars,
+               row_number() OVER (PARTITION BY cluster
+                                  ORDER BY n_chars DESC, doc_id) AS rk
+        FROM members
+    )
+    SELECT m.cluster,
+           CAST(count(*) AS BIGINT)  AS n_members,
+           CAST(max(CASE WHEN r.rk = 1 THEN r.doc_id END) AS BIGINT)
+               AS keeper_id,
+           CAST(max(CASE WHEN r.rk = 1 THEN r.n_chars END) AS BIGINT)
+               AS keeper_chars
+    FROM members m JOIN ranked r
+      ON r.cluster = m.cluster AND r.doc_id = m.doc_id
+    GROUP BY 1 ORDER BY 1
+    """,
+    "Near-dup cluster resolution WITH an exact oracle: similarity "
+    "edges are exact 3-shingle Jaccard >= 0.5 (integer-cross-"
+    "multiplied threshold over the set-similarity join — "
+    "deterministic, unlike hash-seeded LSH candidates), transitive "
+    "closure assigns each member its minimum reachable id as the "
+    "cluster label, and each cluster elects a canonical keeper by "
+    "the curation policy (longest document, id tie-break) — the "
+    "decision step that turns near-dup DETECTION into an actionable "
+    "drop list. The Spark side runs the engine's iterative min-label "
+    "propagation (the 100 TB shape: join + groupBy-min per round, "
+    "diameter-bounded); the oracle reproduces the closure with a "
+    "bounded recursive CTE — making this the registry's "
+    "ORACLE-VERIFIED connected components (neardup_clusters' LSH "
+    "pipeline stays rows-only by necessity).",
+    tags=("dedup", "graph", "iterative", "llm-pipeline"),
+)
+def cluster_canonical_keeper(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.dedup import connected_components
+    from ..operators.text import widen_to_parallelism
+
+    docs = t(spark, sf_dir, "documents")
+    ws = F.split("text", " ")
+    # zip_with chain instead of transform-over-indexes: the old
+    # ``transform(sequence(1, size(ws)-2), i -> concat_ws(ws[i-1]…))``
+    # re-ran the split once per shingle index after CollapseProject
+    # inlined ``ws`` into the lambda — O(n²) interpreted work per row
+    # (the same trap the shared shingles() fixed in r9; this site
+    # keeps its own chain because the oracle tokenizes WITHOUT the
+    # empty-token filter). ``ws`` appears only as a direct HOF
+    # argument here, so the split evaluates a constant number of
+    # times per row. concat(x,' ',y) == concat_ws over non-null
+    # strings; null-padded tails (incomplete windows) drop in the
+    # filter, leaving exactly the n-2 shingles sequence(1, n-2) built.
+    n_ws = F.size(ws)
+    acc = F.zip_with(
+        ws,
+        F.slice(ws, 2, F.greatest(n_ws - 1, F.lit(1))),
+        lambda x, y: F.concat(x, F.lit(" "), y),
+    )
+    acc = F.zip_with(
+        acc,
+        F.slice(ws, 3, F.greatest(n_ws - 2, F.lit(1))),
+        lambda x, y: F.concat(x, F.lit(" "), y),
+    )
+    sh = (
+        widen_to_parallelism(docs.select("doc_id", "text"))
+        .filter(n_ws >= 3)
+        .select(
+            "doc_id",
+            F.explode(F.filter(acc, lambda x: x.isNotNull())).alias("shingle"),
+        )
+        .distinct()
+    )
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).cast("bigint").alias("n_sh"))
+    x = sh.select(F.col("doc_id").alias("id_a"), "shingle")
+    y = sh.select(F.col("doc_id").alias("id_b"), "shingle")
+    inter = (
+        x.join(y, "shingle")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("nc"))
+    )
+    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n_sh").alias("n_a"))
+    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n_sh").alias("n_b"))
+    pairs = (
+        inter.join(F.broadcast(sa), "id_a")
+        .join(F.broadcast(sb), "id_b")
+        .filter(3 * F.col("nc") >= F.col("n_a") + F.col("n_b"))
+        .select("id_a", "id_b")
+    )
+    labels = connected_components(pairs).select(
+        F.col("node_id").alias("doc_id"), F.col("cluster_id").alias("cluster")
+    )
+    members = labels.join(docs.select("doc_id", "n_chars"), "doc_id")
+    # keeper: longest doc, lowest id on ties — packed into one max_by
+    # key. DECIMAL(38,0) * 1e12 keeps the primary ordering exact for
+    # any doc_id < 1e12 (past the 100 TB posture); a BIGINT 1e7 pack
+    # corrupts past 10M ids.
+    key = F.col("n_chars").cast("decimal(38,0)") * F.lit(10**12) - F.col("doc_id")
+    return (
+        members.groupBy("cluster")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_members"),
+            F.max_by("doc_id", key).cast("bigint").alias("keeper_id"),
+            F.max("n_chars").cast("bigint").alias("keeper_chars"),
+        )
+        .orderBy("cluster")
+    )
+
+
+@register(
+    "vocab_growth_curve",
+    """
+    WITH toks AS (
+        SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents
+    ), births AS (
+        SELECT w, CAST(min(doc_id) AS BIGINT) AS first_doc FROM toks GROUP BY 1
+    ), doc_tokens AS (
+        SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tok
+        FROM toks GROUP BY 1
+    ), milestones AS (
+        SELECT unnest([50, 100, 200, 300, 400, 500]) AS m
+    )
+    SELECT CAST(ms.m AS BIGINT) AS docs_processed,
+           (SELECT CAST(coalesce(sum(n_tok), 0) AS BIGINT)
+              FROM doc_tokens WHERE doc_id <= ms.m) AS tokens_processed,
+           (SELECT CAST(count(*) AS BIGINT)
+              FROM births WHERE first_doc <= ms.m) AS distinct_terms
+    FROM milestones ms ORDER BY docs_processed
+    """,
+    "Vocabulary growth curve (the Heaps'-law diagnostic every corpus "
+    "scaling study plots): distinct terms seen vs tokens processed "
+    "at document milestones, computed WITHOUT any sequential scan — "
+    "each term's 'birth' is min(doc_id) over its occurrences (one "
+    "groupBy), and every milestone's vocabulary is a count of births "
+    "at or before it. Saturating growth says the corpus is "
+    "exhausting its domain (more data adds tokens, not words — the "
+    "dedup/diversity signal); power-law growth says keep "
+    "collecting. All counts exact; milestones are a 6-row literal "
+    "table joined against two bounded aggregates.",
+    tags=("text", "llm-pipeline", "agg", "analytics"),
+)
+def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = t(spark, sf_dir, "documents")
+    toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
+    births = toks.groupBy("w").agg(
+        F.min("doc_id").cast("bigint").alias("first_doc")
+    )
+    doc_tokens = toks.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_tok")
+    )
+    # one conditional-sum pass per side — no inequality join (which
+    # would nested-loop milestones x docs at scale)
+    MS = [50, 100, 200, 300, 400, 500]
+    tok_row = doc_tokens.agg(
+        *[
+            F.coalesce(
+                F.sum(F.when(F.col("doc_id") <= m, F.col("n_tok"))), F.lit(0)
+            )
+            .cast("bigint")
+            .alias(f"t{m}")
+            for m in MS
+        ]
+    )
+    voc_row = births.agg(
+        *[
+            F.sum(F.when(F.col("first_doc") <= m, 1).otherwise(0))
+            .cast("bigint")
+            .alias(f"v{m}")
+            for m in MS
+        ]
+    )
+    stack_t = ", ".join(f"{m}L, t{m}" for m in MS)
+    stack_v = ", ".join(f"{m}L, v{m}" for m in MS)
+    t_long = tok_row.select(
+        F.expr(f"stack({len(MS)}, {stack_t}) AS (docs_processed, tokens_processed)")
+    )
+    v_long = voc_row.select(
+        F.expr(f"stack({len(MS)}, {stack_v}) AS (docs_processed, distinct_terms)")
+    )
+    return (
+        t_long.join(v_long, "docs_processed")
+        .select(
+            F.col("docs_processed").cast("bigint").alias("docs_processed"),
+            "tokens_processed",
+            "distinct_terms",
+        )
+        .orderBy("docs_processed")
+    )
+
+
+_IMAGE_DECODE_ORACLE = """
+    -- Analytic twin of the REAL BMP/PPM decode: pixel channel j of
+    -- pixel p is the congruence (doc_id*2654435761 + (3p+j)*40503) % 256,
+    -- so header-derived dims, byte sizes (54 + 4-byte-padded stride x h
+    -- for BMP; 11-byte header + 3wh for PPM, dims single-digit by
+    -- construction) and exact integer channel sums are all computable
+    -- without decoding anything.
+    WITH ids AS (
+        SELECT doc_id,
+               5 + doc_id % 4 AS w,
+               3 + doc_id % 3 AS h
+        FROM documents WHERE doc_id % 7 = 3
+    ),
+    px AS (
+        SELECT doc_id, w, h, unnest(range(w * h)) AS p FROM ids
+    )
+    SELECT doc_id,
+           CAST(w AS BIGINT) AS width,
+           CAST(h AS BIGINT) AS height,
+           CAST(54 + ((w * 3 + 3) // 4) * 4 * h AS BIGINT) AS n_bytes_bmp,
+           CAST(11 + 3 * w * h AS BIGINT) AS n_bytes_ppm,
+           CAST(SUM((doc_id * 2654435761 + (3 * p + 0) * 40503) % 256) AS BIGINT) AS sum_r,
+           CAST(SUM((doc_id * 2654435761 + (3 * p + 1) * 40503) % 256) AS BIGINT) AS sum_g,
+           CAST(SUM((doc_id * 2654435761 + (3 * p + 2) * 40503) % 256) AS BIGINT) AS sum_b,
+           CAST((doc_id * 2654435761) % 256 AS BIGINT) AS first_px_r,
+           TRUE AS formats_agree
+    FROM px
+    GROUP BY doc_id, w, h
+    ORDER BY doc_id
+"""
+
+
+@register(
+    "image_decode_stats",
+    _IMAGE_DECODE_ORACLE,
+    "REAL image decode over binary payloads (VERDICT r3 task 6): "
+    "synthesize per-document 24-bpp BMP and P6 PPM files (dims "
+    "5..8 x 3..5 so every BMP row-pad value 0-3 occurs), then "
+    "mapInPandas-decode BOTH formats from their actual on-disk bytes "
+    "— header offsets, strides, bottom-up BGR rows — and emit "
+    "header dims, byte sizes, exact integer channel sums, and a "
+    "cross-format pixel-equality boolean. The oracle recomputes every "
+    "value analytically from the synthesis congruence, so any decode "
+    "slip (pad bytes read as pixels, row order, channel order) "
+    "hash-fails. Scale shape: Arrow-batched mapInPandas, one pass, "
+    "no shuffle before the final bounded sort; payload synthesis and "
+    "decode are both per-partition (reference boundary app.py:15 "
+    "image ingestion).",
+    tags=("multimodal", "round4"),
+)
+def image_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = (
+        t(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 7 == 3)
+        .select(
+            "doc_id",
+            (F.lit(5) + F.col("doc_id") % 4).cast("int").alias("w"),
+            (F.lit(3) + F.col("doc_id") % 3).cast("int").alias("h"),
+        )
+    )
+    images = synth_image_payloads(docs)
+    return decode_image_stats(images).orderBy("doc_id")
+
+
+_AUDIO_DECODE_ORACLE = """
+    -- Analytic twin of the REAL WAV decode: interleaved sample k is
+    -- ((doc_id*2654435761 + k*40503) % 65536) - 32768, so header
+    -- fields (44-byte canonical RIFF+fmt+data layout), integer-exact
+    -- duration, and per-channel / absolute sample sums are computable
+    -- without parsing a byte.
+    WITH ids AS (
+        SELECT doc_id,
+               8000 + 4000 * (doc_id % 3) AS rate,
+               1 + doc_id % 2 AS n_ch,
+               40 + doc_id % 17 AS n_frames
+        FROM documents WHERE doc_id % 5 = 2
+    ),
+    sample AS (
+        SELECT doc_id, rate, n_ch, n_frames,
+               unnest(range(n_frames * n_ch)) AS k
+        FROM ids
+    ),
+    vals AS (
+        SELECT doc_id, rate, n_ch, n_frames, k,
+               ((doc_id * 2654435761 + k * 40503) % 65536) - 32768 AS v
+        FROM sample
+    )
+    SELECT doc_id,
+           CAST(rate AS BIGINT) AS sample_rate,
+           CAST(n_ch AS BIGINT) AS n_channels,
+           CAST(n_frames AS BIGINT) AS n_frames,
+           CAST(n_frames * 1000000 // rate AS BIGINT) AS duration_us,
+           CAST(44 + 2 * n_frames * n_ch AS BIGINT) AS n_bytes,
+           CAST(SUM(CASE WHEN k % n_ch = 0 THEN v ELSE 0 END) AS BIGINT) AS sum_ch0,
+           CAST(SUM(abs(v)) AS BIGINT) AS sum_abs,
+           CAST((doc_id * 2654435761) % 65536 - 32768 AS BIGINT) AS first_sample
+    FROM vals
+    GROUP BY doc_id, rate, n_ch, n_frames
+    ORDER BY doc_id
+"""
+
+
+@register(
+    "audio_decode_stats",
+    _AUDIO_DECODE_ORACLE,
+    "REAL audio decode over binary payloads: synthesize per-document "
+    "RIFF/WAVE clips (16-bit PCM; rate, channel count, and length all "
+    "vary per doc), then mapInPandas-decode the actual on-disk bytes "
+    "— RIFF chunk walk, fmt validation, channel de-interleave — and "
+    "emit header rate/channels, frame count, integer-exact duration, "
+    "and exact integer sample sums. The oracle recomputes every value "
+    "analytically from the synthesis congruence, so any decode slip "
+    "(chunk offsets, byte order, channel stride) hash-fails. Scale "
+    "shape: Arrow-batched mapInPandas, one pass, no shuffle before "
+    "the bounded final sort.",
+    tags=("multimodal", "round4"),
+)
+def audio_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = (
+        t(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 5 == 2)
+        .select(
+            "doc_id",
+            (F.lit(8000) + F.lit(4000) * (F.col("doc_id") % 3)).cast("int").alias("rate"),
+            (F.lit(1) + F.col("doc_id") % 2).cast("int").alias("n_ch"),
+            (F.lit(40) + F.col("doc_id") % 17).cast("int").alias("n_frames"),
+        )
+    )
+    from ..operators.multimodal import decode_audio_stats, synth_audio_payloads
+
+    return decode_audio_stats(synth_audio_payloads(docs)).orderBy("doc_id")
+
+
+_VIDEO_DECODE_ORACLE = """
+    -- Analytic twin of the REAL YUV4MPEG2 decode: byte k of the
+    -- concatenated C420 frame payloads is
+    -- (doc_id*2654435761 + k*40503) % 256; within a frame the first
+    -- w*h bytes are the Y plane, then two quarter-size chroma planes.
+    WITH ids AS (
+        SELECT doc_id,
+               6 + 2 * (doc_id % 3) AS w,
+               4 + 2 * (doc_id % 2) AS h,
+               2 + doc_id % 3 AS n_frames
+        FROM documents WHERE doc_id % 9 = 4
+    ),
+    geo AS (
+        SELECT *, w * h AS y_size, (w // 2) * (h // 2) AS c_size,
+               w * h + 2 * (w // 2) * (h // 2) AS frame_size
+        FROM ids
+    ),
+    byte AS (
+        SELECT doc_id, w, h, n_frames, y_size, c_size, frame_size,
+               unnest(range(n_frames * frame_size)) AS k
+        FROM geo
+    ),
+    vals AS (
+        SELECT doc_id, w, h, n_frames, frame_size,
+               k % frame_size AS p, y_size, c_size,
+               (doc_id * 2654435761 + k * 40503) % 256 AS v
+        FROM byte
+    )
+    SELECT doc_id,
+           CAST(w AS BIGINT) AS width,
+           CAST(h AS BIGINT) AS height,
+           CAST(30000 AS BIGINT) AS fps_num,
+           CAST(1001 AS BIGINT) AS fps_den,
+           CAST(n_frames AS BIGINT) AS n_frames,
+           CAST(length('YUV4MPEG2 W' || CAST(w AS VARCHAR) || ' H'
+                       || CAST(h AS VARCHAR)
+                       || ' F30000:1001 Ip A1:1 C420jpeg') + 1
+                + n_frames * (6 + frame_size) AS BIGINT) AS n_bytes,
+           CAST(SUM(CASE WHEN p < y_size THEN v ELSE 0 END) AS BIGINT) AS sum_y,
+           CAST(SUM(CASE WHEN p >= y_size AND p < y_size + c_size THEN v ELSE 0 END) AS BIGINT) AS sum_u,
+           CAST(SUM(CASE WHEN p >= y_size + c_size THEN v ELSE 0 END) AS BIGINT) AS sum_v,
+           CAST((doc_id * 2654435761) % 256 AS BIGINT) AS first_luma
+    FROM vals
+    GROUP BY doc_id, w, h, n_frames, frame_size
+    ORDER BY doc_id
+"""
+
+
+@register(
+    "video_decode_stats",
+    _VIDEO_DECODE_ORACLE,
+    "REAL video decode over binary payloads: synthesize per-document "
+    "YUV4MPEG2 (.y4m) clips — the uncompressed interchange format "
+    "ffmpeg emits — with per-doc geometry and frame counts, then "
+    "mapInPandas-decode the actual stream bytes: tagged ASCII header, "
+    "FRAME markers, C420 planar Y/U/V splits. Emits header geometry / "
+    "framerate and exact integer per-plane sums; the oracle "
+    "recomputes all of it analytically, so plane-boundary or header "
+    "errors hash-fail. With image_decode_stats and "
+    "audio_decode_stats this makes the multimodal tier "
+    "capability-complete for one real format in each modality. Scale "
+    "shape: Arrow-batched mapInPandas, one pass.",
+    tags=("multimodal", "round4"),
+)
+def video_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = (
+        t(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 9 == 4)
+        .select(
+            "doc_id",
+            (F.lit(6) + F.lit(2) * (F.col("doc_id") % 3)).cast("int").alias("w"),
+            (F.lit(4) + F.lit(2) * (F.col("doc_id") % 2)).cast("int").alias("h"),
+            (F.lit(2) + F.col("doc_id") % 3).cast("int").alias("n_frames"),
+        )
+    )
+    from ..operators.multimodal import decode_video_stats, synth_video_payloads
+
+    return decode_video_stats(synth_video_payloads(docs)).orderBy("doc_id")
+
+
+_EDIT_DISTANCE_JOIN_ORACLE = """
+    -- O(n^2) truth over the distinct-name vocabulary: every unordered
+    -- pair within edit distance 2. The Spark side must produce the
+    -- identical pair set through its bigram-candidate path.
+    WITH n AS (
+        SELECT p_name, CAST(min(p_partkey) AS BIGINT) AS name_id
+        FROM part GROUP BY p_name
+    )
+    SELECT a.name_id AS key_a, b.name_id AS key_b,
+           CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS edit_dist
+    FROM n a JOIN n b ON a.name_id < b.name_id
+    WHERE levenshtein(a.p_name, b.p_name) <= 2
+    ORDER BY key_a, key_b
+"""
+
+
+@register(
+    "edit_distance_threshold_join",
+    _EDIT_DISTANCE_JOIN_ORACLE,
+    "Scalable edit-distance similarity join (fuzzy vocabulary "
+    "matching): collapse parts to their distinct names, then find all "
+    "name pairs within Levenshtein distance d=2 WITHOUT an all-pairs "
+    "comparison. Candidates come from an equi-join on shared bigrams "
+    "plus a length filter — provably lossless for strings of length "
+    ">= q*(d+1) = 6 (each edit destroys at most q=2 bigram tokens, so "
+    "a true pair must still share one; shorter strings would fall "
+    "back to length-bucket blocking) — then exact levenshtein "
+    "verifies candidates, so the result equals the O(n^2) oracle. "
+    "Complements prefix_jaccard_threshold_join (set similarity) with "
+    "the string-edit metric. Scale shape: explode-to-bigrams is "
+    "map-side; the join is an equi-join on gram values; pair dedup "
+    "and verify touch only candidate pairs.",
+    tags=("dedup", "join", "text", "round4"),
+)
+def edit_distance_threshold_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d = 2
+    names = (
+        t(spark, sf_dir, "part")
+        .groupBy("p_name")
+        .agg(F.min("p_partkey").cast("long").alias("name_id"))
+    )
+    grams = names.select(
+        "name_id",
+        "p_name",
+        F.length("p_name").alias("len"),
+        F.explode(
+            F.array_distinct(
+                F.expr(
+                    "transform(sequence(1, length(p_name) - 1),"
+                    " i -> substring(p_name, i, 2))"
+                )
+            )
+        ).alias("gram"),
+    )
+    a, b = grams.alias("a"), grams.alias("b")
+    cand = (
+        a.join(b, "gram")
+        .filter(
+            (F.col("a.name_id") < F.col("b.name_id"))
+            & (F.abs(F.col("a.len") - F.col("b.len")) <= d)
+        )
+        .select(
+            F.col("a.name_id").alias("key_a"),
+            F.col("a.p_name").alias("name_a"),
+            F.col("b.name_id").alias("key_b"),
+            F.col("b.p_name").alias("name_b"),
+        )
+        .distinct()
+    )
+    return (
+        cand.withColumn(
+            "edit_dist", F.levenshtein("name_a", "name_b").cast("long")
+        )
+        .filter(F.col("edit_dist") <= d)
+        .select("key_a", "key_b", "edit_dist")
+        .orderBy("key_a", "key_b")
+    )
+
+
+_TEMPERATURE_MIX_ORACLE = """
+    -- alpha=1/2 temperature resampling: w_s = sqrt(chars_s). sqrt is
+    -- correctly-rounded IEEE on both engines, and the normalizing
+    -- total is taken as the MAX of a source-ordered running sum, which
+    -- both engines evaluate sequentially in the same order — so every
+    -- double here is bit-identical across engines and layouts.
+    WITH s AS (
+        SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+               CAST(sum(n_chars) AS BIGINT) AS chars
+        FROM documents GROUP BY source
+    ),
+    w AS (
+        SELECT *, sqrt(CAST(chars AS DOUBLE)) AS wt,
+               CAST((SELECT sum(chars) FROM s) AS BIGINT) AS total_chars
+        FROM s
+    ),
+    r AS (
+        SELECT *, sum(wt) OVER (ORDER BY source
+                                ROWS BETWEEN UNBOUNDED PRECEDING
+                                AND CURRENT ROW) AS run
+        FROM w
+    )
+    SELECT source, n_docs, chars,
+           round(CAST(chars AS DOUBLE) / total_chars, 6) AS natural_share,
+           round(wt / (SELECT max(run) FROM r), 6) AS adj_share,
+           round((wt / (SELECT max(run) FROM r))
+                 / (CAST(chars AS DOUBLE) / total_chars), 6) AS boost
+    FROM r ORDER BY source
+"""
+
+
+@register(
+    "temperature_sampling_mix",
+    _TEMPERATURE_MIX_ORACLE,
+    "Temperature-based corpus mixing (the multilingual/multi-source "
+    "alpha-sampling every large-scale LM data pipeline applies): "
+    "per-source sampling shares proportional to chars^alpha with "
+    "alpha=1/2, flattening the natural distribution so small sources "
+    "are upsampled (boost > 1) and large ones down-weighted. Exact "
+    "cross-engine floats by construction: sqrt is correctly-rounded "
+    "IEEE, and the normalizer is the max of a source-ORDERED running "
+    "sum so both engines add in the same sequence — no layout "
+    "dependence. Scale shape: one partial-combined groupBy to "
+    "metadata scale (one row per source), windows over that tiny "
+    "frame only.",
+    tags=("textprep", "governance", "round4"),
+)
+def temperature_sampling_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    src = (
+        t(spark, sf_dir, "documents")
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("n_chars").alias("chars"),
+        )
+    )
+    w = src.select(
+        "source",
+        F.col("n_docs").cast("long").alias("n_docs"),
+        F.col("chars").cast("long").alias("chars"),
+        F.sqrt(F.col("chars").cast("double")).alias("wt"),
+    )
+    run_win = (
+        W.orderBy("source").rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    r = w.withColumn("run", F.sum("wt").over(run_win))
+    full = W.orderBy("source").rowsBetween(
+        W.unboundedPreceding, W.unboundedFollowing
+    )
+    r = r.withColumn("total_w", F.max("run").over(full)).withColumn(
+        "total_chars", F.sum("chars").over(full)
+    )
+    return r.select(
+        "source",
+        "n_docs",
+        "chars",
+        F.round(F.col("chars").cast("double") / F.col("total_chars"), 6).alias(
+            "natural_share"
+        ),
+        F.round(F.col("wt") / F.col("total_w"), 6).alias("adj_share"),
+        F.round(
+            (F.col("wt") / F.col("total_w"))
+            / (F.col("chars").cast("double") / F.col("total_chars")),
+            6,
+        ).alias("boost"),
+    ).orderBy("source")
+
+
+_RECORD_LINKAGE_ORACLE = """
+    -- Fellegi-Sunter with EXACT integer rationals: m/u probabilities
+    -- are percent integers, the likelihood ratio is a numerator /
+    -- denominator product pair (never a float, never a log), and the
+    -- match decision cross-multiplies — bit-exact on any engine.
+    WITH c AS (
+        SELECT c_custkey, c_nationkey, c_mktsegment,
+               CAST(floor(c_acctbal * 100 + 0.5) AS BIGINT) // 10000 AS bal_band,
+               right(c_name, 2) AS name_suffix,
+               c_custkey % 2 AS parity
+        FROM customer
+    ),
+    pairs AS (
+        SELECT a.c_custkey AS key_a, b.c_custkey AS key_b,
+               a.c_mktsegment = b.c_mktsegment AS seg_agree,
+               a.bal_band = b.bal_band AS bal_agree,
+               a.name_suffix = b.name_suffix AS suffix_agree,
+               a.parity = b.parity AS parity_agree
+        FROM c a JOIN c b
+          ON a.c_nationkey = b.c_nationkey AND a.c_custkey < b.c_custkey
+    ),
+    scored AS (
+        SELECT *,
+               CAST(CASE WHEN seg_agree THEN 90 ELSE 10 END
+                  * CASE WHEN bal_agree THEN 85 ELSE 15 END
+                  * CASE WHEN suffix_agree THEN 95 ELSE 5 END
+                  * CASE WHEN parity_agree THEN 98 ELSE 2 END AS BIGINT)
+                   AS lr_num,
+               CAST(CASE WHEN seg_agree THEN 20 ELSE 80 END
+                  * CASE WHEN bal_agree THEN 2 ELSE 98 END
+                  * CASE WHEN suffix_agree THEN 1 ELSE 99 END
+                  * CASE WHEN parity_agree THEN 50 ELSE 50 END AS BIGINT)
+                   AS lr_den
+        FROM pairs
+    )
+    SELECT key_a, key_b, seg_agree, bal_agree, suffix_agree, parity_agree,
+           lr_num, lr_den, lr_num > 100 * lr_den AS is_match
+    FROM scored
+    WHERE lr_num > 10 * lr_den
+    ORDER BY key_a, key_b
+"""
+
+
+@register(
+    "record_linkage_fellegi_sunter",
+    _RECORD_LINKAGE_ORACLE,
+    "Probabilistic record linkage (Fellegi-Sunter): candidate pairs "
+    "from nation-key blocking (never all-pairs), per-field agreement "
+    "vector (market segment, account-balance band on the exact cents "
+    "grid, name suffix, key parity), and the match likelihood ratio "
+    "prod(agree ? m_i/u_i : (1-m_i)/(1-u_i)) carried as an EXACT "
+    "integer numerator/denominator pair with cross-multiplied "
+    "threshold decisions — the repo's no-float rational recipe, so "
+    "the score algebra is bit-identical on any engine or layout. "
+    "Emits reviewable near-matches (LR > 10) and the LR > 100 match "
+    "verdict. Scale shape: blocking key equi-join, all scoring in "
+    "one projection, selective integer filter before the bounded "
+    "sort; m/u would come from an EM fit upstream — here they are "
+    "fixed percent-integer parameters.",
+    tags=("dedup", "governance", "round4"),
+)
+def record_linkage_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
+    c = t(spark, sf_dir, "customer").select(
+        "c_custkey",
+        "c_nationkey",
+        "c_mktsegment",
+        (
+            F.floor(F.col("c_acctbal") * 100 + 0.5).cast("long") / F.lit(10000)
+        )
+        .cast("long")
+        .alias("bal_band"),
+        F.substring("c_name", -2, 2).alias("name_suffix"),
+        (F.col("c_custkey") % 2).alias("parity"),
+    )
+    a, b = c.alias("a"), c.alias("b")
+    pairs = a.join(
+        b,
+        (F.col("a.c_nationkey") == F.col("b.c_nationkey"))
+        & (F.col("a.c_custkey") < F.col("b.c_custkey")),
+    ).select(
+        F.col("a.c_custkey").alias("key_a"),
+        F.col("b.c_custkey").alias("key_b"),
+        (F.col("a.c_mktsegment") == F.col("b.c_mktsegment")).alias("seg_agree"),
+        (F.col("a.bal_band") == F.col("b.bal_band")).alias("bal_agree"),
+        (F.col("a.name_suffix") == F.col("b.name_suffix")).alias("suffix_agree"),
+        (F.col("a.parity") == F.col("b.parity")).alias("parity_agree"),
+    )
+
+    def _w(flag: str, yes: int, no: int):
+        return F.when(F.col(flag), F.lit(yes)).otherwise(F.lit(no))
+
+    scored = pairs.withColumn(
+        "lr_num",
+        (
+            _w("seg_agree", 90, 10)
+            * _w("bal_agree", 85, 15)
+            * _w("suffix_agree", 95, 5)
+            * _w("parity_agree", 98, 2)
+        ).cast("long"),
+    ).withColumn(
+        "lr_den",
+        (
+            _w("seg_agree", 20, 80)
+            * _w("bal_agree", 2, 98)
+            * _w("suffix_agree", 1, 99)
+            * _w("parity_agree", 50, 50)
+        ).cast("long"),
+    )
+    return (
+        scored.filter(F.col("lr_num") > 10 * F.col("lr_den"))
+        .select(
+            "key_a",
+            "key_b",
+            "seg_agree",
+            "bal_agree",
+            "suffix_agree",
+            "parity_agree",
+            "lr_num",
+            "lr_den",
+            (F.col("lr_num") > 100 * F.col("lr_den")).alias("is_match"),
+        )
+        .orderBy("key_a", "key_b")
+    )
+
+
+_QUANTILE_NORM_ORACLE = """
+    -- Quantile normalization with PURE INTEGER rank mapping: doc at
+    -- within-source rank r (of n_s) maps to the pooled order
+    -- statistic at midpoint index ((2r-1)*N) // (2*n_s) + 1 — handles
+    -- unequal source sizes with no interpolation floats; ties broken
+    -- by doc_id on both rankings.
+    WITH ranked AS (
+        SELECT doc_id, source, n_chars,
+               row_number() OVER (PARTITION BY source
+                                  ORDER BY n_chars, doc_id) AS r,
+               count(*) OVER (PARTITION BY source) AS n_s,
+               count(*) OVER () AS n_total
+        FROM documents
+    ),
+    pooled AS (
+        SELECT n_chars AS pooled_value,
+               row_number() OVER (ORDER BY n_chars, doc_id) AS pr
+        FROM documents
+    )
+    SELECT k.doc_id, k.source,
+           CAST(k.n_chars AS BIGINT) AS orig_value,
+           CAST(k.r AS BIGINT) AS rank_in_source,
+           CAST(((2 * k.r - 1) * k.n_total) // (2 * k.n_s) + 1 AS BIGINT)
+               AS pooled_idx,
+           CAST(p.pooled_value AS BIGINT) AS normalized_value
+    FROM ranked k
+    JOIN pooled p
+      ON p.pr = ((2 * k.r - 1) * k.n_total) // (2 * k.n_s) + 1
+    ORDER BY k.doc_id
+"""
+
+
+@register(
+    "quantile_normalization",
+    _QUANTILE_NORM_ORACLE,
+    "Cross-source quantile normalization (the feature/batch-effect "
+    "equalizer): every document's length feature is replaced by the "
+    "POOLED distribution's order statistic at its within-source "
+    "midpoint rank, so all sources share one marginal distribution "
+    "afterwards. The rank mapping ((2r-1)*N)//(2*n_s)+1 is pure "
+    "integer arithmetic — unequal source sizes need no interpolation "
+    "floats — and both rankings tie-break on doc_id, so the result "
+    "is exact on any engine or layout. Scale shape: per-source ranks "
+    "are partitioned windows; the pooled ranking is the one global "
+    "sort (at 100 TB you would swap it for a merged quantile-sketch "
+    "lookup table, same join shape); the final equi-join is on the "
+    "integer index.",
+    tags=("textprep", "stats", "round4"),
+)
+def quantile_normalization(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = t(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
+    ranked = (
+        docs.withColumn(
+            "r",
+            F.row_number().over(
+                W.partitionBy("source").orderBy("n_chars", "doc_id")
+            ),
+        )
+        .withColumn("n_s", F.count(F.lit(1)).over(W.partitionBy("source")))
+        .withColumn("n_total", F.count(F.lit(1)).over(W.partitionBy()))
+        .withColumn(
+            "pooled_idx",
+            F.expr("((2 * r - 1) * n_total) DIV (2 * n_s) + 1").cast("long"),
+        )
+    )
+    pooled = docs.select(
+        F.col("n_chars").alias("pooled_value"),
+        F.row_number().over(W.orderBy("n_chars", "doc_id")).alias("pr"),
+    )
+    return (
+        ranked.join(pooled, ranked.pooled_idx == pooled.pr)
+        .select(
+            "doc_id",
+            "source",
+            F.col("n_chars").cast("long").alias("orig_value"),
+            F.col("r").cast("long").alias("rank_in_source"),
+            F.col("pooled_idx").cast("long").alias("pooled_idx"),
+            F.col("pooled_value").cast("long").alias("normalized_value"),
+        )
+        .orderBy("doc_id")
+    )
+
+
+_RESIZE_ORACLE = """
+    -- Analytic twin of decode+nearest-neighbor resize: destination
+    -- pixel (x, y) of the 4x3 thumbnail samples source pixel
+    -- p = ((y*h) // 3) * w + (x*w) // 4 of the congruence-synthesized
+    -- BMP, so resized channel sums are computable without touching a
+    -- byte. Any slip in the decode OR the resize mapping hash-fails.
+    WITH ids AS (
+        SELECT doc_id, 5 + doc_id % 4 AS w, 3 + doc_id % 3 AS h
+        FROM documents WHERE doc_id % 6 = 1
+    ),
+    dst AS (
+        SELECT doc_id, w, h,
+               unnest(range(12)) AS d      -- 4x3 destination raster
+        FROM ids
+    ),
+    src AS (
+        SELECT doc_id, w, h, d,
+               (((d // 4) * h) // 3) * w + ((d % 4) * w) // 4 AS p
+        FROM dst
+    ),
+    vals AS (
+        SELECT doc_id, w, h, d, p,
+               (doc_id * 2654435761 + (3 * p + 0) * 40503) % 256 AS r,
+               (doc_id * 2654435761 + (3 * p + 1) * 40503) % 256 AS g,
+               (doc_id * 2654435761 + (3 * p + 2) * 40503) % 256 AS b
+        FROM src
+    )
+    SELECT doc_id,
+           CAST(w AS BIGINT) AS src_w, CAST(h AS BIGINT) AS src_h,
+           CAST(4 AS BIGINT) AS dst_w, CAST(3 AS BIGINT) AS dst_h,
+           CAST(SUM(r) AS BIGINT) AS sum_r,
+           CAST(SUM(g) AS BIGINT) AS sum_g,
+           CAST(SUM(b) AS BIGINT) AS sum_b,
+           CAST(MAX(CASE WHEN d = 0 THEN r END) AS BIGINT) AS corner_tl_r,
+           CAST(MAX(CASE WHEN d = 11 THEN r END) AS BIGINT) AS corner_br_r
+    FROM vals
+    GROUP BY doc_id, w, h
+    ORDER BY doc_id
+"""
+
+
+@register(
+    "image_resize_stats",
+    _RESIZE_ORACLE,
+    "REAL image thumbnailing (the charter's resize step): decode the "
+    "actual BMP bytes, nearest-neighbor resize to a 4x3 raster with "
+    "the pure-integer floor mapping (x*W)//W', and emit exact integer "
+    "channel sums plus corner samples of the RESIZED image. The "
+    "oracle recomputes every destination pixel analytically from the "
+    "synthesis congruence through the same mapping, so decode slips "
+    "and resize off-by-ones both hash-fail. Completes the charter's "
+    "multimodal verb set — decode, feature-extract, resize, "
+    "frame-sample — with real semantics for each. Scale shape: "
+    "Arrow-batched mapInPandas, one pass.",
+    tags=("multimodal", "round4"),
+)
+def image_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.multimodal import decode_resize_stats
+
+    docs = (
+        t(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 6 == 1)
+        .select(
+            "doc_id",
+            (F.lit(5) + F.col("doc_id") % 4).cast("int").alias("w"),
+            (F.lit(3) + F.col("doc_id") % 3).cast("int").alias("h"),
+        )
+    )
+    images = synth_image_payloads(docs).select("doc_id", "bmp")
+    return decode_resize_stats(images, 4, 3).orderBy("doc_id")
+
+
+# =====================================================================
+# Multimodal DSP: real FFT spectral peaks over decoded PCM
+# =====================================================================
+_SPECTRAL_ORACLE = """
+    -- The oracle cannot run an FFT, so it pins the spectrum's
+    -- analytically-known facts instead (the bound-boolean pattern the
+    -- sketch tier uses): the synthesized signal is an integer square
+    -- wave at bin k, whose fundamental strictly dominates every
+    -- (aliased) odd harmonic (|c_m| ~ 1/m), so the REAL numpy rFFT on
+    -- the REAL decoded WAV bytes must report peak_bin = k; energy and
+    -- DC are replayed sample-for-sample with unnest(range(256)); and
+    -- Parseval (sum|X|^2/N = sum x^2) must hold to 1e-6 relative on
+    -- any layout. A framing/byte-order/FFT slip moves the peak or
+    -- breaks Parseval and hash-fails.
+    WITH ids AS (
+        SELECT doc_id,
+               5 + (doc_id * 2654435761) % 96 AS k,
+               1000 * (1 + doc_id % 7) AS amp
+        FROM documents WHERE doc_id % 11 = 5
+    ),
+    phase AS (
+        SELECT doc_id, k, amp, unnest(range(256)) AS i
+        FROM ids
+    ),
+    s AS (
+        SELECT doc_id, k, amp,
+               CASE WHEN (i * k) % 256 < 128 THEN amp ELSE -amp END AS v
+        FROM phase
+    )
+    SELECT doc_id,
+           CAST(256 AS BIGINT) AS n_frames,
+           CAST(amp AS BIGINT) AS amp,
+           CAST(k AS BIGINT) AS expected_bin,
+           CAST(k AS BIGINT) AS peak_bin,
+           CAST(SUM(CAST(v AS BIGINT) * v) AS BIGINT) AS energy,
+           CAST(SUM(v) AS BIGINT) AS dc_sum,
+           TRUE AS peak_matches,
+           TRUE AS parseval_ok
+    FROM s
+    GROUP BY doc_id, k, amp
+    ORDER BY doc_id
+"""
+
+
+@register(
+    "audio_spectral_peaks",
+    _SPECTRAL_ORACLE,
+    "REAL spectral analysis over binary audio: synthesize per-document "
+    "WAV clips containing integer square waves at a congruence-chosen "
+    "bin k (5..100 of 256), decode the actual RIFF bytes, run a numpy "
+    "real FFT (operators/multimodal.py spectral_peak_stats), and "
+    "report the dominant non-DC bin + a Parseval energy identity "
+    "check. A square wave's fundamental strictly dominates every "
+    "aliased odd harmonic (verified exhaustively for all 96 reachable "
+    "k in tests), so the oracle pins peak_bin analytically WITHOUT "
+    "running an FFT - the driver hash falsifies the whole decode->FFT "
+    "pipeline; energy/DC replay sample-for-sample in SQL. Scale "
+    "shape: Arrow-batched mapInPandas, one pass, no shuffle before "
+    "the bounded sort; this is the signals counterpart of the codec "
+    "tier's image/video decode queries.",
+    tags=("multimodal", "round4"),
+)
+def audio_spectral_peaks(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.multimodal import (
+        spectral_peak_stats,
+        synth_square_wave_payloads,
+    )
+
+    docs = (
+        t(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 11 == 5)
+        .select(
+            "doc_id",
+            (F.lit(5) + (F.col("doc_id") * 2654435761) % 96).alias("k"),
+            (F.lit(1000) * (F.lit(1) + F.col("doc_id") % 7)).alias("amp"),
+        )
+    )
+    return spectral_peak_stats(synth_square_wave_payloads(docs)).orderBy(
+        "doc_id"
+    )
+
+
+# =====================================================================
+# Dedup: SimHash with a PORTABLE hash (closes the rows-only gap)
+# =====================================================================
+_SH_MASK = (1 << 56) - 1  # fold mod 2^56: acc*31 stays under 2^63
+
+
+_SH_BITS = 32
+
+
+def _simhash_token_hash(engine: str) -> str:
+    """Per-token polynomial rolling hash, identical math on both
+    engines: fold (acc*31 + ascii(char)) & (2^56-1) over the token's
+    characters from acc=7. Only the list-function NAMES differ."""
+    if engine == "spark":
+        return (
+            "aggregate(filter(split(tok, ''), x -> x != ''), 7L, "
+            f"(acc, c) -> (acc * 31 + ascii(c)) & {_SH_MASK})"
+        )
+    return (
+        "list_reduce(list_prepend(CAST(7 AS BIGINT), "
+        "list_transform(list_filter(string_split_regex(tok, ''), "
+        "x -> x <> ''), c -> CAST(ascii(c) AS BIGINT))), "
+        f"(acc, c) -> (acc * 31 + c) & {_SH_MASK})"
+    )
+
+
+def _simhash_sig_expr() -> str:
+    """Signature from the 32 per-bit vote sums v0..v31 (same text both
+    engines): bit b set iff the +-1 vote total is positive."""
+    terms = [
+        f"(CASE WHEN v{b} > 0 THEN {1 << b} ELSE 0 END)"
+        for b in range(_SH_BITS)
+    ]
+    return "(" + " + ".join(terms) + ")"
+
+
+def _simhash_vote_sql(b: int) -> str:
+    return f"SUM(2 * ((h >> {b}) & 1) - 1) AS v{b}"
+
+
+_SIMHASH_PORTABLE_ORACLE = f"""
+    -- Full replay of the portable SimHash: whitespace tokens (empties
+    -- filtered, the repo-wide convention), a polynomial rolling hash
+    -- per token folded with IDENTICAL integer ops on both engines
+    -- (the engine twin simhash_dedup uses xxhash64, which DuckDB
+    -- lacks - THIS query is the falsifiable variant), +-1 bit votes
+    -- over 32 signature bits per token occurrence, majority -> bit.
+    -- Groups with >= 2 members are the near-dup candidate classes.
+    WITH tok AS MATERIALIZED (
+        SELECT doc_id, unnest(list_filter(string_split(text, ' '),
+                                          x -> x <> '')) AS tok
+        FROM documents
+    ),
+    h AS MATERIALIZED (
+        SELECT doc_id, {_simhash_token_hash('duckdb')} AS h FROM tok
+    ),
+    votes AS MATERIALIZED (
+        SELECT doc_id, {', '.join(_simhash_vote_sql(b) for b in range(_SH_BITS))}
+        FROM h GROUP BY doc_id
+    ),
+    sig AS MATERIALIZED (
+        SELECT doc_id, {_simhash_sig_expr()} AS signature FROM votes
+    )
+    SELECT CAST(signature AS BIGINT) AS signature,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           array_to_string(list_sort(list(doc_id)), ',') AS member_ids
+    FROM sig
+    GROUP BY signature
+    HAVING count(*) >= 2
+    ORDER BY signature
+"""
+
+
+@register(
+    "simhash_portable_dedup",
+    _SIMHASH_PORTABLE_ORACLE,
+    "SimHash near-dup grouping with a PORTABLE hash, making the "
+    "SimHash family driver-falsifiable (the xxhash64 twin "
+    "simhash_dedup stays rows-only because no independent engine can "
+    "replay xxhash64; this variant swaps in a polynomial rolling hash "
+    "- fold (acc*31 + ascii(c)) & (2^56-1) - that Spark evaluates as "
+    "a native aggregate() lambda and DuckDB as list_reduce, bit-for-"
+    "bit identical). 32 signature bits from +-1 majority votes per "
+    "token occurrence; docs grouped by exact signature; classes with "
+    ">= 2 members emitted with sorted member lists. Whole pipeline is "
+    "native expressions (no UDF): explode tokens -> fold -> 32 "
+    "conditional sums -> signature groupBy. Scale: signatures (8 "
+    "bytes) shuffle, documents never pairwise-compare - same posture "
+    "as the banded-MinHash tier.",
+    tags=("dedup", "round4"),
+)
+def simhash_portable_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.text import tokens
+
+    docs = t(spark, sf_dir, "documents")
+    tok = docs.select(
+        "doc_id", F.explode(tokens("text")).alias("tok")
+    )
+    h = tok.select(
+        "doc_id", F.expr(_simhash_token_hash("spark")).alias("h")
+    )
+    votes = h.groupBy("doc_id").agg(
+        *[
+            F.sum(F.expr(f"2 * ((h >> {b}) & 1) - 1")).alias(f"v{b}")
+            for b in range(_SH_BITS)
+        ]
+    )
+    sig = votes.select(
+        "doc_id", F.expr(_simhash_sig_expr()).cast("long").alias("signature")
+    )
+    return (
+        sig.groupBy("signature")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.array_join(
+                F.array_sort(F.collect_list("doc_id")).cast("array<string>"),
+                ",",
+            ).alias("member_ids"),
+        )
+        .filter(F.col("n_docs") >= 2)
+        .orderBy("signature")
+    )
+
+
+# =====================================================================
+# Shared portable hashing: the polynomial rolling hash family from
+# simhash_portable_dedup, parametrized by mask so fingerprints can be
+# packed next to a 20-bit position inside one BIGINT.
+# =====================================================================
+_MASK40 = (1 << 40) - 1  # 40-bit hash -> h * 2^20 + pos stays < 2^60
+
+
+_POS_BITS = 20
+
+
+_POS_MOD = 1 << _POS_BITS  # positions are per-document (< 2^20: a
+
+
+# document with a million tokens is ~5 MB - the per-doc bound holds at
+# ANY corpus scale; corpus growth adds documents, not document length)
+def _polyhash(col: str, engine: str, mask: int = _MASK40) -> str:
+    """Portable polynomial rolling hash over a string column: fold
+    (acc*31 + ascii(c)) & mask from acc=7 - identical integer math on
+    both engines, only the list-function NAMES differ."""
+    if engine == "spark":
+        return (
+            f"aggregate(filter(split({col}, ''), x -> x != ''), 7L, "
+            f"(acc, c) -> (acc * 31 + ascii(c)) & {mask})"
+        )
+    return (
+        f"list_reduce(list_prepend(CAST(7 AS BIGINT), "
+        f"list_transform(list_filter(string_split_regex({col}, ''), "
+        f"x -> x <> ''), c -> CAST(ascii(c) AS BIGINT))), "
+        f"(acc, c) -> (acc * 31 + c) & {mask})"
+    )
+
+
+# =====================================================================
+# Winnowing document fingerprints (Schleimer, Wilkerson, Aiken 2003 -
+# the MOSS algorithm): per-window rightmost-minimum k-gram hashes.
+# =====================================================================
+_WINNOW_K = 4  # tokens per k-gram
+
+
+_WINNOW_W = 5  # winnowing window (guarantee: any match >= k+w-1 tokens
+
+
+# long shares at least one fingerprint)
+_WINNOW_DF_CAP = 25  # stop-gram cap: fingerprints in more docs carry
+
+
+# no discriminating signal and their posting lists drive the join cost
+_WINNOWING_ORACLE = f"""
+    -- Full replay of MOSS winnowing: whitespace tokens, 4-token
+    -- k-grams hashed with the portable 40-bit polynomial rolling hash,
+    -- then for every window of 5 consecutive k-gram hashes the
+    -- RIGHTMOST MINIMUM is selected as a fingerprint. The tie rule is
+    -- engine-independent because (hash, position) is packed into ONE
+    -- BIGINT - h * 2^20 + (2^20-1-pos) - whose plain min() IS
+    -- (min hash, max pos among ties). Shared-fingerprint doc pairs
+    -- (stop-grams appearing in > {_WINNOW_DF_CAP} docs dropped first)
+    -- are the plagiarism/near-dup candidates.
+    WITH toks AS MATERIALIZED (
+        SELECT doc_id,
+               list_filter(string_split(text, ' '), x -> x <> '') AS ws
+        FROM documents
+    ),
+    kg AS MATERIALIZED (
+        SELECT doc_id, ws,
+               unnest(generate_series(1, len(ws) - {_WINNOW_K - 1}))
+                   AS pos
+        FROM toks WHERE len(ws) >= {_WINNOW_K}
+    ),
+    g AS MATERIALIZED (
+        SELECT doc_id, pos,
+               ws[pos] || ' ' || ws[pos + 1] || ' ' || ws[pos + 2]
+                       || ' ' || ws[pos + 3] AS g
+        FROM kg
+    ),
+    h AS MATERIALIZED (
+        SELECT doc_id, pos,
+               {_polyhash('g', 'duckdb')} * {_POS_MOD}
+                   + ({_POS_MOD - 1} - pos) AS pk
+        FROM g
+    ),
+    win AS MATERIALIZED (
+        SELECT doc_id, pos,
+               min(pk) OVER (PARTITION BY doc_id ORDER BY pos
+                             ROWS BETWEEN {_WINNOW_W - 1} PRECEDING
+                             AND CURRENT ROW) AS wmin
+        FROM h
+    ),
+    fp AS MATERIALIZED (
+        SELECT DISTINCT doc_id, wmin // {_POS_MOD} AS fph
+        FROM win WHERE pos >= {_WINNOW_W}
+    ),
+    live AS MATERIALIZED (
+        SELECT fph FROM fp GROUP BY fph
+        HAVING count(*) <= {_WINNOW_DF_CAP}
+    ),
+    kept AS MATERIALIZED (
+        SELECT fp.doc_id, fp.fph FROM fp JOIN live USING (fph)
+    ),
+    sizes AS MATERIALIZED (
+        SELECT doc_id, CAST(count(*) AS BIGINT) AS n_fp
+        FROM kept GROUP BY doc_id
+    ),
+    pairs AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+               CAST(count(*) AS BIGINT) AS shared_fps
+        FROM kept a JOIN kept b
+          ON a.fph = b.fph AND a.doc_id < b.doc_id
+        GROUP BY 1, 2
+        HAVING count(*) >= 2
+    )
+    SELECT p.doc_a, p.doc_b, p.shared_fps,
+           sa.n_fp AS fp_a, sb.n_fp AS fp_b,
+           round(CAST(p.shared_fps AS DOUBLE)
+                 / CAST(LEAST(sa.n_fp, sb.n_fp) AS DOUBLE), 6)
+               AS overlap_coef
+    FROM pairs p
+    JOIN sizes sa ON sa.doc_id = p.doc_a
+    JOIN sizes sb ON sb.doc_id = p.doc_b
+    ORDER BY shared_fps DESC, doc_a, doc_b
+"""
+
+
+@register(
+    "winnowing_fingerprint_overlap",
+    _WINNOWING_ORACLE,
+    "Winnowing document fingerprinting (Schleimer-Wilkerson-Aiken "
+    "2003, the MOSS algorithm) as pure native expressions: 4-token "
+    "k-grams hashed with the portable 40-bit polynomial rolling hash, "
+    "then each 5-window's RIGHTMOST MINIMUM hash selected via one "
+    "windowed min over a packed (hash, position) BIGINT key - "
+    "h*2^20 + (2^20-1-pos) - so the classic tie rule costs nothing "
+    "and is bit-identical on any engine. Winnowing's guarantee (every "
+    "shared run of >= k+w-1 tokens shares >= 1 fingerprint) makes "
+    "this the standard lossless-recall screen before expensive "
+    "pairwise diffing. Scale: fingerprints are ~2/(w+1) of k-gram "
+    "positions (a 3x reduction before any shuffle), the windowed min "
+    "is per-document (partition-parallel, never a global sort), and "
+    "the pair join is an equi-join on fingerprint hash with "
+    "stop-grams (> 25 docs) dropped first - the posting-list cap "
+    "that keeps the join linear in matches, same posture as the "
+    "banded-MinHash tier. No UDF anywhere.",
+    tags=("dedup", "text", "llm-pipeline", "round4"),
+)
+def winnowing_fingerprint_overlap(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from ..operators.text import tokens, widen_to_parallelism
+
+    docs = t(spark, sf_dir, "documents")
+    # Widen the one-split scan before the tokenize/k-gram/polyhash
+    # map pass (guide §2.5; identity at scale).
+    toks = widen_to_parallelism(docs.select("doc_id", "text")).select(
+        "doc_id", tokens("text").alias("ws")
+    )
+    n = F.size("ws")
+    k = _WINNOW_K
+    base = toks.filter(n >= k).select(
+        "doc_id",
+        F.posexplode(
+            F.arrays_zip(
+                *[F.slice(F.col("ws"), i + 1, n - (k - 1)) for i in range(k)]
+            )
+        ).alias("i", "kg"),
+    )
+    g = base.select(
+        "doc_id",
+        (F.col("i") + 1).alias("pos"),
+        F.concat_ws(
+            " ", *[F.col(f"kg.{i}") for i in range(k)]
+        ).alias("g"),
+    )
+    h = g.select(
+        "doc_id",
+        "pos",
+        (
+            F.expr(_polyhash("g", "spark")) * _POS_MOD
+            + (F.lit(_POS_MOD - 1) - F.col("pos"))
+        ).alias("pk"),
+    )
+    from pyspark.sql import Window as W
+
+    win = h.select(
+        "doc_id",
+        "pos",
+        F.min("pk")
+        .over(
+            W.partitionBy("doc_id")
+            .orderBy("pos")
+            .rowsBetween(-(_WINNOW_W - 1), 0)
+        )
+        .alias("wmin"),
+    )
+    fp = (
+        win.filter(F.col("pos") >= _WINNOW_W)
+        .select("doc_id", F.expr(f"wmin div {_POS_MOD}").alias("fph"))
+        .distinct()
+    )
+    live = fp.groupBy("fph").agg(F.count(F.lit(1)).alias("df")).filter(
+        F.col("df") <= _WINNOW_DF_CAP
+    )
+    kept = fp.join(live.select("fph"), "fph")
+    sizes = kept.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_fp")
+    )
+    a = kept.select(F.col("doc_id").alias("doc_a"), "fph")
+    b = kept.select(F.col("doc_id").alias("doc_b"), "fph")
+    pairs = (
+        a.join(b, ["fph"])
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("shared_fps"))
+        .filter(F.col("shared_fps") >= 2)
+    )
+    # `sizes` is one row per DOCUMENT — corpus-sized, so it must NOT
+    # broadcast at the 100 TB posture (the ADVICE-r3 bigram-broadcast
+    # class). Both joins are doc-keyed shuffle joins; AQE will still
+    # choose broadcast at fixture scale on its own size estimate.
+    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_fp").alias("fp_a"))
+    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_fp").alias("fp_b"))
+    return (
+        pairs.join(sa, "doc_a")
+        .join(sb, "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            "shared_fps",
+            "fp_a",
+            "fp_b",
+            F.round(
+                F.col("shared_fps").cast("double")
+                / F.least("fp_a", "fp_b").cast("double"),
+                6,
+            ).alias("overlap_coef"),
+        )
+        .orderBy(F.desc("shared_fps"), "doc_a", "doc_b")
+    )
+
+
+# =====================================================================
+# Exact substring-duplication spans (the token-n-gram form of Lee et
+# al. 2022, "Deduplicating Training Data Makes Language Models
+# Better"): what FRACTION of each document is covered by 8-grams that
+# also appear verbatim in another document.
+# =====================================================================
+_DUPSPAN_K = 8
+
+
+def _dupspan_combine(term: "callable", k: int = _DUPSPAN_K) -> str:
+    """Second-level polynomial over k pre-hashed tokens: fold
+    (acc*31 + th_i) & mask with explicit full parenthesization - the
+    identical integer expression on both engines. ``term(i)`` renders
+    the i-th token-hash operand."""
+    expr = term(0)
+    for i in range(1, k):
+        expr = f"(({expr}) * 31 + {term(i)}) & {_MASK40}"
+    return expr
+
+
+_DUPSPAN_ORACLE = f"""
+    -- Exact substring-duplication measurement: every token 8-gram is
+    -- hashed (each token char-hashed ONCE with the portable 40-bit
+    -- rolling hash, then the 8 token-hashes folded through a second
+    -- polynomial - 8 multiply-add-mask ops per position instead of
+    -- re-walking ~50 chars), 8-grams appearing in >= 2 DISTINCT
+    -- documents are 'duplicated', and each document's
+    -- duplicated-token count is the EXACT interval union of the
+    -- [pos, pos+7] spans of its duplicated 8-grams - the sweep-line
+    -- single-window form (running max end over the preceding frame),
+    -- so overlapping spans never double-count.
+    WITH toks AS MATERIALIZED (
+        SELECT doc_id,
+               list_filter(string_split(text, ' '), x -> x <> '') AS ws
+        FROM documents
+    ),
+    th AS MATERIALIZED (
+        SELECT doc_id,
+               list_transform(ws, w -> {_polyhash('w', 'duckdb')}) AS th,
+               len(ws) AS n
+        FROM toks WHERE len(ws) >= {_DUPSPAN_K}
+    ),
+    kg AS MATERIALIZED (
+        SELECT doc_id, th,
+               unnest(generate_series(1, n - {_DUPSPAN_K - 1})) AS pos
+        FROM th
+    ),
+    h AS MATERIALIZED (
+        SELECT doc_id, pos,
+               {_dupspan_combine(lambda i: f"th[pos + {i}]")} AS h
+        FROM kg
+    ),
+    dup AS MATERIALIZED (
+        SELECT h FROM h GROUP BY h
+        HAVING count(DISTINCT doc_id) >= 2
+    ),
+    spans AS MATERIALIZED (
+        SELECT h.doc_id, h.pos FROM h JOIN dup USING (h)
+    ),
+    sweep AS MATERIALIZED (
+        SELECT doc_id, pos,
+               max(pos + {_DUPSPAN_K - 1}) OVER (
+                   PARTITION BY doc_id ORDER BY pos
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING
+               ) AS prev_end
+        FROM spans
+    ),
+    cov AS MATERIALIZED (
+        SELECT doc_id,
+               CAST(sum(GREATEST(
+                   (pos + {_DUPSPAN_K - 1})
+                   - GREATEST(pos - 1, coalesce(prev_end, 0)), 0))
+                   AS BIGINT) AS dup_tokens
+        FROM sweep GROUP BY doc_id
+    )
+    SELECT c.doc_id,
+           CAST(len(tk.ws) AS BIGINT) AS n_tokens,
+           c.dup_tokens,
+           round(CAST(c.dup_tokens AS DOUBLE)
+                 / CAST(len(tk.ws) AS DOUBLE), 6) AS dup_fraction
+    FROM cov c JOIN toks tk ON tk.doc_id = c.doc_id
+    WHERE c.dup_tokens > 0
+    ORDER BY dup_fraction DESC, c.doc_id
+"""
+
+
+@register(
+    "duplicated_ngram_span_fraction",
+    _DUPSPAN_ORACLE,
+    "Exact substring-duplication spans, the token-n-gram form of Lee "
+    "et al. 2022 ('Deduplicating Training Data Makes Language Models "
+    "Better'): hash every token 8-gram (portable rolling hash), mark "
+    "hashes seen in >= 2 distinct docs, and measure per document the "
+    "EXACT union of the duplicated [pos, pos+7] spans via the "
+    "sweep-line single-window formulation (running max end over the "
+    "1-PRECEDING frame) - overlapping duplicated runs never "
+    "double-count, so dup_fraction is the true fraction of tokens "
+    "sitting inside cross-document verbatim runs. Complements the "
+    "whole-doc dedup tier (MinHash/SimHash find near-dup DOCUMENTS; "
+    "this finds duplicated PASSAGES inside otherwise-unique docs - "
+    "boilerplate, quotes, licenses). Scale: 8-byte hashes shuffle "
+    "(one groupBy for document frequency, one equi-join back), the "
+    "sweep is per-document partition-parallel, and no pair of "
+    "documents is ever compared directly.",
+    tags=("dedup", "text", "llm-pipeline", "window", "round4"),
+)
+def duplicated_ngram_span_fraction(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from pyspark.sql import Window as W
+
+    from ..operators.text import tokens, widen_to_parallelism
+
+    docs = t(spark, sf_dir, "documents")
+    # Widen the one-split scan before the token-hash map pass
+    # (guide §2.5; identity at scale).
+    toks = widen_to_parallelism(docs.select("doc_id", "text")).select(
+        "doc_id", tokens("text").alias("ws")
+    )
+    n = F.size("ws")
+    k = _DUPSPAN_K
+    # Hash each TOKEN once (char-level fold), then combine the k
+    # token-hashes per position with the second-level polynomial -
+    # k multiply-add-mask ops per n-gram instead of re-walking the
+    # concatenated string's ~50 chars (measured ~2x on the full query).
+    th = toks.filter(n >= k).select(
+        "doc_id",
+        F.expr(f"transform(ws, w -> {_polyhash('w', 'spark')})").alias("th"),
+    )
+    nh = F.size("th")
+    base = th.select(
+        "doc_id",
+        F.posexplode(
+            F.arrays_zip(
+                *[F.slice(F.col("th"), i + 1, nh - (k - 1)) for i in range(k)]
+            )
+        ).alias("i", "kg"),
+    )
+    comb = F.col("kg.0")
+    for i in range(1, k):
+        comb = (comb * 31 + F.col(f"kg.{i}")).bitwiseAND(F.lit(_MASK40))
+    h = base.select("doc_id", (F.col("i") + 1).alias("pos"), comb.alias("h"))
+    dup = (
+        h.groupBy("h")
+        .agg(F.count_distinct("doc_id").alias("ndocs"))
+        .filter(F.col("ndocs") >= 2)
+        .select("h")
+    )
+    spans = h.join(dup, "h").select("doc_id", "pos")
+    sweep = spans.select(
+        "doc_id",
+        "pos",
+        F.max(F.col("pos") + (k - 1))
+        .over(
+            W.partitionBy("doc_id")
+            .orderBy("pos")
+            .rowsBetween(W.unboundedPreceding, -1)
+        )
+        .alias("prev_end"),
+    )
+    cov = sweep.groupBy("doc_id").agg(
+        F.sum(
+            F.greatest(
+                (F.col("pos") + (k - 1))
+                - F.greatest(F.col("pos") - 1, F.coalesce("prev_end", F.lit(0))),
+                F.lit(0),
+            )
+        )
+        .cast("bigint")
+        .alias("dup_tokens")
+    )
+    return (
+        cov.filter(F.col("dup_tokens") > 0)
+        .join(toks.select("doc_id", F.size("ws").cast("bigint").alias("n_tokens")), "doc_id")
+        .select(
+            "doc_id",
+            "n_tokens",
+            "dup_tokens",
+            F.round(
+                F.col("dup_tokens").cast("double")
+                / F.col("n_tokens").cast("double"),
+                6,
+            ).alias("dup_fraction"),
+        )
+        .orderBy(F.desc("dup_fraction"), "doc_id")
+    )
+
+
+# =====================================================================
+# Reciprocal rank fusion (Cormack, Clarke, Buettcher 2009): merge two
+# retriever rankings with exact integer scores.
+# =====================================================================
+_RRF_K = 60
+
+
+_RRF_TOPN = 100
+
+
+_RRF_SCALE = 1_000_000
+
+
+_RRF_ORACLE = f"""
+    -- Reciprocal rank fusion of two retrievers over the corpus:
+    -- retriever A ranks by term frequency of 'data', retriever B by
+    -- term frequency of 'spark' (both desc, doc_id tie-broken). Each
+    -- contributes floor(1e6 / (60 + rank)) for its top-{_RRF_TOPN};
+    -- integer division makes the fused score exact and associative.
+    WITH scored AS MATERIALIZED (
+        SELECT doc_id,
+               CAST(len(list_filter(string_split(text, ' '),
+                                    x -> x = 'data')) AS BIGINT)  AS tfa,
+               CAST(len(list_filter(string_split(text, ' '),
+                                    x -> x = 'spark')) AS BIGINT) AS tfb
+        FROM documents
+    ),
+    ra AS (
+        SELECT doc_id,
+               row_number() OVER (ORDER BY tfa DESC, doc_id) AS r
+        FROM scored QUALIFY r <= {_RRF_TOPN}
+    ),
+    rb AS (
+        SELECT doc_id,
+               row_number() OVER (ORDER BY tfb DESC, doc_id) AS r
+        FROM scored QUALIFY r <= {_RRF_TOPN}
+    ),
+    contrib AS (
+        SELECT doc_id, {_RRF_SCALE} // ({_RRF_K} + r) AS c FROM ra
+        UNION ALL
+        SELECT doc_id, {_RRF_SCALE} // ({_RRF_K} + r) AS c FROM rb
+    )
+    SELECT doc_id,
+           CAST(sum(c) AS BIGINT)   AS rrf_micro,
+           CAST(count(*) AS BIGINT) AS in_lists
+    FROM contrib GROUP BY doc_id
+    ORDER BY rrf_micro DESC, doc_id
+    LIMIT 25
+"""
+
+
+@register(
+    "reciprocal_rank_fusion",
+    _RRF_ORACLE,
+    "Reciprocal rank fusion (Cormack-Clarke-Buettcher 2009), the "
+    "standard hybrid-retrieval merge (BM25 x embedding lists in "
+    "every RAG stack): two retrievers rank the corpus (term "
+    "frequency of 'data' / of 'spark', desc, doc_id tie-broken), "
+    "each top-100 contributes floor(1e6/(60+rank)), and documents "
+    "are re-ranked by the exact BIGINT sum - integer division makes "
+    "the fused score associative and engine-identical, no float "
+    "1/(k+r) accumulation. Scale: term frequencies are map-side "
+    "array ops; each retriever's top-100 is TakeOrderedAndProject "
+    "(never a global sort); ranks come from a window over the "
+    "100-row result (metadata-sized by construction); the fusion "
+    "groupBy touches <= 200 rows.",
+    tags=("text", "analytics", "llm-pipeline", "round4"),
+)
+def reciprocal_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window as W
+
+    from ..operators.text import tokens
+
+    docs = t(spark, sf_dir, "documents")
+    scored = docs.select(
+        "doc_id",
+        F.size(F.filter(tokens("text"), lambda x: x == "data"))
+        .cast("bigint")
+        .alias("tfa"),
+        F.size(F.filter(tokens("text"), lambda x: x == "spark"))
+        .cast("bigint")
+        .alias("tfb"),
+    )
+
+    def top_ranked(col: str) -> DataFrame:
+        # TakeOrderedAndProject extracts the top-N; the global window
+        # then runs over N rows only (metadata-sized by construction).
+        topn = scored.orderBy(F.desc(col), "doc_id").limit(_RRF_TOPN)
+        return topn.select(
+            "doc_id",
+            F.row_number()
+            .over(W.orderBy(F.desc(col), "doc_id"))
+            .alias("r"),
+        )
+
+    contrib = top_ranked("tfa").unionAll(top_ranked("tfb")).select(
+        "doc_id", F.expr(f"{_RRF_SCALE} div ({_RRF_K} + r)").alias("c")
+    )
+    return (
+        contrib.groupBy("doc_id")
+        .agg(
+            F.sum("c").cast("bigint").alias("rrf_micro"),
+            F.count(F.lit(1)).cast("bigint").alias("in_lists"),
+        )
+        .orderBy(F.desc("rrf_micro"), "doc_id")
+        .limit(25)
+    )
+
+
+# =====================================================================
+# Image perceptual-hash dedup: REAL BMP decode -> integer aHash ->
+# content-addressed near-dup groups.
+# =====================================================================
+_AHASH_ORACLE = """
+    -- Analytic twin of the decode->aHash pipeline: image seed =
+    -- doc_id % 16, channel j of pixel p is the synthesis congruence
+    -- (seed*2654435761 + (3p+j)*40503) % 256, grayscale is the
+    -- integer mean (r+g+b)//3, and bit p of the hash is set iff
+    -- gray*56 > sum(gray) (strict cross-multiplied mean - no float
+    -- division). Docs sharing a seed share the image, so they MUST
+    -- land in the same aHash group; any decode slip (BMP pad bytes,
+    -- bottom-up row order, BGR channel order) changes the grays and
+    -- hash-fails against this replay.
+    WITH ids AS MATERIALIZED (
+        SELECT doc_id, doc_id % 16 AS seed
+        FROM documents WHERE doc_id % 3 = 1
+    ),
+    seeds AS MATERIALIZED (SELECT DISTINCT seed FROM ids),
+    px AS MATERIALIZED (
+        SELECT seed, unnest(range(56)) AS p FROM seeds
+    ),
+    gray AS MATERIALIZED (
+        SELECT seed, p,
+               (((seed * 2654435761 + (3 * p) * 40503) % 256)
+                + ((seed * 2654435761 + (3 * p + 1) * 40503) % 256)
+                + ((seed * 2654435761 + (3 * p + 2) * 40503) % 256)) // 3
+                   AS g
+        FROM px
+    ),
+    tot AS MATERIALIZED (
+        SELECT seed, CAST(sum(g) AS BIGINT) AS total FROM gray GROUP BY 1
+    ),
+    ah AS MATERIALIZED (
+        SELECT g.seed,
+               CAST(sum(CASE WHEN g.g * 56 > t.total
+                             THEN (CAST(1 AS BIGINT) << g.p)
+                             ELSE 0 END) AS BIGINT) AS ahash
+        FROM gray g JOIN tot t ON g.seed = t.seed
+        GROUP BY 1
+    ),
+    members AS (
+        SELECT ah.ahash, i.doc_id
+        FROM ids i JOIN ah ON ah.seed = i.seed
+    )
+    SELECT ahash,
+           CAST(count(*) AS BIGINT) AS n_docs,
+           array_to_string(list_sort(list(doc_id)), ',') AS member_ids
+    FROM members GROUP BY ahash
+    HAVING count(*) >= 2
+    ORDER BY ahash
+"""
+
+
+@register(
+    "image_ahash_dedup",
+    _AHASH_ORACLE,
+    "Image near-duplicate detection via the average perceptual hash: "
+    "REAL 24-bpp BMP payloads (7x8, 3-byte row pad - the hard decode "
+    "case) are decoded by the Arrow-batched mapInPandas codec, "
+    "grayscaled with integer (r+g+b)//3, and fingerprinted one bit "
+    "per pixel (set iff gray*n > total, the strict cross-multiplied "
+    "mean - float-free, so the 56-bit hash is engine-exact). The "
+    "decode runs once per DISTINCT image (content-addressed by "
+    "seed), and the 16-row hash table broadcasts back onto the "
+    "documents - the decode-dedup join every multimodal pipeline "
+    "needs at 100 TB (never decode the same bytes twice; payload "
+    "bytes never shuffle). Groups of docs sharing a perceptual hash "
+    "are the near-dup classes, sorted member lists pinned by the "
+    "analytic congruence oracle.",
+    tags=("multimodal", "dedup", "llm-pipeline", "round4"),
+)
+def image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.multimodal import decode_bmp_ahash, synth_image_payloads
+
+    docs = (
+        t(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 3 == 1)
+        .select("doc_id", (F.col("doc_id") % 16).alias("seed"))
+    )
+    seeds = docs.select("seed").distinct().select(F.col("seed").alias("doc_id"))
+    images = synth_image_payloads(seeds, width=7, height=8)
+    ah = decode_bmp_ahash(images)
+    joined = docs.join(F.broadcast(ah.select("seed", "ahash")), "seed")
+    return (
+        joined.groupBy("ahash")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs"),
+            F.array_join(
+                F.array_sort(F.collect_list("doc_id")).cast("array<string>"),
+                ",",
+            ).alias("member_ids"),
+        )
+        .filter(F.col("n_docs") >= 2)
+        .orderBy("ahash")
+    )
+
+
+# =====================================================================
+# Positional-index phrase search: posting-list adjacency join, with an
+# algorithmically INDEPENDENT per-document scan oracle.
+# =====================================================================
+_PHRASE_ORACLE = """
+    -- Independent formulation on purpose: the engine answers the
+    -- phrase query by JOINING the 'slow' and 'join' posting lists of
+    -- a positional inverted index on (doc_id, pos+1 = pos); this
+    -- oracle instead scans each document's token list directly and
+    -- counts adjacent pairs. Same answer from two different
+    -- algorithms is stronger evidence than a replay.
+    WITH toks AS (
+        SELECT doc_id,
+               list_filter(string_split(text, ' '), x -> x <> '') AS ws
+        FROM documents
+    )
+    SELECT doc_id,
+           CAST(len(list_filter(generate_series(1, len(ws) - 1),
+                                i -> ws[i] = 'slow' AND ws[i + 1] = 'join'))
+                AS BIGINT) AS n_occurrences
+    FROM toks
+    WHERE len(ws) >= 2
+      AND len(list_filter(generate_series(1, len(ws) - 1),
+                          i -> ws[i] = 'slow' AND ws[i + 1] = 'join')) > 0
+    ORDER BY doc_id
+"""
+
+
+@register(
+    "phrase_query_positional_index",
+    _PHRASE_ORACLE,
+    "Exact phrase search ('slow join') via POSITIONAL inverted-index "
+    "intersection - the engine materializes per-term posting lists "
+    "(doc_id, position) and equi-joins them on (doc_id, pos_b = "
+    "pos_a + 1), the classic IR phrase algorithm: only the two "
+    "queried terms' postings ever move, never the corpus. The "
+    "oracle is deliberately a DIFFERENT algorithm (per-document "
+    "adjacent-pair scan), so agreement validates the index "
+    "construction itself rather than replaying it. Extends the "
+    "inverted_index_postings capability from term lookup to "
+    "position-aware phrase semantics. Scale: posting lists are "
+    "term-selective (two map-side filters on the token explode); "
+    "the adjacency join keys on doc_id - co-partitioned, "
+    "match-bounded; per-doc counts partial-aggregate.",
+    tags=("text", "analytics", "llm-pipeline", "round4"),
+)
+def phrase_query_positional_index(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    from ..operators.text import tokens
+
+    docs = t(spark, sf_dir, "documents")
+    toks = docs.select(
+        "doc_id",
+        F.posexplode(tokens("text")).alias("i", "tok"),
+    ).select("doc_id", (F.col("i") + 1).alias("pos"), "tok")
+    p1 = toks.filter(F.col("tok") == "slow").select("doc_id", "pos")
+    p2 = toks.filter(F.col("tok") == "join").select(
+        "doc_id", (F.col("pos") - 1).alias("pos")
+    )
+    return (
+        p1.join(p2, ["doc_id", "pos"])
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_occurrences"))
+        .orderBy("doc_id")
+    )
+
+
+# =====================================================================
+# Zipf slope of the token-frequency head: power-law corpus diagnostic.
+# =====================================================================
+_ZIPF_TOPK = 1000
+
+
+_ZIPF_ORACLE = f"""
+    -- OLS fit of ln(freq) ~ ln(rank) over the top-{_ZIPF_TOPK} tokens
+    -- (the Zipf head; slope ~ -1 for natural corpora). Each ln is
+    -- micro-rounded to BIGINT, the OLS moment sums accumulate in
+    -- HUGEINT/DECIMAL (exact, associative), and the closed-form
+    -- slope/intercept divide once at the end - same discipline as
+    -- regression_aggregates.
+    WITH tc AS MATERIALIZED (
+        SELECT tok, CAST(count(*) AS BIGINT) AS c
+        FROM (SELECT unnest(list_filter(string_split(text, ' '),
+                                        x -> x <> '')) AS tok
+              FROM documents)
+        GROUP BY tok
+    ),
+    ranked AS MATERIALIZED (
+        SELECT c, row_number() OVER (ORDER BY c DESC, tok) AS r
+        FROM tc QUALIFY r <= {_ZIPF_TOPK}
+    ),
+    pts AS MATERIALIZED (
+        SELECT CAST(round(ln(CAST(r AS DOUBLE)) * 1e6) AS BIGINT) AS x,
+               CAST(round(ln(CAST(c AS DOUBLE)) * 1e6) AS BIGINT) AS y
+        FROM ranked
+    ),
+    sums AS (
+        SELECT CAST(count(*) AS BIGINT) AS n,
+               CAST(sum(x) AS BIGINT)            AS sx,
+               CAST(sum(y) AS BIGINT)            AS sy,
+               CAST(sum(x::HUGEINT * y) AS DOUBLE) AS sxy,
+               CAST(sum(x::HUGEINT * x) AS DOUBLE) AS sxx
+        FROM pts
+    )
+    SELECT n,
+           round((CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+                 / (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+                 , 6) AS zipf_slope,
+           round((CAST(sy AS DOUBLE) - (CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
+                 / (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+                 * CAST(sx AS DOUBLE)) / (CAST(n AS DOUBLE) * 1e6), 6)
+               AS zipf_intercept
+    FROM sums
+"""
+
+
+@register(
+    "zipf_slope_token_frequency",
+    _ZIPF_ORACLE,
+    "Zipf power-law diagnostic of the corpus: OLS slope of ln(freq) "
+    "on ln(rank) over the top-1000 token head (natural text sits "
+    "near -1; synthetic/templated corpora flatten - a standard "
+    "pretraining-data health check next to vocab_growth_curve). "
+    "Rank extraction is TakeOrderedAndProject (top-k, never a "
+    "global sort of the vocabulary); each ln is micro-rounded to "
+    "BIGINT; the OLS moment sums are exact DECIMAL/HUGEINT "
+    "partials; slope and intercept divide once in identical "
+    "formula text (regression_aggregates discipline, so the 6dp "
+    "round is layout-independent). One token-count shuffle + a "
+    "1000-row window.",
+    tags=("text", "stats", "llm-pipeline", "round4"),
+)
+def zipf_slope_token_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window as W
+
+    from ..operators.text import tokens
+
+    docs = t(spark, sf_dir, "documents")
+    tc = (
+        docs.select(F.explode(tokens("text")).alias("tok"))
+        .groupBy("tok")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+    )
+    topk = tc.orderBy(F.desc("c"), "tok").limit(_ZIPF_TOPK)
+    ranked = topk.select(
+        "c", F.row_number().over(W.orderBy(F.desc("c"), "tok")).alias("r")
+    )
+    pts = ranked.select(
+        F.round(F.log(F.col("r").cast("double")) * 1e6).cast("bigint").alias("x"),
+        F.round(F.log(F.col("c").cast("double")) * 1e6).cast("bigint").alias("y"),
+    )
+    sums = pts.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n"),
+        F.sum("x").cast("bigint").alias("sx"),
+        F.sum("y").cast("bigint").alias("sy"),
+        F.sum(F.col("x").cast("decimal(38,0)") * F.col("y").cast("decimal(38,0)"))
+        .cast("double")
+        .alias("sxy"),
+        F.sum(F.col("x").cast("decimal(38,0)") * F.col("x").cast("decimal(38,0)"))
+        .cast("double")
+        .alias("sxx"),
+    )
+    slope = (
+        "(CAST(n AS DOUBLE) * sxy - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))"
+        " / (CAST(n AS DOUBLE) * sxx - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))"
+    )
+    return sums.selectExpr(
+        "n",
+        f"round({slope}, 6) AS zipf_slope",
+        f"round((CAST(sy AS DOUBLE) - {slope} * CAST(sx AS DOUBLE)) "
+        "/ (CAST(n AS DOUBLE) * 1e6), 6) AS zipf_intercept",
+    )
+
+
+_NDCG_K = 10
+
+
+#: discount constants round(1e9 / log2(i+1)) for positions 1..10 -
+#: fixed integers, identical on both engines by construction.
+_NDCG_C = [int(round(1e9 / _math.log2(i + 1))) for i in range(1, _NDCG_K + 1)]
+
+
+_NDCG_ORACLE = f"""
+    -- nDCG@10 of the term-frequency retriever against graded labels
+    -- (en=3, de/fr=2, else=1 - independent of the ranking signal):
+    -- DCG = sum rel_i * c_i with c_i = round(1e9/log2(i+1)) pinned
+    -- INTEGER constants, so both DCG and the ideal DCG are exact
+    -- BIGINTs and only the final ratio divides.
+    WITH scored AS MATERIALIZED (
+        SELECT doc_id,
+               CAST(len(list_filter(string_split(text, ' '),
+                                    x -> x = 'data')) AS BIGINT) AS tf,
+               CASE WHEN lang = 'en' THEN 3
+                    WHEN lang IN ('de', 'fr') THEN 2
+                    ELSE 1 END AS rel
+        FROM documents
+    ),
+    ranked AS (
+        SELECT rel, row_number() OVER (ORDER BY tf DESC, doc_id) AS r
+        FROM scored QUALIFY r <= {_NDCG_K}
+    ),
+    ideal AS (
+        SELECT rel, row_number() OVER (ORDER BY rel DESC, doc_id) AS r
+        FROM scored QUALIFY r <= {_NDCG_K}
+    ),
+    c AS (
+        SELECT unnest(generate_series(1, {_NDCG_K})) AS r,
+               CAST(unnest({_NDCG_C}) AS BIGINT) AS disc
+    ),
+    dcg AS (
+        SELECT CAST(sum(ranked.rel * c.disc) AS BIGINT) AS dcg_nano
+        FROM ranked JOIN c ON ranked.r = c.r
+    ),
+    idcg AS (
+        SELECT CAST(sum(ideal.rel * c.disc) AS BIGINT) AS idcg_nano
+        FROM ideal JOIN c ON ideal.r = c.r
+    )
+    SELECT dcg_nano, idcg_nano,
+           round(CAST(dcg_nano AS DOUBLE) / CAST(idcg_nano AS DOUBLE), 6)
+               AS ndcg
+    FROM dcg CROSS JOIN idcg
+"""
+
+
+@register(
+    "ranking_ndcg_eval",
+    _NDCG_ORACLE,
+    "nDCG@10 evaluation of a retriever against graded relevance "
+    "labels - the standard ranking metric (Jarvelin-Kekalainen "
+    "2002) completing the IR-eval surface next to "
+    "reciprocal_rank_fusion and the ANN recall certifications. "
+    "Exactness trick: the position discounts 1/log2(i+1) are "
+    "PRECOMPUTED integer constants round(1e9/log2(i+1)) baked into "
+    "both plans, so DCG and ideal-DCG are exact BIGINT dot products "
+    "(relevance x discount) and only the final ndcg ratio divides. "
+    "The ideal ranking ties on doc_id, making every step "
+    "deterministic. Scale: two TakeOrderedAndProject top-10s; the "
+    "discount join touches 10 rows.",
+    tags=("text", "analytics", "llm-pipeline", "round4"),
+)
+def ranking_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window as W
+
+    from ..operators.text import tokens
+
+    docs = t(spark, sf_dir, "documents")
+    scored = docs.select(
+        "doc_id",
+        F.size(F.filter(tokens("text"), lambda x: x == "data"))
+        .cast("bigint")
+        .alias("tf"),
+        F.when(F.col("lang") == "en", 3)
+        .when(F.col("lang").isin("de", "fr"), 2)
+        .otherwise(1)
+        .alias("rel"),
+    )
+
+    disc = spark.createDataFrame(
+        [(i + 1, _NDCG_C[i]) for i in range(_NDCG_K)], "r int, disc long"
+    )
+
+    def topk(order_cols):
+        top = scored.orderBy(*order_cols).limit(_NDCG_K)
+        return top.select(
+            "rel", F.row_number().over(W.orderBy(*order_cols)).alias("r")
+        )
+
+    ranked = topk([F.desc("tf"), F.col("doc_id")])
+    ideal = topk([F.desc("rel"), F.col("doc_id")])
+    dcg = (
+        ranked.join(F.broadcast(disc), "r")
+        .agg(F.sum(F.col("rel") * F.col("disc")).cast("bigint").alias("dcg_nano"))
+    )
+    idcg = (
+        ideal.join(F.broadcast(disc), "r")
+        .agg(F.sum(F.col("rel") * F.col("disc")).cast("bigint").alias("idcg_nano"))
+    )
+    return dcg.crossJoin(F.broadcast(idcg)).select(
+        "dcg_nano",
+        "idcg_nano",
+        F.round(
+            F.col("dcg_nano").cast("double") / F.col("idcg_nano").cast("double"),
+            6,
+        ).alias("ndcg"),
+    )
+
+
+# =====================================================================
+# Weighted sampling WITHOUT replacement (Efraimidis-Spirakis), fully
+# integer-keyed.
+# =====================================================================
+_AES_ORACLE = """
+    -- A-ES weighted reservoir order: item i gets uniform u_i from a
+    -- key congruence, and the k smallest values of -ln(u_i)/w_i are
+    -- the size-k weighted sample WITHOUT replacement (Efraimidis-
+    -- Spirakis 2006). The division runs as pico-scaled INTEGER
+    -- floor-div on the NON-NEGATIVE numerator (engines agree on
+    -- floor there), so the selection order is bit-exact.
+    WITH u AS (
+        SELECT doc_id, n_chars,
+               ((doc_id * 2654435761 + 12345) % 4294967296) + 1 AS h
+        FROM documents
+    ),
+    keyed AS (
+        SELECT doc_id, n_chars,
+               CAST(round(-ln(CAST(h AS DOUBLE) / 4294967296.0) * 1e12)
+                    AS BIGINT) // n_chars AS key_q
+        FROM u WHERE n_chars > 0
+    )
+    SELECT doc_id, CAST(n_chars AS BIGINT) AS n_chars, key_q
+    FROM keyed
+    ORDER BY key_q, doc_id
+    LIMIT 25
+"""
+
+
+@register(
+    "weighted_sample_without_replacement",
+    _AES_ORACLE,
+    "Weighted sampling WITHOUT replacement via Efraimidis-Spirakis "
+    "(2006) exponential keys: each doc draws u from a key "
+    "congruence and the 25 SMALLEST -ln(u)/weight keys are the "
+    "sample - unlike the Bernoulli weighted_doc_sample, the output "
+    "size is exact and inclusion is weight-proportional without "
+    "replacement. Determinism: -ln(u) is pico-rounded to a "
+    "NON-NEGATIVE BIGINT before the integer floor-div by the "
+    "weight (Spark div truncates toward zero, DuckDB // floors - "
+    "they agree only on non-negative operands, the kmeans_lloyd "
+    "lesson applied), so selection order is bit-exact. Scale: "
+    "map-side keys + TakeOrderedAndProject - no shuffle of the "
+    "corpus, no RNG.",
+    tags=("sampling", "llm-pipeline", "round4"),
+)
+def weighted_sample_without_replacement(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    docs = t(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
+    keyed = docs.select(
+        "doc_id",
+        F.col("n_chars").cast("bigint").alias("n_chars"),
+        F.expr(
+            "CAST(round(-ln(CAST(((doc_id * 2654435761 + 12345) "
+            "% 4294967296) + 1 AS DOUBLE) / 4294967296.0) * 1e12) "
+            "AS BIGINT) div n_chars"
+        ).alias("key_q"),
+    )
+    return keyed.orderBy("key_q", "doc_id").limit(25)
+
+
+# =====================================================================
+# Chunk-grain dedup REWRITE - the transform counterpart of
+# duplicated_ngram_span_fraction's measurement: drop every chunk that
+# already appeared anywhere else in the corpus, keep first occurrence,
+# and re-emit the surviving text.
+# =====================================================================
+_CHUNK_K = 3
+
+
+_CHUNK_DEDUP_ORACLE = f"""
+    WITH toks AS (
+        SELECT doc_id,
+               list_filter(string_split(text, ' '), x -> x <> '') AS ws
+        FROM documents
+    ), chunks AS (
+        SELECT doc_id, i AS idx,
+               array_to_string(
+                   ws[(i * {_CHUNK_K} + 1):(i * {_CHUNK_K} + {_CHUNK_K})],
+                   ' ') AS chunk
+        FROM toks, unnest(generate_series(0, len(ws) // {_CHUNK_K} - 1))
+                 AS t(i)
+        WHERE len(ws) >= {_CHUNK_K}
+    ), ranked AS (
+        SELECT doc_id, idx, chunk,
+               row_number() OVER (
+                   PARTITION BY chunk ORDER BY doc_id, idx) AS rn
+        FROM chunks
+    )
+    SELECT doc_id,
+           CAST(count(*) AS BIGINT) AS n_chunks,
+           CAST(count(*) FILTER (rn = 1) AS BIGINT) AS n_kept,
+           coalesce(string_agg(chunk, ' ' ORDER BY idx)
+                        FILTER (rn = 1), '') AS text_kept
+    FROM ranked GROUP BY doc_id
+"""
+
+
+@register(
+    "chunk_dedup_rewrite",
+    _CHUNK_DEDUP_ORACLE,
+    "Chunk-grain dedup REWRITE: split every document into fixed "
+    "token chunks, keep only each chunk's globally FIRST occurrence "
+    "(ordered by doc_id, position - the deterministic keeper rule), "
+    "and re-emit the surviving text per document. This is the "
+    "TRANSFORM counterpart of duplicated_ngram_span_fraction (which "
+    "only measures): the Lee-et-al-style cross-document boilerplate "
+    "actually gets REMOVED, the way a training-data pipeline "
+    "rewrites its corpus. The chunk grain is {_CHUNK_K} tokens to "
+    "match the synthetic fixture's vocabulary density; real corpora "
+    "use paragraph/256-token grains with the identical plan. First "
+    "occurrence is one row_number over the chunk hash partition - "
+    "chunks shuffle, documents never pairwise compare; reassembly "
+    "is an order-preserving grouped string fold. Scale: the only "
+    "wide exchanges key on chunk text and doc_id.",
+    tags=("dedup", "text", "llm-pipeline", "round4"),
+)
+def chunk_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from pyspark.sql import Window as W
+
+    from ..operators.text import tokens
+
+    k = _CHUNK_K
+    docs = t(spark, sf_dir, "documents")
+    toks = docs.select("doc_id", tokens("text").alias("ws")).filter(
+        F.size("ws") >= k
+    )
+    chunks = toks.select(
+        "doc_id",
+        F.posexplode(
+            F.transform(
+                F.sequence(
+                    F.lit(0), (F.floor(F.size("ws") / k) - 1).cast("int")
+                ),
+                lambda i: F.array_join(
+                    F.slice(F.col("ws"), i * k + 1, k), " "
+                ),
+            )
+        ).alias("idx", "chunk"),
+    )
+    ranked = chunks.select(
+        "doc_id",
+        "idx",
+        "chunk",
+        F.row_number()
+        .over(W.partitionBy("chunk").orderBy("doc_id", "idx"))
+        .alias("rn"),
+    )
+    return ranked.groupBy("doc_id").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_chunks"),
+        F.sum(F.when(F.col("rn") == 1, 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_kept"),
+        F.coalesce(
+            F.array_join(
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(
+                            F.when(
+                                F.col("rn") == 1,
+                                F.struct(
+                                    F.col("idx").alias("i"),
+                                    F.col("chunk").alias("c"),
+                                ),
+                            )
+                        )
+                    ),
+                    lambda s: s["c"],
+                ),
+                " ",
+            ),
+            F.lit(""),
+        ).alias("text_kept"),
+    )
+
+
+# =====================================================================
+# Fuzzy train-vs-benchmark decontamination (asymmetric PPJoin)
+# =====================================================================
+_FUZZY_DECON_ORACLE = """
+    WITH toks AS (
+        SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS ws
+        FROM documents
+    ), sh AS (
+        SELECT doc_id,
+               list_distinct(list_transform(
+                   generate_series(1, greatest(len(ws) - 2, 1)),
+                   i -> array_to_string(ws[i:i+2], ' '))) AS sh3
+        FROM toks WHERE len(ws) > 0
+    ), e AS (
+        SELECT doc_id, unnest(sh3) AS s FROM sh
+    ), sizes AS (
+        SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM e GROUP BY 1
+    ), inter AS (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+               CAST(count(*) AS BIGINT) AS nc
+        FROM e a JOIN e b ON a.s = b.s
+        WHERE a.doc_id % 11 <> 0 AND b.doc_id % 11 = 0
+        GROUP BY 1, 2
+    )
+    SELECT CAST(i.id_a AS BIGINT) AS id_a,
+           CAST(i.id_b AS BIGINT) AS id_b,
+           i.nc AS n_inter,
+           sa.n + sb.n - i.nc AS n_union
+    FROM inter i
+    JOIN sizes sa ON sa.doc_id = i.id_a
+    JOIN sizes sb ON sb.doc_id = i.id_b
+    WHERE 10 * i.nc >= 5 * (sa.n + sb.n - i.nc)  -- jaccard >= 0.5, exact ints
+    ORDER BY id_a, id_b
+"""
+
+
+@register(
+    "fuzzy_decontamination",
+    _FUZZY_DECON_ORACLE,
+    "Fuzzy benchmark decontamination: every (train doc, benchmark "
+    "doc) pair with 3-shingle Jaccard >= 0.5, via the ASYMMETRIC "
+    "PPJoin kernel (operators/dedup.py: the prefix_filtered_jaccard_"
+    "join_asym wrapper over the shared _prefixes/_verified_pairs "
+    "kernel) — benchmark_decontamination's exact-n-gram containment "
+    "catches verbatim leakage; THIS catches paraphrased or partially "
+    "edited eval items. The prefix filter is LOSSLESS (shared "
+    "union-corpus frequency order, so any J>=t pair must collide "
+    "inside both prefixes), hence the oracle can demand exact "
+    "equality with the O(|train| x |bench|) DuckDB join — a banded "
+    "MinHash here could drop a borderline J=0.52 pair and break the "
+    "hash. Output is pure integers (n_inter, n_union), the "
+    "engine-exact rational similarity. Scale: candidates come only "
+    "from rare-shingle prefix collisions + length bounds, and the "
+    "benchmark side is the small one — at 100 TB this is a broadcast "
+    "of the benchmark prefix table against the train corpus, cost "
+    "~linear in true leaks.",
+    tags=("dedup", "llm-pipeline", "round6"),
+)
+def fuzzy_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.dedup import prefix_filtered_jaccard_join_asym
+
+    docs = t(spark, sf_dir, "documents").select("doc_id", "text")
+    bench = docs.filter(F.col("doc_id") % 11 == 0)
+    train = docs.filter(F.col("doc_id") % 11 != 0)
+    return (
+        prefix_filtered_jaccard_join_asym(
+            train, bench, id_col="doc_id", text_col="text",
+            k=3, threshold=0.5,
+        )
+        .select(
+            F.col("id_a").cast("bigint").alias("id_a"),
+            F.col("id_b").cast("bigint").alias("id_b"),
+            "n_inter",
+            "n_union",
+        )
+        .orderBy("id_a", "id_b")
+    )
+
+
+# =====================================================================
+# WordPiece-style merge training: likelihood-ratio pair scoring
+# =====================================================================
+_WP_FLOOR = 5  # min pair support — rare pairs of rare tokens score
+
+
+#                1/(1*1) and would dominate an unfloored likelihood ratio
+def _wordpiece_oracle_parts(n_merges: int = 4) -> tuple[str, str]:
+    """(stage_ctes, merge_table_select): the n training-stage CTE
+    block (starting ``WITH t0 AS ...``) and the final merge-table
+    SELECT, as SEPARATE pieces so ``_maxmatch_oracle``
+    can compose the identical trained-vocabulary stages with its own
+    recursive segmentation walk structurally, instead of slicing the
+    assembled SQL text by rindex (ADVICE r6 — the text surgery broke
+    at a distance on any cosmetic reformat here)."""
+    stages = ["WITH t0 AS MATERIALIZED (SELECT doc_id, text FROM documents)"]
+    selects = []
+    for i in range(n_merges):
+        stages.append(f"""
+    u{i} AS MATERIALIZED (
+        SELECT w, CAST(count(*) AS BIGINT) AS c
+        FROM (SELECT unnest(string_split(text, ' ')) AS w FROM t{i})
+        GROUP BY 1
+    ),
+    p{i} AS MATERIALIZED (
+        SELECT bg[1] AS w1, bg[2] AS w2, CAST(count(*) AS BIGINT) AS cnt
+        FROM (
+            SELECT unnest(list_zip(ws[1:len(ws)-1], ws[2:len(ws)])) AS bg
+            FROM (SELECT string_split(text, ' ') AS ws FROM t{i})
+            WHERE len(ws) >= 2
+        ) GROUP BY 1, 2
+    ),
+    m{i} AS MATERIALIZED (
+        SELECT p.w1, p.w2, p.cnt, ua.c AS c1, ub.c AS c2
+        FROM p{i} p
+        JOIN u{i} ua ON ua.w = p.w1
+        JOIN u{i} ub ON ub.w = p.w2
+        WHERE p.cnt >= {_WP_FLOOR}
+        ORDER BY CAST(p.cnt AS DOUBLE) / (ua.c * ub.c) DESC, p.w1, p.w2
+        LIMIT 1
+    ),
+    t{i + 1} AS MATERIALIZED (
+        SELECT doc_id,
+               trim(replace(replace(
+                   ' ' || replace(text, ' ', '  ') || ' ',
+                   ' ' || (SELECT w1 FROM m{i}) || '  '
+                       || (SELECT w2 FROM m{i}) || ' ',
+                   ' ' || (SELECT w1 FROM m{i}) || '@@'
+                       || (SELECT w2 FROM m{i}) || ' '),
+                   '  ', ' ')) AS text
+        FROM t{i}
+    )""")
+        selects.append(
+            f"SELECT {i + 1} AS merge_order, w1, w2, cnt, c1, c2 FROM m{i}"
+        )
+    union = "\n    UNION ALL ".join(selects)
+    final = f"""
+    SELECT CAST(merge_order AS INT) AS merge_order, w1, w2,
+           cnt AS pair_count, c1 AS left_count, c2 AS right_count,
+           CAST(floor(1e9 * CAST(cnt AS DOUBLE) / (c1 * c2)) AS BIGINT)
+               AS score_1e9
+    FROM ({union}) ORDER BY merge_order"""
+    return ",".join(stages), final
+
+
+def _wordpiece_oracle(n_merges: int = 4) -> str:
+    """Full WordPiece training oracle: the stage CTEs plus the
+    merge-table readout (see _wordpiece_oracle_parts)."""
+    ctes, final = _wordpiece_oracle_parts(n_merges)
+    return ctes + final
+
+
+def _wordpiece_pick(toks: DataFrame):
+    """The round's likelihood-ratio argmax (score DESC, w1, w2) over
+    pairs with support >= the floor."""
+    uni = (
+        toks.select(F.explode("ws").alias("w"))
+        .groupBy("w")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+    )
+    scored = (
+        pair_counts(toks)
+        .filter(F.col("cnt") >= _WP_FLOOR)
+        .join(
+            F.broadcast(uni.select(F.col("w").alias("w1"), F.col("c").alias("c1"))),
+            "w1",
+        )
+        .join(
+            F.broadcast(uni.select(F.col("w").alias("w2"), F.col("c").alias("c2"))),
+            "w2",
+        )
+        .withColumn(
+            "score", F.col("cnt").cast("double") / (F.col("c1") * F.col("c2"))
+        )
+    )
+    return scored.orderBy(F.desc("score"), "w1", "w2").limit(1).collect()[0]
+
+
+@register(
+    "wordpiece_merge_training",
+    _wordpiece_oracle(4),
+    "WordPiece-style merge-rule training — the SECOND of the major "
+    "tokenizer-vocabulary algorithms next to bpe_merge_training: "
+    "instead of BPE's raw pair count, each round merges the argmax "
+    "of the LIKELIHOOD RATIO cnt(w1,w2)/(cnt(w1)*cnt(w2)) (pairs "
+    "that co-occur exclusively beat merely-frequent pairs; support "
+    "floor %d keeps one-off pairs of singleton tokens from scoring "
+    "a perfect ratio). Cross-engine exactness: the score is ONE "
+    "IEEE double division of exact integers — correctly rounded, so "
+    "both engines compute the identical double and the identical "
+    "(score DESC, w1, w2) argmax; the emitted score is floor(1e9*s) "
+    "so even its representation is an integer. Corpus rewrite uses "
+    "the same double-space greedy-replace trick as BPE (pinned "
+    "cross-engine). Per round the driver receives exactly ONE row; "
+    "corpus text never leaves the executors. Scale: each round is "
+    "two partial-combined aggregations (unigrams, bigrams) + a "
+    "broadcast join of two metadata-scale count tables + one narrow "
+    "map over the corpus — embarrassingly parallel, same plan every "
+    "round." % _WP_FLOOR,
+    tags=("text", "llm-pipeline", "iterative", "round6"),
+)
+def wordpiece_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
+    picks = _train_merges(spark, sf_dir, 4, _wordpiece_pick)
+    # Mirror the oracle's float op ORDER exactly: divide first (one
+    # correctly-rounded IEEE division), then *1e9, then floor — a
+    # different association could land 1 ulp across the floor boundary
+    # on one engine only.
+    return local_rows(
+        spark,
+        [
+            (i + 1, m.w1, m.w2, m.cnt, m.c1, m.c2,
+             math.floor(1e9 * (m.cnt / (m.c1 * m.c2))))
+            for i, m in enumerate(picks)
+        ],
+        "merge_order int, w1 string, w2 string, pair_count bigint,"
+        " left_count bigint, right_count bigint, score_1e9 bigint",
+    ).orderBy("merge_order")
+
+
+# =====================================================================
+# WordPiece MaxMatch tokenization (the encode side of
+# wordpiece_merge_training) — greedy leftmost-longest vocabulary match
+# =====================================================================
+def _maxmatch_oracle(n_merges: int = 4) -> str:
+    """Reuse the n training-stage CTEs of the WordPiece oracle (so
+    the vocabulary is provably the trained one), then segment every
+    sampled document with MaxMatch: a plain CTE precomputes the
+    longest unit matching at every (doc, position) and a recursive
+    CTE walks pos -> pos + match_len until the document is consumed.
+    All integers and list equality — hash-exact by construction.
+    Composes the stage-CTE piece of ``_wordpiece_oracle_parts``
+    structurally (ADVICE r6: no more rindex surgery on generated
+    SQL text)."""
+    ctes, _merge_table_select = _wordpiece_oracle_parts(n_merges)
+    stages = ctes.replace("WITH t0", "WITH RECURSIVE t0", 1)
+    unit_rows = "\n        UNION ALL ".join(
+        f"SELECT {i + 1} AS merge_order, w1, w2 FROM m{i}"
+        for i in range(n_merges)
+    )
+    return (
+        stages
+        + f""",
+    units AS MATERIALIZED (
+        SELECT string_split(replace(w1 || '@@' || w2, '@@', ' '), ' ') AS u
+        FROM ({unit_rows})
+    ),
+    docs AS MATERIALIZED (
+        SELECT doc_id, string_split(text, ' ') AS ws,
+               len(string_split(text, ' ')) AS n
+        FROM t0 WHERE doc_id % 5 = 0
+    ),
+    matchlen AS MATERIALIZED (
+        SELECT doc_id, pos,
+               max(CASE WHEN ws[pos : pos + len(u) - 1] = u
+                        THEN len(u) ELSE 1 END) AS ml
+        FROM (SELECT doc_id, ws, unnest(generate_series(1, n)) AS pos
+              FROM docs)
+        CROSS JOIN units
+        GROUP BY 1, 2
+    ),
+    walk AS (
+        SELECT doc_id, n, 1 AS pos, 0 AS n_pieces, 0 AS n_merged
+        FROM docs
+        UNION ALL
+        SELECT w.doc_id, w.n, w.pos + m.ml, w.n_pieces + 1,
+               w.n_merged + CASE WHEN m.ml > 1 THEN 1 ELSE 0 END
+        FROM walk w JOIN matchlen m
+          ON m.doc_id = w.doc_id AND m.pos = w.pos
+        WHERE w.pos <= w.n
+    )
+    SELECT doc_id,
+           CAST(n AS BIGINT) AS n_tok_raw,
+           CAST(n_pieces AS BIGINT) AS n_tok_maxmatch,
+           CAST(n_merged AS BIGINT) AS n_multiword_pieces
+    FROM walk
+    WHERE pos = n + 1
+    ORDER BY doc_id"""
+    )
+
+
+@register(
+    "wordpiece_maxmatch_tokenize",
+    _maxmatch_oracle(4),
+    "WordPiece MaxMatch tokenization — the ENCODE side of "
+    "wordpiece_merge_training, completing the tokenizer train/apply "
+    "matrix (BPE already has both cells). MaxMatch is the "
+    "algorithmically distinct inference rule real WordPiece uses: at "
+    "each position take the LONGEST vocabulary unit that matches, "
+    "else emit a single token and advance one — leftmost-longest, "
+    "not BPE's merge-rank replay (the two genuinely differ on "
+    "overlapping candidates). The trained units are 4 driver-side "
+    "rows folded into a when-chain of array-slice equality literals "
+    "ordered longest-first, and the per-document walk is ONE "
+    "aggregate() fold over sequence(1, n) carrying (pos, n_pieces, "
+    "n_merged) — each step either consumes a unit or one token, so n "
+    "iterations always suffice and the no-op guard makes overshoot "
+    "harmless. The oracle reuses the training oracle's stage CTEs "
+    "verbatim (the vocabulary is provably the trained one) and walks "
+    "the identical greedy rule with a recursive CTE over a "
+    "precomputed (doc, pos) -> longest-match table; every emitted "
+    "column is an exact integer. Scale: inference is a broadcast "
+    "vocab (here: plan literals) + per-row O(n x |V|) string work, "
+    "zero shuffles, zero joins — the right 100 TB tokenization shape "
+    "(the training loop owns the aggregations).",
+    tags=("text", "llm-pipeline", "functions", "round6"),
+)
+def wordpiece_maxmatch_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    merges = wordpiece_merge_training(spark, sf_dir).collect()
+    units = [
+        (m.w1 + "@@" + m.w2).replace("@@", " ").split(" ")
+        for m in sorted(merges, key=lambda r: r.merge_order)
+    ]
+    # Longest-first so the when-chain's first hit IS the MaxMatch
+    # choice; equal-length units matching the same slice are
+    # necessarily the same word list, so intra-length order is moot.
+    units.sort(key=lambda u: (-len(u), u))
+
+    ws = F.col("ws")
+    n = F.size(ws)
+
+    def advance(st):
+        pos = st.getField("pos")
+        adv = None
+        for u in units:
+            cond = F.slice(ws, pos, len(u)) == F.array(
+                *[F.lit(x) for x in u]
+            )
+            adv = (
+                F.when(cond, F.lit(len(u)))
+                if adv is None
+                else adv.when(cond, F.lit(len(u)))
+            )
+        return adv.otherwise(F.lit(1)) if adv is not None else F.lit(1)
+
+    def step(st, _):
+        adv = advance(st)
+        return F.when(st.getField("pos") > n, st).otherwise(
+            F.struct(
+                (st.getField("pos") + adv).alias("pos"),
+                (st.getField("n_pieces") + F.lit(1)).alias("n_pieces"),
+                (
+                    st.getField("n_merged")
+                    + F.when(adv > 1, F.lit(1)).otherwise(F.lit(0))
+                ).alias("n_merged"),
+            )
+        )
+
+    state0 = F.struct(
+        F.lit(1).alias("pos"),
+        F.lit(0).alias("n_pieces"),
+        F.lit(0).alias("n_merged"),
+    )
+    seg = F.aggregate(F.sequence(F.lit(1), F.greatest(n, F.lit(1))), state0, step)
+    # Materialize the O(n x |V|) fold ONCE per row: project it as a
+    # struct column and expand fields in a separate select. Catalyst's
+    # CollapseProject refuses to inline a non-cheap alias referenced
+    # more than once, so the split is a real let-binding — a single
+    # projection referencing seg twice could run the fold twice per
+    # row under a CSE-blind plan (ADVICE r6; same recomputation trap
+    # cdc_boundaries avoids with its higher-order let).
+    from ..operators.text import widen_to_parallelism
+
+    return (
+        # The documents scan is ONE split at fixture scale and the
+        # MaxMatch fold is interpreted O(n x |V|) per-row CPU — widen
+        # before the fold so it runs on every core (guide §2.5; same
+        # fix as the shingle tier; identity on any multi-split scan).
+        widen_to_parallelism(
+            t(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") % 5 == 0)
+            .select("doc_id", F.split("text", " ").alias("ws"))
+        )
+        .select("doc_id", n.cast("bigint").alias("n_tok_raw"), seg.alias("seg"))
+        .select(
+            "doc_id",
+            "n_tok_raw",
+            F.col("seg.n_pieces").cast("bigint").alias("n_tok_maxmatch"),
+            F.col("seg.n_merged").cast("bigint").alias("n_multiword_pieces"),
+        )
+        .orderBy("doc_id")
+    )
+
+
+# =====================================================================
+# Content-defined chunking — Rabin-style rolling-hash boundaries
+# =====================================================================
+_CDC_ORACLE = """
+    WITH b AS (
+        SELECT doc_id,
+               len(string_split(text, '')) AS n,
+               list_filter(
+                   generate_series(8, len(string_split(text, '')) - 1),
+                   i -> list_reduce(
+                            list_transform(
+                                string_split(text, '')[i - 7 : i],
+                                c -> CAST(ascii(c) AS BIGINT)),
+                            (a, c) -> (a * 257 + c) % 1000003) % 32 = 0
+               ) AS bnd
+        FROM documents WHERE len(text) > 0
+    ), c AS (
+        SELECT doc_id, n, bnd,
+               list_prepend(0, list_append(bnd, n)) AS bl
+        FROM b
+    ), l AS (
+        SELECT doc_id, n, bnd,
+               list_transform(generate_series(1, len(bl) - 1),
+                              k -> bl[k + 1] - bl[k]) AS lens
+        FROM c
+    )
+    SELECT doc_id,
+           CAST(n AS BIGINT)                    AS n_chars_cdc,
+           CAST(len(bnd) + 1 AS BIGINT)         AS n_chunks,
+           CAST(coalesce(bnd[1], 0) AS BIGINT)  AS first_boundary,
+           CAST(list_min(lens) AS BIGINT)       AS min_chunk,
+           CAST(list_max(lens) AS BIGINT)       AS max_chunk,
+           CAST(100 * n // (len(bnd) + 1) AS BIGINT) AS mean_chunk_x100
+    FROM l ORDER BY doc_id
+"""
+
+
+@register(
+    "content_defined_chunking",
+    _CDC_ORACLE,
+    "Content-defined chunking (Rabin-style): boundary after char i "
+    "wherever the 8-char polynomial rolling hash (base 257, modulus "
+    "1000003) is divisible by 32 — expected chunk ~32 chars. The "
+    "property fixed-offset chunking lacks: a boundary depends only "
+    "on an 8-char local context, so an insertion re-chunks ONLY its "
+    "own chunk and every downstream chunk hash survives (locality "
+    "pinned by test; this is the boundary rule storage dedup and "
+    "long-document near-dup pipelines hang chunk-level dedup on — "
+    "the front-end shape for chunk_dedup_rewrite). Per-doc readout "
+    "is exact integers: chunk count, first boundary, min/max chunk "
+    "length and the 1e-2-grid mean via exact integer division. Both "
+    "engines run the IDENTICAL integer recurrence ((a*257+c) mod "
+    "1000003) over the same char codes — no floats anywhere. Scale: "
+    "the scan runs the Arrow-batched numpy kernel (cdc_chunk_stats — "
+    "the trailing-window hash is a sliding dot product, so the whole "
+    "per-doc scan is 8 vectorized multiply-adds at C speed instead "
+    "of ~6 interpreted HOF ops/char; VERDICT r6 item 4), zero "
+    "shuffles, zero driver traffic, embarrassingly parallel at "
+    "100 TB. The native-HOF twin (cdc_boundaries) stays the "
+    "oracle-checked reference; kernel == HOF equality is pinned by "
+    "test.",
+    tags=("text", "llm-pipeline", "dedup", "round6"),
+)
+def content_defined_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.textprep import cdc_chunk_stats
+
+    return cdc_chunk_stats(
+        t(spark, sf_dir, "documents"),
+        text_col="text", id_col="doc_id",
+        window=8, base=257, modulus=1_000_003, divisor=32,
+    ).orderBy("doc_id")
+
+
+def content_defined_chunking_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Native-HOF twin of ``content_defined_chunking`` — the original
+    zero-UDF Catalyst formulation, kept as the oracle-checked
+    reference for the Arrow kernel (tests pin kernel == HOF exact
+    equality; not separately registered)."""
+    from ..operators.textprep import cdc_boundaries
+
+    d = (
+        t(spark, sf_dir, "documents")
+        .filter(F.length("text") > 0)
+        .select(
+            "doc_id",
+            F.length("text").alias("n"),
+            cdc_boundaries("text", window=8, base=257,
+                           modulus=1_000_003, divisor=32).alias("bnd"),
+        )
+    )
+    bl = F.concat(F.array(F.lit(0)), F.col("bnd"), F.array(F.col("n")))
+    d = d.select("doc_id", "n", "bnd", bl.alias("bl"))
+    m = F.size("bl")
+    lens = F.zip_with(
+        F.slice("bl", 1, m - 1), F.slice(F.col("bl"), 2, m - 1),
+        lambda a, b: b - a,
+    )
+    d = d.select("doc_id", "n", "bnd", lens.alias("lens"))
+    nc = F.size("bnd") + 1
+    return d.select(
+        "doc_id",
+        F.col("n").cast("bigint").alias("n_chars_cdc"),
+        nc.cast("bigint").alias("n_chunks"),
+        F.coalesce(F.try_element_at("bnd", F.lit(1)), F.lit(0))
+        .cast("bigint")
+        .alias("first_boundary"),
+        F.array_min("lens").cast("bigint").alias("min_chunk"),
+        F.array_max("lens").cast("bigint").alias("max_chunk"),
+        F.floor((100 * F.col("n")) / nc).cast("bigint").alias("mean_chunk_x100"),
+    ).orderBy("doc_id")
+
+
+# =====================================================================
+# Unigram-LM (SentencePiece-style) Viterbi segmentation scoring —
+# the third tokenizer-vocabulary algorithm next to BPE and WordPiece
+# =====================================================================
+_UNIGRAM_ORACLE = """
+    WITH RECURSIVE words AS MATERIALIZED (
+        SELECT w AS word, CAST(count(*) AS BIGINT) AS cnt,
+               len(w) AS n
+        FROM (SELECT unnest(string_split(text, ' ')) AS w FROM documents)
+        WHERE w <> '' GROUP BY 1
+    ),
+    spans AS MATERIALIZED (  -- every (word, end-pos, piece-len) cell
+        SELECT word, cnt, n, i, L,
+               substring(word, i - L + 1, L) AS piece
+        FROM (SELECT word, cnt, n, unnest(generate_series(1, n)) AS i
+              FROM words)
+        CROSS JOIN (SELECT unnest([1, 2, 3]) AS L)
+        WHERE i >= L
+    ),
+    vocab AS MATERIALIZED (  -- corpus-weighted substring counts
+        SELECT piece, CAST(sum(cnt) AS BIGINT) AS pc
+        FROM spans GROUP BY 1
+    ),
+    tot AS MATERIALIZED (
+        SELECT CAST(sum(pc) AS BIGINT) AS total FROM vocab
+    ),
+    wpp AS MATERIALIZED (  -- per (word, i): piece prob by length
+        SELECT s.word, s.i,
+               max(CASE WHEN s.L = 1
+                        THEN CAST(v.pc AS DOUBLE) / CAST(t.total AS DOUBLE)
+                   END) AS p1,
+               coalesce(max(CASE WHEN s.L = 2
+                        THEN CAST(v.pc AS DOUBLE) / CAST(t.total AS DOUBLE)
+                   END), 0.0) AS p2,
+               coalesce(max(CASE WHEN s.L = 3
+                        THEN CAST(v.pc AS DOUBLE) / CAST(t.total AS DOUBLE)
+                   END), 0.0) AS p3
+        FROM spans s JOIN vocab v ON v.piece = s.piece
+        CROSS JOIN tot t
+        GROUP BY 1, 2
+    ),
+    walk AS (  -- Viterbi: best_i = max_L best_{i-L} * p(piece ending at i)
+        SELECT word, n, 0 AS i,
+               CAST(0.0 AS DOUBLE) AS b2, CAST(0.0 AS DOUBLE) AS b1,
+               CAST(1.0 AS DOUBLE) AS b0
+        FROM words
+        UNION ALL
+        SELECT w.word, w.n, w.i + 1, w.b1, w.b0,
+               greatest(
+                   w.b0 * q.p1,
+                   CASE WHEN w.i + 1 >= 2 THEN w.b1 * q.p2 ELSE 0.0 END,
+                   CASE WHEN w.i + 1 >= 3 THEN w.b2 * q.p3 ELSE 0.0 END)
+        FROM walk w JOIN wpp q ON q.word = w.word AND q.i = w.i + 1
+        WHERE w.i < w.n
+    ),
+    singles AS MATERIALIZED (  -- all-single-char baseline, ascending order
+        SELECT word,
+               list_reduce(list_prepend(1.0, list(p1 ORDER BY i)),
+                           (a, b) -> a * b) AS s_score
+        FROM wpp GROUP BY 1
+    )
+    SELECT k.word,
+           CAST(k.n AS BIGINT) AS n_chars,
+           w2.cnt AS corpus_count,
+           k.b0 AS viterbi_score,
+           s.s_score AS singles_score,
+           k.b0 / s.s_score AS seg_gain
+    FROM walk k
+    JOIN words w2 ON w2.word = k.word
+    JOIN singles s ON s.word = k.word
+    WHERE k.i = k.n
+    ORDER BY k.word
+"""
+
+
+@register(
+    "unigram_lm_viterbi_score",
+    _UNIGRAM_ORACLE,
+    "Unigram-LM (SentencePiece-style) segmentation scoring — the "
+    "THIRD tokenizer-vocabulary algorithm next to bpe_merge_training "
+    "and wordpiece_merge_training: a seed vocabulary of every "
+    "substring of length 1-3 with corpus-weighted counts (the "
+    "standard unigram seeding), piece probabilities pc/total, and "
+    "per-word Viterbi DP best_i = max_L best_(i-L) * p(piece ending "
+    "at i) — the E-step of unigram hard-EM. The readout is the "
+    "Viterbi likelihood per DISTINCT word plus the all-singles "
+    "baseline and their ratio (>= 1 by construction, = the gain "
+    "multi-char pieces buy). Scores are emitted as RAW doubles and "
+    "still hash-exact: every probability is one IEEE division of "
+    "exact integers, every DP candidate the same multiplication "
+    "tree, and max/greatest is order-free — unlike argmax PATHS "
+    "(piece counts), which tie-break differently across engines and "
+    "are deliberately not emitted. Scale: the DP runs once per "
+    "DISTINCT word (the 100 TB shape — segment the vocabulary, "
+    "broadcast-join the corpus), pieces flow through one equi-join + "
+    "map_from_entries, and the fold is O(n) per word with a "
+    "3-candidate max per step; no driver collect anywhere.",
+    tags=("text", "llm-pipeline", "round6"),
+)
+def unigram_lm_viterbi_score(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = t(spark, sf_dir, "documents")
+    words = (
+        docs.select(F.explode(F.split("text", " ")).alias("word"))
+        .filter(F.col("word") != "")
+        .groupBy("word")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+        .withColumn("n", F.length("word"))
+    )
+    # every (word, end-pos i, piece-len L) cell with its piece string
+    spans = (
+        words.select(
+            "word", "cnt", "n",
+            F.explode(F.sequence(F.lit(1), F.col("n"))).alias("i"),
+        )
+        .select(
+            "word", "cnt", "n", "i",
+            F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("L"),
+        )
+        .filter(F.col("i") >= F.col("L"))
+        .withColumn(
+            "piece",
+            F.substr("word", F.col("i") - F.col("L") + 1, F.col("L")),
+        )
+    )
+    vocab = spans.groupBy("piece").agg(F.sum("cnt").cast("bigint").alias("pc"))
+    tot = vocab.agg(F.sum("pc").cast("bigint").alias("total"))
+    wpp = (
+        spans.join(F.broadcast(vocab), "piece")
+        .join(F.broadcast(tot))
+        .withColumn(
+            "p", F.col("pc").cast("double") / F.col("total").cast("double")
+        )
+        .groupBy("word", "i")
+        .agg(
+            F.max(F.when(F.col("L") == 1, F.col("p"))).alias("p1"),
+            F.coalesce(
+                F.max(F.when(F.col("L") == 2, F.col("p"))), F.lit(0.0)
+            ).alias("p2"),
+            F.coalesce(
+                F.max(F.when(F.col("L") == 3, F.col("p"))), F.lit(0.0)
+            ).alias("p3"),
+        )
+    )
+    # per-word prob table: i -> (p1, p2, p3), ascending positions
+    per_word = wpp.groupBy("word").agg(
+        F.map_from_entries(
+            F.array_sort(
+                F.collect_list(
+                    F.struct("i", F.struct("p1", "p2", "p3").alias("ps"))
+                )
+            )
+        ).alias("probs")
+    )
+    d = words.join(per_word, "word")
+
+    probs = F.col("probs")
+    n = F.col("n")
+
+    def step(acc, i):
+        at = lambda j: F.element_at(acc, j)  # noqa: E731
+        ps = F.element_at(probs, i)
+        c1 = at(i) * ps.getField("p1")
+        c2 = F.when(
+            i >= 2, at(i - 1) * ps.getField("p2")
+        ).otherwise(F.lit(0.0))
+        c3 = F.when(
+            i >= 3, at(i - 2) * ps.getField("p3")
+        ).otherwise(F.lit(0.0))
+        return F.array_append(acc, F.greatest(c1, c2, c3))
+
+    best = F.aggregate(
+        F.sequence(F.lit(1), n),
+        F.array(F.lit(1.0).cast("double")),
+        step,
+    )
+    singles = F.aggregate(
+        F.sequence(F.lit(1), n),
+        F.lit(1.0).cast("double"),
+        lambda a, i: a * F.element_at(probs, i).getField("p1"),
+    )
+    v = F.element_at(best, n + 1)
+    return d.select(
+        "word",
+        n.cast("bigint").alias("n_chars"),
+        F.col("cnt").alias("corpus_count"),
+        v.alias("viterbi_score"),
+        singles.alias("singles_score"),
+        (v / singles).alias("seg_gain"),
+    ).orderBy("word")

@@ -85,8 +85,3 @@ FIXTURE_TABLES = [
     "documents",
     "embeddings",
 ]
-
-#: Small dimension tables — always broadcast-join these. At 100 TB the
-#: facts (lineitem/orders/events/documents) are the big side; region /
-#: nation / supplier / part / customer stay broadcastable far longer.
-BROADCAST_DIMS = {"region", "nation", "supplier", "part", "customer"}

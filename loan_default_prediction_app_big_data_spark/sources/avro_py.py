@@ -35,6 +35,8 @@ import struct
 import zlib
 from typing import Iterator
 
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+
 MAGIC = b"Obj\x01"
 
 # ---------------------------------------------------------------------
@@ -280,72 +282,66 @@ def list_container_files(path: str) -> list[str]:
     )
 
 
-try:  # pyspark.sql.datasource needs Spark 4; guard for bare tooling
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+class _AvroFile(InputPartition):
+    def __init__(self, path: str):
+        self.path = path
 
-    class _AvroFile(InputPartition):
-        def __init__(self, path: str):
-            self.path = path
 
-    class _AvroReader(DataSourceReader):
-        def __init__(self, options):
-            self.path = options.get("path")
+class _AvroReader(DataSourceReader):
+    def __init__(self, options):
+        self.path = options.get("path")
 
-        def partitions(self):
-            # One partition per container file: executors parse their
-            # files independently; nothing flows through the driver.
-            # (The per-block sync markers would support finer splits.)
-            return [_AvroFile(p) for p in list_container_files(self.path)]
+    def partitions(self):
+        # One partition per container file: executors parse their
+        # files independently; nothing flows through the driver.
+        # (The per-block sync markers would support finer splits.)
+        return [_AvroFile(p) for p in list_container_files(self.path)]
 
-        def read(self, partition) -> Iterator[tuple]:
-            _, rows = read_container(partition.path)
-            yield from rows
+    def read(self, partition) -> Iterator[tuple]:
+        _, rows = read_container(partition.path)
+        yield from rows
 
-    class AvroDataSource(DataSource):
-        """``spark.read.format("avro_py").load(dir)`` — schema comes
-        from the first file's embedded avro.schema JSON unless the
-        caller supplies one."""
 
-        @classmethod
-        def name(cls) -> str:
-            return "avro_py"
+class AvroDataSource(DataSource):
+    """``spark.read.format("avro_py").load(dir)`` — schema comes
+    from the first file's embedded avro.schema JSON unless the
+    caller supplies one."""
 
-        def schema(self) -> str:
-            files = list_container_files(self.options.get("path"))
-            if not files:
-                raise ValueError("avro_py: no .avro files at path")
-            with open(files[0], "rb") as fh:
-                head = fh.read()
-            # parse just the metadata map for avro.schema
-            pos, n = 4, None
-            meta = {}
-            while True:
-                n, pos = _decode_long(head, pos)
-                if n == 0:
-                    break
-                if n < 0:
-                    n = -n
-                    _, pos = _decode_long(head, pos)
-                for _ in range(n):
-                    klen, pos = _decode_long(head, pos)
-                    k = head[pos : pos + klen].decode()
-                    pos += klen
-                    vlen, pos = _decode_long(head, pos)
-                    meta[k] = head[pos : pos + vlen]
-                    pos += vlen
-            return _avro_schema_to_ddl(json.loads(meta["avro.schema"]))
+    @classmethod
+    def name(cls) -> str:
+        return "avro_py"
 
-        def reader(self, schema) -> DataSourceReader:
-            return _AvroReader(self.options)
+    def schema(self) -> str:
+        files = list_container_files(self.options.get("path"))
+        if not files:
+            raise ValueError("avro_py: no .avro files at path")
+        with open(files[0], "rb") as fh:
+            head = fh.read()
+        # parse just the metadata map for avro.schema
+        pos, n = 4, None
+        meta = {}
+        while True:
+            n, pos = _decode_long(head, pos)
+            if n == 0:
+                break
+            if n < 0:
+                n = -n
+                _, pos = _decode_long(head, pos)
+            for _ in range(n):
+                klen, pos = _decode_long(head, pos)
+                k = head[pos : pos + klen].decode()
+                pos += klen
+                vlen, pos = _decode_long(head, pos)
+                meta[k] = head[pos : pos + vlen]
+                pos += vlen
+        return _avro_schema_to_ddl(json.loads(meta["avro.schema"]))
 
-    HAVE_DATASOURCE_API = True
-except ImportError:  # pragma: no cover
-    HAVE_DATASOURCE_API = False
+    def reader(self, schema) -> DataSourceReader:
+        return _AvroReader(self.options)
 
 
 def register_avro_source(spark) -> None:
-    if HAVE_DATASOURCE_API:
-        spark.dataSource.register(AvroDataSource)
+    spark.dataSource.register(AvroDataSource)
 
 
 def write_avro_partitions(

@@ -206,16 +206,6 @@ def viz_feed(df: DataFrame, cols: list[str], n: int = 100, seed: int = 42):
     )
 
 
-def read_jdbc(spark: SparkSession, url: str, table: str, **options) -> DataFrame:
-    """JDBC source — requires the vendor driver jar on the classpath
-    (not bundled in this image). Partition with (partitionColumn,
-    lowerBound, upperBound, numPartitions) options for parallel reads."""
-    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()
-
-
 def read_delta(spark: SparkSession, path: str) -> DataFrame:
     """Delta Lake source via the native connector when the delta-spark
     jars are present, else via the pure-Python transaction-log reader

@@ -546,94 +546,6 @@ def run_stream_stream_full_outer_join(
     return replay_to_memory(spark, joined, "append")[0]
 
 
-def run_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4's NEW arbitrary-state API (``transformWithStateInPandas``
-    with a ``StatefulProcessor`` + typed ``ValueState``) — the
-    successor to ``applyInPandasWithState`` that this module's older
-    runner uses, backed by the RocksDB state store provider (the
-    production store for TB-scale keyed state: state lives off-heap
-    and spills to disk per key range instead of occupying executor
-    heap).
-
-    Per-user ValueState carries (n_events, total_cents) as exact
-    integers; every micro-batch folds its rows into the state and
-    emits the running totals. On the finite availableNow replay the
-    LAST emission per user equals the batch
-    ``groupBy(user).agg(count, sum(cents))`` — the oracle check.
-    Cents fold as BIGINTs inside the processor, so no float
-    accumulation crosses micro-batch boundaries.
-
-    ENVIRONMENT GATE (same posture as the Avro/JDBC jar gates in
-    sources/readers.py): the TransformWithStateInPySpark driver
-    worker requires ``google.protobuf`` for its state-server
-    protocol; this sandbox has no protobuf wheel and installs are
-    disallowed, so calling this without protobuf raises
-    STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE from Spark.
-    tests/test_round4_session5.py skips accordingly; the
-    applyInPandasWithState runner above covers the same semantics
-    un-gated (and is certified by the stateful-counts driver row).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle):
-            self.totals = handle.getValueState(
-                "totals", "n BIGINT, cents BIGINT"
-            )
-
-        def handleInputRows(self, key, rows, timer_values):
-            n, cents = 0, 0
-            if self.totals.exists():
-                n, cents = self.totals.get()
-            for pdf in rows:
-                n += len(pdf)
-                cents += int(pdf["cents"].sum())
-            self.totals.update((n, cents))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_cents": [cents]}
-            )
-
-        def close(self):
-            pass
-
-    stream = (
-        streaming_events(spark, sf_dir)
-        .select(
-            "user_id",
-            F.expr("CAST(round(value * 100) AS BIGINT)").alias("cents"),
-        )
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=RunningTotals(),
-            outputStructType="user_id long, n_events long, total_cents long",
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-    # one row per (user, micro-batch); the final running totals are
-    # the per-user maxima (counts and sums only grow).
-    return replay_to_memory(
-        spark,
-        stream,
-        "update",
-        result=lambda sink, _: sink.groupBy("user_id")
-        .agg(
-            F.max("n_events").cast("bigint").alias("n_events"),
-            F.max("total_cents").cast("bigint").alias("total_cents"),
-        )
-        .orderBy("user_id"),
-        conf={
-            **state_stage_conf(spark),
-            # transformWithState requires the RocksDB provider (bundled).
-            "spark.sql.streaming.stateStore.providerClass": (
-                "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider"
-            ),
-        },
-    )[0]
-
-
 def run_session_window_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native ``session_window`` ON THE STREAMING ENGINE — completes the
     window-type matrix (tumbling/sliding runners above are driver-

@@ -18,8 +18,10 @@ from loan_default_prediction_app_big_data_spark.operators.geo import (
     geohash_sql,
     point_in_polygon_sql,
 )
-from loan_default_prediction_app_big_data_spark.plans._q12_round4_session4 import (
+from loan_default_prediction_app_big_data_spark.plans.relational import (
     _POLYGON,
+)
+from loan_default_prediction_app_big_data_spark.plans.connectors import (
     build_bucketed_join,
 )
 
@@ -141,7 +143,7 @@ def test_point_in_polygon_matches_shoelace_reference(spark):
 def test_grid_blocking_is_lossless_vs_bruteforce(spark, sf_dir):
     """The 3x3-neighbor equi-join must find exactly the pairs the
     all-pairs join finds under d2 <= R^2 (cell size == radius)."""
-    from loan_default_prediction_app_big_data_spark.plans._q12_round4_session4 import (
+    from loan_default_prediction_app_big_data_spark.plans.relational import (
         _GEO_CELL,
         _GEO_R2,
         _LATC,

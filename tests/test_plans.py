@@ -184,13 +184,37 @@ def test_driver_priority_slots_valid():
     # order); it must stay duplicate-free, all-registered, and the
     # driver window's prefix. Once the queue is nearly exhausted
     # (fewer than 50 never-certified names remain, round 9+) it is
-    # legitimately shorter than the window — registration order fills
-    # the leftover slots with re-verified names.
+    # legitimately shorter than the window — the sorted tail of the
+    # remaining names fills the leftover slots with re-verified names.
     assert len(set(pri)) == len(pri)
     valid = [n for n in pri if n in R.REGISTRY]
     assert valid == pri  # every queued name is registered
     assert names[: len(pri)] == pri
     assert set(R.oracle_sql()) <= set(names)
+
+
+def test_queries_order_is_priority_then_sorted_names():
+    """The driver order is ``_DRIVER_PRIORITY`` followed by every other
+    registered name in sorted order; registration and import order
+    play no part in it."""
+    from loan_default_prediction_app_big_data_spark.plans import registry as R
+
+    rest = sorted(set(R.REGISTRY) - set(R._DRIVER_PRIORITY))
+    assert list(R.queries()) == R._DRIVER_PRIORITY + rest
+    assert list(R.oracle_sql()) == [
+        n for n in R._DRIVER_PRIORITY + rest if R.REGISTRY[n].oracle is not None
+    ]
+
+
+def test_plan_and_test_files_are_named_by_domain():
+    """Plan modules and test files are named after what they hold, not
+    after the round or work session that wrote them."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    dirs = [os.path.join(repo, "loan_default_prediction_app_big_data_spark", "plans"),
+            os.path.join(repo, "tests")]
+    bad = [f for d in dirs for f in os.listdir(d)
+           if f != "__pycache__" and re.search(r"round|session|_q[0-9]", f)]
+    assert bad == []
 
 
 def test_skew_join_salted_not_broadcast(spark, sf_dir):

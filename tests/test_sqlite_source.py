@@ -15,7 +15,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from loan_default_prediction_app_big_data_spark.sources.sqlite_py import (
-    HAVE_DATASOURCE_API,
     _SQLiteReader,
     list_shard_files,
     merge_sqlite_shards,
@@ -144,10 +143,6 @@ def test_writer_rejects_unsupported_types(spark):
     df = spark.range(3).select(F.current_timestamp().alias("ts"))
     with pytest.raises(ValueError, match="unsupported column type"):
         write_sqlite_shards(df, "/tmp/never", "t")
-
-
-def test_datasource_api_available():
-    assert HAVE_DATASOURCE_API
 
 
 # ------------------------------------------------------ streaming CDC
