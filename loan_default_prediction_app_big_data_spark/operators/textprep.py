@@ -186,7 +186,7 @@ def cdc_chunk_stats(
     ops per character in the HOF lambda. All integer math (terms
     bounded by max-codepoint * modulus * window << 2^63), so the
     outputs are bit-identical to the HOF twin and the DuckDB oracle on
-    ANY partition layout — ``tests/test_text_queries.py`` pins kernel ==
+    ANY partition layout — ``tests/test_round6_ops.py`` pins kernel ==
     HOF equality.
 
     Scale: ``mapInPandas`` over (id, text) — zero shuffles, zero

@@ -7,7 +7,6 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from loan_default_prediction_app_big_data_spark.plans.registry import REGISTRY  # noqa: E402
 from loan_default_prediction_app_big_data_spark.session import get_spark  # noqa: E402
 
 TESTDATA = os.environ.get("SPARK_GRAFT_TESTDATA", "/root/testdata")
@@ -29,11 +28,3 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def sf_smoke():
     return SF_SMOKE
-
-
-@pytest.fixture(scope="module")
-def run(spark, sf_dir):
-    def _run(name):
-        return REGISTRY[name].fn(spark, sf_dir)
-
-    return _run

@@ -478,7 +478,7 @@ def test_edit_distance_join_matches_bruteforce(spark, tmp_path):
         [(i, v) for i, v in enumerate(vocab)], "p_partkey long, p_name string"
     ).write.parquet(os.path.join(sf, "part.parquet"))
 
-    from loan_default_prediction_app_big_data_spark.plans.registry import (
+    from loan_default_prediction_app_big_data_spark.plans.text import (
         edit_distance_threshold_join,
     )
 
@@ -508,7 +508,7 @@ def test_edit_distance_join_matches_bruteforce(spark, tmp_path):
 def test_temperature_sampling_mix_properties(spark):
     import math
 
-    from loan_default_prediction_app_big_data_spark.plans.registry import (
+    from loan_default_prediction_app_big_data_spark.plans.text import (
         temperature_sampling_mix,
     )
 
@@ -591,7 +591,7 @@ def test_record_linkage_planted_duplicates(spark, tmp_path):
         " c_mktsegment string",
     ).write.parquet(os.path.join(sf, "customer.parquet"))
 
-    from loan_default_prediction_app_big_data_spark.plans.registry import (
+    from loan_default_prediction_app_big_data_spark.plans.text import (
         record_linkage_fellegi_sunter,
     )
 
@@ -643,7 +643,7 @@ def test_shapley_attribution_axioms(spark, tmp_path):
         " value double, props string",
     ).write.parquet(os.path.join(sf, "events.parquet"))
 
-    from loan_default_prediction_app_big_data_spark.plans.registry import (
+    from loan_default_prediction_app_big_data_spark.plans.credit import (
         shapley_channel_attribution,
     )
 
@@ -661,7 +661,7 @@ def test_shapley_attribution_axioms(spark, tmp_path):
 def test_quantile_normalization_equalizes_marginals(spark):
     from collections import defaultdict
 
-    from loan_default_prediction_app_big_data_spark.plans.registry import (
+    from loan_default_prediction_app_big_data_spark.plans.text import (
         quantile_normalization,
     )
 

@@ -67,9 +67,7 @@ def test_semdedup_partition_identities(spark, sf_dir):
 def test_semdedup_prune_keeps_min_id_of_planted_pair(spark):
     """Plant an exact duplicate pair in a tiny corpus: the higher id
     must be pruned, the lower kept."""
-    from loan_default_prediction_app_big_data_spark.plans import (
-        _q12_round4_session4 as m,
-    )
+    from loan_default_prediction_app_big_data_spark.plans import similarity as m
 
     # 8 orthogonal-ish centroids (ids 0..7) + members: 10/11 duplicates
     # near centroid 0, 12 alone near centroid 1.
@@ -127,7 +125,7 @@ def test_dtw_identity_and_reference(spark):
     independent Python DP on random integer profiles."""
     import random
 
-    from loan_default_prediction_app_big_data_spark.plans._q12_round4_session4 import (
+    from loan_default_prediction_app_big_data_spark.plans.analytics import (
         _dtw_alias_chain,
     )
 

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from loan_default_prediction_app_big_data_spark.plans.registry import REGISTRY
-from loan_default_prediction_app_big_data_spark.plans._q13_round4_session5 import (
+from loan_default_prediction_app_big_data_spark.plans.text import (
     _MASK40,
     _WINNOW_K,
     _WINNOW_W,
@@ -250,7 +250,7 @@ def test_brier_decomposition_identity_and_ranges(spark, sf_dir):
 def test_brier_matches_python_recompute(spark, sf_dir):
     """bs_num identity vs a direct per-row Python Brier on the scored
     orders (exact integers on both sides)."""
-    from loan_default_prediction_app_big_data_spark.plans._q06_credit_stats import (
+    from loan_default_prediction_app_big_data_spark.plans.credit import (
         _scored_orders,
     )
 
@@ -466,33 +466,6 @@ def test_zipf_slope_is_negative_and_matches_python(spark, sf_dir):
     assert r["zipf_slope"] < 0  # frequency decreases with rank
 
 
-def test_transform_with_state_runner(spark, sf_dir):
-    """Spark 4 transformWithStateInPandas runner - requires
-    google.protobuf for the TWS state-server protocol (absent in this
-    sandbox; gate documented in the runner docstring)."""
-    pytest.importorskip("google.protobuf")
-    from loan_default_prediction_app_big_data_spark.streaming.windows import (
-        run_transform_with_state,
-    )
-    from loan_default_prediction_app_big_data_spark.plans._core import t
-
-    out = {
-        r["user_id"]: (r["n_events"], r["total_cents"])
-        for r in run_transform_with_state(spark, sf_dir).collect()
-    }
-    batch = {
-        r["user_id"]: (r["n"], r["cents"])
-        for r in t(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.expr("CAST(round(value * 100) AS BIGINT)")).alias("cents"),
-        )
-        .collect()
-    }
-    assert out == batch
-
-
 def test_sql_udf_inlines_no_python_eval(spark, sf_dir):
     df = REGISTRY["sql_udf_price_tiers"].fn(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
@@ -616,7 +589,7 @@ def test_multivariate_ols_matches_numpy(spark, sf_dir):
 def test_decision_stump_matches_python_sweep(spark, sf_dir):
     from fractions import Fraction
 
-    from loan_default_prediction_app_big_data_spark.plans._q06_credit_stats import (
+    from loan_default_prediction_app_big_data_spark.plans.credit import (
         _scored_orders,
     )
 
@@ -923,7 +896,7 @@ def test_codec_roundtrip_files_differ_but_data_equal(spark, sf_dir):
 def test_mutual_information_matches_python(spark, sf_dir):
     import math
 
-    from loan_default_prediction_app_big_data_spark.plans._q06_credit_stats import (
+    from loan_default_prediction_app_big_data_spark.plans.credit import (
         _scored_orders,
     )
     from loan_default_prediction_app_big_data_spark.plans._core import t as _t

@@ -238,7 +238,7 @@ def test_npv_irr_bisection_roots_are_real(spark, sf_dir):
     NPV(irr) in Python from exact yearly cents and require |NPV| to be
     small relative to the cash-flow magnitude (bisection bound), and
     NPV(irr - eps) > 0 > NPV(irr + eps) for interior roots."""
-    from loan_default_prediction_app_big_data_spark.plans._q15_round4_session6 import (
+    from loan_default_prediction_app_big_data_spark.plans.analytics import (
         _IRR_INVEST_CENTS,
         _IRR_ITERS,
     )
@@ -334,9 +334,7 @@ def test_chunk_dedup_rewrite_first_occurrence_semantics(spark, sf_dir):
     """Global first-occurrence keep: rebuild the keeper decision with a
     sequential dict walk over (doc_id, idx) order and compare the
     rewritten text exactly."""
-    from loan_default_prediction_app_big_data_spark.plans._q15_round4_session6 import (
-        _CHUNK_K,
-    )
+    from loan_default_prediction_app_big_data_spark.plans.text import _CHUNK_K
 
     docs = sorted(
         (r["doc_id"], r["text"])

@@ -498,7 +498,7 @@ def test_cdc_arrow_kernel_equals_hof_twin(spark, sf_dir):
     query's scan path since round 7) must be row-for-row identical to
     the native-HOF Catalyst twin it replaced, which remains the
     oracle-checked reference (VERDICT r6 item 4)."""
-    from loan_default_prediction_app_big_data_spark.plans._q18_round6b import (
+    from loan_default_prediction_app_big_data_spark.plans.text import (
         content_defined_chunking_hof,
     )
 

@@ -12,7 +12,7 @@ registry is empty afterwards while the returned frame is still alive.
 
 Streaming runners are covered by their own pinned-memory-sink
 discipline (streaming.windows.replay_to_memory). Session-conf
-discipline is tests/test_conf_and_views.py.
+discipline is tests/test_session_conf.py.
 """
 
 from __future__ import annotations
