@@ -1,8 +1,9 @@
 """Multimodal columns (SURVEY.md §2.C): opaque binary payloads with
-typed metadata, processed by Arrow-batched pandas functions.
+typed metadata, processed row by row over Arrow batches.
 
 Spark-side plumbing is REAL and tested: BinaryType columns, pinned
-output schemas, ``mapInPandas`` batch iteration, partition sizing.
+output schemas, per-row codecs run through ``operators.rows.map_rows``
+(one ``mapInArrow`` wrapper), partition sizing.
 
 Decode is REAL for one self-describing format per modality (no codec
 libraries exist in the container, so the pure-Python-decodable ones):
@@ -18,12 +19,12 @@ bindings without touching any Spark code.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .rows import map_rows
 
 #: Output schema of the feature extractor — fixed, engine-visible.
 MEDIA_FEATURE_SCHEMA = T.StructType(
@@ -64,29 +65,24 @@ def decode_stub(payload: bytes) -> list[float]:
 def extract_media_features(df: DataFrame, batch_hint: int = 1024) -> DataFrame:
     """Arrow-batched feature extraction over binary payloads.
 
-    ``mapInPandas``: each task receives pandas batches, computes
+    ``map_rows``: each task receives Arrow batches, computes
     per-payload features, yields conforming batches. At 100 TB, media
     bytes dominate partition size — keep
     ``spark.sql.files.maxPartitionBytes`` low enough that one batch of
     payloads fits comfortably in executor memory.
     """
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf["payload"]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "media_type": pdf["media_type"],
-                    "n_bytes": payloads.map(len).astype("int64"),
-                    "sha256_prefix": payloads.map(
-                        lambda b: hashlib.sha256(b).hexdigest()[:16]
-                    ),
-                    "feature": payloads.map(decode_stub),
-                }
-            )
+    def op(row: dict) -> dict:
+        payload = row["payload"]
+        return {
+            "doc_id": row["doc_id"],
+            "media_type": row["media_type"],
+            "n_bytes": len(payload),
+            "sha256_prefix": hashlib.sha256(payload).hexdigest()[:16],
+            "feature": decode_stub(payload),
+        }
 
-    return df.mapInPandas(op, schema=MEDIA_FEATURE_SCHEMA)
+    return map_rows(df, op, MEDIA_FEATURE_SCHEMA)
 
 
 # ---------------------------------------------------------------------
@@ -221,29 +217,19 @@ def synth_image_payloads(df: DataFrame, width: int = 7, height: int = 5) -> Data
     as real binary columns."""
     per_doc = {"w", "h"} <= set(df.columns)
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            bmps, ppms = [], []
-            for row in pdf.itertuples(index=False):
-                d = int(row.doc_id)
-                w = int(row.w) if per_doc else width
-                h = int(row.h) if per_doc else height
-                rgb = [
-                    tuple(
-                        (d * 2654435761 + (3 * p + j) * 40503) % 256
-                        for j in range(3)
-                    )
-                    for p in range(w * h)
-                ]
-                bmps.append(encode_bmp_rgb(w, h, rgb))
-                ppms.append(encode_ppm_rgb(w, h, rgb))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "bmp": bmps,
-                    "ppm": ppms,
-                }
-            )
+    def op(row: dict) -> dict:
+        d = row["doc_id"]
+        w = row["w"] if per_doc else width
+        h = row["h"] if per_doc else height
+        rgb = [
+            tuple((d * 2654435761 + (3 * p + j) * 40503) % 256 for j in range(3))
+            for p in range(w * h)
+        ]
+        return {
+            "doc_id": d,
+            "bmp": encode_bmp_rgb(w, h, rgb),
+            "ppm": encode_ppm_rgb(w, h, rgb),
+        }
 
     schema = T.StructType(
         [
@@ -253,7 +239,7 @@ def synth_image_payloads(df: DataFrame, width: int = 7, height: int = 5) -> Data
         ]
     )
     cols = ["doc_id", "w", "h"] if per_doc else ["doc_id"]
-    return df.select(*cols).mapInPandas(op, schema=schema)
+    return map_rows(df.select(*cols), op, schema)
 
 
 def decode_image_stats(images: DataFrame) -> DataFrame:
@@ -262,29 +248,24 @@ def decode_image_stats(images: DataFrame) -> DataFrame:
     and emits header-derived dimensions plus exact integer channel
     sums (BIGINT — hash-stable, no floats)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, bmp, ppm in zip(pdf["doc_id"], pdf["bmp"], pdf["ppm"]):
-                w, h, px = decode_bmp(bytes(bmp))
-                w2, h2, px2 = decode_ppm(bytes(ppm))
-                rows.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "width": w,
-                        "height": h,
-                        "n_bytes_bmp": len(bmp),
-                        "n_bytes_ppm": len(ppm),
-                        "sum_r": sum(p[0] for p in px),
-                        "sum_g": sum(p[1] for p in px),
-                        "sum_b": sum(p[2] for p in px),
-                        "first_px_r": px[0][0],
-                        "formats_agree": (w, h, px) == (w2, h2, px2),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def op(row: dict) -> dict:
+        bmp, ppm = row["bmp"], row["ppm"]
+        w, h, px = decode_bmp(bmp)
+        w2, h2, px2 = decode_ppm(ppm)
+        return {
+            "doc_id": row["doc_id"],
+            "width": w,
+            "height": h,
+            "n_bytes_bmp": len(bmp),
+            "n_bytes_ppm": len(ppm),
+            "sum_r": sum(p[0] for p in px),
+            "sum_g": sum(p[1] for p in px),
+            "sum_b": sum(p[2] for p in px),
+            "first_px_r": px[0][0],
+            "formats_agree": (w, h, px) == (w2, h2, px2),
+        }
 
-    return images.mapInPandas(op, schema=IMAGE_STATS_SCHEMA)
+    return map_rows(images, op, IMAGE_STATS_SCHEMA)
 
 
 #: Output schema of the perceptual-hash decoder.
@@ -309,30 +290,19 @@ def decode_bmp_ahash(images: DataFrame) -> DataFrame:
     content address); callers join the hash back to the documents
     that share the seed."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, bmp in zip(pdf["doc_id"], pdf["bmp"]):
-                w, h, px = decode_bmp(bytes(bmp))
-                if w * h > 56:
-                    raise ValueError("aHash capped at 56 px (sign bit)")
-                grays = [(r + g + b) // 3 for (r, g, b) in px]
-                total, n = sum(grays), len(grays)
-                bits = 0
-                for p, gval in enumerate(grays):
-                    if gval * n > total:
-                        bits |= 1 << p
-                rows.append(
-                    {
-                        "seed": int(doc_id),
-                        "ahash": bits,
-                        "n_px": n,
-                        "gray_total": total,
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def op(row: dict) -> dict:
+        w, h, px = decode_bmp(row["bmp"])
+        if w * h > 56:
+            raise ValueError("aHash capped at 56 px (sign bit)")
+        grays = [(r + g + b) // 3 for (r, g, b) in px]
+        total, n = sum(grays), len(grays)
+        bits = 0
+        for p, gval in enumerate(grays):
+            if gval * n > total:
+                bits |= 1 << p
+        return {"seed": row["doc_id"], "ahash": bits, "n_px": n, "gray_total": total}
 
-    return images.mapInPandas(op, schema=AHASH_SCHEMA)
+    return map_rows(images, op, AHASH_SCHEMA)
 
 
 #: Output schema of the frame-feature stub decoder.
@@ -377,23 +347,16 @@ def decode_frames_stub(frames: DataFrame) -> DataFrame:
     pixels — swap for pyav/ffmpeg bindings without touching the plan).
     """
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            keys = (
-                pdf["doc_id"].astype(str) + ":" + pdf["t_ms"].astype(str)
-            ).map(lambda s: hashlib.sha256(s.encode()).digest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "frame_idx": pdf["frame_idx"].astype("int32"),
-                    "t_ms": pdf["t_ms"].astype("int64"),
-                    "frame_feature": keys.map(
-                        lambda h: [b / 255.0 for b in h[:4]]
-                    ),
-                }
-            )
+    def op(row: dict) -> dict:
+        key = hashlib.sha256(f"{row['doc_id']}:{row['t_ms']}".encode()).digest()
+        return {
+            "doc_id": row["doc_id"],
+            "frame_idx": row["frame_idx"],
+            "t_ms": row["t_ms"],
+            "frame_feature": [b / 255.0 for b in key[:4]],
+        }
 
-    return frames.mapInPandas(op, schema=FRAME_FEATURE_SCHEMA)
+    return map_rows(frames, op, FRAME_FEATURE_SCHEMA)
 
 
 # ---------------------------------------------------------------------
@@ -476,22 +439,11 @@ def synth_audio_payloads(df: DataFrame) -> DataFrame:
     analytically computable by the DuckDB oracle. Input columns:
     doc_id, rate, n_ch, n_frames. Emits (doc_id, wav binary)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            wavs = []
-            for row in pdf.itertuples(index=False):
-                d = int(row.doc_id)
-                n = int(row.n_frames) * int(row.n_ch)
-                samples = [
-                    ((d * 2654435761 + k * 40503) % 65536) - 32768
-                    for k in range(n)
-                ]
-                wavs.append(
-                    encode_wav_pcm16(int(row.rate), int(row.n_ch), samples)
-                )
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "wav": wavs}
-            )
+    def op(row: dict) -> dict:
+        d = row["doc_id"]
+        n = row["n_frames"] * row["n_ch"]
+        samples = [((d * 2654435761 + k * 40503) % 65536) - 32768 for k in range(n)]
+        return {"doc_id": d, "wav": encode_wav_pcm16(row["rate"], row["n_ch"], samples)}
 
     schema = T.StructType(
         [
@@ -499,9 +451,7 @@ def synth_audio_payloads(df: DataFrame) -> DataFrame:
             T.StructField("wav", T.BinaryType(), False),
         ]
     )
-    return df.select("doc_id", "rate", "n_ch", "n_frames").mapInPandas(
-        op, schema=schema
-    )
+    return map_rows(df.select("doc_id", "rate", "n_ch", "n_frames"), op, schema)
 
 
 def decode_audio_stats(clips: DataFrame) -> DataFrame:
@@ -510,28 +460,23 @@ def decode_audio_stats(clips: DataFrame) -> DataFrame:
     count, integer-exact duration, and exact integer sample sums
     (BIGINT — hash-stable, no floats)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, wav in zip(pdf["doc_id"], pdf["wav"]):
-                rate, n_ch, samples = decode_wav(bytes(wav))
-                n_frames = len(samples) // n_ch
-                rows.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "sample_rate": rate,
-                        "n_channels": n_ch,
-                        "n_frames": n_frames,
-                        "duration_us": n_frames * 1_000_000 // rate,
-                        "n_bytes": len(wav),
-                        "sum_ch0": sum(samples[::n_ch]),
-                        "sum_abs": sum(abs(s) for s in samples),
-                        "first_sample": samples[0] if samples else 0,
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def op(row: dict) -> dict:
+        wav = row["wav"]
+        rate, n_ch, samples = decode_wav(wav)
+        n_frames = len(samples) // n_ch
+        return {
+            "doc_id": row["doc_id"],
+            "sample_rate": rate,
+            "n_channels": n_ch,
+            "n_frames": n_frames,
+            "duration_us": n_frames * 1_000_000 // rate,
+            "n_bytes": len(wav),
+            "sum_ch0": sum(samples[::n_ch]),
+            "sum_abs": sum(abs(s) for s in samples),
+            "first_sample": samples[0] if samples else 0,
+        }
 
-    return clips.mapInPandas(op, schema=AUDIO_STATS_SCHEMA)
+    return map_rows(clips, op, AUDIO_STATS_SCHEMA)
 
 
 # ---------------------------------------------------------------------
@@ -621,25 +566,19 @@ def synth_video_payloads(df: DataFrame) -> DataFrame:
     ``(doc_id*2654435761 + k*40503) % 256``. Input columns: doc_id,
     w, h, n_frames (w and h even — C420). Emits (doc_id, y4m)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            clips = []
-            for row in pdf.itertuples(index=False):
-                d, w, h = int(row.doc_id), int(row.w), int(row.h)
-                frame_size = w * h + 2 * (w // 2) * (h // 2)
-                frames = []
-                for f in range(int(row.n_frames)):
-                    base = f * frame_size
-                    frames.append(
-                        bytes(
-                            (d * 2654435761 + (base + i) * 40503) % 256
-                            for i in range(frame_size)
-                        )
-                    )
-                clips.append(encode_y4m(w, h, 30000, 1001, frames))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"].astype("int64"), "y4m": clips}
+    def op(row: dict) -> dict:
+        d, w, h = row["doc_id"], row["w"], row["h"]
+        frame_size = w * h + 2 * (w // 2) * (h // 2)
+        frames = []
+        for f in range(row["n_frames"]):
+            base = f * frame_size
+            frames.append(
+                bytes(
+                    (d * 2654435761 + (base + i) * 40503) % 256
+                    for i in range(frame_size)
+                )
             )
+        return {"doc_id": d, "y4m": encode_y4m(w, h, 30000, 1001, frames)}
 
     schema = T.StructType(
         [
@@ -647,7 +586,7 @@ def synth_video_payloads(df: DataFrame) -> DataFrame:
             T.StructField("y4m", T.BinaryType(), False),
         ]
     )
-    return df.select("doc_id", "w", "h", "n_frames").mapInPandas(op, schema=schema)
+    return map_rows(df.select("doc_id", "w", "h", "n_frames"), op, schema)
 
 
 def decode_video_stats(clips: DataFrame) -> DataFrame:
@@ -655,29 +594,24 @@ def decode_video_stats(clips: DataFrame) -> DataFrame:
     header and per-frame planes, emits header-derived geometry /
     framerate and exact integer plane sums (BIGINT)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, y4m in zip(pdf["doc_id"], pdf["y4m"]):
-                w, h, fn, fd, frames = decode_y4m(bytes(y4m))
-                rows.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "width": w,
-                        "height": h,
-                        "fps_num": fn,
-                        "fps_den": fd,
-                        "n_frames": len(frames),
-                        "n_bytes": len(y4m),
-                        "sum_y": sum(sum(y) for y, _, _ in frames),
-                        "sum_u": sum(sum(u) for _, u, _ in frames),
-                        "sum_v": sum(sum(v) for _, _, v in frames),
-                        "first_luma": frames[0][0][0] if frames else 0,
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def op(row: dict) -> dict:
+        y4m = row["y4m"]
+        w, h, fn, fd, frames = decode_y4m(y4m)
+        return {
+            "doc_id": row["doc_id"],
+            "width": w,
+            "height": h,
+            "fps_num": fn,
+            "fps_den": fd,
+            "n_frames": len(frames),
+            "n_bytes": len(y4m),
+            "sum_y": sum(sum(y) for y, _, _ in frames),
+            "sum_u": sum(sum(u) for _, u, _ in frames),
+            "sum_v": sum(sum(v) for _, _, v in frames),
+            "first_luma": frames[0][0][0] if frames else 0,
+        }
 
-    return clips.mapInPandas(op, schema=VIDEO_STATS_SCHEMA)
+    return map_rows(clips, op, VIDEO_STATS_SCHEMA)
 
 
 def resize_nearest(
@@ -718,29 +652,23 @@ def decode_resize_stats(images: DataFrame, out_w: int, out_h: int) -> DataFrame:
     plus corner samples — the thumbnail/preprocess step of an image
     training pipeline, Arrow-batched per partition."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, bmp in zip(pdf["doc_id"], pdf["bmp"]):
-                w, h, px = decode_bmp(bytes(bmp))
-                rp = resize_nearest(w, h, px, out_w, out_h)
-                rows.append(
-                    {
-                        "doc_id": int(doc_id),
-                        "src_w": w,
-                        "src_h": h,
-                        "dst_w": out_w,
-                        "dst_h": out_h,
-                        "sum_r": sum(p[0] for p in rp),
-                        "sum_g": sum(p[1] for p in rp),
-                        "sum_b": sum(p[2] for p in rp),
-                        "corner_tl_r": rp[0][0],
-                        "corner_br_r": rp[-1][0],
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def op(row: dict) -> dict:
+        w, h, px = decode_bmp(row["bmp"])
+        rp = resize_nearest(w, h, px, out_w, out_h)
+        return {
+            "doc_id": row["doc_id"],
+            "src_w": w,
+            "src_h": h,
+            "dst_w": out_w,
+            "dst_h": out_h,
+            "sum_r": sum(p[0] for p in rp),
+            "sum_g": sum(p[1] for p in rp),
+            "sum_b": sum(p[2] for p in rp),
+            "corner_tl_r": rp[0][0],
+            "corner_br_r": rp[-1][0],
+        }
 
-    return images.mapInPandas(op, schema=RESIZE_STATS_SCHEMA)
+    return map_rows(images, op, RESIZE_STATS_SCHEMA)
 
 
 # ---------------------------------------------------------------------
@@ -780,23 +708,9 @@ def synth_square_wave_payloads(df: DataFrame, n: int = 256) -> DataFrame:
     frequency bin ``k`` and amplitude come from the row. Input columns:
     doc_id, k, amp. Emits (doc_id, k, amp, wav binary)."""
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            wavs = [
-                encode_wav_pcm16(
-                    8000, 1,
-                    square_wave_samples(int(r.doc_id), n, int(r.k), int(r.amp)),
-                )
-                for r in pdf.itertuples(index=False)
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "k": pdf["k"].astype("int64"),
-                    "amp": pdf["amp"].astype("int64"),
-                    "wav": wavs,
-                }
-            )
+    def op(row: dict) -> dict:
+        samples = square_wave_samples(row["doc_id"], n, row["k"], row["amp"])
+        return {**row, "wav": encode_wav_pcm16(8000, 1, samples)}
 
     schema = T.StructType(
         [
@@ -806,7 +720,7 @@ def synth_square_wave_payloads(df: DataFrame, n: int = 256) -> DataFrame:
             T.StructField("wav", T.BinaryType(), False),
         ]
     )
-    return df.select("doc_id", "k", "amp").mapInPandas(op, schema=schema)
+    return map_rows(df.select("doc_id", "k", "amp"), op, schema)
 
 
 def spectral_peak_stats(clips: DataFrame) -> DataFrame:
@@ -820,34 +734,28 @@ def spectral_peak_stats(clips: DataFrame) -> DataFrame:
     that hold for ANY partition layout."""
     import numpy as np
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                rate, n_ch, samples = decode_wav(bytes(r.wav))
-                x = np.asarray(samples, dtype=np.float64)
-                n = len(x)
-                spec = np.fft.rfft(x)
-                mag2 = (spec.real ** 2 + spec.imag ** 2)
-                peak = 1 + int(np.argmax(mag2[1:]))
-                energy = int((x.astype(np.int64) ** 2).sum())
-                # Parseval: sum|X|^2 / N == sum x^2 (rfft halves need
-                # doubling except DC and Nyquist)
-                full = mag2[0] + mag2[-1] + 2.0 * mag2[1:-1].sum()
-                parseval = abs(full / n - energy) <= 1e-6 * max(energy, 1)
-                rows.append(
-                    {
-                        "doc_id": int(r.doc_id),
-                        "n_frames": n,
-                        "amp": int(r.amp),
-                        "expected_bin": int(r.k),
-                        "peak_bin": peak,
-                        "energy": energy,
-                        "dc_sum": int(x.astype(np.int64).sum()),
-                        "peak_matches": peak == int(r.k),
-                        "parseval_ok": bool(parseval),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def op(row: dict) -> dict:
+        rate, n_ch, samples = decode_wav(row["wav"])
+        x = np.asarray(samples, dtype=np.float64)
+        n = len(x)
+        spec = np.fft.rfft(x)
+        mag2 = (spec.real ** 2 + spec.imag ** 2)
+        peak = 1 + int(np.argmax(mag2[1:]))
+        energy = int((x.astype(np.int64) ** 2).sum())
+        # Parseval: sum|X|^2 / N == sum x^2 (rfft halves need
+        # doubling except DC and Nyquist)
+        full = mag2[0] + mag2[-1] + 2.0 * mag2[1:-1].sum()
+        parseval = abs(full / n - energy) <= 1e-6 * max(energy, 1)
+        return {
+            "doc_id": row["doc_id"],
+            "n_frames": n,
+            "amp": row["amp"],
+            "expected_bin": row["k"],
+            "peak_bin": peak,
+            "energy": energy,
+            "dc_sum": int(x.astype(np.int64).sum()),
+            "peak_matches": peak == row["k"],
+            "parseval_ok": bool(parseval),
+        }
 
-    return clips.mapInPandas(op, schema=SPECTRAL_SCHEMA)
+    return map_rows(clips, op, SPECTRAL_SCHEMA)

@@ -28,7 +28,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+from pyspark.sql.types import LongType, StructField, StructType
 
+from .rows import map_rows
 from .text import tokens
 
 #: Knuth multiplicative-hash constant (2654435761 = 2^32 * phi^-1).
@@ -189,14 +191,13 @@ def cdc_chunk_stats(
     ANY partition layout — ``tests/test_round6_ops.py`` pins kernel ==
     HOF equality.
 
-    Scale: ``mapInPandas`` over (id, text) — zero shuffles, zero
+    Scale: ``map_rows`` over (id, text) — zero shuffles, zero
     driver traffic, embarrassingly parallel; the per-doc Python loop
     touches only the boundary list (~n/divisor elements). Keep the HOF
     twin as the oracle-checked reference; this kernel is the 100 TB
     scan path.
     """
     import numpy as np
-    import pandas as pd
 
     # base^(window-1-j) mod modulus for j = 0..window-1: the weight of
     # the j-th char inside each trailing window.
@@ -206,42 +207,37 @@ def cdc_chunk_stats(
         "min_chunk", "max_chunk", "mean_chunk_x100",
     ]
 
-    def compute(batches):
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf[id_col], pdf[text_col]):
-                n = len(text)
-                if n == 0:
-                    continue
-                enc = text.encode("utf-8", "surrogatepass")
-                if len(enc) == n:  # pure ASCII: zero-copy char codes
-                    codes = np.frombuffer(enc, dtype=np.uint8).astype(np.int64)
-                else:  # codepoint semantics identical to F.ascii/ord
-                    codes = np.fromiter(map(ord, text), dtype=np.int64, count=n)
-                if n >= window:
-                    h = np.zeros(n - window + 1, dtype=np.int64)
-                    for j in range(window):
-                        h += codes[j : n - window + 1 + j] * pw[j]
-                    h %= modulus
-                    # windows end at 1-based i in [window, n]; the HOF
-                    # records a boundary only for i < n.
-                    ends = np.arange(window, n + 1, dtype=np.int64)
-                    bnd = ends[(h % divisor == 0) & (ends < n)]
-                else:
-                    bnd = np.empty(0, dtype=np.int64)
-                lens = np.diff(np.concatenate(([0], bnd, [n])))
-                nc = len(bnd) + 1
-                rows.append((
-                    doc_id, n, nc, int(bnd[0]) if len(bnd) else 0,
-                    int(lens.min()), int(lens.max()), (100 * n) // nc,
-                ))
-            yield pd.DataFrame(rows, columns=cols)
+    def compute(row: dict) -> dict:
+        text = row[text_col]
+        n = len(text)
+        enc = text.encode("utf-8", "surrogatepass")
+        if len(enc) == n:  # pure ASCII: zero-copy char codes
+            codes = np.frombuffer(enc, dtype=np.uint8).astype(np.int64)
+        else:  # codepoint semantics identical to F.ascii/ord
+            codes = np.fromiter(map(ord, text), dtype=np.int64, count=n)
+        if n >= window:
+            h = np.zeros(n - window + 1, dtype=np.int64)
+            for j in range(window):
+                h += codes[j : n - window + 1 + j] * pw[j]
+            h %= modulus
+            # windows end at 1-based i in [window, n]; the HOF
+            # records a boundary only for i < n.
+            ends = np.arange(window, n + 1, dtype=np.int64)
+            bnd = ends[(h % divisor == 0) & (ends < n)]
+        else:
+            bnd = np.empty(0, dtype=np.int64)
+        lens = np.diff(np.concatenate(([0], bnd, [n])))
+        nc = len(bnd) + 1
+        return dict(zip(cols, (
+            row[id_col], n, nc, int(bnd[0]) if len(bnd) else 0,
+            int(lens.min()), int(lens.max()), (100 * n) // nc,
+        )))
 
-    out_schema = ", ".join(f"{c} long" for c in cols)
-    return (
-        docs.select(id_col, text_col)
-        .filter(F.length(text_col) > 0)
-        .mapInPandas(compute, out_schema)
+    out_schema = StructType([StructField(c, LongType()) for c in cols])
+    return map_rows(
+        docs.select(id_col, text_col).filter(F.length(text_col) > 0),
+        compute,
+        out_schema,
     )
 
 

@@ -68,10 +68,26 @@ def oracle_sql() -> dict[str, str]:
 #: names lead that window.
 _DRIVER_PRIORITY: list[str] = [
     # All 385 queries are certified, so the window leads with the
-    # queries whose code changed most recently: the ones running the
-    # shared PPJoin kernel, the two-phase range scan and the
-    # merge-rule trainer. All have oracles, so the driver hash-checks
-    # each of them.
+    # queries whose code changed most recently: the per-row codecs and
+    # loops on operators.rows.map_rows, the near-dup clusters that now
+    # release their shingle pin, the unsorted merge tables and their
+    # tokenizers; then the ones running the shared PPJoin kernel and
+    # the two-phase range scan. All have oracles, so the driver
+    # hash-checks each of them.
+    "multimodal_features",
+    "image_decode_stats",
+    "audio_decode_stats",
+    "video_decode_stats",
+    "image_resize_stats",
+    "audio_spectral_peaks",
+    "image_ahash_dedup",
+    "content_defined_chunking",
+    "loan_amortization_schedule",
+    "neardup_clusters",
+    "bpe_merge_training",
+    "bpe_tokenize_apply",
+    "wordpiece_merge_training",
+    "wordpiece_maxmatch_tokenize",
     "simhash_dedup",
     "prefix_jaccard_threshold_join",
     "fuzzy_decontamination",
@@ -80,8 +96,4 @@ _DRIVER_PRIORITY: list[str] = [
     "distributed_row_number",
     "balanced_shard_plan",
     "classification_metrics",
-    "bpe_merge_training",
-    "bpe_tokenize_apply",
-    "wordpiece_merge_training",
-    "wordpiece_maxmatch_tokenize",
 ]

@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+from ..operators.rows import map_rows
 from ..pinning import pin_local, release_local_checkpoints
 from ._core import DataFrame, F, SparkSession, W, register, t
 from .relational import _LATC, _LONC
@@ -2332,9 +2333,9 @@ _AMORT_ORACLE = """
     "to drift), fixed payment = principal div 10, iterate until "
     "payoff; the final payment absorbs the remainder. The recursion "
     "is inherently sequential PER LOAN and embarrassingly parallel "
-    "ACROSS loans, so the engine runs it as an Arrow-batched "
-    "mapInPandas integer loop (bounded ~11 iterations/loan) while "
-    "the oracle replays it as a recursive CTE - the "
+    "ACROSS loans, so the engine runs it as a per-row integer "
+    "loop over Arrow batches (map_rows; bounded ~11 iterations/loan) "
+    "while the oracle replays it as a recursive CTE - the "
     "holt_linear_forecast discipline, strengthened to exact "
     "integers. Emits months-to-payoff, total interest, and the "
     "final short payment per loan. Scale: per-partition compute, "
@@ -2342,7 +2343,6 @@ _AMORT_ORACLE = """
     tags=("ml", "credit", "analytics", "udf", "round4"),
 )
 def loan_amortization_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
     from pyspark.sql import types as T
 
     loans = (
@@ -2366,33 +2366,24 @@ def loan_amortization_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def run(batches):
-        for pdf in batches:
-            out = []
-            for loan_id, principal in zip(pdf["loan_id"], pdf["principal"]):
-                principal = int(principal)
-                payment = principal // 10
-                bal, m, interest_paid = principal, 0, 0
-                while bal > 0 and m < 600:
-                    intr = (bal + 50) // 100
-                    bal = bal + intr - payment
-                    interest_paid += intr
-                    m += 1
-                out.append(
-                    (int(loan_id), principal, m, interest_paid, payment + bal)
-                )
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "loan_id",
-                    "principal_cents",
-                    "months",
-                    "total_interest_cents",
-                    "final_payment_cents",
-                ],
-            )
+    def run(row: dict) -> dict:
+        principal = row["principal"]
+        payment = principal // 10
+        bal, m, interest_paid = principal, 0, 0
+        while bal > 0 and m < 600:
+            intr = (bal + 50) // 100
+            bal = bal + intr - payment
+            interest_paid += intr
+            m += 1
+        return {
+            "loan_id": row["loan_id"],
+            "principal_cents": principal,
+            "months": m,
+            "total_interest_cents": interest_paid,
+            "final_payment_cents": payment + bal,
+        }
 
-    return loans.mapInPandas(run, schema=schema).orderBy("loan_id")
+    return map_rows(loans, run, schema).orderBy("loan_id")
 
 
 # =====================================================================

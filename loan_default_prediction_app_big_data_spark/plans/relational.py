@@ -2084,7 +2084,7 @@ def null_safe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     "Vectorized SCALAR pandas UDF (Arrow batches, numpy sigmoid) — "
     "the third leg of the UDF tier next to applyInPandas "
-    "(grouped_pandas_zscore) and mapInPandas (multimodal_features). "
+    "(grouped_pandas_zscore) and mapInArrow (multimodal_features). "
     "The logistic scoring kernel a model-inference pipeline runs when "
     "the model lives in Python. This one IS expressible with builtin "
     "exp() — which is exactly what makes it oracle-checkable: the "

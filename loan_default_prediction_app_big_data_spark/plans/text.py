@@ -403,7 +403,7 @@ def simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     """,
     "Multimodal plumbing: BinaryType payload column + Arrow-batched "
-    "mapInPandas feature extraction (decode step stubbed — no codec "
+    "map_rows feature extraction (decode step stubbed — no codec "
     "libs in the container; schema/batching/partitioning are real). "
     "Oracle checks the deterministic scalar features.",
     tags=("multimodal",),
@@ -715,6 +715,9 @@ def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id_a", "id_b"
     )
     labels = D.connected_components(pairs)
+    # the labels are pinned and no longer read the shingle table that
+    # minhash_native_candidates pinned; nothing else can release it
+    release_local_checkpoints(counts)
     return labels.select(
         F.col("node_id").cast("bigint").alias("doc_id"),
         F.col("cluster_id").cast("bigint").alias("cluster"),
@@ -1661,7 +1664,7 @@ def journey_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     "fans out over exactly the sampled frames — 8 rows per clip — "
     "never whole clips, and each frame row carries a content-address "
     "key (md5) for the downstream feature store. No Python in this "
-    "plan; the stub decoder is Arrow-batched mapInPandas.",
+    "plan; the stub decoder is Arrow-batched map_rows.",
     tags=("multimodal", "generator"),
 )
 def video_frame_sample_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2141,14 +2144,14 @@ def bpe_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(1)
         .collect()[0],
     )
-    # a LocalRelation over the driver-held rows (callers that need the
-    # encoded corpus re-derive it from the merge table, see
-    # bpe_tokenize_apply)
+    # a LocalRelation over the driver-held rows, already in merge order
+    # (callers that need the encoded corpus re-derive it from the merge
+    # table, see bpe_tokenize_apply)
     return local_rows(
         spark,
         [(i + 1, m.w1, m.w2, m.cnt) for i, m in enumerate(picks)],
         "merge_order int, w1 string, w2 string, pair_count bigint",
-    ).orderBy("merge_order")
+    )
 
 
 def _bpe_apply_oracle(n_merges: int = 5) -> str:
@@ -2685,13 +2688,13 @@ _IMAGE_DECODE_ORACLE = """
     "REAL image decode over binary payloads (VERDICT r3 task 6): "
     "synthesize per-document 24-bpp BMP and P6 PPM files (dims "
     "5..8 x 3..5 so every BMP row-pad value 0-3 occurs), then "
-    "mapInPandas-decode BOTH formats from their actual on-disk bytes "
+    "map_rows-decode BOTH formats from their actual on-disk bytes "
     "— header offsets, strides, bottom-up BGR rows — and emit "
     "header dims, byte sizes, exact integer channel sums, and a "
     "cross-format pixel-equality boolean. The oracle recomputes every "
     "value analytically from the synthesis congruence, so any decode "
     "slip (pad bytes read as pixels, row order, channel order) "
-    "hash-fails. Scale shape: Arrow-batched mapInPandas, one pass, "
+    "hash-fails. Scale shape: Arrow-batched map_rows, one pass, "
     "no shuffle before the final bounded sort; payload synthesis and "
     "decode are both per-partition (reference boundary app.py:15 "
     "image ingestion).",
@@ -2754,13 +2757,13 @@ _AUDIO_DECODE_ORACLE = """
     _AUDIO_DECODE_ORACLE,
     "REAL audio decode over binary payloads: synthesize per-document "
     "RIFF/WAVE clips (16-bit PCM; rate, channel count, and length all "
-    "vary per doc), then mapInPandas-decode the actual on-disk bytes "
+    "vary per doc), then map_rows-decode the actual on-disk bytes "
     "— RIFF chunk walk, fmt validation, channel de-interleave — and "
     "emit header rate/channels, frame count, integer-exact duration, "
     "and exact integer sample sums. The oracle recomputes every value "
     "analytically from the synthesis congruence, so any decode slip "
     "(chunk offsets, byte order, channel stride) hash-fails. Scale "
-    "shape: Arrow-batched mapInPandas, one pass, no shuffle before "
+    "shape: Arrow-batched map_rows, one pass, no shuffle before "
     "the bounded final sort.",
     tags=("multimodal", "round4"),
 )
@@ -2834,14 +2837,14 @@ _VIDEO_DECODE_ORACLE = """
     "REAL video decode over binary payloads: synthesize per-document "
     "YUV4MPEG2 (.y4m) clips — the uncompressed interchange format "
     "ffmpeg emits — with per-doc geometry and frame counts, then "
-    "mapInPandas-decode the actual stream bytes: tagged ASCII header, "
+    "map_rows-decode the actual stream bytes: tagged ASCII header, "
     "FRAME markers, C420 planar Y/U/V splits. Emits header geometry / "
     "framerate and exact integer per-plane sums; the oracle "
     "recomputes all of it analytically, so plane-boundary or header "
     "errors hash-fail. With image_decode_stats and "
     "audio_decode_stats this makes the multimodal tier "
     "capability-complete for one real format in each modality. Scale "
-    "shape: Arrow-batched mapInPandas, one pass.",
+    "shape: Arrow-batched map_rows, one pass.",
     tags=("multimodal", "round4"),
 )
 def video_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3288,7 +3291,7 @@ _RESIZE_ORACLE = """
     "and resize off-by-ones both hash-fail. Completes the charter's "
     "multimodal verb set — decode, feature-extract, resize, "
     "frame-sample — with real semantics for each. Scale shape: "
-    "Arrow-batched mapInPandas, one pass.",
+    "Arrow-batched map_rows, one pass.",
     tags=("multimodal", "round4"),
 )
 def image_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3364,7 +3367,7 @@ _SPECTRAL_ORACLE = """
     "k in tests), so the oracle pins peak_bin analytically WITHOUT "
     "running an FFT - the driver hash falsifies the whole decode->FFT "
     "pipeline; energy/DC replay sample-for-sample in SQL. Scale "
-    "shape: Arrow-batched mapInPandas, one pass, no shuffle before "
+    "shape: Arrow-batched map_rows, one pass, no shuffle before "
     "the bounded sort; this is the signals counterpart of the codec "
     "tier's image/video decode queries.",
     tags=("multimodal", "round4"),
@@ -4108,7 +4111,7 @@ _AHASH_ORACLE = """
     _AHASH_ORACLE,
     "Image near-duplicate detection via the average perceptual hash: "
     "REAL 24-bpp BMP payloads (7x8, 3-byte row pad - the hard decode "
-    "case) are decoded by the Arrow-batched mapInPandas codec, "
+    "case) are decoded by the Arrow-batched map_rows codec, "
     "grayscaled with integer (r+g+b)//3, and fingerprinted one bit "
     "per pixel (set iff gray*n > total, the strict cross-multiplied "
     "mean - float-free, so the 56-bit hash is engine-exact). The "
@@ -4827,7 +4830,7 @@ def wordpiece_merge_training(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
         "merge_order int, w1 string, w2 string, pair_count bigint,"
         " left_count bigint, right_count bigint, score_1e9 bigint",
-    ).orderBy("merge_order")
+    )
 
 
 # =====================================================================

@@ -237,7 +237,10 @@ def audit(name: str, plan: str) -> dict:
         "bnlj": len(re.findall(r"BroadcastNestedLoopJoin", plan)),
         "codegen": len(set(re.findall(r"codegen id : (\d+)", plan))),
         "py_row": len(re.findall(r"BatchEvalPython", plan)),
-        "py_arrow": len(re.findall(r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas", plan)),
+        "py_arrow": len(re.findall(
+            r"ArrowEvalPython|MapInPandas|MapInArrow|FlatMapGroupsInPandas|FlatMapGroupsInArrow",
+            plan,
+        )),
         "cartesian": len(re.findall(r"CartesianProduct", plan)),
         "pushed": len(re.findall(r"PushedFilters: \[[^\]]", plan)),
         "bnlj_bad": bnlj_unbounded(plan),

@@ -109,7 +109,7 @@ def test_cosine_self_similarity(spark, emb):
 
 
 def test_multimodal_batch_plumbing(spark, docs):
-    """mapInPandas feature extraction: schema, determinism, byte counts."""
+    """map_rows feature extraction: schema, determinism, byte counts."""
     feats = M.extract_media_features(M.attach_binary_payload(docs)).cache()
     assert feats.schema == M.MEDIA_FEATURE_SCHEMA
     assert feats.count() == docs.count()
@@ -129,6 +129,44 @@ def test_multimodal_batch_plumbing(spark, docs):
         .count()
         == 0
     )
+
+
+def test_map_rows_values_and_empty_partitions(spark):
+    """map_rows hands ``fn`` plain Python values (binary as ``bytes``,
+    null as ``None``) and keeps the output schema typed when a
+    partition, or the whole input, has no rows."""
+    from pyspark.sql import types as T
+
+    from loan_default_prediction_app_big_data_spark.operators.rows import map_rows
+
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType(), False),
+            T.StructField("kind", T.StringType(), False),
+            T.StructField("n", T.LongType(), True),
+        ]
+    )
+
+    def fn(row):
+        p = row["payload"]
+        return {"id": row["id"], "kind": type(p).__name__,
+                "n": None if p is None else len(p)}
+
+    # two rows over four partitions: at least two partitions are empty
+    df = spark.createDataFrame(
+        [(1, b"abc"), (2, None)], "id long, payload binary"
+    ).repartition(4)
+    out = map_rows(df, fn, schema)
+    assert out.schema == schema
+    assert sorted(tuple(r) for r in out.collect()) == [
+        (1, "bytes", 3), (2, "NoneType", None)
+    ]
+    empty = map_rows(df.filter(F.col("id") < 0), fn, schema)
+    table = empty.toArrow()
+    assert table.num_rows == 0
+    assert [(f.name, str(f.type)) for f in table.schema] == [
+        ("id", "int64"), ("kind", "string"), ("n", "int64")
+    ]
 
 
 def test_sliding_window_stream(spark, sf_dir):

@@ -80,9 +80,9 @@ def test_project_filter_clamp_no_python(spark, sf_dir):
 
 
 def test_multimodal_uses_arrow_not_row_python(spark, sf_dir):
-    """The only Python in any plan is Arrow-batched (mapInPandas)."""
+    """The only Python in any plan is Arrow-batched (map_rows -> mapInArrow)."""
     plan = formatted_plan(spark, "multimodal_features", sf_dir)
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "BatchEvalPython" not in plan  # row-at-a-time UDF never appears
 
 
